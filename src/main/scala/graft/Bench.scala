@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Perf gate: times every SparkEntry query at SPARK_GRAFT_SF_DIR and prints
   * ONE compact JSON line `{"metric":"total","value":…,"queries":{…},…}`.
@@ -19,30 +18,8 @@ object Bench {
     // envVars` does not reach the forked runMain JVM; args always do)
     val sfDir = args.headOption
       .getOrElse(sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // parallelismFirst=false lets AQE coalesce micro-shuffles to the
-    // advisory size: measured at sf0.1, local[32] drops 76.4s -> 62.7s
-    // (32-way micro-partition task overhead dominated), while local[4]
-    // REGRESSES 54s -> 63s (the few big window/sort shuffles lose their
-    // parallelism). So flip it only when cores outnumber the useful
-    // partition count for this volume. At real scale partitions exceed
-    // the advisory target and the flag changes nothing either way.
-    val manyCores = scala.util.Try(cpus.toInt).toOption.exists(_ >= 16)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", (!manyCores).toString)
-      .config("spark.ui.enabled", "false")
-      // Session-wide UTC, declared at build like Verify/SparkFixture:
-      // entries used to inherit it from Tables.events' (now scoped)
-      // conf mutation as an accident of call order (r7 ADVICE).
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.fieldId.read.enabled", "true")
-      .config("spark.sql.parquet.fieldId.write.enabled", "true")
-      .config("spark.sql.extensions", "org.apache.spark.sql.graft.GraftSparkExtensions")
-      .config("spark.sql.catalog.graft", "org.apache.spark.sql.graft.GraftCatalog")
-      .config("spark.sql.catalog.graft.warehouse", graft.ingest.Scratch.warehouse.toString)
-      .getOrCreate()
+    val spark = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt,
+      graft.ingest.Scratch.warehouse.toString).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm the session (codegen, shuffle service, parquet footer caches,
     // streaming machinery) so the first timed query doesn't absorb

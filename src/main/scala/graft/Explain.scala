@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection helper: prints the formatted physical plan for the
   * named queries (or a default headline set) so scan pruning, pushed
   * filters, join strategies, and codegen spans can be reviewed.
@@ -15,13 +13,7 @@ object Explain {
       if (args.length > 1) args.drop(1).toSeq
       else Seq("a1_pricing_summary", "j2_broadcast_join", "j7_multiway_join", "p2_filter_combo",
         "l3_cosine_topk", "w5_topk_per_group", "t4_late_data", "l4i_decontaminate", "l4j_seq_packing")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "org.apache.spark.sql.graft.GraftSparkExtensions")
-      .getOrCreate()
+    val spark = GraftSession.builder(4, graft.ingest.Scratch.warehouse.toString).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     for (n <- names) {
       println(s"\n========== $n ==========")

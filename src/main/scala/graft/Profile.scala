@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev profiling aid (guide §1): runs named entries under a job-level
   * listener and prints, per run, every Spark job's wall time and
@@ -19,18 +18,8 @@ object Profile {
     val names = args.lift(1).map(_.split(",").toSeq)
       .getOrElse(Seq("a1_pricing_summary"))
     val runs = args.lift(2).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.fieldId.read.enabled", "true")
-      .config("spark.sql.parquet.fieldId.write.enabled", "true")
-      .config("spark.sql.extensions", "org.apache.spark.sql.graft.GraftSparkExtensions")
-      .config("spark.sql.catalog.graft", "org.apache.spark.sql.graft.GraftCatalog")
-      .config("spark.sql.catalog.graft.warehouse", graft.ingest.Scratch.warehouse.toString)
-      .getOrCreate()
+    val spark = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
+      graft.ingest.Scratch.warehouse.toString).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/region.parquet").count()

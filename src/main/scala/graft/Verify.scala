@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,18 +11,8 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val onlyArg = args.drop(2).find(_.startsWith("only="))
       .map(_.stripPrefix("only=").split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.fieldId.read.enabled", "true")
-      .config("spark.sql.parquet.fieldId.write.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "org.apache.spark.sql.graft.GraftSparkExtensions")
-      .config("spark.sql.catalog.graft", "org.apache.spark.sql.graft.GraftCatalog")
-      .config("spark.sql.catalog.graft.warehouse", graft.ingest.Scratch.warehouse.toString)
-      .getOrCreate()
+    val spark = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt,
+      graft.ingest.Scratch.warehouse.toString).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=a,b,c (dev aid, same contract as Bench): restrict

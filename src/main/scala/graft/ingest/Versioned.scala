@@ -1889,8 +1889,13 @@ object Versioned {
     val (fs, root) = Writers.fsFor(path)
     val prev = currentVersion(path)
     val v = claimNext(fs, root, path)
-    df.repartitionByRange(nFiles, col(clusterCol))
-      .sortWithinPartitions(clusterCol)
+    // the range exchange samples with a seed drawn from its RDD id, so
+    // a sampled layout depends on how many jobs the process ran before;
+    // sampling up to 1000 keys per file takes EVERY key of a frame that
+    // small, making its file ranges exact and history-independent
+    org.apache.spark.sql.graft.StagedWrite.isolated(
+        df.repartitionByRange(nFiles, col(clusterCol)).sortWithinPartitions(clusterCol),
+        Map("spark.sql.execution.rangeExchange.sampleSizePerPartition" -> "1000"))
       .write.mode(SaveMode.Overwrite).parquet(dataDir(root, v).toString)
     val spark = df.sparkSession
     val entries = withFileStats(spark, root,
@@ -2529,25 +2534,12 @@ object Versioned {
   def updateWhere(
       spark: SparkSession, path: String, set: Map[String, org.apache.spark.sql.Column],
       cond: Option[org.apache.spark.sql.Column]): Long = {
-    import org.apache.spark.sql.functions.{col, when}
-    require(set.nonEmpty, "Versioned.updateWhere: empty SET clause")
     val (fs, root) = Writers.fsFor(path)
     val base = currentVersion(path).getOrElse(
       throw new IllegalArgumentException(s"Versioned.updateWhere: no committed version under $path"))
     val snap = readAt(spark, path, base)
-    val missing = set.keys.filterNot(snap.columns.contains)
-    require(missing.isEmpty,
-      s"Versioned.updateWhere: SET names non-columns (${missing.mkString(", ")})")
-    val types = snap.schema.map(f => f.name -> f.dataType).toMap
-    val updated = snap.select(snap.columns.toIndexedSeq.map { c =>
-      set.get(c) match {
-        case Some(value) =>
-          val cast = value.cast(types(c))
-          cond.map(p => when(p, cast).otherwise(col(c))).getOrElse(cast).as(c)
-        case None => col(c)
-      }
-    }: _*)
-    rewriteFrom(fs, root, base, updated)
+    rewriteFrom(fs, root, base, snap.select(
+      graft.interop.CopyOnWrite.assignments("Versioned.updateWhere", snap.schema, set, cond): _*))
   }
 
   /** The LEGACY keyed merge-on-read delete (pre-DV format): commits a

@@ -40,8 +40,10 @@ import org.apache.spark.sql.types._
   * moves them into the table layout, and appends one atomic JSON
   * commit — `protocol`(1,2) + `metaData` on create, `add`s with
   * per-file `numRecords`/`minValues`/`maxValues`/`nullCount` stats
-  * (computed in ONE distributed pass over the staged files, grouped by
-  * `input_file_name`), `remove`s on overwrite. The version file is
+  * (decoded from the staged files' parquet footers by [[FooterStats]]
+  * — driver-side metadata, no scan of the data), `remove`s on
+  * overwrite. DELETE/UPDATE/MERGE rewrite only the touched files
+  * through the format-neutral [[CopyOnWrite]] core. The version file is
   * created atomically (create-if-absent), so racing writers surface a
   * ConcurrentModificationException rather than corrupting the log —
   * the same arbitration primitive the native format rides.
@@ -484,7 +486,7 @@ object DeltaLake {
   /** Metadata-insensitive schema compare key — field metadata (scan
     * plumbing like parquet.field.id, or mapping bookkeeping a frame
     * picked up elsewhere) must never fail a schema-equality require. */
-  private def cleanJson(sc: StructType): String = Versioned.nullabilityErased(
+  private[interop] def cleanJson(sc: StructType): String = Versioned.nullabilityErased(
     StructType(sc.fields.map(f => f.copy(dataType = stripType(f.dataType),
       metadata = Metadata.empty)))).json
 
@@ -1432,18 +1434,20 @@ object DeltaLake {
     // schemaString and (correctly) refuse; declaring it makes the
     // refusal a protocol decision, the spec's contract
     val needsVariant = rawTable.fields.exists(f => graft.interop.Iceberg.hasVariantType(f.dataType))
-    // SHREDDED variant staging (the session's parquet writer conf):
-    // shredded files are only readable under the variantShredding
-    // protocol feature — an existing table must ratchet it EXPLICITLY
-    // ([[enableVariantShredding]]) before shredded bytes land, or a
-    // pre-feature reader would silently serve nulls from the value
-    // column; a fresh table ratchets it at creation
-    val shreddingOn = needsVariant && spark.conf
-      .getOption("spark.sql.variant.writeShredding.enabled")
+    // SHREDDED variant staging (the writer conf the staging clone
+    // sees — a withWriterConf scope over the session, the same lookup
+    // the clone applies): shredded files are only readable under the
+    // variantShredding protocol feature — an existing table must
+    // ratchet it EXPLICITLY ([[enableVariantShredding]]) before
+    // shredded bytes land, or a pre-feature reader would silently
+    // serve nulls from the value column; a fresh table ratchets it at
+    // creation
+    val shreddingOn = needsVariant && org.apache.spark.sql.graft.StagedWrite
+      .conf(spark, "spark.sql.variant.writeShredding.enabled")
       .exists(_.equalsIgnoreCase("true"))
     prior.foreach { p =>
       require(!shreddingOn || p.protocol.readerFeatures.contains("variantShredding"),
-        s"DeltaLake.write: the session enables variant SHREDDING but $path does " +
+        s"DeltaLake.write: the writer conf enables variant SHREDDING but $path does " +
           "not carry the variantShredding protocol feature — run " +
           "enableVariantShredding first (shredded files would read as null on " +
           "pre-feature readers)")
@@ -1652,7 +1656,7 @@ object DeltaLake {
 
   /** The current snapshot with the scan's (file, row position) metadata
     * attached and outstanding deletion vectors applied — what DV
-    * discovery probes. */
+    * discovery and copy-on-write DML on an untracked table probe. */
   private def liveWithMeta(spark: SparkSession, path: String, snap: Snapshot): DataFrame = {
     val classic = spark.asInstanceOf[ClassicSession]
     val base = withRowMeta(
@@ -1804,71 +1808,17 @@ object DeltaLake {
     v
   }
 
-  /** COPY-ON-WRITE DELETE (Delta's `DELETE FROM` shape): ONE
-    * distributed pass counts matches per live file, then ONLY the
-    * files that contain matching rows are rewritten (their survivors
-    * re-staged through [[write]]'s machinery) — every untouched file
-    * stays live in the log by reference, zero bytes moved. The commit
-    * is `remove`(touched) + `add`(survivor files), atomic like any
-    * other. At 100 TB a selective delete costs O(touched files), not
-    * O(table). Returns the committed version. */
+  /** COPY-ON-WRITE DELETE (Delta's `DELETE FROM` shape) through
+    * [[CopyOnWrite.deleteWhere]]: ONE distributed pass finds the files
+    * holding matches, then ONLY those files are rewritten (their
+    * survivors re-staged through [[write]]'s machinery) — every
+    * untouched file stays live in the log by reference, zero bytes
+    * moved. The commit is `remove`(touched) + `add`(survivor files),
+    * atomic like any other. At 100 TB a selective delete costs
+    * O(touched files), not O(table). Returns the committed version. */
   def deleteWhere(spark: SparkSession, path: String,
-      predicate: org.apache.spark.sql.Column): Long = {
-    import org.apache.spark.sql.functions.{col, count, input_file_name, lit, sum, when}
-    val (fs, root) = Writers.fsFor(path)
-    val snap = snapshot(spark, path)
-    // a row-tracked COW delete sources the tracking frame: discovery
-    // keys on the scan's file metadata column (input_file_name is
-    // undefined past the frame's broadcast join) and survivors carry
-    // their materialized ids into the replacement files
-    if (snap.rowTrackingEnabled) {
-      val (ridPhys, rcvPhys) = matNames(snap, "deleteWhere")
-      val fullT = trackedFrame(spark, path, snap, withMeta = true)
-      val touchedRaw = fullT
-        .groupBy(col(FileMetaCol).as("__f"))
-        .agg(sum(when(predicate, 1L).otherwise(0L)).as("__hits"))
-        .collect().filter(_.getAs[Long]("__hits") > 0L).map(_.getString(0)).toSeq
-      if (touchedRaw.isEmpty) return snap.version
-      val touchedRel = touchedRaw.map(relOf(path, _, "deleteWhere")).toSet
-      val keepByFile = snap.files.filter(f => touchedRel.contains(f.path))
-      val touchedRows = fullT.filter(col(FileMetaCol).isin(touchedRaw: _*))
-      val survivors = touchedRows.filter(predicate.isNull || !predicate)
-        .drop(FileMetaCol)
-      val cdc =
-        if (!snap.cdfEnabled) None
-        else Some(touchedRows.filter(predicate)
-          .drop(FileMetaCol, ridPhys, rcvPhys)
-          .withColumn("_change_type", lit("delete")))
-      return commitRewrite(spark, path, snap, keepByFile.map(_.path), survivors,
-        "DELETE", cdcRows = cdc)
-    }
-    val full = read(spark, path)
-    // pass 1: which files hold matches (partition cols resolvable —
-    // the predicate may reference them — via the pruning relation)
-    val touched = full
-      .groupBy(input_file_name().as("__f"))
-      .agg(sum(when(predicate, 1L).otherwise(0L)).as("__hits"), count(lit(1)).as("__n"))
-      .collect()
-      .map(r => (r.getAs[String]("__f"), r.getAs[Long]("__hits")))
-    // raw strings exactly as input_file_name renders them — the stable
-    // join key for pass 2's file filter
-    val touchedRaw = touched.filter(_._2 > 0L).map(_._1).toSeq
-    val touchedRel = touchedRaw.map(relOf(path, _, "deleteWhere")).toSet
-    if (touchedRel.isEmpty) return snap.version // nothing matched: no commit needed
-    val keepByFile = snap.files.filter(f => touchedRel.contains(f.path))
-    // pass 2: survivors of ONLY the touched files, partition values intact
-    // DELETE drops rows where the predicate is TRUE; a NULL predicate
-    // keeps the row (SQL DELETE semantics, same as pass 1's when())
-    val touchedRows = full.withColumn("__f", input_file_name())
-      .filter(col("__f").isin(touchedRaw: _*))
-    val survivors = touchedRows.filter(predicate.isNull || !predicate).drop("__f")
-    val cdc =
-      if (!snap.cdfEnabled) None
-      else Some(touchedRows.filter(predicate).drop("__f")
-        .withColumn("_change_type", lit("delete")))
-    commitRewrite(spark, path, snap, keepByFile.map(_.path), survivors, "DELETE",
-      cdcRows = cdc)
-  }
+      predicate: org.apache.spark.sql.Column): Long =
+    CopyOnWrite.deleteWhere(cowTable(spark, path, snapshot(spark, path), "DELETE"), predicate)
 
   // ------------------------------------------------------------- protocol
 
@@ -3300,19 +3250,14 @@ object DeltaLake {
   }
 
   /** COPY-ON-WRITE predicate UPDATE — `UPDATE t SET c = expr [WHERE
-    * cond]`: only the files holding a matching row are rewritten, each
-    * surviving row passed through `when(cond, value).otherwise(col)`
-    * per assigned column (values cast to the column's declared type).
-    * O(touched files), never O(table). */
+    * cond]` through [[CopyOnWrite.updateWhere]]: only the files holding
+    * a matching row are rewritten. A row-tracked UPDATE keeps every
+    * row's id and stamps the new commit's version as the CHANGED rows'
+    * _row_commit_version. O(touched files), never O(table). */
   def updateWhere(spark: SparkSession, path: String,
       set: Map[String, org.apache.spark.sql.Column],
       cond: Option[org.apache.spark.sql.Column]): Long = {
-    import org.apache.spark.sql.functions.{col, input_file_name, lit, sum, when}
-    require(set.nonEmpty, "DeltaLake.updateWhere: empty SET clause")
     val snap = snapshot(spark, path)
-    val missing = set.keys.filterNot(snap.schema.fieldNames.contains)
-    require(missing.isEmpty,
-      s"DeltaLake.updateWhere: SET names non-columns (${missing.mkString(", ")})")
     // GENERATED ALWAYS identity values cannot be updated; BY DEFAULT
     // sets are legal but bypass the watermark — syncIdentity repairs
     set.keys.foreach { c =>
@@ -3321,105 +3266,16 @@ object DeltaLake {
           s"DeltaLake.updateWhere: $c is GENERATED ALWAYS AS IDENTITY — its " +
             "values cannot be updated"))
     }
-    val types0 = snap.schema.map(f => f.name -> f.dataType).toMap
-    // a row-tracked UPDATE keeps every row's id and stamps the new
-    // commit's version as the CHANGED rows' _row_commit_version
-    if (snap.rowTrackingEnabled) {
-      val (ridPhys, rcvPhys) = matNames(snap, "updateWhere")
-      val newV = snap.version + 1
-      val fullT = trackedFrame(spark, path, snap, withMeta = true)
-      val touchedRaw = (cond match {
-        case Some(p) => fullT
-          .groupBy(col(FileMetaCol).as("__f"))
-          .agg(sum(when(p, 1L).otherwise(0L)).as("__hits"))
-          .collect().filter(_.getAs[Long]("__hits") > 0L).map(_.getString(0))
-        case None => fullT.select(col(FileMetaCol))
-          .distinct().collect().map(_.getString(0))
-      }).toSeq
-      if (touchedRaw.isEmpty) return snap.version
-      val touchedRel = touchedRaw.map(relOf(path, _, "updateWhere")).toSet
-      val keepByFile = snap.files.filter(f => touchedRel.contains(f.path))
-      val touchedRows = fullT.filter(col(FileMetaCol).isin(touchedRaw: _*))
-        .drop(FileMetaCol)
-      def appliedT(src: DataFrame): DataFrame = src.select(
-        snap.schema.fieldNames.toIndexedSeq.map { c =>
-          set.get(c) match {
-            case Some(value) =>
-              val cast = value.cast(types0(c))
-              cond.map(p => when(p, cast).otherwise(col(c))).getOrElse(cast).as(c)
-            case None => col(c)
-          }
-        } ++ Seq(col(ridPhys), {
-          val bumped = cond
-            .map(p => when(p, lit(newV)).otherwise(col(rcvPhys)))
-            .getOrElse(lit(newV))
-          when(col(ridPhys).isNull, lit(null)).otherwise(bumped)
-            .cast("long").as(rcvPhys)
-        }): _*)
-      val cdc =
-        if (!snap.cdfEnabled) None
-        else {
-          val matched = cond.map(touchedRows.filter).getOrElse(touchedRows)
-            .drop(ridPhys, rcvPhys)
-          def plainApplied(src: DataFrame): DataFrame = src.select(
-            snap.schema.fieldNames.toIndexedSeq.map { c =>
-              set.get(c) match {
-                case Some(value) =>
-                  val cast = value.cast(types0(c))
-                  cond.map(p => when(p, cast).otherwise(col(c))).getOrElse(cast).as(c)
-                case None => col(c)
-              }
-            }: _*)
-          Some(matched.withColumn("_change_type", lit("update_preimage"))
-            .unionByName(plainApplied(matched)
-              .withColumn("_change_type", lit("update_postimage"))))
-        }
-      return commitRewrite(spark, path, snap, keepByFile.map(_.path),
-        appliedT(touchedRows), "UPDATE", cdcRows = cdc)
-    }
-    val full = read(spark, path)
-    val touchedRaw = cond match {
-      case Some(p) => full
-        .groupBy(input_file_name().as("__f"))
-        .agg(sum(when(p, 1L).otherwise(0L)).as("__hits"))
-        .collect().filter(_.getAs[Long]("__hits") > 0L).map(_.getString(0)).toSeq
-      case None => full.select(input_file_name().as("__f"))
-        .distinct().collect().map(_.getString(0)).toSeq
-    }
-    if (touchedRaw.isEmpty) return snap.version
-    val touchedRel = touchedRaw.map(relOf(path, _, "updateWhere")).toSet
-    val keepByFile = snap.files.filter(f => touchedRel.contains(f.path))
-    val types = snap.schema.map(f => f.name -> f.dataType).toMap
-    val touchedRows = full.withColumn("__f", input_file_name())
-      .filter(col("__f").isin(touchedRaw: _*))
-      .drop("__f")
-    def applied(src: DataFrame): DataFrame = src.select(
-      snap.schema.fieldNames.toIndexedSeq.map { c =>
-        set.get(c) match {
-          case Some(value) =>
-            val cast = value.cast(types(c))
-            cond.map(p => when(p, cast).otherwise(col(c))).getOrElse(cast).as(c)
-          case None => col(c)
-        }
-      }: _*)
-    val rewritten = applied(touchedRows)
-    val cdc =
-      if (!snap.cdfEnabled) None
-      else {
-        val matched = cond.map(touchedRows.filter).getOrElse(touchedRows)
-        Some(matched.withColumn("_change_type", lit("update_preimage"))
-          .unionByName(applied(matched).withColumn("_change_type", lit("update_postimage"))))
-      }
-    commitRewrite(spark, path, snap, keepByFile.map(_.path), rewritten, "UPDATE",
-      cdcRows = cdc)
+    CopyOnWrite.updateWhere(cowTable(spark, path, snap, "UPDATE"), set, cond)
   }
 
   /** COPY-ON-WRITE MERGE by key (Delta's `MERGE ... WHEN MATCHED THEN
-    * UPDATE SET * WHEN NOT MATCHED THEN INSERT *` shape): only the
-    * files holding a MATCHED key are rewritten — their unmatched rows
-    * survive, matched rows are replaced by the update images, and
-    * unmatched updates append. Untouched files stay live by reference:
-    * O(touched files + updates), never O(table). */
+    * UPDATE SET * WHEN NOT MATCHED THEN INSERT *` shape) through
+    * [[CopyOnWrite.upsertByKey]]: only the files holding a MATCHED key
+    * are rewritten. On a row-tracked table a single-match image keeps
+    * the old row's id with this commit's version stamped; multi-match
+    * images and true inserts take fresh ids from the new file's
+    * baseRowId range. O(touched files + updates), never O(table). */
   def upsertByKey(spark: SparkSession, path: String,
       updatesIn: DataFrame, key: String,
       txn: Option[(String, Long)] = None,
@@ -3429,7 +3285,7 @@ object DeltaLake {
       // autoMerge; a reader between the commits sees the column as
       // NULL, which is also what every pre-merge row reads after)
       mergeSchema: Boolean = false): Long = {
-    import org.apache.spark.sql.functions.{col, input_file_name}
+    import org.apache.spark.sql.functions.col
     val snap0 = snapshot(spark, path)
     // idempotent replay guard — a foreachBatch MERGE replayed after a
     // crash between the commit and the checkpoint advance skips here,
@@ -3440,35 +3296,11 @@ object DeltaLake {
     txn.foreach { case (appId, ver) =>
       if (snap0.txns.get(appId).exists(_ >= ver)) return snap0.version
     }
-    require(snap0.schema.fieldNames.contains(key), s"DeltaLake.upsertByKey: no column $key")
-    val snap =
-      if (!mergeSchema) snap0
-      else {
-        val conflicts = updatesIn.schema.fields.flatMap { f =>
-          snap0.schema.fields.find(_.name == f.name)
-            .filter(pf => cleanJson(StructType(Seq(pf))) != cleanJson(StructType(Seq(f))))
-            .map(pf => s"${f.name}: table ${pf.dataType.sql} vs update ${f.dataType.sql}")
-        }
-        require(conflicts.isEmpty,
-          s"DeltaLake.upsertByKey: mergeSchema type conflicts — ${conflicts.mkString("; ")}")
-        val newFields = updatesIn.schema.fields
-          .filterNot(f => snap0.schema.fieldNames.contains(f.name)).toSeq
-        if (newFields.isEmpty) snap0
-        else {
-          newFields.foreach(f => addColumn(spark, path, f.name, stripType(f.dataType)))
-          snapshot(spark, path)
-        }
-      }
-    // evolved updates reorder to the table's column order (new columns
-    // joined at the end by addColumn; the update frame may interleave)
-    val updates =
-      if (!mergeSchema) updatesIn
-      else updatesIn.select(snap.schema.fieldNames
-        .filter(updatesIn.columns.contains).toIndexedSeq.map(col): _*)
-    require(cleanJson(snap.schema) == cleanJson(updates.schema),
-      "DeltaLake.upsertByKey: update schema differs from the table schema " +
-        "(pass mergeSchema=true for additive evolution)")
-    Writers.requireUniqueKeys("DeltaLake.upsertByKey", updates, key)
+    val (snap, updates) = CopyOnWrite.mergeUpdates("DeltaLake.upsertByKey", snap0,
+        (_: Snapshot).schema, updatesIn, key, mergeSchema) { added =>
+      added.foreach(f => addColumn(spark, path, f.name, stripType(f.dataType)))
+      snapshot(spark, path)
+    }
     // IDENTITY columns under MERGE (r13): the update frame necessarily
     // CARRIES them (the schema gate above). GENERATED ALWAYS forbids
     // explicit values — so a merge may neither INSERT rows (their ids
@@ -3527,101 +3359,41 @@ object DeltaLake {
           }
         }
       }
-    // a row-tracked MERGE: matched updates are the SAME logical rows —
-    // single-match images inherit the old row's id with this commit's
-    // version stamped; multi-match images and true inserts read a null
-    // materialized id, which resolves to a fresh one from the new
-    // file's baseRowId range
-    if (snap.rowTrackingEnabled) {
-      import org.apache.spark.sql.functions.{count => fCount, lit, min => fMin, when => fWhen}
-      val (ridPhys, rcvPhys) = matNames(snap, "upsertByKey")
-      val newV = snap.version + 1
-      val fullT = trackedFrame(spark, path, snap, withMeta = true)
-      val touchedRaw = fullT
-        .join(updates.select(col(key)), Seq(key), "left_semi")
-        .select(col(FileMetaCol)).distinct().collect().map(_.getString(0)).toSeq
-      val touchedRel = touchedRaw.map(relOf(path, _, "upsertByKey")).toSet
-      val keepByFile = snap.files.filter(f => touchedRel.contains(f.path))
-      val dataCols = snap.schema.fieldNames.toIndexedSeq.map(col)
-      val survivors = fullT.filter(col(FileMetaCol).isin(touchedRaw: _*))
-        .join(updates.select(col(key)), Seq(key), "left_anti")
-        .select(dataCols ++ Seq(col(ridPhys), col(rcvPhys)): _*)
-      val keyInfo = fullT
-        .join(updates.select(col(key)), Seq(key), "left_semi")
-        .groupBy(col(key))
-        .agg(fCount(lit(1)).as("__m_cnt"), fMin(col(ridPhys)).as("__m_rid"))
-      val aligned = updates.join(keyInfo, Seq(key), "left")
-        .select(dataCols ++ Seq(
-          fWhen(col("__m_cnt") === 1L, col("__m_rid"))
-            .otherwise(lit(null)).cast("long").as(ridPhys),
-          fWhen(col("__m_cnt") === 1L && col("__m_rid").isNotNull, lit(newV))
-            .otherwise(lit(null)).cast("long").as(rcvPhys)): _*)
-      val cdc =
-        if (!snap.cdfEnabled) None
-        else {
-          val fullPlain = read(spark, path)
-          val alignedPlain = updates.select(dataCols: _*)
-          val targetKeys = fullPlain.select(col(key)).distinct()
-          val pre = fullPlain.join(updates.select(col(key)), Seq(key), "left_semi")
-            .select(dataCols: _*)
-            .withColumn("_change_type", lit("update_preimage"))
-          val post = alignedPlain.join(targetKeys, Seq(key), "left_semi")
-            .withColumn("_change_type", lit("update_postimage"))
-          val ins = alignedPlain.join(targetKeys, Seq(key), "left_anti")
-            .withColumn("_change_type", lit("insert"))
-          Some(pre.unionByName(post).unionByName(ins))
-        }
-      val gotTracked = commitRewrite(spark, path, snap, keepByFile.map(_.path),
-        survivors.unionByName(aligned), "MERGE", cdcRows = cdc, txn = txn)
-      ratchetByDefaultIdentity()
-      return gotTracked
-    }
-    val full = read(spark, path)
-    // pass 1: the files holding a matched key (semi-join, shuffles on
-    // the key — broadcastable when the update set is small, AQE's call)
-    val touchedRaw = full.withColumn("__f", input_file_name())
-      .join(updates.select(col(key)), Seq(key), "left_semi")
-      .select("__f").distinct().collect().map(_.getString(0)).toSeq
-    val touchedRel = touchedRaw.map(relOf(path, _, "upsertByKey")).toSet
-    val keepByFile = snap.files.filter(f => touchedRel.contains(f.path))
-    // pass 2: unmatched survivors of the touched files + ALL updates
-    val survivors = full.withColumn("__f", input_file_name())
-      .filter(col("__f").isin(touchedRaw: _*))
-      .join(updates.select(col(key)), Seq(key), "left_anti")
-      .drop("__f")
-      .select(snap.schema.fieldNames.toIndexedSeq.map(col): _*)
-    val aligned = updates.select(snap.schema.fieldNames.toIndexedSeq.map(col): _*)
-    val newData = survivors.unionByName(aligned)
-    val cdc =
-      if (!snap.cdfEnabled) None
-      else {
-        import org.apache.spark.sql.functions.lit
-        val targetKeys = full.select(col(key)).distinct()
-        val pre = full.join(updates.select(col(key)), Seq(key), "left_semi")
-          .select(snap.schema.fieldNames.toIndexedSeq.map(col): _*)
-          .withColumn("_change_type", lit("update_preimage"))
-        val post = aligned.join(targetKeys, Seq(key), "left_semi")
-          .withColumn("_change_type", lit("update_postimage"))
-        val ins = aligned.join(targetKeys, Seq(key), "left_anti")
-          .withColumn("_change_type", lit("insert"))
-        Some(pre.unionByName(post).unionByName(ins))
-      }
-    val got = commitRewrite(spark, path, snap, keepByFile.map(_.path), newData, "MERGE",
-      cdcRows = cdc, txn = txn)
+    val got = CopyOnWrite.upsertByKey(cowTable(spark, path, snap, "MERGE", txn), updates, key)
     ratchetByDefaultIdentity()
     got
   }
 
-  private def relOf(path: String, raw: String, op: String): String = {
-    val (_, root) = Writers.fsFor(path)
-    val rootPrefix = root.toUri.getPath.stripSuffix("/") + "/"
-    val abs = new java.net.URI(raw).getPath
-    if (abs.startsWith(rootPrefix)) abs.stripPrefix(rootPrefix)
-    // a SHALLOW CLONE's foreign-root reference: its add action records
-    // the absolute path, so the absolute path IS the snapshot key —
-    // rewrites remove it by that key and stage replacements under this
-    // table's own root
-    else abs
+  /** This snapshot as a [[CopyOnWrite.Table]]: a row-tracked table's
+    * live rows come through [[trackedFrame]] (survivors carry their
+    * materialized ids into the replacement files), any other table's
+    * through [[liveWithMeta]]; rewrites commit through
+    * [[commitRewrite]] as `operation`. */
+  private def cowTable(spark: SparkSession, path: String, snap: Snapshot,
+      operation: String, txn: Option[(String, Long)] = None): CopyOnWrite.Table = {
+    val rootPrefix = Writers.fsFor(path)._2.toUri.getPath.stripSuffix("/") + "/"
+    new CopyOnWrite.Table {
+      val name = "DeltaLake"
+      val schema = snap.schema
+      val fileCol = FileMetaCol
+      val lineage = Option.when(snap.rowTrackingEnabled) {
+        val (ridPhys, rcvPhys) = matNames(snap, operation)
+        CopyOnWrite.Lineage(ridPhys, rcvPhys, snap.version + 1)
+      }
+      def live =
+        if (lineage.isEmpty) liveWithMeta(spark, path, snap)
+        else trackedFrame(spark, path, snap, withMeta = true)
+      val cdf = snap.cdfEnabled
+      // root-relative for the table's own files; a SHALLOW CLONE's
+      // foreign-root reference: its add action records the absolute
+      // path, so the absolute path IS the snapshot key — rewrites remove
+      // it by that key and stage replacements under this table's root
+      def fileKey(raw: String) = new java.net.URI(raw).getPath.stripPrefix(rootPrefix)
+      val unchanged = snap.version
+      def commit(r: CopyOnWrite.Rewrite) =
+        commitRewrite(spark, path, snap, snap.files.map(_.path).filter(r.touched),
+          r.inlined, operation, cdcRows = r.cdc, txn = txn)
+    }
   }
 
   /** The shared rewrite tail: stage `newData` in the table's layout,

@@ -3429,50 +3429,27 @@ object Iceberg {
     Some(c)
   }
 
-  /** COPY-ON-WRITE DELETE (`DELETE FROM t WHERE cond`, rewrite shape):
-    * one distributed pass finds the files holding matches, then ONLY
-    * those files are rewritten — untouched files stay live by
-    * reference (their manifest entries carried or re-marked EXISTING
-    * with explicit sequence numbers). O(touched files), never
-    * O(table). Outstanding position deletes on untouched files are
-    * carried; on rewritten files they fold into the rewrite. Prefer
-    * [[deleteMergeOnRead]] when read-side debt is acceptable — this
-    * path pays the rewrite to keep the snapshot debt-free (e.g. for a
-    * streaming tail). */
+  /** COPY-ON-WRITE DELETE (`DELETE FROM t WHERE cond`, rewrite shape)
+    * through [[CopyOnWrite.deleteWhere]]: one distributed pass finds the
+    * files holding matches, then ONLY those files are rewritten —
+    * untouched files stay live by reference (their manifest entries
+    * carried or re-marked EXISTING with explicit sequence numbers).
+    * O(touched files), never O(table). Outstanding position deletes on
+    * untouched files are carried; on rewritten files they fold into the
+    * rewrite. Prefer [[deleteMergeOnRead]] when read-side debt is
+    * acceptable — this path pays the rewrite to keep the snapshot
+    * debt-free (e.g. for a streaming tail). */
   def deleteWhere(spark: SparkSession, path: String,
-      predicate: org.apache.spark.sql.Column): Long = {
-    import org.apache.spark.sql.functions.{col, lit, sum, when}
-    val s = snapshot(spark, path)
-    // discovery keys on the snapshotFrame's file METADATA COLUMN, not
-    // input_file_name(): the latter is undefined past the anti-joins
-    // equality-delete debt inserts into the plan (a shuffled join
-    // evaluates it off-scan as ""), which would silently no-op the DELETE.
-    // On v3 the source is the LINEAGE frame, so the surviving rows'
-    // _row_id rides into the replacement files.
-    val full =
-      if (formatVersion(path) == 3) lineageFrame(spark, path, s, withMeta = true)
-      else snapshotFrame(spark, path, s, withMeta = true)
-    val touchedRaw = full
-      .groupBy(col(FileMetaCol).as("__f"))
-      .agg(sum(when(predicate, 1L).otherwise(0L)).as("__hits"))
-      .collect().filter(_.getAs[Long]("__hits") > 0L).map(_.getString(0)).toSeq
-    if (touchedRaw.isEmpty) return s.snapshotId // nothing matched: no commit
-    val touchedAbs = touchedRaw.map(r => new java.net.URI(r).getPath).toSet
-    // survivors of ONLY the touched files. DELETE drops rows where the
-    // predicate is TRUE; a NULL predicate keeps the row (SQL semantics)
-    val survivors = full
-      .filter(col(FileMetaCol).isin(touchedRaw: _*))
-      .filter(predicate.isNull || !predicate)
-      .drop(FileMetaCol, PosMetaCol)
-    commitRewriteSnapshot(spark, path, touchedAbs, Some(survivors), "delete",
-      dropDeleteManifests = false)
-  }
+      predicate: org.apache.spark.sql.Column): Long =
+    CopyOnWrite.deleteWhere(cowTable(spark, path, snapshot(spark, path), "delete"), predicate)
 
   /** COPY-ON-WRITE MERGE by key (`MERGE ... WHEN MATCHED THEN UPDATE
-    * SET * WHEN NOT MATCHED THEN INSERT *`): only the files holding a
-    * matched key are rewritten — their unmatched rows survive, matched
-    * rows are replaced by the update images, unmatched updates append.
-    * O(touched files + updates). */
+    * SET * WHEN NOT MATCHED THEN INSERT *`) through
+    * [[CopyOnWrite.upsertByKey]]: only the files holding a matched key
+    * are rewritten. On v3 a single-match image keeps the old row's
+    * _row_id; inserts and multi-match images stage as their own
+    * manifest, whose id range advances next-row-id. O(touched files +
+    * updates). */
   def upsertByKey(spark: SparkSession, path: String,
       updatesIn: DataFrame, key: String,
       // MERGE SCHEMA EVOLUTION: update columns the table lacks evolve
@@ -3482,143 +3459,56 @@ object Iceberg {
       // column as NULL, which is also what every pre-merge row reads
       // after, by field-id resolution)
       mergeSchema: Boolean = false): Long = {
-    import org.apache.spark.sql.functions.col
-    if (mergeSchema) {
-      val tblSchema = snapshot(spark, path).schema
-      require(tblSchema.fieldNames.contains(key),
-        s"Iceberg.upsertByKey: no column $key (the merge key cannot be evolved in)")
-      val conflicts = updatesIn.schema.fields.flatMap { f =>
-        tblSchema.fields.find(_.name == f.name)
-          .filter(pf => cleanJson(StructType(Seq(pf))) != cleanJson(StructType(Seq(f))))
-          .map(pf => s"${f.name}: table ${pf.dataType.sql} vs update ${f.dataType.sql}")
-      }
-      require(conflicts.isEmpty,
-        s"Iceberg.upsertByKey: mergeSchema type conflicts — ${conflicts.mkString("; ")}")
-      updatesIn.schema.fields
-        .filterNot(f => tblSchema.fieldNames.contains(f.name))
-        .foreach(f => addColumn(spark, path, f.name, f.dataType))
+    val (s, updates) = CopyOnWrite.mergeUpdates("Iceberg.upsertByKey", snapshot(spark, path),
+        (_: Snapshot).schema, updatesIn, key, mergeSchema) { added =>
+      added.foreach(f => addColumn(spark, path, f.name, f.dataType))
+      snapshot(spark, path)
     }
-    val s = snapshot(spark, path)
-    // evolved updates reorder to the table's column order (new columns
-    // joined at the end by addColumn; the update frame may interleave)
-    val updates =
-      if (!mergeSchema) updatesIn
-      else updatesIn.select(s.schema.fieldNames
-        .filter(updatesIn.columns.contains).toIndexedSeq.map(col): _*)
-    require(s.schema.fieldNames.contains(key), s"Iceberg.upsertByKey: no column $key")
-    require(cleanJson(s.schema) == cleanJson(updates.schema),
-      "Iceberg.upsertByKey: update schema differs from the table schema " +
-        "(pass mergeSchema=true for additive evolution)")
-    Writers.requireUniqueKeys("Iceberg.upsertByKey", updates, key)
-    val fv3 = formatVersion(path) == 3
-    // metadata-column discovery — see deleteWhere for why not input_file_name
-    val full =
-      if (fv3) lineageFrame(spark, path, s, withMeta = true)
-      else snapshotFrame(spark, path, s, withMeta = true)
-    val touchedRaw = full
-      .join(updates.select(col(key)), Seq(key), "left_semi")
-      .select(col(FileMetaCol)).distinct().collect().map(_.getString(0)).toSeq
-    val touchedAbs = touchedRaw.map(r => new java.net.URI(r).getPath).toSet
-    val dataCols = s.schema.fieldNames.toIndexedSeq.map(col)
-    if (!fv3) {
-      val survivors = full
-        .filter(col(FileMetaCol).isin(touchedRaw: _*))
-        .join(updates.select(col(key)), Seq(key), "left_anti")
-        .select(dataCols: _*)
-      val newData = survivors.unionByName(updates.select(dataCols: _*))
-      return commitRewriteSnapshot(spark, path, touchedAbs, Some(newData), "overwrite",
-        dropDeleteManifests = false)
-    }
-    // v3 row lineage through a MERGE: a matched update is the SAME
-    // logical row — it keeps the old row's _row_id and records this
-    // commit's sequence as _last_updated (null lineage stays null).
-    // When several table rows share the key, the single image cannot
-    // inherit one identity — it lands as a FRESH row instead, like
-    // every unmatched insert (fresh rows stage as their own manifest
-    // whose id range advances next-row-id).
-    import org.apache.spark.sql.functions.{count => fCount, lit, min => fMin, when => fWhen}
-    val (fs2, root2) = Writers.fsFor(path)
-    val newSeq = readMetadata(fs2, root2)._2.get("last-sequence-number").asLong + 1
-    val keyInfo = full
-      .join(updates.select(col(key)), Seq(key), "left_semi")
-      .groupBy(col(key))
-      .agg(fCount(lit(1)).as("__up_cnt"), fMin(col(RowIdCol)).as("__up_oldId"))
-    val annotated = updates.join(keyInfo, Seq(key), "left")
-    val matchedSingle = annotated.filter(col("__up_cnt") === 1L)
-      .select(dataCols ++ Seq(
-        col("__up_oldId").as(RowIdCol),
-        fWhen(col("__up_oldId").isNull, lit(null))
-          .otherwise(lit(newSeq)).cast("long").as(LastUpdCol)): _*)
-    val freshRows = annotated
-      .filter(col("__up_cnt").isNull || col("__up_cnt") =!= 1L)
-      .select(dataCols: _*)
-    val survivors = full
-      .filter(col(FileMetaCol).isin(touchedRaw: _*))
-      .join(updates.select(col(key)), Seq(key), "left_anti")
-      .select(dataCols ++ Seq(col(RowIdCol), col(LastUpdCol)): _*)
-    commitRewriteSnapshot(spark, path, touchedAbs,
-      Some(survivors.unionByName(matchedSingle)), "overwrite",
-      dropDeleteManifests = false, freshData = Some(freshRows))
+    CopyOnWrite.upsertByKey(cowTable(spark, path, s, "overwrite"), updates, key)
   }
 
   /** COPY-ON-WRITE predicate UPDATE — `UPDATE t SET c = expr [WHERE
-    * cond]`: only the files holding a matching row are rewritten, each
-    * surviving row passed through `when(cond, value).otherwise(col)`
-    * per assigned column (values cast to the column's declared type).
-    * O(touched files), never O(table). */
+    * cond]` through [[CopyOnWrite.updateWhere]]: only the files holding
+    * a matching row are rewritten. On v3 an updated row KEEPS its
+    * _row_id and records this commit's sequence number as
+    * _last_updated_sequence_number. O(touched files), never O(table). */
   def updateWhere(spark: SparkSession, path: String,
       set: Map[String, org.apache.spark.sql.Column],
-      cond: Option[org.apache.spark.sql.Column]): Long = {
-    import org.apache.spark.sql.functions.{col, sum, when}
-    require(set.nonEmpty, "Iceberg.updateWhere: empty SET clause")
-    val s = snapshot(spark, path)
-    val missing = set.keys.filterNot(s.schema.fieldNames.contains)
-    require(missing.isEmpty,
-      s"Iceberg.updateWhere: SET names non-columns (${missing.mkString(", ")})")
-    val fv3 = formatVersion(path) == 3
-    // metadata-column discovery — see deleteWhere for why not input_file_name
-    val full =
-      if (fv3) lineageFrame(spark, path, s, withMeta = true)
-      else snapshotFrame(spark, path, s, withMeta = true)
-    val touchedRaw = cond match {
-      case Some(p) => full
-        .groupBy(col(FileMetaCol).as("__f"))
-        .agg(sum(when(p, 1L).otherwise(0L)).as("__hits"))
-        .collect().filter(_.getAs[Long]("__hits") > 0L).map(_.getString(0)).toSeq
-      case None => full.select(col(FileMetaCol))
-        .distinct().collect().map(_.getString(0)).toSeq
+      cond: Option[org.apache.spark.sql.Column]): Long =
+    CopyOnWrite.updateWhere(cowTable(spark, path, snapshot(spark, path), "overwrite"), set, cond)
+
+  /** Snapshot `s` as a [[CopyOnWrite.Table]]. Its files are found
+    * through the snapshot frame's file METADATA COLUMN, never
+    * input_file_name(): the latter is undefined past the anti-joins
+    * equality-delete debt inserts into the plan (a shuffled join
+    * evaluates it off-scan as ""). On v3 the live rows come through the
+    * LINEAGE frame, so surviving rows' _row_id rides into the
+    * replacement files; rewrites commit through
+    * [[commitRewriteSnapshot]] as `operation`. */
+  private def cowTable(spark: SparkSession, path: String, s: Snapshot,
+      operation: String): CopyOnWrite.Table = {
+    val (fs, root) = Writers.fsFor(path)
+    val meta = readMetadata(fs, root)._2
+    new CopyOnWrite.Table {
+      val name = "Iceberg"
+      val schema = s.schema
+      val fileCol = FileMetaCol
+      val lineage = Option.when(meta.get("format-version").asInt == 3)(CopyOnWrite.Lineage(
+        RowIdCol, LastUpdCol, meta.get("last-sequence-number").asLong + 1))
+      def live =
+        if (lineage.isEmpty) snapshotFrame(spark, path, s, withMeta = true)
+        else lineageFrame(spark, path, s, withMeta = true)
+      val cdf = false
+      def fileKey(raw: String) = new java.net.URI(raw).getPath
+      val unchanged = s.snapshotId
+      // v3 inserts stage apart so their manifest assigns fresh ids
+      def commit(r: CopyOnWrite.Rewrite) =
+        if (lineage.isEmpty)
+          commitRewriteSnapshot(spark, path, r.touched, Some(r.inlined), operation,
+            dropDeleteManifests = false)
+        else commitRewriteSnapshot(spark, path, r.touched, Some(r.rows), operation,
+          dropDeleteManifests = false, freshData = r.fresh)
     }
-    if (touchedRaw.isEmpty) return s.snapshotId
-    val touchedAbs = touchedRaw.map(r => new java.net.URI(r).getPath).toSet
-    val types = s.schema.map(f => f.name -> f.dataType).toMap
-    // v3: an updated row KEEPS its _row_id and records this commit's
-    // sequence number as _last_updated_sequence_number; untouched rows
-    // in the rewritten files carry both through unchanged
-    val lineageOut: Seq[org.apache.spark.sql.Column] =
-      if (!fv3) Nil
-      else {
-        val (fs2, root2) = Writers.fsFor(path)
-        val newSeq = readMetadata(fs2, root2)._2.get("last-sequence-number").asLong + 1
-        val bumped = cond
-          .map(p => when(p, org.apache.spark.sql.functions.lit(newSeq))
-            .otherwise(col(LastUpdCol)))
-          .getOrElse(org.apache.spark.sql.functions.lit(newSeq))
-        Seq(col(RowIdCol),
-          when(col(RowIdCol).isNull, org.apache.spark.sql.functions.lit(null))
-            .otherwise(bumped).cast("long").as(LastUpdCol))
-      }
-    val rewritten = full
-      .filter(col(FileMetaCol).isin(touchedRaw: _*))
-      .select(s.schema.fieldNames.toIndexedSeq.map { c =>
-        set.get(c) match {
-          case Some(value) =>
-            val cast = value.cast(types(c))
-            cond.map(p => when(p, cast).otherwise(col(c))).getOrElse(cast).as(c)
-          case None => col(c)
-        }
-      } ++ lineageOut: _*)
-    commitRewriteSnapshot(spark, path, touchedAbs, Some(rewritten), "overwrite",
-      dropDeleteManifests = false)
   }
 
   /** Fold outstanding position-delete debt into the data: rewrite ONLY

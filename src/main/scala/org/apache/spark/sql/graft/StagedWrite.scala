@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
 
 /** Staged-write conf isolation (r17 verdict #1).
@@ -42,6 +42,14 @@ object StagedWrite {
     scoped.set(prev ++ kv)
     try body finally scoped.set(prev)
   }
+
+  /** The writer conf value a staged write on this thread sees: the
+    * [[withWriterConf]] scope first, then the session. [[isolated]]'s
+    * clone resolves every key the same way, so a protocol decision
+    * taken through this lookup always matches the bytes the clone
+    * writes. */
+  def conf(spark: SparkSession, key: String): Option[String] =
+    scoped.get().get(key).orElse(spark.conf.getOption(key))
 
   /** `df` rebound to a fresh clone of its session carrying
     * `overrides` (plus any [[withWriterConf]] scope, which wins):

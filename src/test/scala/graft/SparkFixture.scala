@@ -14,18 +14,8 @@ trait SparkFixture extends BeforeAndAfterAll { self: Suite =>
 }
 
 object SparkFixture {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[2]")
+  lazy val session: SparkSession = GraftSession.builder(2,
+      java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"), "graft_test", "warehouse").toString)
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.parquet.fieldId.read.enabled", "true")
-    .config("spark.sql.parquet.fieldId.write.enabled", "true")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.extensions", "org.apache.spark.sql.graft.GraftSparkExtensions")
-    .config("spark.sql.catalog.graft", "org.apache.spark.sql.graft.GraftCatalog")
-    .config("spark.sql.catalog.graft.warehouse",
-      java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft_test", "warehouse").toString)
     .getOrCreate()
 }

@@ -20,6 +20,23 @@ class VersionedSpec extends AnyFunSuite with SparkFixture {
     try body finally sys.props.remove("graft.versioned.inflightWaitMs")
   }
 
+  test("commitClustered: a small frame's file ranges are exact whatever jobs ran before") {
+    import org.apache.spark.sql.functions.{col, max, min}
+    import spark.implicits._
+    // the range exchange seeds its sampler from the shuffle's RDD id; a
+    // few extra jobs before each commit shift that id
+    val layouts = (0 until 3).map { shift =>
+      (0 until shift).foreach(_ => spark.range(1).count())
+      val path = freshDir(s"v_clustered_exact_$shift")
+      Versioned.commitClustered((0L until 4000L).toDF("k"), path, clusterCol = "k", nFiles = 8)
+      Versioned.read(spark, path).groupBy(col("_metadata.file_path"))
+        .agg(min("k"), max("k")).as[(String, Long, Long)].collect()
+        .map { case (_, lo, hi) => (lo, hi) }.toSeq.sorted
+    }
+    val exact = (0L until 8L).map(i => (i * 500L, i * 500L + 499L))
+    layouts.foreach(l => assert(l == exact, s"clustered file ranges: $l"))
+  }
+
   test("legacy 4-field manifest lines (stats as 4th field, no size) still read and prune") {
     import org.apache.spark.sql.functions.col
     import spark.implicits._

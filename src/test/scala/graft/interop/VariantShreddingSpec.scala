@@ -41,6 +41,54 @@ class VariantShreddingSpec extends AnyFunSuite with SparkFixture {
   }
   private def withShredding[T](body: => T): T = shredding(on = true)(body)
 
+  /** The same two keys scoped to this thread's staged writes only,
+    * over whatever the session says. */
+  private def scopedShredding[T](on: Boolean)(body: => T): T =
+    org.apache.spark.sql.graft.StagedWrite.withWriterConf(
+      "spark.sql.variant.writeShredding.enabled" -> on.toString,
+      "spark.sql.variant.inferShreddingSchema" -> on.toString)(body)
+
+  /** Parquet footers carry the `typed_value` group iff shredded. */
+  private def isShredded(path: String): Boolean = {
+    val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(path), spark.sparkContext.hadoopConfiguration))
+    try footer.getFileMetaData.getSchema.toString.contains("typed_value")
+    finally footer.close()
+  }
+
+  /** (variantShredding declared, some data file shredded) for a Delta table. */
+  private def deltaShredState(path: String): (Boolean, Boolean) = {
+    val snap = DeltaLake.snapshot(spark, path)
+    val root = new org.apache.hadoop.fs.Path(path).toUri.getPath
+    (snap.protocol.readerFeatures.contains("variantShredding"),
+      snap.files.exists(f => isShredded(s"$root/${f.path}")))
+  }
+
+  // the staged write's scope and the session disagree: the scope is
+  // what the staging clone writes with, so it must also be what the
+  // protocol decision reads — the feature is declared exactly when the
+  // bytes are shredded
+  Seq(true, false).foreach { scopeOn =>
+    val label = s"scope ${if (scopeOn) "on" else "off"} over session ${if (scopeOn) "off" else "on"}"
+    test(s"Delta: a fresh table declares variantShredding iff its files shred ($label)") {
+      val path = freshDir(s"shred_delta_scoped_fresh_$scopeOn")
+      shredding(on = !scopeOn) { scopedShredding(scopeOn) { DeltaLake.write(variantDf(1, 20), path) } }
+      assert(deltaShredState(path) == ((scopeOn, scopeOn)))
+    }
+    test(s"Delta: an existing table declares variantShredding iff its files shred ($label)") {
+      val path = freshDir(s"shred_delta_scoped_existing_$scopeOn")
+      shredding(on = false) { DeltaLake.write(variantDf(1, 20), path) }
+      val appended = scala.util.Try(shredding(on = !scopeOn) {
+        scopedShredding(scopeOn) { DeltaLake.write(variantDf(21, 40), path, mode = SaveMode.Append) }
+      })
+      // shredded bytes refuse until the feature ratchets; unshredded ones land
+      assert(appended.isSuccess == !scopeOn, appended)
+      assert(DeltaLake.read(spark, path).count() == (if (scopeOn) 20L else 40L))
+      assert(deltaShredState(path) == ((false, false)))
+    }
+  }
+
   test("Delta: shredded writes refuse until the feature ratchets; then mixed eras read identically") {
     val path = freshDir("shred_delta_gate")
     // unshredded creation (explicit opt-out) => variantType only
@@ -122,13 +170,6 @@ class VariantShreddingSpec extends AnyFunSuite with SparkFixture {
     * shredded-path predicate plans as a NARROWED struct scan with the
     * filter pushed to parquet — on BOTH formats. */
   test("era footers differ on disk; shredded-path predicates push down (both formats)") {
-    def isShredded(path: String): Boolean = {
-      val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(path), spark.sparkContext.hadoopConfiguration))
-      try footer.getFileMetaData.getSchema.toString.contains("typed_value")
-      finally footer.close()
-    }
     def requireEras(fmt: String, eraOf: Map[String, Int]): Unit = {
       assert(eraOf.nonEmpty && eraOf.values.toSet == Set(1, 2),
         s"the $fmt table must hold files of both eras")
