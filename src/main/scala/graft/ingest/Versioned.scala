@@ -1216,11 +1216,12 @@ object Versioned {
   /** Load the deletion-vector run lists of `dvEntries` into one merged
     * [[graft.functions.DvMap]]. The collect is O(runs) driver metadata —
     * delete DEBT, not table size (compaction folds it; the same bound
-    * Delta's in-memory DVs carry). */
+    * Delta's in-memory DVs carry). The run files are read with the
+    * schema [[commitDv]] writes, so no footer-inference job runs. */
   private def loadDvMap(
       spark: SparkSession, root: HPath, dvEntries: Seq[ManifestEntry]): graft.functions.DvMap = {
-    val raw = spark.read.parquet(dvEntries.map(e => new HPath(root, e.relPath).toString): _*)
-      .select("rel_path", "pos", "len")
+    val raw = spark.read.schema("rel_path STRING, pos BIGINT, len BIGINT")
+      .parquet(dvEntries.map(e => new HPath(root, e.relPath).toString): _*)
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
       .toSeq

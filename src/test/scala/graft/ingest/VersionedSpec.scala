@@ -448,6 +448,18 @@ class VersionedSpec extends AnyFunSuite with SparkFixture {
     intercept[IllegalArgumentException](Versioned.readPartitions(spark, path, "pt", Set("NOPE")))
   }
 
+  test("a deletion-vector read loads its run files without a schema-inference job") {
+    import spark.implicits._
+    val path = freshDir("versioned_dv_jobs")
+    Versioned.commit((1L to 20L).map(i => (i, s"v$i")).toDF("k", "v"), path)
+    Versioned.deleteMergeOnRead(spark, path, Seq(3L, 4L, 5L, 11L).toDF("k"), "k")
+    val (df, jobs) = org.apache.spark.sql.graft.JobCount(spark)(Versioned.read(spark, path))
+    // one job: the run-list collect; inferring the run files' schema was a second
+    assert(jobs == 1, s"building the read started $jobs job(s)")
+    assert(df.collect().map(_.getLong(0)).sorted.toSeq ==
+      (1L to 20L).filterNot(Set(3L, 4L, 5L, 11L)))
+  }
+
   test("merge-on-read delete rewrites nothing; a later append may reuse the key (sequencing)") {
     import spark.implicits._
     val path = freshDir("versioned_mor")
