@@ -1,5 +1,7 @@
 package graft.ingest
 
+import graft.interop.MergeOnRead
+
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
@@ -254,6 +256,10 @@ object Versioned {
   }
 
   def currentVersion(path: String): Option[Long] = versions(path).lastOption
+
+  /** The current version of `path`; refuses a table with none. */
+  private def headOf(path: String, op: String): Long = currentVersion(path).getOrElse(
+    throw new IllegalArgumentException(s"Versioned.$op: no committed version under $path"))
 
   /** The committed manifest of `version` — public so callers (and s18's
     * copy-on-write proof) can inspect which files a snapshot references. */
@@ -1291,8 +1297,7 @@ object Versioned {
     * returned frame keeps reading this snapshot even if commits land
     * while the query runs. */
   def read(spark: SparkSession, path: String): DataFrame = {
-    val v = currentVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"Versioned.read: no committed version under $path"))
+    val v = headOf(path, "read")
     readAt(spark, path, v)
   }
 
@@ -1342,8 +1347,7 @@ object Versioned {
   def readPartitionsWhere(
       spark: SparkSession, path: String, pred: Map[String, String] => Boolean): DataFrame = {
     val (fs, root) = Writers.fsFor(path)
-    val v = currentVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"Versioned.readPartitionsWhere: no committed version under $path"))
+    val v = headOf(path, "readPartitionsWhere")
     val entries = readManifest(fs, root, v)
     require(entries.forall(_.kind == KindData),
       s"Versioned.readPartitionsWhere: $path has outstanding merge-on-read deletes — " +
@@ -1836,8 +1840,7 @@ object Versioned {
   def readSkippingEq(spark: SparkSession, path: String, column: String, value: Any): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     val (fs, root) = Writers.fsFor(path)
-    val v = currentVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"Versioned.readSkippingEq: no committed version under $path"))
+    val v = headOf(path, "readSkippingEq")
     val entries = readManifest(fs, root, v)
     require(entries.forall(_.kind == KindData),
       s"Versioned.readSkippingEq: $path has outstanding merge-on-read deletes — " +
@@ -2015,8 +2018,7 @@ object Versioned {
   def readSkipping(spark: SparkSession, path: String, column: String, lo: Any, hi: Any): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     val (fs, root) = Writers.fsFor(path)
-    val v = currentVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"Versioned.readSkipping: no committed version under $path"))
+    val v = headOf(path, "readSkipping")
     val entries = readManifest(fs, root, v)
     require(entries.forall(_.kind == KindData),
       s"Versioned.readSkipping: $path has outstanding merge-on-read deletes — " +
@@ -2051,8 +2053,7 @@ object Versioned {
     * every row is legal — the table becomes a readable empty snapshot. */
   def delete(spark: SparkSession, path: String, keys: DataFrame, key: String): Long = {
     val (fs, root) = Writers.fsFor(path)
-    val base = currentVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"Versioned.delete: no committed version under $path"))
+    val base = headOf(path, "delete")
     val remaining = readAt(spark, path, base).join(keys.select(key), Seq(key), "left_anti")
     rewriteFrom(fs, root, base, remaining)
   }
@@ -2239,8 +2240,7 @@ object Versioned {
   def upsert(spark: SparkSession, path: String, updates: DataFrame, key: String): Long = {
     Writers.requireUniqueKeys("Versioned.upsert", updates, key)
     val (fs, root) = Writers.fsFor(path)
-    val base = currentVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"Versioned.upsert: no committed version under $path"))
+    val base = headOf(path, "upsert")
     gateIdentityUpsert(spark, path, base, updates, key, "upsert")
     val merged = readAt(spark, path, base)
       .join(updates, Seq(key), "left_anti")
@@ -2281,8 +2281,7 @@ object Versioned {
     require(partCols.nonEmpty, "Versioned.upsertPartitioned: at least one partition column")
     Writers.requireUniqueKeys("Versioned.upsertPartitioned", updates, key)
     val (fs, root) = Writers.fsFor(path)
-    val cur = currentVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"Versioned.upsertPartitioned: no committed version under $path"))
+    val cur = headOf(path, "upsertPartitioned")
     gateIdentityUpsert(spark, path, cur, updates, key, "upsertPartitioned")
     val entries = readManifest(fs, root, cur)
     require(entries.forall(_.kind == KindData),
@@ -2354,9 +2353,7 @@ object Versioned {
     import org.apache.spark.sql.functions.col
     require(partCols.nonEmpty, "Versioned.replacePartitions: at least one partition column")
     val (fs, root) = Writers.fsFor(path)
-    val cur = currentVersion(path).getOrElse(
-      throw new IllegalArgumentException(
-        s"Versioned.replacePartitions: no committed version under $path"))
+    val cur = headOf(path, "replacePartitions")
     val entries = readManifest(fs, root, cur)
     require(entries.forall(_.kind == KindData),
       s"Versioned.replacePartitions: $path has outstanding merge-on-read deletes — " +
@@ -2394,45 +2391,40 @@ object Versioned {
   }
 
   /** MERGE-ON-READ delete — the zero-rewrite alternative to the
-    * copy-on-write [[delete]]: the commit writes ONLY a POSITIONAL
-    * DELETION VECTOR under `v/deletes` — `(rel_path, pos, len)` runs of
-    * the deleted rows' file positions (Delta DV / Iceberg v3 position
-    * deletes) — and carries the previous manifest by reference: ZERO
-    * data files rewritten (s20's entry `require`s exactly that), the
-    * right trade when deletes are tiny relative to the table (GDPR
-    * erasure, retraction feeds). Readers apply the vector as ONE
-    * broadcast row-index filter inside the scan — no anti-join, no
-    * shuffle, O(log runs) per row (r7 verdict #3) — where the legacy
-    * key-list files cost one join per outstanding delete commit.
-    * [[compactDeletes]] still folds the debt back into pure data files
-    * when it accumulates — the same rewrite-vs-read knob Iceberg
-    * exposes.
+    * copy-on-write [[delete]], through [[MergeOnRead.deleteMatched]]:
+    * the commit writes ONLY a POSITIONAL DELETION VECTOR under
+    * `v/deletes` — `(rel_path, pos, len)` runs of the deleted rows'
+    * file positions ([[dvRuns]]) — and carries the previous manifest by
+    * reference: ZERO data files rewritten (s20's entry `require`s
+    * exactly that), the right trade when deletes are tiny relative to
+    * the table (GDPR erasure, retraction feeds). Readers apply the
+    * vector as ONE broadcast row-index filter inside the scan — no
+    * anti-join, no shuffle, O(log runs) per row (r7 verdict #3) — where
+    * the legacy key-list files cost one join per outstanding delete
+    * commit. Vectors stack, one file per commit; [[compactDeletes]]
+    * folds the debt back into pure data files when it accumulates —
+    * the same rewrite-vs-read knob Iceberg exposes. A delete matching
+    * nothing still commits (an empty vector).
     *
     * Position discovery reads the CURRENT MATERIALIZED snapshot (so
     * already-deleted rows are never re-recorded — the change feed
-    * depends on that) with the scan's own `_metadata.row_index`; the
-    * run encoding compresses clustered deletes to O(ranges). Write
-    * cost is one filtered scan of the table — the same scan Delta's
-    * DV-producing DELETE pays; the saving is on the WRITE (no rewrite)
-    * and every subsequent READ (no join). Sequencing is structural:
-    * a vector names the files it covers, so a later append reusing a
-    * deleted key is never swallowed. */
+    * depends on that) with the scan's own `_metadata.row_index`, and is
+    * STATS-PRUNED: a data file whose recorded [min,max] for the key
+    * cannot intersect the delete set's [lo,hi] cannot contain a match
+    * and is skipped at the manifest, before any scan (files without
+    * statistics always participate; pruning is an optimization, never
+    * a correctness filter). On a key-clustered table a narrow
+    * retraction scans O(overlapping files), not the table —
+    * [[lastDvDiscovery]] exposes (scanned, total) for proofs.
+    * Sequencing is structural: a vector names the files it covers, so
+    * a later append reusing a deleted key is never swallowed. */
   def deleteMergeOnRead(
       spark: SparkSession, path: String, keys: DataFrame, key: String,
       meta: Map[String, String] = Map.empty): Long = {
-    import org.apache.spark.sql.functions.{col, lag, sum, when, count, min, max}
-    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col, min, max}
     val (fs, root) = Writers.fsFor(path)
-    val base = currentVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"Versioned.deleteMergeOnRead: no committed version under $path"))
+    val base = headOf(path, "deleteMergeOnRead")
     val entries = readManifest(fs, root, base)
-    // POSITION DISCOVERY IS STATS-PRUNED: a data file whose recorded
-    // [min,max] for the key cannot intersect the delete set's [lo,hi]
-    // cannot contain a match — skip it at the manifest, before any scan
-    // (files without statistics always participate; pruning is an
-    // optimization, never a correctness filter). On a key-clustered
-    // table a narrow retraction scans O(overlapping files), not the
-    // table — [[lastDvDiscovery]] exposes (scanned, total) for proofs.
     val keyType = metaSchema(fs, root, base).flatMap(_.fields.find(_.name == key)).map(_.dataType)
     val keyBounds: Option[(Any, Any)] = keyType.flatMap {
       case _: org.apache.spark.sql.types.NumericType =>
@@ -2451,77 +2443,82 @@ object Versioned {
       case None           => dataE
     }
     // every file pruned → nothing can match; keep one file in the scan
-    // so the key-column validation and the (empty) vector still commit
+    // so the key-column validation and the (empty) vector still commit.
+    // The validation comes BEFORE committing: a delete keyed on a
+    // column the snapshot does not carry would commit fine and then
+    // poison every subsequent read — with compaction, the documented
+    // repair path, failing the same way
     val scanned = if (overlapping.isEmpty) dataE.take(1) else overlapping
     dvDiscovery.put(path, (scanned.size, dataE.size))
-    // validate BEFORE committing: a delete keyed on a column the snapshot
-    // does not carry would commit fine and then poison every subsequent
-    // read — with compaction, the documented repair path, failing the
-    // same way
-    val snapshot = materialize(spark, fs, root, scanned ++ otherE,
-      targetOf(fs, root, base), withMeta = true)
-    require(snapshot.columns.contains(key),
-      s"Versioned.deleteMergeOnRead: key '$key' is not a column of the current snapshot — " +
-        "committing it would make every read fail")
-    val hits = snapshot.join(keys.select(key).distinct(), Seq(key), "left_semi")
-    commitDv(spark, fs, root, base, hits, snapshot.schema, meta)
+    MergeOnRead.deleteMatched(
+      morTable(spark, fs, root, base, "Versioned.deleteMergeOnRead", scanned ++ otherE, meta),
+      keys, key)
   }
 
   /** DV-backed predicate DELETE — `DELETE FROM t WHERE cond` with zero
-    * data files rewritten: the matching rows' positions commit as a
-    * deletion vector exactly like [[deleteMergeOnRead]]'s, but the
-    * match set is an arbitrary predicate instead of a key list (an
-    * arbitrary predicate has no [lo, hi] to stats-prune on, so
-    * discovery scans the snapshot once — the same scan the
-    * copy-on-write [[delete]] pays, minus the whole rewrite). This is
-    * what the SQL `DELETE FROM` statement lands as. */
+    * data files rewritten, through [[MergeOnRead.deleteWhere]]: the
+    * matching rows' positions commit as a deletion vector exactly like
+    * [[deleteMergeOnRead]]'s, but the match set is an arbitrary
+    * predicate instead of a key list (an arbitrary predicate has no
+    * [lo, hi] to stats-prune on, so discovery scans the snapshot once
+    * — the same scan the copy-on-write [[delete]] pays, minus the whole
+    * rewrite). This is what the SQL `DELETE FROM` statement lands as. */
   def deleteWhere(
       spark: SparkSession, path: String, cond: org.apache.spark.sql.Column,
       meta: Map[String, String] = Map.empty): Long = {
     val (fs, root) = Writers.fsFor(path)
-    val base = currentVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"Versioned.deleteWhere: no committed version under $path"))
+    val base = headOf(path, "deleteWhere")
     val entries = readManifest(fs, root, base)
     val nData = entries.count(_.kind == KindData)
     dvDiscovery.put(path, (nData, nData))
-    val snapshot = materialize(spark, fs, root, entries, targetOf(fs, root, base), withMeta = true)
-    commitDv(spark, fs, root, base, snapshot.filter(cond), snapshot.schema, meta)
+    MergeOnRead.deleteWhere(
+      morTable(spark, fs, root, base, "Versioned.deleteWhere", entries, meta), cond)
   }
 
-  /** Run-length encode the `(file, position)` pairs of `matches` (a
-    * meta-column-carrying frame) and commit them as one deletion
-    * vector: a window per file ordered by position marks run starts, a
-    * running count groups each run — one shuffle keyed by file,
-    * O(match set). */
-  private def commitDv(
-      spark: SparkSession, fs: FileSystem, root: HPath, base: Long,
-      matches: DataFrame, schemaWithMeta: StructType, meta: Map[String, String]): Long = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions.{col, count, lag, lit, min, sum, when}
-    val rootPrefix = root.toUri.getPath.stripSuffix("/") + "/"
-    val wFile = Window.partitionBy(FileMetaCol).orderBy(PosMetaCol)
-    val hits = matches
-      .select(col(FileMetaCol), col(PosMetaCol))
-      .withColumn("__new_run",
-        when(col(PosMetaCol) - lag(PosMetaCol, 1).over(wFile) === 1L, 0L).otherwise(1L))
-      .withColumn("__run", sum("__new_run").over(wFile))
-      .groupBy(col(FileMetaCol), col("__run"))
-      .agg(min(PosMetaCol).as("pos"), count(lit(1)).as("len"))
-      .select(
-        org.apache.spark.sql.functions.expr(
-          s"substring($FileMetaCol, instr($FileMetaCol, '${rootPrefix.replace("'", "''")}') + ${rootPrefix.length})")
-          .as("rel_path"),
-        col("pos"), col("len"))
-    val v = claimExact(fs, root, base) // derived from base: lost-update guard
-    hits.coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(new HPath(versionDir(root, v), "deletes").toString)
-    publishDelta(fs, root, v, base,
-      adds = localEntries(fs, root, v, partitioned = false, subdir = "deletes", kind = KindDv),
-      removes = Nil,
-      schema = StructType(schemaWithMeta.fields.filterNot(f =>
-        f.name == FileMetaCol || f.name == PosMetaCol)),
-      meta = meta)
-  }
+  /** Version `base` as a [[MergeOnRead.Table]] over the manifest
+    * `entries` its discovery scans. The file key is the data file's
+    * on-disk path relative to the table root (what the reader's
+    * [[graft.functions.DvMap]] keys on); vectors stack (no prior
+    * merge). */
+  private def morTable(spark: SparkSession, fs: FileSystem, root: HPath, base: Long,
+      op: String, entries: Seq[ManifestEntry], meta: Map[String, String]): MergeOnRead.Table =
+    new MergeOnRead.Table {
+      val name = op
+      lazy val live =
+        materialize(spark, fs, root, entries, targetOf(fs, root, base), withMeta = true)
+      val fileKey = MergeOnRead.diskPath(FileMetaCol, root, relative = true)
+      val posCol = PosMetaCol
+      def prior = Map.empty
+      def commit(m: MergeOnRead.Matches) = {
+        import spark.implicits._
+        val v = claimExact(fs, root, base) // derived from base: lost-update guard
+        m.encode(oneTask = true)(dvRuns).toDF("rel_path", "pos", "len")
+          .write.mode(SaveMode.Overwrite)
+          .parquet(new HPath(versionDir(root, v), "deletes").toString)
+        publishDelta(fs, root, v, base,
+          adds = localEntries(fs, root, v, partitioned = false, subdir = "deletes", kind = KindDv),
+          removes = Nil,
+          schema = StructType(live.schema.fields.filterNot(f =>
+            f.name == FileMetaCol || f.name == PosMetaCol)),
+          meta = meta)
+      }
+    }
+
+  /** Run-length encode one task's files: each maximal run of
+    * consecutive positions becomes one `(rel_path, pos, len)` row —
+    * O(ranges) for clustered deletes. */
+  private val dvRuns: MergeOnRead.Files => Iterator[(String, Long, Long)] =
+    _.flatMap { case (rel, ps) =>
+      val runs = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
+      var i = 0
+      while (i < ps.length) {
+        var j = i + 1
+        while (j < ps.length && ps(j) == ps(j - 1) + 1) j += 1
+        runs += ((rel, ps(i), (j - i).toLong))
+        i = j
+      }
+      runs
+    }
 
   /** Copy-on-write predicate UPDATE — `UPDATE t SET c = expr WHERE
     * cond`: the new snapshot rewrites every row through
@@ -2536,8 +2533,7 @@ object Versioned {
       spark: SparkSession, path: String, set: Map[String, org.apache.spark.sql.Column],
       cond: Option[org.apache.spark.sql.Column]): Long = {
     val (fs, root) = Writers.fsFor(path)
-    val base = currentVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"Versioned.updateWhere: no committed version under $path"))
+    val base = headOf(path, "updateWhere")
     val snap = readAt(spark, path, base)
     rewriteFrom(fs, root, base, snap.select(
       graft.interop.CopyOnWrite.assignments("Versioned.updateWhere", snap.schema, set, cond): _*))
@@ -2551,8 +2547,7 @@ object Versioned {
   private[ingest] def deleteMergeOnReadKeys(
       spark: SparkSession, path: String, keys: DataFrame, key: String): Long = {
     val (fs, root) = Writers.fsFor(path)
-    val base = currentVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"Versioned.deleteMergeOnReadKeys: no committed version under $path"))
+    val base = headOf(path, "deleteMergeOnReadKeys")
     val snapshot = readAt(spark, path, base)
     require(snapshot.columns.contains(key),
       s"Versioned.deleteMergeOnReadKeys: key '$key' is not a column of the current snapshot")
@@ -2577,8 +2572,7 @@ object Versioned {
   private def evolutionBase(path: String, op: String)
       : (FileSystem, HPath, Long, Seq[ManifestEntry], StructType, Map[String, Int]) = {
     val (fs, root) = Writers.fsFor(path)
-    val base = currentVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"Versioned.$op: no committed version under $path"))
+    val base = headOf(path, op)
     val entries = readManifest(fs, root, base)
     // positional deletion vectors survive evolution untouched (they name
     // files and row positions, not columns); only the LEGACY keyed
@@ -3019,8 +3013,7 @@ object Versioned {
     * loudly. */
   def restore(spark: SparkSession, path: String, version: Long): Long = {
     val (fs, root) = Writers.fsFor(path)
-    val cur = currentVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"Versioned.restore: no committed version under $path"))
+    val cur = headOf(path, "restore")
     require(isCommitted(fs, root, version),
       s"Versioned.restore: version $version of $path is not committed (never existed, crashed, or vacuumed)")
     if (version == cur) return cur
@@ -3039,8 +3032,7 @@ object Versioned {
     * again. */
   def compactDeletes(spark: SparkSession, path: String): Long = {
     val (fs, root) = Writers.fsFor(path)
-    val base = currentVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"Versioned.compactDeletes: no committed version under $path"))
+    val base = headOf(path, "compactDeletes")
     // no outstanding deletes → nothing to fold; a scheduled maintenance
     // run on a clean table must be a no-op, not a full table rewrite
     if (readManifest(fs, root, base).forall(_.kind == KindData)) return base
@@ -3062,8 +3054,7 @@ object Versioned {
     import org.apache.spark.sql.functions.col
     require(numFiles.forall(_ >= 1), s"compactFiles: numFiles must be >= 1, got $numFiles")
     val (fs, root) = Writers.fsFor(path)
-    val base = currentVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"Versioned.compactFiles: no committed version under $path"))
+    val base = headOf(path, "compactFiles")
     val entries = readManifest(fs, root, base)
     // an EMPTY snapshot (all-rows delete) is already as compact as it
     // gets — without this, a scheduled maintenance loop would publish a
@@ -3154,9 +3145,7 @@ object Versioned {
     require(maxStragglers >= 0, s"maintainClusteredIfNeeded: maxStragglers >= 0, got $maxStragglers")
     require(targetFiles >= 1, s"maintainClusteredIfNeeded: targetFiles >= 1, got $targetFiles")
     val (fs, root) = Writers.fsFor(path)
-    val base0 = currentVersion(path).getOrElse(
-      throw new IllegalArgumentException(
-        s"Versioned.maintainClusteredIfNeeded: no committed version under $path"))
+    val base0 = headOf(path, "maintainClusteredIfNeeded")
     val probe = readManifest(fs, root, base0)
     if (probe.forall(_.kind == KindData) && probe.forall(_.partDir.isEmpty) &&
         clusterStragglers(probe, clusterCol).size <= maxStragglers) return None

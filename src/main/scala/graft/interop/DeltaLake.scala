@@ -1498,12 +1498,7 @@ object DeltaLake {
     if (prior.isEmpty || mode == SaveMode.Overwrite || schemaChanged || idMeta.nonEmpty)
       lines += metaDataLine(rawTableCommit, partCols, now, newConf)
     if (mode == SaveMode.Overwrite)
-      prior.toSeq.flatMap(_.files).foreach { f =>
-        val o = Json.createObjectNode()
-        val rm = o.putObject("remove")
-        rm.put("path", f.path); rm.put("deletionTimestamp", now); rm.put("dataChange", true)
-        lines += Json.writeValueAsString(o)
-      }
+      prior.toSeq.flatMap(_.files).foreach(f => lines += removeLine(f.path, now))
     adds.foreach(a => lines += addLine(a))
     // an overwrite on a CDF-enabled table must record its images too —
     // delete images of every prior row, insert images of the new ones —
@@ -1620,39 +1615,27 @@ object DeltaLake {
     committed
   }
 
-  /** MERGE-ON-READ DELETE — Delta's DELETION VECTOR path: the matching
-    * rows' per-file row indexes are serialized as portable
-    * RoaringBitmapArrays ([[DeltaDv]]) into ONE `deletion_vector_*.bin`
-    * file, and the commit re-adds each touched file with a
-    * `deletionVector` descriptor (`remove` + `add` of the same path,
-    * zero data files rewritten). The table upgrades to the
-    * table-features protocol (3/7, `deletionVectors`). A file with an
-    * existing vector gets a SUPERSEDING vector holding the union of
-    * old and new positions, per the protocol. Discovery reads the
-    * current materialized snapshot, so already-deleted rows are never
-    * re-recorded; bitmaps are built and written ON EXECUTORS and only
-    * per-file descriptors return to the driver — a delete of billions
-    * of rows collects O(touched files) driver metadata. Returns the
+  /** MERGE-ON-READ DELETE — Delta's DELETION VECTOR path, through
+    * [[MergeOnRead.deleteWhere]] (which finds the matches and groups
+    * their row indexes by file on executors). Each touched file's
+    * positions, merged with its existing vector (a SUPERSEDING vector,
+    * per the protocol), serialize as a portable RoaringBitmapArray
+    * ([[DeltaDv]]): a small one inlines into the log as z85
+    * (`storageType` "i"), larger ones go to one framed
+    * `deletion_vector_*.bin` per task. The commit re-adds each touched
+    * file with its `deletionVector` descriptor (`remove` + `add` of the
+    * same path, zero data files rewritten) and upgrades the table to
+    * the table-features protocol (3/7, `deletionVectors`). Returns the
     * committed version, or the current one when nothing matched. */
   def deleteMergeOnRead(spark: SparkSession, path: String,
-      cond: org.apache.spark.sql.Column): Long = {
-    val snap = snapshot(spark, path)
-    commitDeletionVectors(spark, path, snap, liveWithMeta(spark, path, snap).filter(cond))
-  }
+      cond: org.apache.spark.sql.Column): Long =
+    MergeOnRead.deleteWhere(morTable(spark, path, "DeltaLake.deleteMergeOnRead"), cond)
 
   /** Keyed deletion-vector delete — `MERGE … WHEN MATCHED THEN
-    * DELETE`'s shape: the match set is a SEMI-JOIN against `keys`
-    * (shuffles on the key, broadcastable when small), so a large
-    * delete-key frame never collects driver-side during discovery. */
+    * DELETE`'s shape, through [[MergeOnRead.deleteMatched]]. */
   def deleteMatched(spark: SparkSession, path: String,
-      keys: DataFrame, key: String): Long = {
-    import org.apache.spark.sql.functions.col
-    val snap = snapshot(spark, path)
-    require(snap.schema.fieldNames.contains(key), s"DeltaLake.deleteMatched: no column $key")
-    commitDeletionVectors(spark, path, snap,
-      liveWithMeta(spark, path, snap)
-        .join(keys.select(col(key)).distinct(), Seq(key), "left_semi"))
-  }
+      keys: DataFrame, key: String): Long =
+    MergeOnRead.deleteMatched(morTable(spark, path, "DeltaLake.deleteMatched"), keys, key)
 
   /** The current snapshot with the scan's (file, row position) metadata
     * attached and outstanding deletion vectors applied — what DV
@@ -1668,135 +1651,89 @@ object DeltaLake {
       else dropCovered(base, loadDvMap(spark, path, snap)), snap)
   }
 
-  /** One committed deletion vector, as the build task reports it back:
-    * everything the `add` action's descriptor needs, O(1) per touched
-    * file. `offset < 0` marks an inline ("i") vector. */
-  private[interop] final case class DvBuildRes(rel: String, storageType: String,
-      pathOrInlineDv: String, offset: Int, sizeInBytes: Int, cardinality: Long)
-
-  private def commitDeletionVectors(spark: SparkSession, path: String,
-      snap: Snapshot, matchesWithMeta: DataFrame): Long = {
-    import org.apache.spark.sql.functions.{col, expr}
+  /** The current snapshot as a [[MergeOnRead.Table]]: the file key is
+    * the snapshot's decoded relative path, and a file's existing vector
+    * merges into its new one. */
+  private def morTable(spark: SparkSession, path: String, op: String): MergeOnRead.Table = {
+    val snap = snapshot(spark, path)
     val (fs, root) = Writers.fsFor(path)
-    gateWriter(snap, path, "deleteMergeOnRead", mutates = true)
-    val rootPrefix = root.toUri.getPath.stripSuffix("/") + "/"
-    val q = rootPrefix.replace("'", "''")
-    val matches = matchesWithMeta
-      .select(expr(
-        s"substring($FileMetaCol, instr($FileMetaCol, '$q') + ${rootPrefix.length})")
-        .as("__rel"), col(PosMetaCol).as("__pos"))
-    // ---- build the per-file bitmaps ON EXECUTORS: the matched rows
-    // shuffle by file, each task streams its files' sorted positions
-    // into RoaringBitmapArrays, merges any existing vector (superseding
-    // DV — the prior blob is loaded task-side off its descriptor),
-    // writes large blobs into ONE framed .bin file per task, and
-    // reports back descriptors only. The driver collect is O(touched
-    // files) — a 100-TB DELETE never materializes a position on the
-    // driver. SMALL vectors inline into the log as z85 (storageType
-    // "i"), the spec's inline shape: a point-delete on a huge table
-    // costs zero extra files.
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    // prior descriptors ride a BROADCAST, not the task closure — a
-    // table with ~1M DV files would otherwise ship the map inside
-    // every serialized task binary
-    val priorSrc: org.apache.spark.broadcast.Broadcast[
-        Map[String, graft.functions.DvPositionSource]] =
-      spark.sparkContext.broadcast(snap.files.flatMap(f =>
-        f.dv.map(d => f.path -> dvSourceFor(path, root, d, conf))).toMap)
-    val rootStr = root.toString
+    new MergeOnRead.Table {
+      val name = op
+      def live = liveWithMeta(spark, path, snap)
+      val fileKey = MergeOnRead.diskPath(FileMetaCol, root, relative = true)
+      val posCol = PosMetaCol
+      def prior = {
+        val conf = new org.apache.spark.util.SerializableConfiguration(
+          spark.sparkContext.hadoopConfiguration)
+        snap.files.flatMap(f => f.dv.map(d => f.path -> Seq(dvSourceFor(path, root, d, conf))))
+          .toMap
+      }
+      def commit(m: MergeOnRead.Matches) = commitDeletionVectors(spark, path, fs, root, snap, m)
+    }
+  }
+
+  /** Delta's deletion-vector encoder for one task's files, reporting
+    * each file's `add` descriptor: a vector of at most `InlineMax`
+    * bytes inlines as z85 (`storageType` "i"); the larger ones share ONE
+    * framed `.bin` file ("p"), UUID-fresh per attempt — a retried or
+    * speculative task leaves its predecessor's blob orphaned (never
+    * logged), and [[vacuum]] reclaims any `.bin` no live descriptor
+    * references. */
+  private def dvEncoder(rootStr: String,
+      conf: org.apache.spark.util.SerializableConfiguration)
+      : MergeOnRead.Files => Iterator[(String, DvDescriptor)] = files => {
     val InlineMax = 512
+    val out = scala.collection.mutable.ArrayBuffer.empty[(String, DvDescriptor)]
+    val large = scala.collection.mutable.ArrayBuffer.empty[(String, Array[Byte], Long)]
+    files.foreach { case (rel, positions) =>
+      val blob = DeltaDv.serialize(positions)
+      val card = positions.length.toLong
+      if (blob.length > InlineMax) large += ((rel, blob, card))
+      else {
+        // z85 encodes 4-byte groups; the serialized vector is
+        // self-delimiting, so zero-padding to alignment is inert.
+        // sizeInBytes stays the TRUE serialized size — foreign readers
+        // of an inline vector truncate the decoded bytes to it
+        val padded =
+          if (blob.length % 4 == 0) blob
+          else blob ++ Array.fill(4 - blob.length % 4)(0.toByte)
+        out += rel -> DvDescriptor("i", DeltaDv.z85Encode(padded), None, blob.length, card)
+      }
+    }
+    if (large.nonEmpty) {
+      val binPath = new HPath(rootStr, s"deletion_vector_${java.util.UUID.randomUUID()}.bin")
+      val framing = DeltaDv.writeFile(
+        binPath.getFileSystem(conf.value), binPath, large.map(_._2).toSeq)
+      large.zip(framing).foreach { case ((rel, _, card), (off, size)) =>
+        out += rel -> DvDescriptor("p", binPath.toUri.getPath, Some(off), size, card)
+      }
+    }
+    out.iterator
+  }
+
+  private def commitDeletionVectors(spark: SparkSession, path: String, fs: FileSystem,
+      root: HPath, snap: Snapshot, m: MergeOnRead.Matches): Long = {
+    gateWriter(snap, path, "deleteMergeOnRead", mutates = true)
     import spark.implicits._
-    val results: Array[DvBuildRes] = matches.as[(String, Long)]
-      .repartition(col("__rel"))
-      .sortWithinPartitions(col("__rel"), col("__pos"))
-      .mapPartitions { it =>
-        val out = scala.collection.mutable.ArrayBuffer.empty[DvBuildRes]
-        val large = scala.collection.mutable.ArrayBuffer.empty[(String, Array[Byte], Long)]
-        var curRel: String = null
-        val pos = scala.collection.mutable.ArrayBuffer.empty[Long]
-        def finish(): Unit = if (curRel != null) {
-          val merged = priorSrc.value.get(curRel) match {
-            case Some(src) => pos.toArray ++ src.positions()
-            case None => pos.toArray
-          }
-          val distinctSorted = merged.distinct.sorted
-          val blob = DeltaDv.serialize(distinctSorted)
-          val card = distinctSorted.length.toLong
-          if (blob.length > InlineMax) large += ((curRel, blob, card))
-          else {
-            // z85 encodes 4-byte groups; the serialized vector is
-            // self-delimiting, so zero-padding to alignment is inert
-            val padded =
-              if (blob.length % 4 == 0) blob
-              else blob ++ Array.fill(4 - blob.length % 4)(0.toByte)
-            out += DvBuildRes(curRel, "i", DeltaDv.z85Encode(padded), -1, blob.length, card)
-          }
-          pos.clear()
-        }
-        it.foreach { case (rel, p) =>
-          if (rel != curRel) { finish(); curRel = rel }
-          pos += p
-        }
-        finish()
-        if (large.nonEmpty) {
-          // UUID-fresh per attempt: a retried/speculative task leaves
-          // its predecessor's blob ORPHANED (never logged — only the
-          // winning attempt's descriptors commit), and [[vacuum]]
-          // reclaims any .bin no live descriptor references
-          val binPath = new HPath(rootStr,
-            s"deletion_vector_${java.util.UUID.randomUUID()}.bin")
-          val framing = DeltaDv.writeFile(
-            binPath.getFileSystem(conf.value), binPath, large.map(_._2).toSeq)
-          large.zip(framing).foreach { case ((rel, _, card), (off, size)) =>
-            out += DvBuildRes(rel, "p", binPath.toUri.getPath, off, size, card)
-          }
-        }
-        out.iterator
-      }.collect()
-    DvIntrospect.lastCommitDriverRows = results.length
+    val results = m.collect(dvEncoder(root.toString,
+      new org.apache.spark.util.SerializableConfiguration(spark.sparkContext.hadoopConfiguration)))
     if (results.isEmpty) return snap.version
 
     val now = System.currentTimeMillis()
     val v = snap.version + 1
     val lines = scala.collection.mutable.ArrayBuffer.empty[String]
     lines += protocolLine(withDeletionVectors(snap.protocol))
-    results.sortBy(_.rel).foreach { res =>
-      val rel = res.rel
-      val f = snap.files.find(_.path == rel).get
-      val rm = Json.createObjectNode()
-      val r = rm.putObject("remove")
-      r.put("path", rel); r.put("deletionTimestamp", now); r.put("dataChange", true)
-      lines += Json.writeValueAsString(rm)
-      val ad = Json.createObjectNode()
-      val a = ad.putObject("add")
-      a.put("path", rel)
-      val pvn = a.putObject("partitionValues")
-      f.partitionValues.foreach { case (k, ov) =>
-        ov match { case Some(s0) => pvn.put(k, s0): Unit; case None => pvn.putNull(k): Unit }
-      }
-      a.put("size", f.size); a.put("modificationTime", f.modificationTime)
-      a.put("dataChange", true)
-      f.stats.foreach(a.put("stats", _))
-      val dvn = a.putObject("deletionVector")
-      dvn.put("storageType", res.storageType)
-      dvn.put("pathOrInlineDv", res.pathOrInlineDv)
-      if (res.offset >= 0) dvn.put("offset", res.offset): Unit
-      // spec: sizeInBytes is the TRUE serialized size — foreign readers
-      // of an inline vector truncate the decoded z85 bytes to it, which
-      // is exactly how the task's alignment padding is meant to be shed
-      dvn.put("sizeInBytes", res.sizeInBytes)
-      dvn.put("cardinality", res.cardinality)
-      // a DV re-add is the SAME file — its row-tracking defaults ride
-      // (dropping them would reissue every surviving row's id)
-      f.baseRowId.foreach(a.put("baseRowId", _): Unit)
-      f.defaultRowCommitVersion.foreach(a.put("defaultRowCommitVersion", _): Unit)
-      lines += Json.writeValueAsString(ad)
+    val byPath = snap.files.iterator.map(f => f.path -> f).toMap
+    // a DV re-add is the SAME file: its stats and row-tracking defaults
+    // ride (dropping them would reissue every surviving row's id)
+    results.sortBy(_._1).foreach { case (rel, dv) =>
+      lines += removeLine(new java.net.URI(null, null, rel, null).toASCIIString, now)
+      lines += addLine(byPath(rel).copy(dv = Some(dv)))
     }
     if (snap.cdfEnabled) {
       import org.apache.spark.sql.functions.lit
       lines ++= stageCdc(spark, root, snap,
-        matchesWithMeta.drop(FileMetaCol, PosMetaCol)
+        m.rows.drop(FileMetaCol, PosMetaCol)
           .withColumn("_change_type", lit("delete")), now)
     }
     val ci = Json.createObjectNode()
@@ -3460,12 +3397,7 @@ object DeltaLake {
           (stamped, Some(wm))
         }
       val lines = scala.collection.mutable.ArrayBuffer.empty[String]
-      removedRel.foreach { p =>
-        val o = Json.createObjectNode()
-        val rm = o.putObject("remove")
-        rm.put("path", p); rm.put("deletionTimestamp", now); rm.put("dataChange", dataChange)
-        lines += Json.writeValueAsString(o)
-      }
+      removedRel.foreach(p => lines += removeLine(p, now, dataChange))
       adds.foreach(a => lines += addLine(a, dataChange))
       lines ++= cdcLines
       txn.foreach { case (appId, ver) =>
@@ -3851,13 +3783,8 @@ object DeltaLake {
       lines += metaDataLine(sc, snap.partitionColumns, now, snap.configuration)
     }
     rowIdWm.foreach(lines += _)
-    removedRel.toSeq.sorted.foreach { rel =>
-      val o = Json.createObjectNode()
-      val rm = o.putObject("remove")
-      rm.put("path", new java.net.URI(null, null, rel, null).toASCIIString)
-      rm.put("deletionTimestamp", now); rm.put("dataChange", true)
-      lines += Json.writeValueAsString(o)
-    }
+    removedRel.toSeq.sorted.foreach(rel =>
+      lines += removeLine(new java.net.URI(null, null, rel, null).toASCIIString, now))
     stampedAdds.foreach(a => lines += addLine(a))
     val ci = Json.createObjectNode()
     val info = ci.putObject("commitInfo")
@@ -3865,6 +3792,14 @@ object DeltaLake {
     lines += Json.writeValueAsString(ci)
     commitLines(fs, root, v, lines.toSeq, snap.configuration)
     v
+  }
+
+  /** A `remove` action line for the log path `logPath`, as given. */
+  private def removeLine(logPath: String, now: Long, dataChange: Boolean = true): String = {
+    val o = Json.createObjectNode()
+    val rm = o.putObject("remove")
+    rm.put("path", logPath); rm.put("deletionTimestamp", now); rm.put("dataChange", dataChange)
+    Json.writeValueAsString(o)
   }
 
   private def addLine(a: AddFile, dataChange: Boolean = true): String = {
@@ -3999,12 +3934,7 @@ object DeltaLake {
     val lines = scala.collection.mutable.ArrayBuffer.empty[String]
     if (schemaChanged)
       lines += metaDataLine(tgt.rawSchema, tgt.partitionColumns, now, cur.configuration)
-    removed.foreach { f =>
-      val o = Json.createObjectNode()
-      val rm = o.putObject("remove")
-      rm.put("path", f.path); rm.put("deletionTimestamp", now); rm.put("dataChange", true)
-      lines += Json.writeValueAsString(o)
-    }
+    removed.foreach(f => lines += removeLine(f.path, now))
     added.foreach(a => lines += addLine(a.copy(modificationTime = now)))
     if (cur.cdfEnabled) {
       import org.apache.spark.sql.functions.lit

@@ -1221,7 +1221,13 @@ object Iceberg {
   def snapshot(spark: SparkSession, path: String,
       snapshotId: Option[Long] = None): Snapshot = {
     val (fs, root) = Writers.fsFor(path)
-    val (_, meta) = readMetadata(fs, root)
+    snapshotOf(spark, path, fs, readMetadata(fs, root)._2, snapshotId)
+  }
+
+  /** [[snapshot]] of already-read metadata `meta`, so a writer's
+    * discovery and commit see the same table version. */
+  private def snapshotOf(spark: SparkSession, path: String, fs: FileSystem, meta: JsonNode,
+      snapshotId: Option[Long]): Snapshot = {
     val schema = schemaFromMeta(meta)
     val (defaultSpecId, allSpecs) = specsFromMeta(meta)
     val partFields = allSpecs.getOrElse(defaultSpecId, Nil)
@@ -2957,17 +2963,17 @@ object Iceberg {
     None
   }
 
-  /** Merge-on-read `DELETE FROM t WHERE cond` — the v2 spec's POSITION
-    * DELETE path: the matching rows' `(file_path, pos)` pairs are
-    * written as ONE position-delete parquet file (spec schema —
-    * `file_path` string field-id 2147483546, `pos` long field-id
-    * 2147483545, rows sorted by file then position) and published as a
-    * new snapshot whose manifest list carries every prior manifest
-    * untouched plus one DELETE manifest (`content=1`). ZERO data files
-    * rewritten; every subsequent [[read]] applies the positions as a
-    * broadcast row-index filter (no join). Discovery reads the current
-    * MATERIALIZED snapshot (existing deletes applied), so an
-    * already-deleted row is never re-recorded.
+  /** Merge-on-read `DELETE FROM t WHERE cond`, through
+    * [[MergeOnRead.deleteWhere]] (which finds the matches and groups
+    * their positions by file on executors). ZERO data files rewritten;
+    * every subsequent [[read]] applies the positions as a broadcast
+    * row-index filter (no join).
+    *   - v2: the spec's POSITION DELETE file — ONE parquet (spec schema:
+    *     `file_path` string field-id 2147483546, `pos` long field-id
+    *     2147483545, rows sorted by file then position) published in one
+    *     DELETE manifest (`content=1`) beside every prior manifest.
+    *   - v3: puffin DELETION VECTORS ([[commitDvDeletes]]); the spec
+    *     forbids new position-delete files in v3.
     *
     * The delete manifest records the table's partition spec with null
     * partition values — position deletes name exact file paths, so
@@ -2976,61 +2982,55 @@ object Iceberg {
     * when no row matches (an empty delete is not a commit). */
   def deleteMergeOnRead(spark: SparkSession, path: String,
       cond: org.apache.spark.sql.Column): Long =
-    commitPositionDeletes(spark, path,
-      snapshotFrame(spark, path, snapshot(spark, path), withMeta = true).filter(cond))
+    MergeOnRead.deleteWhere(morTable(spark, path, "Iceberg.deleteMergeOnRead"), cond)
 
   /** Keyed merge-on-read delete — `MERGE … WHEN MATCHED THEN DELETE`'s
-    * shape: the match set is a SEMI-JOIN against `keys` (shuffles on
-    * the key, broadcastable when small) instead of a predicate, so a
-    * large delete-key frame never collects driver-side. */
+    * shape, through [[MergeOnRead.deleteMatched]]. */
   def deleteMatched(spark: SparkSession, path: String,
-      keys: DataFrame, key: String): Long = {
-    import org.apache.spark.sql.functions.col
-    val s = snapshot(spark, path)
-    require(s.schema.fieldNames.contains(key), s"Iceberg.deleteMatched: no column $key")
-    commitPositionDeletes(spark, path,
-      snapshotFrame(spark, path, s, withMeta = true)
-        .join(keys.select(col(key)).distinct(), Seq(key), "left_semi"))
-  }
+      keys: DataFrame, key: String): Long =
+    MergeOnRead.deleteMatched(morTable(spark, path, "Iceberg.deleteMatched"), keys, key)
 
-  /** The shared position-delete commit: run the matched frame's
-    * `(file, position)` metadata down to one spec-shaped delete file
-    * and publish it. `matches` must carry the snapshotFrame meta
-    * columns. */
-  private def commitPositionDeletes(spark: SparkSession, path: String,
-      matchesWithMeta: DataFrame): Long = {
-    import org.apache.spark.sql.functions.{col, expr}
+  /** The current snapshot as a [[MergeOnRead.Table]], read from ONE
+    * metadata version that both discovery and the commit use. The file
+    * key is the manifest's raw absolute path, so the recorded targets
+    * match the manifests byte-for-byte. */
+  private def morTable(spark: SparkSession, path: String, op: String): MergeOnRead.Table = {
     val (fs, root) = Writers.fsFor(path)
     val (metaV, meta) = readMetadata(fs, root)
-    val s = snapshot(spark, path)
-    val rootPrefix = root.toUri.getPath.stripSuffix("/") + "/"
-    val q = rootPrefix.replace("'", "''")
-    // manifest file_path entries are scheme-less RAW paths; the scan's
-    // `_metadata.file_path` is a URL-ENCODED URI — decode it (with a
-    // literal-'+' guard: url_decode is form-decoding, and a '+' in a
-    // URI path is a literal plus, not a space), then cut from the table
-    // root so the recorded targets match the manifests byte-for-byte.
-    // Recording the encoded form would silently unapply the delete on
-    // any path Spark encodes (a space in a timestamp partition dir).
-    val matches = matchesWithMeta
-      .select(
-        expr(s"url_decode(replace($FileMetaCol, '+', '%2B'))").as("__raw"),
-        col(PosMetaCol).as("pos"))
-      .select(
-        expr(s"substring(__raw, instr(__raw, '$q'))").as("file_path"),
-        col("pos"))
-    // a v3 table records position deletes as puffin DELETION VECTORS
-    // (the spec forbids new position-delete files in v3)
-    if (meta.get("format-version").asInt == 3)
-      return commitDvDeletes(spark, fs, root, metaV, meta, s, matches)
+    val s = snapshotOf(spark, path, fs, meta, None)
+    val v3 = meta.get("format-version").asInt == 3
+    new MergeOnRead.Table {
+      val name = op
+      def live = snapshotFrame(spark, path, s, withMeta = true)
+      val fileKey = MergeOnRead.diskPath(FileMetaCol, root, relative = false)
+      val posCol = PosMetaCol
+      def prior = if (v3) dvPrior(spark, s) else Map.empty
+      def commit(m: MergeOnRead.Matches) =
+        if (v3) commitDvDeletes(spark, fs, root, metaV, meta, s, m)
+        else commitPositionDeletes(spark, fs, root, metaV, meta, s, m)
+    }
+  }
+
+  /** The v2 position-delete rows of one task's files, in file then
+    * position order. */
+  private val positionRows: MergeOnRead.Files => Iterator[(String, Long)] =
+    _.flatMap { case (file, positions) => positions.iterator.map(file -> _) }
+
+  /** The v2 commit: the matched `(file_path, pos)` pairs run down to
+    * one spec-shaped delete file, published through
+    * [[commitDeleteFile]]. */
+  private def commitPositionDeletes(spark: SparkSession, fs: FileSystem, root: HPath,
+      metaV: Long, meta: JsonNode, s: Snapshot, m: MergeOnRead.Matches): Long = {
+    import org.apache.spark.sql.functions.expr
+    import spark.implicits._
     // ---- stage the delete file with the spec's reserved field ids
     val delSchema = StructType(Seq(
       StructField("file_path", StringType, nullable = false,
         new MetadataBuilder().putLong("parquet.field.id", 2147483546L).build()),
       StructField("pos", LongType, nullable = false,
         new MetadataBuilder().putLong("parquet.field.id", 2147483545L).build())))
-    val sorted = spark.createDataFrame(
-      matches.repartition(1).sortWithinPartitions("file_path", "pos").rdd, delSchema)
+    val sorted = spark.createDataFrame(m.encode(oneTask = true)(positionRows).toDF().rdd,
+      delSchema)
     val tmp = new HPath(root, s".staged-${java.util.UUID.randomUUID().toString.take(8)}")
     // field-id conf on an isolated clone, never the shared session (r17 verdict #1)
     org.apache.spark.sql.graft.StagedWrite.isolated(sorted,
@@ -3058,85 +3058,21 @@ object Iceberg {
   }
 
   /** The v3 POSITION-DELETE commit: the matched `(file_path, pos)`
-    * pairs become one PUFFIN file holding one `deletion-vector-v1`
-    * blob per affected data file, published as a DELETE manifest whose
-    * entries carry the spec's referenced_data_file / content_offset /
-    * content_size_in_bytes locators. The v3 invariant of at most one
-    * DV per data file: an affected file's existing DV (when still
-    * applicable under the sequence rule) MERGES into the new bitmap
-    * and its old manifest entry is dropped from the carried list.
-    * Pre-upgrade parquet position-delete files are left in place —
-    * they still apply on read, and rewriting them would be O(debt)
-    * churn a delete of unrelated rows should not pay. The bitmaps are
-    * built ON EXECUTORS: matched rows shuffle by file, each task
-    * streams its files' positions into RoaringBitmapArrays (merging
-    * any still-applicable prior DV off its broadcast descriptor),
-    * writes ONE puffin file per task, and reports back manifest
-    * locators only — the driver collect is O(touched files), never
-    * O(matched rows). */
+    * pairs become PUFFIN files holding one `deletion-vector-v1` blob
+    * per affected data file ([[puffinEncoder]]), published as a DELETE
+    * manifest whose entries carry the spec's referenced_data_file /
+    * content_offset / content_size_in_bytes locators. The v3 invariant
+    * of at most one DV per data file: an affected file's existing DV
+    * (when still applicable under the sequence rule, [[dvPrior]])
+    * MERGES into the new bitmap and its old manifest entry is dropped
+    * from the carried list. Pre-upgrade parquet position-delete files
+    * are left in place — they still apply on read, and rewriting them
+    * would be O(debt) churn a delete of unrelated rows should not pay. */
   private def commitDvDeletes(spark: SparkSession, fs: FileSystem, root: HPath,
-      metaV: Long, meta: JsonNode, s: Snapshot,
-      matches: org.apache.spark.sql.DataFrame): Long = {
-    import org.apache.spark.sql.functions.col
+      metaV: Long, meta: JsonNode, s: Snapshot, m: MergeOnRead.Matches): Long = {
     import spark.implicits._
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val dataSeqMap: Map[String, Long] =
-      s.files.map(f => Hive.fsPathNoDecode(f.path) -> f.seq).toMap
-    // each affected file's still-applicable existing DV merges into the
-    // new bitmap (the v3 one-DV-per-file invariant); an inapplicable
-    // one (file re-added above the DV's sequence) is dropped WITHOUT
-    // merging — its positions named a dead incarnation
-    // broadcast, not task-closure: O(files-with-DVs) descriptors move
-    // once per executor instead of inside every task binary
-    val priorSrc: org.apache.spark.broadcast.Broadcast[
-        Map[String, Seq[graft.functions.DvPositionSource]]] =
-      spark.sparkContext.broadcast(
-        s.dvDeletes.groupBy(d => Hive.fsPathNoDecode(d.referencedDataFile))
-          .flatMap { case (raw, ds) =>
-            val applicable = ds.filter(d => dataSeqMap.get(raw).exists(_ <= d.seq))
-            if (applicable.isEmpty) None
-            else Some(raw -> applicable.map(d =>
-              DvSources.PuffinBlob(new HPath(d.path).toString, d.contentOffset,
-                d.contentSize, conf): graft.functions.DvPositionSource))
-          })
-    val rootStr = root.toString
-    val results: Array[DvCommitRes] = matches.as[(String, Long)]
-      .repartition(col("file_path"))
-      .sortWithinPartitions(col("file_path"), col("pos"))
-      .mapPartitions { it =>
-        val perFile = scala.collection.mutable.ArrayBuffer.empty[(String, Array[Long])]
-        var curRaw: String = null
-        var curKey: String = null
-        val pos = scala.collection.mutable.ArrayBuffer.empty[Long]
-        def finish(): Unit = if (curKey != null) {
-          val prior = priorSrc.value.getOrElse(curKey, Nil).iterator
-            .flatMap(_.positions().iterator).toArray
-          perFile += ((curKey, pos.toArray ++ prior))
-          pos.clear()
-        }
-        it.foreach { case (fp, p) =>
-          if (fp != curRaw) { finish(); curRaw = fp; curKey = Hive.fsPathNoDecode(fp) }
-          pos += p
-        }
-        finish()
-        if (perFile.isEmpty) Iterator.empty
-        else {
-          // UUID-fresh per attempt: a retried/speculative task leaves
-          // its predecessor's puffin ORPHANED (no manifest ever names
-          // it — only the winning attempt's locators commit), and
-          // [[removeOrphanFiles]] age-reclaims unreferenced .puffin
-          val dest = new HPath(rootStr,
-            s"data/${java.util.UUID.randomUUID()}-deletes.puffin")
-          val fs2 = dest.getFileSystem(conf.value)
-          fs2.mkdirs(dest.getParent)
-          val blobs = Puffin.writeDvFile(fs2, dest, perFile.toSeq)
-          val fileLen = fs2.getFileStatus(dest).getLen
-          blobs.iterator.map { case (ref, off, len, card) =>
-            DvCommitRes(ref, dest.toUri.getPath, off, len, card, fileLen) }
-        }
-      }.collect()
-    DvIntrospect.lastCommitDriverRows = results.length
+    val results = m.collect(puffinEncoder(root.toString,
+      new org.apache.spark.util.SerializableConfiguration(spark.sparkContext.hadoopConfiguration)))
     if (results.isEmpty) return s.snapshotId
     val entries = results.sortBy(_.ref).toSeq.map { r =>
       DeleteEntrySpec(r.puffinPath, r.cardinality, r.fileLen, "PUFFIN", fileContent = 1,
@@ -3145,6 +3081,45 @@ object Iceberg {
     }
     commitDeleteFile(fs, root, metaV, meta, s, entries,
       replaceDvFor = results.map(_.ref).toSet)
+  }
+
+  /** Each data file's still-applicable deletion vectors, by path. An
+    * inapplicable one (its file re-added above the DV's sequence) is
+    * dropped WITHOUT merging — its positions named a dead
+    * incarnation. */
+  private def dvPrior(spark: SparkSession,
+      s: Snapshot): Map[String, Seq[graft.functions.DvPositionSource]] = {
+    val conf = new org.apache.spark.util.SerializableConfiguration(
+      spark.sparkContext.hadoopConfiguration)
+    val dataSeqMap = s.files.map(f => Hive.fsPathNoDecode(f.path) -> f.seq).toMap
+    s.dvDeletes.groupBy(d => Hive.fsPathNoDecode(d.referencedDataFile)).flatMap {
+      case (raw, ds) =>
+        val applicable = ds.filter(d => dataSeqMap.get(raw).exists(_ <= d.seq))
+        Option.when(applicable.nonEmpty)(raw -> applicable.map(d =>
+          DvSources.PuffinBlob(new HPath(d.path).toString, d.contentOffset,
+            d.contentSize, conf): graft.functions.DvPositionSource))
+    }
+  }
+
+  /** Iceberg v3's encoder for one task's files: ONE puffin file, its
+    * name UUID-fresh per attempt — a retried or speculative task leaves
+    * its predecessor's puffin ORPHANED (no manifest ever names it), and
+    * [[removeOrphanFiles]] age-reclaims unreferenced `.puffin`. Emits
+    * the manifest locators only. */
+  private def puffinEncoder(rootStr: String,
+      conf: org.apache.spark.util.SerializableConfiguration)
+      : MergeOnRead.Files => Iterator[DvCommitRes] = files => {
+    val perFile = files.map { case (raw, ps) => Hive.fsPathNoDecode(raw) -> ps }.toVector
+    if (perFile.isEmpty) Iterator.empty
+    else {
+      val dest = new HPath(rootStr, s"data/${java.util.UUID.randomUUID()}-deletes.puffin")
+      val fs2 = dest.getFileSystem(conf.value)
+      fs2.mkdirs(dest.getParent)
+      val blobs = Puffin.writeDvFile(fs2, dest, perFile)
+      val fileLen = fs2.getFileStatus(dest).getLen
+      blobs.iterator.map { case (ref, off, len, card) =>
+        DvCommitRes(ref, dest.toUri.getPath, off, len, card, fileLen) }
+    }
   }
 
   /** One committed deletion-vector blob, as the build task reports it:

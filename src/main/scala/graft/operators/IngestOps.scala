@@ -3744,20 +3744,22 @@ object IngestOps extends QueryModule {
       require(pstat.getLong(0) == snap.files.map(_.recordCount).sum &&
         pstat.getLong(1) == snap.files.size,
         s"s68: partition statistics must reconcile with the manifests ($pstat)")
-      // the planning claim: CBO sees the published ndv + row count
-      val prevCbo = s.conf.get("spark.sql.cbo.enabled")
-      s.conf.set("spark.sql.cbo.enabled", "true")
-      try {
-        val st = I.readWithStats(s, cp).queryExecution.optimizedPlan.stats
-        require(st.rowCount.exists(_ > 0),
-          s"s68: the stats-attached read must expose its row count: $st")
-        val seen = st.attributeStats.collectFirst {
-          case (a, cs) if a.name == "c_custkey" => cs.distinctCount
-        }.flatten
-        require(seen.contains(BigInt(custNdv("c_custkey"))),
-          s"s68: planning must see the published ndv (got $seen, want " +
-            s"${custNdv("c_custkey")})")
-      } finally s.conf.set("spark.sql.cbo.enabled", prevCbo)
+      // the planning claim: CBO sees the published ndv + row count. The
+      // probe plans on a clone carrying CBO (its stats read the clone's
+      // conf too), so the shared session's conf is never written
+      val probe = org.apache.spark.sql.graft.StagedWrite.isolated(I.readWithStats(s, cp),
+        Map("spark.sql.cbo.enabled" -> "true"))
+      val st = org.apache.spark.sql.internal.SQLConf.withExistingConf(
+        probe.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+          .sessionState.conf)(probe.queryExecution.optimizedPlan.stats)
+      require(st.rowCount.exists(_ > 0),
+        s"s68: the stats-attached read must expose its row count: $st")
+      val seen = st.attributeStats.collectFirst {
+        case (a, cs) if a.name == "c_custkey" => cs.distinctCount
+      }.flatten
+      require(seen.contains(BigInt(custNdv("c_custkey"))),
+        s"s68: planning must see the published ndv (got $seen, want " +
+          s"${custNdv("c_custkey")})")
       I.readWithStats(s, cp)
         .join(I.readWithStats(s, op), col("c_custkey") === col("o_custkey"))
         .groupBy("c_mktsegment")

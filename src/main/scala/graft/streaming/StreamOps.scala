@@ -3,7 +3,9 @@ package graft.streaming
 import graft.core._
 import graft.core.Casts._
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Cast
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, TimeMode, Trigger}
 import org.apache.spark.sql.types._
 
@@ -42,17 +44,19 @@ object StreamOps extends QueryModule {
     eventsSchema.fields.map(f =>
       if (f.name == "ts") f.copy(dataType = TimestampNTZType) else f))
 
-  /** File-source stream over the events table (S9), NTZ→nanos→micros→timestamp. */
-  private def eventStream(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.session.timeZone", "UTC")
+  /** File-source stream over the events table (S9), NTZ→nanos→micros→timestamp.
+    * The NTZ→TZ cast pins UTC itself, as [[Tables.events]] does, so the
+    * stream reads the same in any session zone and the session conf is
+    * never written. */
+  private def eventStream(s: SparkSession, d: String): DataFrame =
     s.readStream
       .schema(rawEventsSchema)
       .option("pathGlobFilter", "events.parquet") // file source needs a dir
       .parquet(d)
-      .withColumn("ts", unix_micros(col("ts").cast(TimestampType)) * 1000L)
+      .withColumn("ts", unix_micros(ColumnBridge.column(
+        Cast(ColumnBridge.expression(col("ts")), TimestampType, Some("UTC")))) * 1000L)
       .withColumn("us", expr("ts div 1000"))
       .withColumn("ts2", timestamp_micros(expr("ts div 1000")))
-  }
 
   /** Drain a streaming DataFrame into a memory sink and return the sink
     * table. AvailableNow processes everything then stops — the streaming
