@@ -1,6 +1,6 @@
 package graft.ingest
 
-import graft.interop.MergeOnRead
+import graft.interop.{MergeOnRead, RewriteFiles}
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
@@ -1958,18 +1958,7 @@ object Versioned {
     * (UTF8String binary compare) wrote them in — Java String `<` is
     * UTF-16 code-unit order, which diverges for supplementary
     * characters vs U+E000..U+FFFF. */
-  private def utf8Lt(a: String, b: String): Boolean = {
-    val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val n = math.min(x.length, y.length)
-    var i = 0
-    while (i < n) {
-      val d = (x(i) & 0xff) - (y(i) & 0xff)
-      if (d != 0) return d < 0
-      i += 1
-    }
-    x.length < y.length
-  }
+  private def utf8Lt(a: String, b: String): Boolean = RewriteFiles.utf8Compare(a, b) < 0
 
   private def statsOverlap(stats: Option[String], c: String, lo: Any, hi: Any): Boolean = {
     val node = stats.map(Json.readTree(_)).flatMap(n => Option(n.get(c)))
@@ -2338,20 +2327,18 @@ object Versioned {
     got
   }
 
-  /** DYNAMIC PARTITION OVERWRITE — `INSERT OVERWRITE` under
-    * `partitionOverwriteMode=dynamic`: every partition the frame
-    * TOUCHES is replaced whole, every other partition is carried by
-    * reference untouched — ONE atomic delta commit (O(touched)
-    * metadata), the same claim-disjoint rebase as
-    * [[upsertPartitioned]] (partition-disjoint writers land
-    * concurrently; overlapping ones conflict loudly). The difference
-    * from upsert: touched partitions' prior rows are NOT merged —
-    * replacement is the contract. */
-  def replacePartitions(
-      spark: SparkSession, path: String, updates: DataFrame,
-      partCols: String*): Long = {
-    import org.apache.spark.sql.functions.col
-    require(partCols.nonEmpty, "Versioned.replacePartitions: at least one partition column")
+  /** DYNAMIC PARTITION OVERWRITE through
+    * [[RewriteFiles.replacePartitions]] — `INSERT OVERWRITE` under
+    * `partitionOverwriteMode=dynamic` on the committed partition
+    * layout: every partition the frame TOUCHES is replaced whole,
+    * every other partition is carried by reference untouched — ONE
+    * atomic delta commit (O(touched) metadata), the same
+    * claim-disjoint rebase as [[upsertPartitioned]]
+    * (partition-disjoint writers land concurrently; overlapping ones
+    * conflict loudly). The difference from upsert: touched partitions'
+    * prior rows are NOT merged — replacement is the contract. */
+  def replacePartitions(spark: SparkSession, path: String, updates: DataFrame): Long = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     val (fs, root) = Writers.fsFor(path)
     val cur = headOf(path, "replacePartitions")
     val entries = readManifest(fs, root, cur)
@@ -2359,35 +2346,39 @@ object Versioned {
       s"Versioned.replacePartitions: $path has outstanding merge-on-read deletes — " +
         "run compactDeletes first (a partition carried by reference would otherwise " +
         "detach from the delete files that apply to it)")
-    require(layoutPartCols(entries) == partCols.toSeq,
-      s"Versioned.replacePartitions: $path is laid out on " +
-        s"(${layoutPartCols(entries).mkString(", ")}), not (${partCols.mkString(", ")}) — " +
-        "partition columns must match the committed layout in order")
-    val tuples = updates.select(partCols.map(col): _*).distinct().collect()
-    // the SQL dynamic-overwrite contract: an empty source replaces
-    // NOTHING (no partitions touched, no commit)
-    if (tuples.isEmpty) return cur
-    require(tuples.forall(r => partCols.indices.forall(i => !r.isNullAt(i))),
-      s"Versioned.replacePartitions: updates carry a NULL partition value — must be non-null")
-    val touchedDirs = tuples.map { r =>
-      partCols.indices.map { i =>
-        s"${partCols(i)}=" + org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .escapePathName(r.get(i).toString)
-      }.mkString("/")
-    }.toSet
-    val touched = entries.filter(e => touchedDirs.contains(e.partDir))
-    val (v, derivedBase) = claimDisjoint(fs, root, path, cur, touchedDirs)
-    updates.write.mode(SaveMode.Overwrite).partitionBy(partCols: _*)
-      .parquet(dataDir(root, v).toString)
-    val fresh = localEntries(fs, root, v, partitioned = true)
-    val freshDirs = fresh.map(_.partDir).toSet
-    require(freshDirs.subsetOf(touchedDirs),
-      s"Versioned.replacePartitions: partition-value rendering diverged from Spark's " +
-        s"path encoding — wrote ${freshDirs.diff(touchedDirs).mkString(", ")}, " +
-        s"predicted ${touchedDirs.mkString(", ")}. Not committing.")
-    publishDelta(fs, root, v, derivedBase,
-      adds = fresh, removes = touched.map(e => (e.partDir, e.relPath)),
-      schema = updates.schema)
+    val partCols = layoutPartCols(entries)
+    val t = new RewriteFiles.Table[ManifestEntry] {
+      def name = "Versioned"
+      lazy val schema = metaSchema(fs, root, cur).getOrElse(updates.schema)
+      def partitionNames = partCols
+      def files = entries
+      def partition(e: ManifestEntry) = e.partDir.split("/").map { kv =>
+        val (k, v) = kv.splitAt(kv.indexOf('='))
+        k -> Option(ExternalCatalogUtils.unescapePathName(v.drop(1)))
+          .filterNot(_ == ExternalCatalogUtils.DEFAULT_PARTITION_NAME)
+      }.toMap
+      def unchanged = cur
+    }
+    RewriteFiles.replacePartitions(t, updates) { r =>
+      val touchedDirs = r.touched.map(_.zip(partCols).map { case (v, c) =>
+        s"$c=${ExternalCatalogUtils.escapePathName(v)}"
+      }.mkString("/"))
+      val (v, derivedBase) = claimDisjoint(fs, root, path, cur, touchedDirs)
+      r.rows.write.mode(SaveMode.Overwrite).partitionBy(partCols: _*)
+        .parquet(dataDir(root, v).toString)
+      val fresh = localEntries(fs, root, v, partitioned = true)
+      val freshDirs = fresh.map(_.partDir).toSet
+      // post-write verification: Spark rendered a partition value
+      // into a dir the claim did not predict → abort (uncommitted
+      // claim, recoverClaims-able) instead of publishing duplicates
+      require(freshDirs.subsetOf(touchedDirs),
+        s"Versioned.replacePartitions: partition-value rendering diverged from Spark's " +
+          s"path encoding — wrote ${freshDirs.diff(touchedDirs).mkString(", ")}, " +
+          s"predicted ${touchedDirs.mkString(", ")}. Not committing.")
+      publishDelta(fs, root, v, derivedBase,
+        adds = fresh, removes = r.removed.map(e => (e.partDir, e.relPath)),
+        schema = r.rows.schema)
+    }
   }
 
   /** MERGE-ON-READ delete — the zero-rewrite alternative to the
@@ -3094,34 +3085,15 @@ object Versioned {
       }
     }
 
-  private def statCmp(a: Any, b: Any): Int = (a, b) match {
-    case (x: java.math.BigDecimal, y: java.math.BigDecimal) => x.compareTo(y)
-    case (x: String, y: String) =>
-      if (utf8Lt(x, y)) -1 else if (utf8Lt(y, x)) 1 else 0
-    case _ => 0
-  }
-
-  /** The STRAGGLERS of a clustered layout: the complement of the
-    * largest pairwise-disjoint subset of the files' recorded
-    * [min, max] intervals for `clusterCol` (classic interval
-    * scheduling — greedy by earliest upper bound), plus every file
-    * with no recorded stat. On a [[commitClustered]] table that an
-    * append loop keeps landing unclustered batches on, the original
+  /** The STRAGGLERS of a clustered layout for `clusterCol`
+    * ([[RewriteFiles.stragglers]]). On a [[commitClustered]] table that
+    * an append loop keeps landing unclustered batches on, the original
     * range-disjoint files stay CLEAN and exactly the appended
     * full-range files come back — the set whose rewrite restores
     * pruning without touching the rest. */
   private def clusterStragglers(
-      entries: Seq[ManifestEntry], clusterCol: String): Seq[ManifestEntry] = {
-    val (stated, statless) = entries.map(e => e -> statBounds(e, clusterCol))
-      .partition(_._2.isDefined)
-    val sorted = stated.map { case (e, b) => (e, b.get) }
-      .sortWith((x, y) => statCmp(x._2._2, y._2._2) < 0)
-    val clean = scala.collection.mutable.ArrayBuffer.empty[ManifestEntry]
-    var lastHi: Option[Any] = None
-    for ((e, (lo, hi)) <- sorted)
-      if (lastHi.forall(h => statCmp(lo, h) > 0)) { clean += e; lastHi = Some(hi) }
-    statless.map(_._1) ++ sorted.map(_._1).filterNot(clean.contains)
-  }
+      entries: Seq[ManifestEntry], clusterCol: String): Seq[ManifestEntry] =
+    RewriteFiles.stragglers(entries)(statBounds(_, clusterCol))
 
   /** INCREMENTAL CLUSTERING MAINTENANCE (r7 verdict #4): where
     * [[commitZOrdered]]/[[commitClustered]] rewrite the whole table,

@@ -250,20 +250,10 @@ object DeltaLake {
     require(cols.nonEmpty,
       s"DeltaLake.optimizeCluster: $path is not a clustered table (enableClustering first)")
     if (snap.files.isEmpty) return snap.version
-    val rows: DataFrame =
-      if (snap.rowTrackingEnabled) trackedFrame(spark, path, snap, withMeta = false)
-      else {
-        val classic = spark.asInstanceOf[ClassicSession]
-        val base = classic.baseRelationToDataFrame(relationForSnapshot(spark, path, snap))
-        fromPhysicalDf(
-          if (!snap.hasDeletionVectors) base
-          else dropCovered(withRowMeta(base), loadDvMap(spark, path, snap))
-            .drop(FileMetaCol, PosMetaCol), snap)
-      }
+    val rows = rewriteRows(spark, path, snap)
     val n =
       if (nFiles > 0) nFiles
-      else math.max(1L,
-        (snap.files.map(_.size).sum + targetBytes - 1) / targetBytes).toInt
+      else RewriteFiles.outputFiles(snap.files.map(_.size).sum, targetBytes)
     val ordered =
       if (cols.size == 1)
         rows.repartitionByRange(n, col(cols.head)).sortWithinPartitions(cols.head)
@@ -309,19 +299,8 @@ object DeltaLake {
         "(enableClustering first)")
     val messy = clusterStragglerFiles(snap, cols)
     if (snap.files.isEmpty || messy.size <= maxStragglers) return None
-    val sub = snap.copy(files = messy)
-    val nOut = math.max(1L,
-      (messy.map(_.size).sum + targetBytes - 1) / targetBytes).toInt
-    val rows: DataFrame =
-      if (snap.rowTrackingEnabled) trackedFrame(spark, path, sub, withMeta = false)
-      else {
-        val classic = spark.asInstanceOf[ClassicSession]
-        val base = classic.baseRelationToDataFrame(relationForSnapshot(spark, path, sub))
-        fromPhysicalDf(
-          if (!sub.hasDeletionVectors) base
-          else dropCovered(withRowMeta(base), loadDvMap(spark, path, sub))
-            .drop(FileMetaCol, PosMetaCol), sub)
-      }
+    val nOut = RewriteFiles.outputFiles(messy.map(_.size).sum, targetBytes)
+    val rows = rewriteRows(spark, path, snap.copy(files = messy))
     val ordered =
       if (cols.size == 1)
         rows.repartitionByRange(nOut, col(cols.head)).sortWithinPartitions(cols.head)
@@ -334,10 +313,9 @@ object DeltaLake {
   }
 
   /** The stragglers of a clustered Delta layout (see
-    * [[maintainClusteredIfNeeded]]). Single column: the complement of
-    * the largest pairwise-disjoint subset of recorded [min, max]
-    * intervals, plus stats-less files. Multi-column: every file not
-    * stamped by a clustering rewrite. */
+    * [[maintainClusteredIfNeeded]]). Single column:
+    * [[RewriteFiles.stragglers]] over the recorded [min, max] stats.
+    * Multi-column: every file not stamped by a clustering rewrite. */
   private def clusterStragglerFiles(snap: Snapshot, cols: Seq[String]): Seq[AddFile] = {
     if (cols.size >= 2)
       return snap.files.filterNot(_.clusteringProvider.contains("liquid"))
@@ -352,19 +330,7 @@ object DeltaLake {
         if (mn.isNumber) (mn.decimalValue: Any, mx.decimalValue: Any)
         else (mn.asText: Any, mx.asText: Any)
     }
-    def cmp(a: Any, b: Any): Int = (a, b) match {
-      case (x: java.math.BigDecimal, y: java.math.BigDecimal) => x.compareTo(y)
-      case (x: String, y: String) => x.compareTo(y)
-      case _ => 0
-    }
-    val (stated, statless) = snap.files.map(f => f -> boundsOf(f)).partition(_._2.isDefined)
-    val sorted = stated.map { case (f, b) => (f, b.get) }
-      .sortWith((x, y) => cmp(x._2._2, y._2._2) < 0)
-    val clean = scala.collection.mutable.ArrayBuffer.empty[String]
-    var lastHi: Option[Any] = None
-    for ((f, (lo, hi)) <- sorted)
-      if (lastHi.forall(h => cmp(lo, h) > 0)) { clean += f.path; lastHi = Some(hi) }
-    statless.map(_._1) ++ sorted.map(_._1).filterNot(f => clean.contains(f.path))
+    RewriteFiles.stragglers(snap.files)(boundsOf)
   }
   private val MatRowIdKey = "delta.rowTracking.materializedRowIdColumnName"
   private val MatRcvKey = "delta.rowTracking.materializedRowCommitVersionColumnName"
@@ -1081,19 +1047,43 @@ object DeltaLake {
         org.apache.spark.sql.graft.ColumnBridge.expression(col(PosMetaCol)), dv))))
   }
 
-  def read(spark: SparkSession, path: String, versionAsOf: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{col, not}
-    val classic = spark.asInstanceOf[ClassicSession]
-    val s = snapshot(spark, path, versionAsOf)
-    val base = classic.baseRelationToDataFrame(relationForSnapshot(spark, path, s))
-    // outstanding deletion vectors apply as ONE broadcast row-index
-    // filter over the scan's (file, row position) metadata — no join,
-    // the same shape as the native format's vectors
-    val undeleted =
+  def read(spark: SparkSession, path: String, versionAsOf: Option[Long] = None): DataFrame =
+    liveRows(spark, path, snapshot(spark, path, versionAsOf))
+
+  /** The live rows of `s` in logical names. Outstanding deletion
+    * vectors apply as ONE broadcast row-index filter over the scan's
+    * (file, row position) metadata — no join, the same shape as the
+    * native format's vectors. */
+  private def liveRows(spark: SparkSession, path: String, s: Snapshot): DataFrame = {
+    val base = spark.asInstanceOf[ClassicSession]
+      .baseRelationToDataFrame(relationForSnapshot(spark, path, s))
+    fromPhysicalDf(
       if (!s.hasDeletionVectors) base
       else dropCovered(withRowMeta(base), loadDvMap(spark, path, s))
-        .drop(FileMetaCol, PosMetaCol)
-    fromPhysicalDf(undeleted, s)
+        .drop(FileMetaCol, PosMetaCol), s)
+  }
+
+  /** What a rewrite of `s`'s files reads: a row-tracked table reads
+    * through the tracking frame, so the replacement files MATERIALIZE
+    * every surviving row's id. */
+  private def rewriteRows(spark: SparkSession, path: String, s: Snapshot): DataFrame =
+    if (s.rowTrackingEnabled) trackedFrame(spark, path, s, withMeta = false)
+    else liveRows(spark, path, s)
+
+  /** The snapshot as a [[RewriteFiles.Compactable]]: files keyed by their
+    * decoded relative path, partition values by LOGICAL column name. */
+  private def rewriteTable(spark: SparkSession, path: String,
+      snap: Snapshot): RewriteFiles.Compactable[AddFile] = new RewriteFiles.Compactable[AddFile] {
+    def name = "DeltaLake"
+    def schema = snap.schema
+    def partitionNames = snap.partitionColumns
+    def files = snap.files
+    def key(f: AddFile) = f.path
+    def partition(f: AddFile) = snap.partitionColumns.map(c =>
+      c -> f.partitionValues.get(snap.physicalName(c)).flatten).toMap
+    def size(f: AddFile) = f.size
+    def rows(files: Seq[AddFile]) = rewriteRows(spark, path, snap.copy(files = files))
+    def unchanged = snap.version
   }
 
   /** One file's DV descriptor → the lazy executor-side loader behind
@@ -1727,7 +1717,7 @@ object DeltaLake {
     // a DV re-add is the SAME file: its stats and row-tracking defaults
     // ride (dropping them would reissue every surviving row's id)
     results.sortBy(_._1).foreach { case (rel, dv) =>
-      lines += removeLine(new java.net.URI(null, null, rel, null).toASCIIString, now)
+      lines += removeLine(rel, now)
       lines += addLine(byPath(rel).copy(dv = Some(dv)))
     }
     if (snap.cdfEnabled) {
@@ -2618,27 +2608,9 @@ object DeltaLake {
     // protocol records it) — serve the NET row count, so delete debt
     // never silently degrades join planning to the pre-delete total
     val dvDeleted = s.files.flatMap(_.dv).map(_.cardinality).sum
-    val rowCount: Option[BigInt] =
-      if (perFile.forall(_.nonEmpty))
-        Some(BigInt(math.max(0L, perFile.flatten.sum - dvDeleted)))
-      else s.domains.get(StatsDomain)
-        .map(c => BigInt(Json.readTree(c).path("rowCount").asLong))
-    val colStats = ndv.map { case (c, n) =>
-      c -> org.apache.spark.sql.catalyst.catalog.CatalogColumnStat(
-        distinctCount = Some(BigInt(n)))
-    }
-    val (_, root) = Writers.fsFor(path)
-    val ct = org.apache.spark.sql.catalyst.catalog.CatalogTable(
-      identifier = org.apache.spark.sql.catalyst.TableIdentifier(root.getName),
-      tableType = org.apache.spark.sql.catalyst.catalog.CatalogTableType.EXTERNAL,
-      storage = org.apache.spark.sql.catalyst.catalog.CatalogStorageFormat.empty
-        .copy(locationUri = Some(root.toUri)),
-      schema = s.schema,
-      provider = Some("delta"),
-      stats = Some(org.apache.spark.sql.catalyst.catalog.CatalogStatistics(
-        sizeInBytes = BigInt(s.files.map(_.size).sum),
-        rowCount = rowCount,
-        colStats = colStats)))
+    val rowCount =
+      if (perFile.forall(_.nonEmpty)) Some(math.max(0L, perFile.flatten.sum - dvDeleted))
+      else s.domains.get(StatsDomain).map(c => Json.readTree(c).path("rowCount").asLong)
     // DV-debted and column-mapped snapshots serve the SAME statistics
     // over their fallback relation (CatalogStatistics ride any
     // LogicalRelation) — its schema is the logical one, matching the
@@ -2648,8 +2620,8 @@ object DeltaLake {
         new org.apache.spark.sql.graft.GraftDeltaMappedRelation(
           spark.asInstanceOf[ClassicSession].sqlContext, path, None)
       else relationForSnapshot(spark, path, s)
-    org.apache.spark.sql.graft.ColumnBridge.relationWithStats(
-      spark.asInstanceOf[ClassicSession], rel, ct)
+    org.apache.spark.sql.graft.ColumnBridge.relationWithStats(spark, rel,
+      Writers.fsFor(path)._2, s.schema, "delta", s.files.map(_.size).sum, rowCount, ndv)
   }
 
   /** The type promotions the `typeWidening` table feature admits and
@@ -2972,7 +2944,7 @@ object DeltaLake {
       Seq("_change_data"), "cdc").map { case (relOut, pv, size, _) =>
       val o = Json.createObjectNode()
       val c = o.putObject("cdc")
-      c.put("path", new java.net.URI(null, null, relOut, null).toASCIIString)
+      c.put("path", logPath(relOut))
       val pvn = c.putObject("partitionValues")
       pv.foreach { case (k, ov) =>
         ov match { case Some(s0) => pvn.put(k, s0): Unit; case None => pvn.putNull(k): Unit }
@@ -3067,17 +3039,18 @@ object DeltaLake {
     else frames.map(f => fromPhysicalDf(f, snap).select(cols: _*)).reduce(_.unionByName(_))
   }
 
-  /** OPTIMIZE-style small-file COMPACTION: bin-pack each partition's
-    * small files (< targetBytes/2, where at least two share a
-    * partition) into ~targetBytes outputs, committed as remove+add
-    * with `dataChange=false` — the spec's maintenance marker. Files
-    * carrying deletion vectors are always selected and their vectors
-    * FOLD into the rewrite (the row set was already without those
-    * rows, so dataChange stays false — Delta's own OPTIMIZE/REORG
-    * semantics). A streaming tail SKIPS dataChange=false commits
-    * entirely ([[changesIn]]), so compaction neither breaks nor
-    * re-delivers a tail. Returns the committed version, or the current
-    * one when there is nothing to do. */
+  /** OPTIMIZE-style small-file COMPACTION through
+    * [[RewriteFiles.compact]]: each partition's small files bin-pack
+    * into ~targetBytes outputs, committed as remove+add with
+    * `dataChange=false` — the spec's maintenance marker. Files carrying
+    * deletion vectors are always selected and their vectors FOLD into
+    * the rewrite (the row set was already without those rows, so
+    * dataChange stays false — Delta's own OPTIMIZE/REORG semantics); a
+    * row-tracked table rewrites through the tracking frame, so every
+    * surviving row keeps its id. A streaming tail SKIPS
+    * dataChange=false commits entirely ([[changesIn]]), so compaction
+    * neither breaks nor re-delivers a tail. Returns the committed
+    * version, or the current one when there is nothing to do. */
   def compact(spark: SparkSession, path: String,
       targetBytes: Long = 128L << 20,
       // OPTIMIZE ... WHERE at 100-TB scale: restrict the rewrite to
@@ -3086,104 +3059,37 @@ object DeltaLake {
       // vectors included
       partitionFilter: Map[String, String] = Map.empty): Long = {
     val snap = snapshot(spark, path)
-    if (partitionFilter.nonEmpty) {
-      val bad = partitionFilter.keys.filterNot(snap.partitionColumns.contains)
-      require(bad.isEmpty,
-        s"DeltaLake.compact: [${bad.mkString(", ")}] are not partition columns " +
-          s"of $path (have: ${snap.partitionColumns.mkString(", ")})")
+    RewriteFiles.compact(rewriteTable(spark, path, snap), targetBytes, partitionFilter,
+      debt = snap.files.filter(_.dv.nonEmpty)).fold(snap.version) { c =>
+      commitRewrite(spark, path, snap, c.files.map(_.path), c.rows, "OPTIMIZE",
+        dataChange = false)
     }
-    val inScope = (f: AddFile) => partitionFilter.forall { case (k, v) =>
-      f.partitionValues.get(snap.physicalName(k)).exists(_.contains(v))
-    }
-    val smallByPart = snap.files.filter(inScope).filter(_.size < targetBytes / 2)
-      .groupBy(_.partitionValues).values.filter(_.size > 1).flatten.toSeq
-    val dvFiles = snap.files.filter(inScope).filter(_.dv.nonEmpty)
-    val selected = (smallByPart ++ dvFiles).distinctBy(_.path)
-    if (selected.isEmpty) return snap.version
-    val sub = snap.copy(files = selected)
-    val nOut = math.max(1L,
-      (selected.map(_.size).sum + targetBytes - 1) / targetBytes).toInt
-    // a row-tracked compaction reads through the tracking frame so the
-    // replacement files MATERIALIZE every surviving row's id
-    if (snap.rowTrackingEnabled)
-      return commitRewrite(spark, path, snap, selected.map(_.path),
-        trackedFrame(spark, path, sub, withMeta = false).coalesce(nOut),
-        "OPTIMIZE", dataChange = false)
-    val classic = spark.asInstanceOf[ClassicSession]
-    val base = classic.baseRelationToDataFrame(relationForSnapshot(spark, path, sub))
-    // back to LOGICAL names — commitRewrite's staging re-physicalizes
-    val rows = fromPhysicalDf(
-      if (!sub.hasDeletionVectors) base
-      else dropCovered(withRowMeta(base), loadDvMap(spark, path, sub))
-        .drop(FileMetaCol, PosMetaCol), sub)
-    commitRewrite(spark, path, snap, selected.map(_.path), rows.coalesce(nOut),
-      "OPTIMIZE", dataChange = false)
   }
 
-  /** DYNAMIC PARTITION OVERWRITE — `INSERT OVERWRITE` under
-    * `partitionOverwriteMode=dynamic`: every partition the frame
+  /** DYNAMIC PARTITION OVERWRITE through
+    * [[RewriteFiles.replacePartitions]]: every partition the frame
     * TOUCHES is replaced whole (removes for its files + the staged
-    * adds, ONE commit), every other partition is untouched — O(touched)
-    * work at any table size. CDF-enabled tables stage the images
-    * (delete images of the replaced rows, insert images of the new
-    * ones); row-tracked tables mint FRESH ids for the replacement rows
-    * (delete+insert semantics). An empty source replaces nothing (the
-    * SQL contract — no commit). Touched partitions resolve by the
-    * frame's partition VALUES; value rendering is guarded to the
-    * types whose canonical string equals Spark's dir rendering, so a
-    * predicted partition can never silently miss its files. */
+    * adds, ONE commit), every other partition is untouched. CDF-enabled
+    * tables stage the images (delete images of the replaced rows,
+    * insert images of the new ones); row-tracked tables mint FRESH ids
+    * for the replacement rows (delete+insert semantics). */
   def replacePartitions(spark: SparkSession, path: String,
       dfIn: DataFrame): Long = {
     import org.apache.spark.sql.functions.{col, lit}
     val snap = snapshot(spark, path)
-    require(snap.partitionColumns.nonEmpty,
-      s"DeltaLake.replacePartitions: $path is unpartitioned — dynamic overwrite " +
-        "needs a partition layout (use a full INSERT OVERWRITE)")
-    require(cleanJson(snap.schema) == cleanJson(dfIn.schema),
-      "DeltaLake.replacePartitions: the frame schema differs from the table schema")
-    val df = dfIn.select(snap.schema.fieldNames.toIndexedSeq.map(col): _*)
-    val partCols = snap.partitionColumns
-    partCols.foreach { c =>
-      snap.schema(c).dataType match {
-        case _: StringType | _: IntegerType | _: LongType | _: ShortType |
-            _: ByteType | _: BooleanType | _: DateType => ()
-        case other => throw new IllegalArgumentException(
-          s"DeltaLake.replacePartitions: partition column $c is $other — dynamic " +
-            "overwrite matches partitions by canonical string value, which this " +
-            "type does not render stably; use a full overwrite")
+    RewriteFiles.replacePartitions(rewriteTable(spark, path, snap), dfIn) { r =>
+      // CDF: the commit is a mutation the feed must be able to read —
+      // the same contract as a full overwrite, scoped
+      val cdc = Option.when(snap.cdfEnabled) {
+        val inserts = r.rows.withColumn("_change_type", lit("insert"))
+        if (r.removed.isEmpty) inserts
+        else liveRows(spark, path, snap.copy(files = r.removed))
+          .select(r.rows.columns.toIndexedSeq.map(col): _*)
+          .withColumn("_change_type", lit("delete")).unionByName(inserts)
       }
+      commitRewrite(spark, path, snap, r.removed.map(_.path), r.rows,
+        "WRITE", dataChange = true, cdcRows = cdc, freshIdentities = true)
     }
-    val tuples = df.select(partCols.map(col): _*).distinct().collect()
-    if (tuples.isEmpty) return snap.version // empty source replaces nothing
-    require(tuples.forall(r => partCols.indices.forall(i => !r.isNullAt(i))),
-      "DeltaLake.replacePartitions: the frame carries a NULL partition value")
-    val touched: Set[Seq[String]] =
-      tuples.map(r => partCols.indices.map(i => r.get(i).toString): Seq[String]).toSet
-    val removed = snap.files.filter { f =>
-      touched.contains(partCols.map(c =>
-        f.partitionValues.get(snap.physicalName(c)).flatten.orNull))
-    }
-    // CDF: the commit is a mutation the feed must be able to read —
-    // delete images of every replaced row, insert images of the new
-    // ones (the same contract as a full overwrite, scoped)
-    val cdc: Option[DataFrame] =
-      if (!snap.cdfEnabled || removed.isEmpty) {
-        if (snap.cdfEnabled)
-          Some(df.withColumn("_change_type", lit("insert")))
-        else None
-      } else {
-        val sub = snap.copy(files = removed)
-        val classic = spark.asInstanceOf[ClassicSession]
-        val base = classic.baseRelationToDataFrame(relationForSnapshot(spark, path, sub))
-        val old = fromPhysicalDf(
-          if (!sub.hasDeletionVectors) base
-          else dropCovered(withRowMeta(base), loadDvMap(spark, path, sub))
-            .drop(FileMetaCol, PosMetaCol), sub)
-        Some(old.withColumn("_change_type", lit("delete"))
-          .unionByName(df.withColumn("_change_type", lit("insert"))))
-      }
-    commitRewrite(spark, path, snap, removed.map(_.path), df,
-      "WRITE", dataChange = true, cdcRows = cdc, freshIdentities = true)
   }
 
   /** COPY-ON-WRITE predicate UPDATE — `UPDATE t SET c = expr [WHERE
@@ -3783,8 +3689,7 @@ object DeltaLake {
       lines += metaDataLine(sc, snap.partitionColumns, now, snap.configuration)
     }
     rowIdWm.foreach(lines += _)
-    removedRel.toSeq.sorted.foreach(rel =>
-      lines += removeLine(new java.net.URI(null, null, rel, null).toASCIIString, now))
+    removedRel.toSeq.sorted.foreach(rel => lines += removeLine(rel, now))
     stampedAdds.foreach(a => lines += addLine(a))
     val ci = Json.createObjectNode()
     val info = ci.putObject("commitInfo")
@@ -3794,19 +3699,25 @@ object DeltaLake {
     v
   }
 
-  /** A `remove` action line for the log path `logPath`, as given. */
-  private def removeLine(logPath: String, now: Long, dataChange: Boolean = true): String = {
+  /** A file path as the log records it: URI-encoded, per the spec —
+    * the inverse of [[decodePath]], which log replay applies to add,
+    * remove and cdc paths alike. */
+  private def logPath(path: String): String =
+    new java.net.URI(null, null, path, null).toASCIIString
+
+  /** A `remove` action line for the snapshot's (decoded) `path`. */
+  private def removeLine(path: String, now: Long, dataChange: Boolean = true): String = {
     val o = Json.createObjectNode()
     val rm = o.putObject("remove")
-    rm.put("path", logPath); rm.put("deletionTimestamp", now); rm.put("dataChange", dataChange)
+    rm.put("path", logPath(path)); rm.put("deletionTimestamp", now)
+    rm.put("dataChange", dataChange)
     Json.writeValueAsString(o)
   }
 
   private def addLine(a: AddFile, dataChange: Boolean = true): String = {
     val o = Json.createObjectNode()
     val ad = o.putObject("add")
-    // spec: add.path is URI-encoded
-    ad.put("path", new java.net.URI(null, null, a.path, null).toASCIIString)
+    ad.put("path", logPath(a.path))
     val pv = ad.putObject("partitionValues")
     a.partitionValues.foreach { case (k, v) =>
       v match { case Some(s) => pv.put(k, s): Unit; case None => pv.putNull(k): Unit }
@@ -4129,7 +4040,7 @@ object DeltaLake {
           d.sizeInBytes, d.cardinality)).orNull
       rows.add(Row(null, null, null,
         // spec: checkpoint add.path is URI-encoded, same as the JSON log
-        Row(new java.net.URI(null, null, f.path, null).toASCIIString,
+        Row(logPath(f.path),
           f.partitionValues.map { case (k, v) => k -> v.orNull },
           f.size, f.modificationTime, true, f.stats.orNull, dvRow,
           f.baseRowId.map(Long.box).orNull,

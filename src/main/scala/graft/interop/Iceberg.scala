@@ -3497,18 +3497,10 @@ object Iceberg {
     if (!s.hasDeleteDebt) return s.snapshotId
     val (_, root) = Writers.fsFor(path)
     val rootPrefix = root.toUri.getPath.stripSuffix("/") + "/"
-    // covered = files a position-delete names, plus every file an
-    // equality delete COULD apply to (data seq strictly below the
-    // delete's — equality deletes carry no file list, so the bound is
-    // by sequence number, not by match; after streaming retractions
-    // this approaches a full compaction, which a debt fold is)
-    val posCovered: Set[String] =
-      if (s.deletes.isEmpty && s.dvDeletes.isEmpty) Set.empty
-      else coveredByPositionDebt(spark, root, s)
-    val maxEqSeq = s.eqDeletes.map(_.seq).maxOption.getOrElse(Long.MinValue)
-    val eqCovered: Set[String] = s.files.filter(_.seq < maxEqSeq)
-      .map(f => Hive.fsPathNoDecode(f.path).stripPrefix(rootPrefix)).toSet
-    val coveredRel = (posCovered ++ eqCovered).toSeq
+    // after streaming retractions the equality-covered set approaches
+    // a full compaction, which a debt fold is
+    val coveredRel = debtFiles(spark, root, s)
+      .map(f => Hive.fsPathNoDecode(f.path).stripPrefix(rootPrefix))
     if (coveredRel.isEmpty)
       // debt files that no longer apply to anything: a metadata-only
       // cleanup (drop the delete manifests, carry every data manifest)
@@ -3527,16 +3519,50 @@ object Iceberg {
       Some(survivors), "replace", dropDeleteManifests = true)
   }
 
-  /** Small-file COMPACTION: bin-pack each partition's small files
-    * (< targetBytes/2, where at least two share a partition) into
-    * ~targetBytes outputs, published as the spec's `replace` operation
-    * — the row set is unchanged, so a streaming tail SKIPS the
-    * snapshot entirely ([[changesBetween]]) instead of gating or
-    * re-delivering. Files covered by outstanding position/equality
-    * deletes are always selected, folding the debt into the rewrite;
-    * when that covers every applicable file the delete manifests drop
-    * too. Returns the committed snapshot id, or the current one when
-    * there is nothing to do. */
+  /** The live files outstanding delete debt applies to: the files a
+    * position delete or vector names, plus every file an equality
+    * delete COULD apply to (data seq strictly below the delete's —
+    * equality deletes carry no file list, so the bound is by sequence
+    * number, not by match). */
+  private def debtFiles(spark: SparkSession, root: HPath, s: Snapshot): Seq[DataFileRef] = {
+    val rootPrefix = root.toUri.getPath.stripSuffix("/") + "/"
+    val posCovered: Set[String] =
+      if (s.deletes.isEmpty && s.dvDeletes.isEmpty) Set.empty
+      else coveredByPositionDebt(spark, root, s).map(rootPrefix + _)
+    val maxEqSeq = s.eqDeletes.map(_.seq).maxOption.getOrElse(Long.MinValue)
+    s.files.filter(f => posCovered.contains(Hive.fsPathNoDecode(f.path)) || f.seq < maxEqSeq)
+  }
+
+  /** The snapshot as a [[RewriteFiles.Compactable]]: files keyed by
+    * their manifest path, partition values by partition FIELD name. */
+  private def rewriteTable(spark: SparkSession, path: String,
+      s: Snapshot): RewriteFiles.Compactable[DataFileRef] =
+    new RewriteFiles.Compactable[DataFileRef] {
+      def name = "Iceberg"
+      def schema = s.schema
+      def partitionNames = s.partFields.map(_.name)
+      def files = s.files
+      def key(f: DataFileRef) = f.path
+      def partition(f: DataFileRef) = f.partitionValues
+      def size(f: DataFileRef) = f.sizeInBytes
+      def rows(files: Seq[DataFileRef]) = {
+        val sub = s.copy(files = files)
+        if (formatVersion(path) == 3) lineageFrame(spark, path, sub, withMeta = false)
+        else snapshotFrame(spark, path, sub, withMeta = false)
+      }
+      def unchanged = s.snapshotId
+    }
+
+  /** Small-file COMPACTION through [[RewriteFiles.compact]]: each
+    * partition's small files bin-pack into ~targetBytes outputs,
+    * published as the spec's `replace` operation — the row set is
+    * unchanged, so a streaming tail SKIPS the snapshot entirely
+    * ([[changesBetween]]) instead of gating or re-delivering. Files
+    * covered by outstanding position/equality deletes
+    * ([[debtFiles]]) are always selected, folding the debt into the
+    * rewrite; when that covers every applicable file the delete
+    * manifests drop too. Returns the committed snapshot id, or the
+    * current one when there is nothing to do. */
   def compact(spark: SparkSession, path: String,
       targetBytes: Long = 128L << 20,
       // OPTIMIZE ... WHERE at 100-TB scale: restrict the rewrite to
@@ -3548,51 +3574,24 @@ object Iceberg {
       // position nor equality deletes can re-hit compacted rows).
       partitionFilter: Map[String, String] = Map.empty): Long = {
     val s = snapshot(spark, path)
-    if (partitionFilter.nonEmpty) {
-      val partNames = s.partFields.map(_.name).toSet
-      val bad = partitionFilter.keys.filterNot(partNames.contains)
-      require(bad.isEmpty,
-        s"Iceberg.compact: [${bad.mkString(", ")}] are not partition fields " +
-          s"of $path (have: ${partNames.mkString(", ")})")
-    }
-    val inScope = (f: DataFileRef) => partitionFilter.forall { case (k, v) =>
-      f.partitionValues.get(k).exists(_.contains(v))
-    }
-    val (_, root) = Writers.fsFor(path)
-    val rootPrefix = root.toUri.getPath.stripSuffix("/") + "/"
-    val smallByPart = s.files.filter(inScope).filter(_.sizeInBytes < targetBytes / 2)
-      .groupBy(_.partitionValues).values.filter(_.size > 1).flatten.toSeq
-    val posCovered: Set[String] =
-      if (s.deletes.isEmpty && s.dvDeletes.isEmpty) Set.empty
-      else coveredByPositionDebt(spark, root, s).map(rootPrefix + _)
-    val maxEqSeq = s.eqDeletes.map(_.seq).maxOption.getOrElse(Long.MinValue)
-    val debtFilesAll = s.files.filter(f =>
-      posCovered.contains(Hive.fsPathNoDecode(f.path)) || f.seq < maxEqSeq)
-    val debtFiles = debtFilesAll.filter(inScope)
-    val selected = (smallByPart ++ debtFiles).distinctBy(_.path)
-    if (selected.isEmpty) {
-      // delete files that apply to nothing: metadata-only cleanup
-      // (whole-table calls only — a scoped call must not reason about
-      // debt outside its slice)
-      if (s.hasDeleteDebt && partitionFilter.isEmpty && debtFilesAll.isEmpty)
-        return commitRewriteSnapshot(spark, path, Set.empty, None, "replace",
+    val debt = debtFiles(spark, Writers.fsFor(path)._2, s)
+    RewriteFiles.compact(rewriteTable(spark, path, s), targetBytes, partitionFilter, debt) match {
+      case Some(c) =>
+        val selectedAbs = c.files.map(f => Hive.fsPathNoDecode(f.path)).toSet
+        // delete manifests drop only when EVERY file any delete applies
+        // to is in the selection — always true for whole-table calls,
+        // and checked exactly for scoped ones
+        commitRewriteSnapshot(spark, path, selectedAbs, Some(c.rows), "replace",
+          dropDeleteManifests = s.hasDeleteDebt &&
+            debt.forall(f => selectedAbs.contains(Hive.fsPathNoDecode(f.path))))
+      // nothing selected, but delete files that apply to nothing:
+      // metadata-only cleanup (whole-table calls only — a scoped call
+      // must not reason about debt outside its slice)
+      case None if s.hasDeleteDebt && partitionFilter.isEmpty && debt.isEmpty =>
+        commitRewriteSnapshot(spark, path, Set.empty, None, "replace",
           dropDeleteManifests = true)
-      return s.snapshotId
+      case None => s.snapshotId
     }
-    val rows =
-      if (formatVersion(path) == 3)
-        lineageFrame(spark, path, s.copy(files = selected), withMeta = false)
-      else snapshotFrame(spark, path, s.copy(files = selected), withMeta = false)
-    val nOut = math.max(1L,
-      (selected.map(_.sizeInBytes).sum + targetBytes - 1) / targetBytes).toInt
-    val selectedAbs = selected.map(f => Hive.fsPathNoDecode(f.path)).toSet
-    // delete manifests drop only when EVERY file any delete applies to
-    // is in the selection — always true for whole-table calls
-    // (debtFilesAll ⊆ selected), and checked exactly for scoped ones
-    commitRewriteSnapshot(spark, path, selectedAbs, Some(rows.coalesce(nOut)),
-      "replace", dropDeleteManifests =
-        s.hasDeleteDebt && debtFilesAll.forall(f => selectedAbs.contains(
-          Hive.fsPathNoDecode(f.path))))
   }
 
   // ------------------------------------------------------ sort orders
@@ -3727,8 +3726,7 @@ object Iceberg {
       else snapshotFrame(spark, path, s, withMeta = false)
     val n =
       if (nFiles > 0) nFiles
-      else math.max(1L,
-        (s.files.map(_.sizeInBytes).sum + targetBytes - 1) / targetBytes).toInt
+      else RewriteFiles.outputFiles(s.files.map(_.sizeInBytes).sum, targetBytes)
     val sortCols = spec.map { case (c, asc) => if (asc) col(c).asc else col(c).desc }
     val ordered = rows
       .repartitionByRange(n, sortCols: _*)
@@ -4190,50 +4188,27 @@ object Iceberg {
     }
   }
 
-  /** DYNAMIC PARTITION OVERWRITE — `INSERT OVERWRITE` under
-    * `partitionOverwriteMode=dynamic`: every partition the frame
+  /** DYNAMIC PARTITION OVERWRITE through
+    * [[RewriteFiles.replacePartitions]]: every partition the frame
     * TOUCHES is replaced whole in ONE `overwrite` snapshot (touched
     * manifests rewrite their entries DELETED, untouched manifests
-    * carry by reference, the staged files land as a fresh manifest —
-    * O(touched) work at any table size; on v3, replacement rows take
-    * FRESH row-id ranges, the delete+insert semantics). Restricted to
-    * IDENTITY-partitioned layouts (a transform layout's touched set is
-    * a derived value this matcher does not predict — use a full
-    * overwrite) over types whose canonical string rendering is stable.
-    * An empty source replaces nothing (the SQL contract). */
+    * carry by reference, the staged files land as a fresh manifest; on
+    * v3, replacement rows take FRESH row-id ranges, the delete+insert
+    * semantics). Restricted to IDENTITY-partitioned layouts: a
+    * transform layout's touched set is a derived value this matcher
+    * does not predict — use a full overwrite. */
   def replacePartitions(spark: SparkSession, path: String, dfIn: DataFrame): Long = {
-    import org.apache.spark.sql.functions.col
     val s = snapshot(spark, path)
     val liveSpecs = (if (s.specs.nonEmpty) s.specs else Map(s.defaultSpecId -> s.partFields))
-    require(s.partFields.nonEmpty && liveSpecs.values.forall(_.forall(_.isIdentity)),
+    require(liveSpecs.values.forall(_.forall(_.isIdentity)),
       s"Iceberg.replacePartitions: $path is not identity-partitioned — dynamic " +
-        "overwrite matches partitions by value; transform layouts (and " +
-        "unpartitioned tables) take a full INSERT OVERWRITE")
-    require(cleanJson(s.schema) == cleanJson(dfIn.schema),
-      "Iceberg.replacePartitions: the frame schema differs from the table schema")
-    val df = dfIn.select(s.schema.fieldNames.toIndexedSeq.map(col): _*)
-    val partCols = s.partitionColumns
-    partCols.foreach { c =>
-      s.schema(c).dataType match {
-        case _: StringType | _: IntegerType | _: LongType | _: ShortType |
-            _: ByteType | _: BooleanType | _: DateType => ()
-        case other => throw new IllegalArgumentException(
-          s"Iceberg.replacePartitions: partition column $c is $other — dynamic " +
-            "overwrite matches partitions by canonical string value, which this " +
-            "type does not render stably; use a full overwrite")
-      }
+        "overwrite matches partitions by value; transform layouts take a full " +
+        "INSERT OVERWRITE")
+    RewriteFiles.replacePartitions(rewriteTable(spark, path, s), dfIn) { r =>
+      commitRewriteSnapshot(spark, path, r.removed.map(f => Hive.fsPathNoDecode(f.path)).toSet,
+        newData = None, operation = "overwrite", dropDeleteManifests = false,
+        freshData = Some(r.rows))
     }
-    val tuples = df.select(partCols.map(col): _*).distinct().collect()
-    if (tuples.isEmpty) return s.snapshotId // empty source replaces nothing
-    require(tuples.forall(r => partCols.indices.forall(i => !r.isNullAt(i))),
-      "Iceberg.replacePartitions: the frame carries a NULL partition value")
-    val touched: Set[Seq[String]] =
-      tuples.map(r => partCols.indices.map(i => r.get(i).toString): Seq[String]).toSet
-    val removedAbs = s.files.filter { f =>
-      touched.contains(partCols.map(c => f.partitionValues.get(c).flatten.orNull))
-    }.map(f => Hive.fsPathNoDecode(f.path)).toSet
-    commitRewriteSnapshot(spark, path, removedAbs, newData = None,
-      operation = "overwrite", dropDeleteManifests = false, freshData = Some(df))
   }
 
   /** ONE incremental SYNC snapshot from a foreign source-of-truth
@@ -5701,32 +5676,17 @@ object Iceberg {
   def readWithStats(spark: SparkSession, path: String): DataFrame = {
     val s = snapshot(spark, path)
     val ndv = readTableStatistics(spark, path)
-    val classic = spark.asInstanceOf[ClassicSession]
-    val (_, root) = Writers.fsFor(path)
     val rel: org.apache.spark.sql.sources.BaseRelation =
       if (s.hasDeleteDebt)
         new org.apache.spark.sql.graft.GraftIcebergMoRRelation(
-          classic.sqlContext, path, None)
+          spark.asInstanceOf[ClassicSession].sqlContext, path, None)
       else relationForSnapshot(spark, path, s)
-    val colStats = ndv.map { case (c, n) =>
-      c -> org.apache.spark.sql.catalyst.catalog.CatalogColumnStat(
-        distinctCount = Some(BigInt(n)))
-    }
     val deleted = s.dvDeletes.map(_.cardinality).filter(_ >= 0L).sum +
       s.deletes.map(_.recordCount).sum + s.eqDeletes.map(_.recordCount).sum
     val netRows = math.max(0L, s.files.map(_.recordCount).sum - deleted)
-    val ct = org.apache.spark.sql.catalyst.catalog.CatalogTable(
-      identifier = org.apache.spark.sql.catalyst.TableIdentifier(root.getName),
-      tableType = org.apache.spark.sql.catalyst.catalog.CatalogTableType.EXTERNAL,
-      storage = org.apache.spark.sql.catalyst.catalog.CatalogStorageFormat.empty
-        .copy(locationUri = Some(root.toUri)),
-      schema = s.schema,
-      provider = Some("iceberg"),
-      stats = Some(org.apache.spark.sql.catalyst.catalog.CatalogStatistics(
-        sizeInBytes = BigInt(s.files.map(_.sizeInBytes).sum),
-        rowCount = Some(BigInt(netRows)),
-        colStats = colStats)))
-    org.apache.spark.sql.graft.ColumnBridge.relationWithStats(classic, rel, ct)
+    org.apache.spark.sql.graft.ColumnBridge.relationWithStats(spark, rel,
+      Writers.fsFor(path)._2, s.schema, "iceberg", s.files.map(_.sizeInBytes).sum,
+      Some(netRows), ndv)
   }
 
   /** Publish ICEBERG METADATA over an EXISTING file set without

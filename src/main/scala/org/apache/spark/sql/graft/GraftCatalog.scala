@@ -1184,15 +1184,7 @@ case class GraftCatalogWriteCommand(
       }
     if (dynamic) {
       format match {
-        case "graft" =>
-          val layout = Versioned.currentVersion(path).toSeq.flatMap { v =>
-            Versioned.manifest(path, v).find(_.partDir.nonEmpty).toSeq
-              .flatMap(_.partDir.split("/").toSeq.map(_.takeWhile(_ != '=')))
-          }
-          require(layout.nonEmpty,
-            "GraftCatalog: dynamic partition overwrite needs a partitioned " +
-              "layout — this graft table has none (use INSERT OVERWRITE)")
-          Versioned.replacePartitions(spark, path, aligned, layout: _*)
+        case "graft" => Versioned.replacePartitions(spark, path, aligned)
         case "delta" => graft.interop.DeltaLake.replacePartitions(spark, path, aligned)
         case _ => graft.interop.Iceberg.replacePartitions(spark, path, aligned)
       }

@@ -25,15 +25,31 @@ object ColumnBridge {
   def expression(c: org.apache.spark.sql.Column): Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
 
-  /** A relation served WITH catalog statistics attached (row count,
-    * size, per-column NDV) — what lets CBO cost a path table like an
-    * ANALYZEd catalog table. `Dataset.ofRows` and `LogicalRelation`
-    * are `private[sql]`/internal, hence this shim. */
-  def relationWithStats(spark: org.apache.spark.sql.classic.SparkSession,
-      relation: org.apache.spark.sql.sources.BaseRelation,
-      table: org.apache.spark.sql.catalyst.catalog.CatalogTable): org.apache.spark.sql.DataFrame =
-    org.apache.spark.sql.classic.Dataset.ofRows(spark,
+  /** `relation` served WITH catalog statistics attached — size, row
+    * count and per-column NDV — as an external `provider` table at
+    * `root`: what lets CBO cost a path table like an ANALYZEd catalog
+    * table. `Dataset.ofRows` and `LogicalRelation` are
+    * `private[sql]`/internal, hence this shim. */
+  def relationWithStats(spark: org.apache.spark.sql.SparkSession,
+      relation: org.apache.spark.sql.sources.BaseRelation, root: org.apache.hadoop.fs.Path,
+      schema: org.apache.spark.sql.types.StructType, provider: String, sizeInBytes: Long,
+      rowCount: Option[Long], ndv: Map[String, Long]): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.catalyst.catalog._
+    val table = CatalogTable(
+      identifier = org.apache.spark.sql.catalyst.TableIdentifier(root.getName),
+      tableType = CatalogTableType.EXTERNAL,
+      storage = CatalogStorageFormat.empty.copy(locationUri = Some(root.toUri)),
+      schema = schema,
+      provider = Some(provider),
+      stats = Some(CatalogStatistics(
+        sizeInBytes = BigInt(sizeInBytes),
+        rowCount = rowCount.map(BigInt(_)),
+        colStats = ndv.map { case (c, n) =>
+          c -> CatalogColumnStat(distinctCount = Some(BigInt(n)))
+        })))
+    org.apache.spark.sql.classic.Dataset.ofRows(spark.asInstanceOf[ClassicSession],
       org.apache.spark.sql.execution.datasources.LogicalRelation(relation, table))
+  }
 }
 
 /** `spark.sql.extensions` entry point (set at session build by
