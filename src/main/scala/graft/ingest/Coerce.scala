@@ -31,8 +31,12 @@ object Coerce {
     * throwing on values that obviously aren't bigint/boolean. The guard
     * accepts every shape Spark's string cast can parse (whitespace
     * trimmed, sign, inf/nan forms, boolean literal set), so try_cast
-    * still makes the actual decision — it just never throws in bulk. */
-  private def plausible(c: Column, t: String): Column = t match {
+    * still makes the actual decision — it just never throws in bulk.
+    * The boolean set matches ASCII case-insensitively on the
+    * space-trimmed value: `(?i)` folds ASCII only, so no ICU case mapping
+    * runs (Spark's `lower` does), and the one non-ASCII code point whose
+    * lowercase is ASCII (U+212A, Kelvin sign → 'k') is in no literal. */
+  private[ingest] def plausible(c: Column, t: String): Column = t match {
     case "bigint" => c.rlike("^\\s*[+-]?\\d+\\s*$")
     case "double" =>
       // decimal/scientific forms with Java's optional f/F/d/D suffix
@@ -40,7 +44,7 @@ object Coerce {
       // hex floats (0x1.8p1), and the inf/nan literals
       c.rlike("^\\s*[+-]?((\\d+\\.?\\d*|\\.\\d+)([eE][+-]?\\d+)?[fFdD]?|0[xX][0-9a-fA-F]*\\.?[0-9a-fA-F]*[pP][+-]?\\d+[fFdD]?|(?i)(nan|inf(inity)?))\\s*$")
     case "boolean" =>
-      lower(trim(c)).isin("true", "false", "t", "f", "y", "n", "yes", "no", "1", "0")
+      trim(c).rlike("^(?i)(true|false|t|f|y|n|yes|no|1|0)\\z")
     case _ => lit(true)
   }
 

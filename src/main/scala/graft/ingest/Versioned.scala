@@ -1132,7 +1132,7 @@ object Versioned {
     val classic = spark.asInstanceOf[ClassicSession]
     val tablePath = root.toUri.getPath
     val index = new org.apache.spark.sql.graft.VersionedFileIndex(
-      classic, tablePath, ver, entries, sc, partCols)
+      classic, tablePath, entries, sc, partCols)
     val dataSchema = StructType(sc.fields.filterNot(f => partCols.contains(f.name)))
     val rel = new org.apache.spark.sql.graft.GraftVersionedRelation(
       classic, tablePath, index, index.partitionSchema, dataSchema)
@@ -2213,7 +2213,7 @@ object Versioned {
           snap.select(col(key) +: lit("insert").as("change_type") +:
             lit(false).as("schema_change") +: others.map(col): _*)
       }
-      feed.withColumn("commit_version", lit(v))
+      feed.withColumn("commit_version", graft.functions.BoundLong.column(v))
     }
     val joined = feeds.reduce(_.unionByName(_, allowMissingColumns = true))
     // commit_version leads, images keep the per-commit alphabetical order

@@ -360,7 +360,7 @@ object DeltaLake {
     * parquet stamps ids and scans resolve by them. Refusing a field
     * without mapping metadata (instead of guessing the logical name)
     * is what keeps a half-mapped foreign table from misreading. */
-  private def physicalField(f: StructField, ids: Boolean, where: String): StructField = {
+  private[interop] def physicalField(f: StructField, ids: Boolean, where: String): StructField = {
     require(f.metadata.contains(PhysNameKey),
       s"DeltaLake: $where: column-mapped field '${f.name}' carries no $PhysNameKey — " +
         "refusing to guess")
@@ -414,7 +414,7 @@ object DeltaLake {
   /** Rename PHYSICAL→LOGICAL after a raw scan of a mapped table
     * (identity otherwise). Unknown columns (row-meta, `_change_type`)
     * pass through. */
-  private def fromPhysicalDf(df: DataFrame, raw: StructType, mode: Option[String]): DataFrame = {
+  private[interop] def fromPhysicalDf(df: DataFrame, raw: StructType, mode: Option[String]): DataFrame = {
     import org.apache.spark.sql.functions.col
     if (mode.isEmpty) df
     else {
@@ -438,15 +438,6 @@ object DeltaLake {
   private def fromPhysicalDf(df: DataFrame, snap: Snapshot): DataFrame =
     fromPhysicalDf(df, snap.rawSchema, snap.mapMode)
 
-  /** The physical scan fields of a raw mapped schema, and the
-    * physical→logical rename — public seams for the streaming source
-    * shim (org.apache.spark.sql.graft), which reads a mapped table's
-    * files directly. Identity when `mode` is empty. */
-  def physicalFields(raw: StructType, mode: Option[String], where: String): Seq[StructField] =
-    if (mode.isEmpty) raw.fields.toSeq
-    else raw.fields.toSeq.map(physicalField(_, mode.contains("id"), where))
-  def toLogicalNames(df: DataFrame, raw: StructType, mode: Option[String]): DataFrame =
-    fromPhysicalDf(df, raw, mode)
 
 
   /** Metadata-insensitive schema compare key — field metadata (scan
@@ -1173,7 +1164,7 @@ object DeltaLake {
         size = Some(f.size))
     }
     val index = new org.apache.spark.sql.graft.VersionedFileIndex(
-      classic, path, s.version, entries, scanSchema, scanPartCols)
+      classic, path, entries, scanSchema, scanPartCols)
     val dataSchema =
       StructType(scanSchema.fields.filterNot(f => scanPartCols.contains(f.name)))
     // GraftDeltaRelation: reads prune through the index; INSERT INTO a
@@ -3019,7 +3010,7 @@ object DeltaLake {
       if (cdcRels.nonEmpty)
         Some(readFiles(cdcRels.toSeq, new HPath(root, "_change_data").toString,
           StructType(Seq(StructField("_change_type", StringType))))
-          .withColumn("_commit_version", lit(v)))
+          .withColumn("_commit_version", graft.functions.BoundLong.column(v)))
       else if (mutRemoves)
         throw new IllegalStateException(
           s"DeltaLake.changeFeed: commit $v of $path mutates rows without cdc actions — " +
@@ -3027,7 +3018,7 @@ object DeltaLake {
       else if (addRels.nonEmpty)
         Some(readFiles(addRels.toSeq, root.toString, StructType(Nil))
           .withColumn("_change_type", lit("insert"))
-          .withColumn("_commit_version", lit(v)))
+          .withColumn("_commit_version", graft.functions.BoundLong.column(v)))
       else None // metadata-only / maintenance commit
     }
     val cols = snap.schema.fieldNames.toIndexedSeq.map(col) ++

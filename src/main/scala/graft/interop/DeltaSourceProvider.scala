@@ -1,5 +1,6 @@
 package graft.interop
 
+import graft.ingest.Versioned
 import org.apache.spark.sql.{DataFrame, SaveMode, SQLContext}
 import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
 import org.apache.spark.sql.execution.datasources.DataSourceUtils
@@ -8,7 +9,8 @@ import org.apache.spark.sql.sources.{
   BaseRelation, CreatableRelationProvider, DataSourceRegister, RelationProvider,
   StreamSinkProvider, StreamSourceProvider}
 import org.apache.spark.sql.streaming.OutputMode
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.graft.{StreamSchemaTracking, Tail, TailSource}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** `spark.read.format("delta")` / `df.write.format("delta")` over
   * [[DeltaLake]] — the familiar surface for users coming FROM Delta,
@@ -58,51 +60,42 @@ final class DeltaSourceProvider extends RelationProvider
   private def opt(parameters: Map[String, String], name: String): Option[String] =
     parameters.collectFirst { case (k, v) if k.equalsIgnoreCase(name) => v }
 
-  /** Streaming read: `spark.readStream.format("delta").load(tbl)` —
-    * tails the transaction log through [[org.apache.spark.sql.graft.DeltaStreamSource]].
-    * Options: `startingVersion` (first version a fresh stream emits;
-    * default bootstraps the current snapshot), `ignoreChanges`
-    * (re-emit rewrite versions instead of failing). */
   private def wantsCdf(parameters: Map[String, String]): Boolean =
-    parameters.collectFirst {
-      case (k, v) if k.equalsIgnoreCase("readChangeFeed") => v.toBoolean
-    }.getOrElse(false)
+    opt(parameters, "readChangeFeed").exists(_.toBoolean)
 
   private def cdfSchema(table: StructType): StructType =
     StructType(table.fields ++ Seq(
-      org.apache.spark.sql.types.StructField("_change_type", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("_commit_version", org.apache.spark.sql.types.LongType)))
-
-  /** The tail's serving schema: the newest schema-tracking entry when
-    * `schemaTrackingLocation` is set and has recorded one (the
-    * restart-after-evolution path), else the current snapshot's. */
-  private def tailSchema(sqlContext: SQLContext,
-      parameters: Map[String, String]): StructType =
-    opt(parameters, "schemaTrackingLocation")
-      .flatMap(org.apache.spark.sql.graft.StreamSchemaTracking.read(_).map(_._1))
-      .getOrElse(DeltaLake.snapshot(sqlContext.sparkSession, pathOf(parameters)).schema)
+      StructField("_change_type", StringType), StructField("_commit_version", LongType)))
 
   override def sourceSchema(
       sqlContext: SQLContext, schema: Option[StructType],
       providerName: String, parameters: Map[String, String]): (String, StructType) =
     ("delta", schema.getOrElse {
-      val table = tailSchema(sqlContext, parameters)
+      val table = StreamSchemaTracking.serving(opt(parameters, "schemaTrackingLocation"),
+        DeltaLake.snapshot(sqlContext.sparkSession, pathOf(parameters)).schema)
       if (wantsCdf(parameters)) cdfSchema(table) else table
     })
 
+  /** Streaming read: `spark.readStream.format("delta").load(tbl)` tails
+    * the transaction log through [[TailSource]]. Options:
+    * `startingVersion` (first version a fresh stream emits; default
+    * bootstraps the current snapshot), `ignoreChanges` (re-emit rewrite
+    * versions instead of failing), `schemaTrackingLocation`, and
+    * `readChangeFeed` (stream [[DeltaLake.changeFeed]]; a fresh stream
+    * without `startingVersion` serves new commits only). */
   override def createSource(
       sqlContext: SQLContext, metadataPath: String, schema: Option[StructType],
       providerName: String, parameters: Map[String, String]): Source = {
     val path = pathOf(parameters)
-    val snap = DeltaLake.snapshot(sqlContext.sparkSession, path)
+    val spark = sqlContext.sparkSession.asInstanceOf[ClassicSession]
+    val snap = DeltaLake.snapshot(spark, path)
+    val start = opt(parameters, "startingVersion").map(_.toLong - 1L)
     if (wantsCdf(parameters)) {
       require(snap.cdfEnabled,
         s"delta source: $path does not have delta.enableChangeDataFeed=true — " +
           "enable the change data feed before streaming it")
-      return new org.apache.spark.sql.graft.DeltaCdfStreamSource(
-        sqlContext.sparkSession.asInstanceOf[ClassicSession], path,
-        schema.getOrElse(cdfSchema(snap.schema)),
-        opt(parameters, "startingVersion").map(_.toLong))
+      return new TailSource(spark, new DeltaTail(spark, path, snap, snap.schema),
+        schema.getOrElse(cdfSchema(snap.schema)), feed = true, start)
     }
     // raw file unions cannot subtract deletion-vector rows: a bootstrap
     // over DV debt would re-serve deleted rows
@@ -114,19 +107,9 @@ final class DeltaSourceProvider extends RelationProvider
     require(tracking.isEmpty || snap.mapMode.isEmpty,
       s"delta source: schemaTrackingLocation over a column-mapped table " +
         s"(delta.columnMapping.mode=${snap.mapMode.getOrElse("")}) is not supported")
-    val pinned = schema.getOrElse(
-      tracking.flatMap(org.apache.spark.sql.graft.StreamSchemaTracking.read(_).map(_._1))
-        .getOrElse(snap.schema))
-    // first start under tracking: record the serving schema, so the
-    // stream's lineage is on disk before any evolution can land
-    tracking.foreach(dir => org.apache.spark.sql.graft.StreamSchemaTracking.record(
-      dir, pinned, DeltaLake.versions(path).lastOption.getOrElse(0L)))
-    new org.apache.spark.sql.graft.DeltaStreamSource(
-      sqlContext.sparkSession.asInstanceOf[ClassicSession], path,
-      pinned, snap.partitionColumns,
+    val pinned = schema.getOrElse(StreamSchemaTracking.serving(tracking, snap.schema))
+    new TailSource(spark, new DeltaTail(spark, path, snap, pinned), pinned, feed = false, start,
       ignoreChanges = opt(parameters, "ignoreChanges").exists(_.toBoolean),
-      startingVersion = opt(parameters, "startingVersion").map(_.toLong),
-      rawSchema = snap.rawSchema, mapMode = snap.mapMode,
       schemaTracking = tracking)
   }
 
@@ -201,4 +184,70 @@ final class DeltaSourceProvider extends RelationProvider
     }
     createRelation(sqlContext, parameters)
   }
+}
+
+/** The [[Tail]] of a Delta table; offsets are log versions. A window's
+  * files are exactly the `add` actions of its versions, and a version
+  * carrying data-changing `remove` actions (overwrite, delete) makes it
+  * non-append; maintenance (`dataChange=false`) versions contribute
+  * nothing. An add carrying a deletion vector is refused even under
+  * `ignoreChanges`: a file-level tail cannot subtract its deleted rows.
+  * The data files of a column-mapped table speak PHYSICAL names, stable
+  * across later renames, so the tail scans physical names (partition
+  * values are keyed by them too) and renames to the `pinned` logical
+  * schema. */
+private final class DeltaTail(
+    spark: ClassicSession, val path: String, snap: DeltaLake.Snapshot, pinned: StructType)
+    extends Tail {
+  val name = "delta"
+  val origin = -1L
+
+  // same gate as the batch path: with the conf off, an id-mode scan
+  // would silently fall back to (stale) physical-name matching
+  if (snap.isIdMode)
+    require(spark.conf.get("spark.sql.parquet.fieldId.read.enabled", "false") == "true",
+      s"delta source: $path uses delta.columnMapping.mode=id — set " +
+        "spark.sql.parquet.fieldId.read.enabled=true (at session build) to tail it")
+
+  lazy val fileSchema: StructType =
+    if (snap.mapMode.isEmpty) pinned
+    else StructType(snap.rawSchema.map(DeltaLake.physicalField(_, snap.isIdMode, path)))
+  private lazy val physName: Map[String, String] =
+    pinned.fieldNames.zip(fileSchema.fieldNames).toMap
+
+  override def logical(scan: DataFrame): DataFrame =
+    DeltaLake.fromPhysicalDf(scan, snap.rawSchema, snap.mapMode)
+
+  def head(): Option[Long] = DeltaLake.versions(path).lastOption
+
+  def bootstrap(at: Long): Seq[Versioned.ManifestEntry] = {
+    val s = DeltaLake.snapshot(spark, path, Some(at))
+    require(!s.hasDeletionVectors,
+      s"delta source: $path carries deletion vectors at v$at — a bootstrap over " +
+        "merge-on-read delete debt would re-serve deleted rows")
+    s.files.map(entry)
+  }
+
+  def window(from: Long, to: Long): Tail.Window = {
+    val versions = from + 1L to to
+    val changes = versions.map(DeltaLake.changesIn(path, _))
+    versions.zip(changes).foreach { case (v, (adds, _)) =>
+      require(adds.forall(_.dv.isEmpty),
+        s"delta source: version $v of $path adds deletion-vector files — a file-level " +
+          "tail cannot subtract their rows; rewrite the table before tailing past it")
+    }
+    Tail.Window(changes.flatMap(_._1).map(entry), appendOnly = !changes.exists(_._2),
+      schemas = versions.flatMap(v => DeltaLake.schemaChangeIn(path, v).map(v -> _)))
+  }
+
+  // the log's partitionValues are keyed by PHYSICAL name
+  private def entry(f: DeltaLake.AddFile): Versioned.ManifestEntry =
+    Versioned.ManifestEntry(f.path, snap.partitionColumns.map { c =>
+      val p = physName(c)
+      p + "=" + f.partitionValues.getOrElse(p, None).map(Hive.escapePathName)
+        .getOrElse(Hive.DefaultPartition)
+    }.mkString("/"), size = Some(f.size))
+
+  def changes(from: Long, to: Long): DataFrame =
+    DeltaLake.changeFeed(spark, path, from + 1L, Some(to))
 }

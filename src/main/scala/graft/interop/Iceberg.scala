@@ -1729,7 +1729,7 @@ object Iceberg {
     val specOf: Map[String, Int] = s.files.map(f =>
       Hive.fsPathNoDecode(f.path).stripPrefix(rootPrefix) -> f.specId).toMap
     new org.apache.spark.sql.graft.VersionedFileIndex(
-      classic, path, s.snapshotId, entries, scanSchema, s.partitionColumns,
+      classic, path, entries, scanSchema, s.partitionColumns,
       transformKeep = transformKeepFn(s, specOf))
   }
 
@@ -4457,8 +4457,8 @@ object Iceberg {
     def stamp(df: DataFrame, ct: String, sq: Long, id: Long): DataFrame =
       df.select(schema.fieldNames.toIndexedSeq.map(col): _*)
         .withColumn("_change_type", lit(ct))
-        .withColumn("_sequence_number", lit(sq))
-        .withColumn("_snapshot_id", lit(id))
+        .withColumn("_sequence_number", graft.functions.BoundLong.column(sq))
+        .withColumn("_snapshot_id", graft.functions.BoundLong.column(id))
     var prev: Option[Snapshot] = mainSnaps
       .filter(sn => seqOf(sn) <= fromSeq).lastOption
       .map(sn => snapshot(spark, path, Some(sn.get("snapshot-id").asLong)))

@@ -1,5 +1,6 @@
 package graft.interop
 
+import graft.ingest.Versioned
 import org.apache.spark.sql.{DataFrame, SaveMode, SQLContext}
 import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
 import org.apache.spark.sql.execution.datasources.DataSourceUtils
@@ -8,7 +9,8 @@ import org.apache.spark.sql.sources.{
   BaseRelation, CreatableRelationProvider, DataSourceRegister, RelationProvider,
   StreamSinkProvider, StreamSourceProvider}
 import org.apache.spark.sql.streaming.OutputMode
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.graft.{StreamSchemaTracking, Tail, TailSource}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** `spark.read.format("iceberg")` / `df.write.format("iceberg")` over
   * [[Iceberg]] — the familiar surface for users coming from Iceberg,
@@ -45,69 +47,39 @@ final class IcebergSourceProvider extends RelationProvider
     parameters.collectFirst { case (k, v) if k.equalsIgnoreCase("path") => v }
       .getOrElse(throw new IllegalArgumentException("iceberg: 'path' is required"))
 
-  /** Streaming read: `spark.readStream.format("iceberg").load(tbl)` —
-    * tails the snapshot log (sequence numbers as offsets). Option:
-    * `ignoreChanges` (re-emit overwrite snapshots instead of failing). */
-  private def wantsChangelog(parameters: Map[String, String]): Boolean =
-    parameters.collectFirst {
-      case (k, v) if k.equalsIgnoreCase("changelog") => v.toBoolean
-    }.getOrElse(false)
-
   private def changelogSchema(base: StructType): StructType =
-    org.apache.spark.sql.types.StructType(base.fields ++ Seq(
-      org.apache.spark.sql.types.StructField("_change_type",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("_sequence_number",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("_snapshot_id",
-        org.apache.spark.sql.types.LongType)))
-
-  /** The tail's serving schema: the newest schema-tracking entry when
-    * `schemaTrackingLocation` is set and has recorded one (the
-    * restart-after-evolution path), else the current snapshot's. */
-  private def tailSchema(sqlContext: SQLContext,
-      parameters: Map[String, String]): StructType =
-    parameters.collectFirst {
-      case (k, v) if k.equalsIgnoreCase("schemaTrackingLocation") => v
-    }.flatMap(org.apache.spark.sql.graft.StreamSchemaTracking.read(_).map(_._1))
-      .getOrElse(Iceberg.snapshot(sqlContext.sparkSession, pathOf(parameters)).schema)
+    StructType(base.fields ++ Seq(StructField("_change_type", StringType),
+      StructField("_sequence_number", LongType), StructField("_snapshot_id", LongType)))
 
   override def sourceSchema(
       sqlContext: SQLContext, schema: Option[StructType],
       providerName: String, parameters: Map[String, String]): (String, StructType) =
     ("iceberg", schema.getOrElse {
-      val base = tailSchema(sqlContext, parameters)
-      if (wantsChangelog(parameters)) changelogSchema(base) else base
+      val base = StreamSchemaTracking.serving(opt(parameters, "schemaTrackingLocation"),
+        Iceberg.snapshot(sqlContext.sparkSession, pathOf(parameters)).schema)
+      if (opt(parameters, "changelog").exists(_.toBoolean)) changelogSchema(base) else base
     })
 
+  /** Streaming read: `spark.readStream.format("iceberg").load(tbl)` tails
+    * the snapshot log through [[TailSource]], sequence numbers as
+    * offsets. Options: `ignoreChanges` (re-emit overwrite snapshots
+    * instead of failing), `schemaTrackingLocation`, and `changelog`
+    * (stream [[Iceberg.changeLog]] after the exclusive `fromSeq`; a
+    * fresh stream without it serves new commits only). */
   override def createSource(
       sqlContext: SQLContext, metadataPath: String, schema: Option[StructType],
       providerName: String, parameters: Map[String, String]): Source = {
     val path = pathOf(parameters)
-    val snap = Iceberg.snapshot(sqlContext.sparkSession, path)
-    if (wantsChangelog(parameters))
-      return new org.apache.spark.sql.graft.IcebergChangelogSource(
-        sqlContext.sparkSession.asInstanceOf[ClassicSession], path,
-        schema.getOrElse(changelogSchema(snap.schema)),
-        parameters.collectFirst {
-          case (k, v) if k.equalsIgnoreCase("fromSeq") => v.toLong
-        })
-    val tracking = parameters.collectFirst {
-      case (k, v) if k.equalsIgnoreCase("schemaTrackingLocation") => v
-    }
-    val pinned = schema.getOrElse(
-      tracking.flatMap(org.apache.spark.sql.graft.StreamSchemaTracking.read(_).map(_._1))
-        .getOrElse(snap.schema))
-    // first start under tracking: put the serving schema on disk
-    // before any evolution can land
-    tracking.foreach(dir => org.apache.spark.sql.graft.StreamSchemaTracking.record(
-      dir, pinned, snap.sequenceNumber))
-    new org.apache.spark.sql.graft.IcebergStreamSource(
-      sqlContext.sparkSession.asInstanceOf[ClassicSession], path,
-      pinned, snap.partitionColumns,
-      ignoreChanges = parameters.collectFirst {
-        case (k, v) if k.equalsIgnoreCase("ignoreChanges") => v.toBoolean
-      }.getOrElse(false),
+    val spark = sqlContext.sparkSession.asInstanceOf[ClassicSession]
+    val snap = Iceberg.snapshot(spark, path)
+    if (opt(parameters, "changelog").exists(_.toBoolean))
+      return new TailSource(spark, new IcebergTail(spark, path, snap, snap.schema),
+        schema.getOrElse(changelogSchema(snap.schema)), feed = true,
+        opt(parameters, "fromSeq").map(_.toLong))
+    val tracking = opt(parameters, "schemaTrackingLocation")
+    val pinned = schema.getOrElse(StreamSchemaTracking.serving(tracking, snap.schema))
+    new TailSource(spark, new IcebergTail(spark, path, snap, pinned), pinned, feed = false,
+      start = None, ignoreChanges = opt(parameters, "ignoreChanges").exists(_.toBoolean),
       schemaTracking = tracking)
   }
 
@@ -185,4 +157,49 @@ final class IcebergSourceProvider extends RelationProvider
     }
     createRelation(sqlContext, parameters)
   }
+}
+
+/** The [[Tail]] of an Iceberg table; offsets are MAIN-lineage sequence
+  * numbers (monotonic across rollbacks; branch writes stay out until
+  * published). A fresh tail bootstraps the snapshot AT its end offset —
+  * the live set could already hold commits past it, which the next
+  * batch would re-deliver — and refuses outstanding delete debt, which
+  * raw file scans cannot subtract. A window's files are the manifests
+  * its snapshots added; a non-append snapshot (overwrite) makes it
+  * non-append, and `replace` snapshots (compaction) contribute nothing. */
+private final class IcebergTail(
+    spark: ClassicSession, val path: String, snap: Iceberg.Snapshot, val fileSchema: StructType)
+    extends Tail {
+  val name = "iceberg"
+  val origin = 0L
+
+  def head(): Option[Long] = Some(Iceberg.currentMainSequence(path)).filter(_ != origin)
+
+  def bootstrap(at: Long): Seq[Versioned.ManifestEntry] =
+    Iceberg.snapshotIdAtSeq(path, at).toSeq.flatMap { id =>
+      val s = Iceberg.snapshot(spark, path, Some(id))
+      if (s.hasDeleteDebt)
+        throw new IllegalStateException(
+          s"iceberg source: $path carries ${s.deletes.size} position-delete, " +
+            s"${s.eqDeletes.size} equality-delete file(s) and ${s.dvDeletes.size} " +
+            "deletion vector(s) — a streaming bootstrap over merge-on-read delete debt " +
+            "would re-serve deleted rows. Rewrite the table (copy-on-write delete or " +
+            "compaction) before tailing it.")
+      s.files.map(entry)
+    }
+
+  def window(from: Long, to: Long): Tail.Window = {
+    val (adds, nonAppend) = Iceberg.changesBetween(spark, path, from, to)
+    Tail.Window(adds.map(entry), appendOnly = !nonAppend,
+      schemas = Iceberg.schemaChangeBetween(path, from, to).map(to -> _).toSeq)
+  }
+
+  private def entry(f: Iceberg.DataFileRef): Versioned.ManifestEntry =
+    Versioned.ManifestEntry(new java.net.URI(f.path).getPath, snap.partitionColumns.map { c =>
+      c + "=" + f.partitionValues.getOrElse(c, None).map(Hive.escapePathName)
+        .getOrElse(Hive.DefaultPartition)
+    }.mkString("/"), size = Some(f.sizeInBytes))
+
+  def changes(from: Long, to: Long): DataFrame =
+    Iceberg.changeLog(spark, path, from, Some(to))
 }

@@ -870,7 +870,7 @@ object StreamOps extends QueryModule {
   /** Streaming T12: VERSIONED TABLE AS A STREAMING SOURCE — the read
     * half of the table-format streaming loop (t10 writes into the
     * table; this tails OUT of it): `readStream.format("graft-versioned")`
-    * (org.apache.spark.sql.graft.VersionedStreamSource, registered via
+    * (org.apache.spark.sql.graft.TailSource over a Versioned tail, registered via
     * DataSourceRegister) treats committed VERSIONS as offsets — each
     * micro-batch reads exactly the files the version range appended, so
     * a consumer is O(new data) per batch at any table size and the

@@ -46,7 +46,6 @@ import org.apache.spark.unsafe.types.UTF8String
 final class VersionedFileIndex(
     spark: ClassicSession,
     tablePath: String,
-    version: Long,
     entries: Seq[Versioned.ManifestEntry],
     fullSchema: StructType,
     partCols: Seq[String],

@@ -1,252 +1,17 @@
-/* This file lives under org.apache.spark.sql (not graft.*) on purpose:
- * a v1 streaming Source must hand MicroBatchExecution a DataFrame whose
- * logical plan is flagged isStreaming, and the only way to build one —
- * `Dataset.ofRows(spark, LogicalRelation(relation, isStreaming = true))`
- * — is private[sql]. Table formats ship their streaming sources exactly
- * this way (a shim package inside the Spark namespace); everything else
- * about the source delegates to the public graft.ingest.Versioned API. */
+/* The graft-versioned connector's provider, in the Spark namespace
+ * beside the relations and the streaming source it serves. */
 package org.apache.spark.sql.graft
 
 import graft.ingest.Versioned
 import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode}
-import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
-import org.apache.spark.sql.connector.read.streaming.{
-  Offset => OffsetV2, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.execution.datasources.{DataSource, DataSourceUtils, LogicalRelation}
-import org.apache.spark.sql.execution.streaming.{Offset => OffsetV1, Sink, Source}
-import org.apache.spark.sql.execution.streaming.runtime.LongOffset
+import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
+import org.apache.spark.sql.execution.datasources.DataSourceUtils
+import org.apache.spark.sql.execution.streaming.{Sink, Source}
 import org.apache.spark.sql.sources.{
   BaseRelation, CreatableRelationProvider, DataSourceRegister, RelationProvider,
   StreamSinkProvider, StreamSourceProvider}
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
-
-/** Streaming SOURCE over a [[graft.ingest.Versioned]] table — the read
-  * half of the table-format streaming story (stream_t10's sink is the
-  * write half): `spark.readStream.format("graft-versioned")
-  * .option("path", tbl).load()` tails the table's commit log, one
-  * micro-batch per committed version range.
-  *
-  * Offsets ARE version numbers (monotonic, durable, replayable): batch
-  * (from, to] reads exactly the data files manifest(to) added over
-  * manifest(from) — for an append-only table that is the committed
-  * delta, served without touching ANY historical file, so a consumer is
-  * O(new data) per batch at any table size. The engine checkpoints the
-  * version offsets; a restarted stream resumes from the last committed
-  * version exactly-once.
-  *
-  * Contract (Delta's source semantics, narrowed to what this format
-  * serves losslessly):
-  *  - the table must be append-only over the streamed window. A rewrite
-  *    commit (upsert/delete/compaction) changes history rather than
-  *    appending, so the source fails loudly unless
-  *    `ignoreChanges=true`, which re-emits the rewritten version's new
-  *    files (Delta's documented ignoreChanges behavior) — downstream
-  *    must tolerate re-delivery, the same contract Delta imposes.
-  *    Hive-partitioned append logs (commitPartitioned +
-  *    appendCommitPartitioned) stream too: each batch injects the
-  *    touched partitions' directory values, typed through the source
-  *    schema.
-  *  - merge-on-read delete commits add no data files; with
-  *    `ignoreChanges` they stream as empty batches (deletes are not
-  *    retractions in an append-log consumer).
-  *  - vacuumed history cannot be replayed: a checkpoint pointing below
-  *    the retention horizon fails at the manifest read, loudly.
-  *
-  * The schema is pinned at stream START from the table's recorded
-  * current schema; files appended later with MORE columns still read
-  * (extra columns ignored, missing read NULL) — the engine requires a
-  * fixed source schema, so a consumer picks up drift by restarting, the
-  * standard table-format stream contract. */
-class VersionedStreamSource(
-    spark: ClassicSession,
-    path: String,
-    override val schema: StructType,
-    ignoreChanges: Boolean,
-    startingVersion: Option[Long],
-    maxVersionsPerBatch: Option[Long],
-    statsFilter: Option[(String, Any, Any)] = None,
-    cdfKey: Option[String] = None,
-) extends Source with SupportsAdmissionControl with SupportsTriggerAvailableNow {
-
-  override def getOffset: Option[OffsetV1] =
-    Versioned.currentVersion(path).map(LongOffset(_))
-
-  private def versionOf(o: OffsetV1): Long = o match {
-    case l: LongOffset => l.offset
-    case other         => other.json.trim.toLong // SerializedOffset after a restart
-  }
-
-  /** ADMISSION CONTROL: `maxVersionsPerBatch` bounds how many commits
-    * one micro-batch advances — a month of backlog catches up in
-    * bounded, checkpointable steps instead of one giant batch (the
-    * same knob as file-source maxFilesPerTrigger). AvailableNow pins
-    * the end version at prepare time, so the run drains exactly what
-    * existed when it started and then stops — commits landing mid-run
-    * wait for the next trigger. */
-  @volatile private var availableNowCap: Option[Long] = None
-
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowCap = Versioned.currentVersion(path)
-
-  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
-
-  /** Where a FRESH stream (no checkpointed offset, no startingVersion)
-    * starts. Append-log mode replays from the beginning (version 0 —
-    * every retained version streams). CDF mode must instead bootstrap
-    * at the RETENTION FLOOR: on a vacuumed table the oldest retained
-    * version is > 1, and a `from` of 0 would drive `changeFeed(path,
-    * 1, to)` straight into its retention require — the batch CDF
-    * relation already defaults `startingVersion` to `versions.head`
-    * for exactly this reason (r7 ADVICE). Resolved lazily ONCE: the
-    * floor seen at first use stays the stream's origin even if vacuum
-    * advances it mid-run (the checkpointed offset wins from then on). */
-  private lazy val freshFrom: Long =
-    startingVersion.map(_ - 1L).getOrElse(
-      if (cdfKey.isDefined) Versioned.versions(path).head - 1L else 0L)
-
-  override def latestOffset(startOffset: OffsetV2, limit: ReadLimit): OffsetV2 = {
-    val from = Option(startOffset).map(o => o.json.trim.toLong)
-      .getOrElse(freshFrom)
-    val avail = availableNowCap.orElse(Versioned.currentVersion(path))
-    avail
-      .map(a => maxVersionsPerBatch.map(n => math.min(a, from + n)).getOrElse(a))
-      .filter(_ > from)
-      .map(LongOffset(_))
-      .orNull
-  }
-
-  override def getBatch(start: Option[OffsetV1], end: OffsetV1): DataFrame = {
-    // a fresh stream (no checkpointed offset) starts from startingVersion
-    // (that version INCLUDED) instead of replaying the whole backlog —
-    // Delta's startingVersion contract; a checkpointed offset wins; CDF
-    // mode bootstraps at the retention floor ([[freshFrom]])
-    val from = start.map(versionOf).getOrElse(freshFrom)
-    val to = versionOf(end)
-    if (cdfKey.isDefined) {
-      // CDF MODE: the micro-batch is the change feed of versions
-      // (from, to] — rewrites are served as keyed diffs rather than
-      // refused, merge-on-read deletes as before-images, appends as
-      // their new files; a fresh unwindowed stream bootstraps the
-      // oldest snapshot as inserts. Columns align to the schema pinned
-      // at stream start (a later additive drift reads NULL until the
-      // consumer restarts — the standard table-format stream contract).
-      import org.apache.spark.sql.functions.{col, lit}
-      val feed = Versioned.changeFeed(spark, path, from + 1L, to, cdfKey.get)
-      val aligned = feed.select(schema.fields.toIndexedSeq.map { f =>
-        if (feed.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      }: _*)
-      return spark.internalCreateDataFrame(
-        aligned.queryExecution.toRdd, aligned.schema, isStreaming = true)
-    }
-    val mFrom: Set[Versioned.ManifestEntry] =
-      if (from == 0L) Set.empty else Versioned.manifest(path, from).toSet
-    val mTo = Versioned.manifest(path, to)
-    val appendOnly = mFrom.subsetOf(mTo.toSet)
-    if (!appendOnly && !ignoreChanges)
-      throw new IllegalStateException(
-        s"graft-versioned source: versions ($from, $to] of $path contain a rewrite " +
-          "(upsert/delete/compaction) — a streaming tail of an append log cannot represent " +
-          "it. Restart from the current snapshot, or set ignoreChanges=true to re-emit " +
-          "rewritten files (downstream must tolerate re-delivery).")
-    val delta = mTo.filterNot(mFrom).filter(_.kind == Versioned.KindData)
-    // STATS PUSHDOWN INTO BATCH PLANNING: a filtered tail (statsFilter*
-    // options) drops whole appended files whose recorded [min,max]
-    // cannot intersect the range — before the planner lists or opens
-    // anything, the manifest-level analogue of readSkipping. Files
-    // without statistics always pass; the consumer's own row filter
-    // stays responsible for exactness, so pruning only cuts IO.
-    val pruned = statsFilter match {
-      case Some((c, lo, hi)) => delta.filter(e => Versioned.statsMayOverlap(e, c, lo, hi))
-      case None              => delta
-    }
-    def streamRelation(files: Seq[String], fileSchema: StructType): DataFrame = {
-      val relation = DataSource(
-        sparkSession = spark,
-        className = "parquet",
-        paths = files,
-        userSpecifiedSchema = Some(fileSchema),
-      ).resolveRelation(checkFilesExist = false)
-      Dataset.ofRows(spark, LogicalRelation(relation, isStreaming = true))
-    }
-    if (pruned.forall(_.partDir.isEmpty))
-      streamRelation(pruned.map(e => s"$path/${e.relPath}"), schema)
-    else {
-      // HIVE-PARTITIONED APPEND LOG (appendCommitPartitioned feeds): the
-      // appended files live under k=v fragments and do not carry the
-      // partition columns physically — each touched partition's file
-      // group reads with the data schema and gets its directory values
-      // injected, typed through the source schema (the same type-pinning
-      // rule as the library read path; directory strings never
-      // re-inferred). Per-batch group count is bounded by the partitions
-      // the batch touched — planning granularity, not data volume.
-      import org.apache.spark.sql.functions.{col, lit}
-      require(pruned.forall(_.partDir.nonEmpty),
-        s"graft-versioned source: versions ($from, $to] of $path mix partitioned and " +
-          "unpartitioned files — a single batch cannot serve both layouts")
-      val partNames = pruned.head.partDir.split("/").toSeq.map(_.takeWhile(_ != '='))
-      require(partNames.forall(n => schema.fieldNames.contains(n)),
-        s"graft-versioned source: partition columns (${partNames.mkString(", ")}) missing " +
-          "from the source schema")
-      val dataSchema = StructType(schema.fields.filterNot(f => partNames.contains(f.name)))
-      val frames = pruned.groupBy(_.partDir).toSeq.sortBy(_._1).map { case (dir, es) =>
-        val kv = dir.split("/").map { seg =>
-          val i = seg.indexOf('=')
-          require(i > 0, s"graft-versioned source: malformed partition dir '$dir' in $path")
-          seg.take(i) -> org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-            .unescapePathName(seg.drop(i + 1))
-        }.toMap
-        val base = streamRelation(es.map(e => s"$path/${e.relPath}"), dataSchema)
-        val withParts = partNames.foldLeft(base) { (acc, n) =>
-          val raw = kv.get(n).filterNot(
-            _ == org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.DEFAULT_PARTITION_NAME)
-          acc.withColumn(n,
-            raw.map(lit(_)).getOrElse(lit(null)).cast(schema(schema.fieldIndex(n)).dataType))
-        }
-        withParts.select(schema.fieldNames.toIndexedSeq.map(col): _*)
-      }
-      frames.reduce(_.unionByName(_))
-    }
-  }
-
-  override def stop(): Unit = ()
-}
-
-/** Plan introspection for streaming proofs, shim-packaged for the same
-  * reason as the source itself (StreamingQueryWrapper and
-  * IncrementalExecution are private[sql]): `foreachBatch` hands user
-  * code a LogicalRDD-wrapped frame whose `inputFiles` is always empty,
-  * but the micro-batch's REAL executed plan — with the source's
-  * substituted file relation — survives on the stream's lastExecution.
-  * This is how an entry can `require` what a batch actually scanned. */
-object StreamIntrospect {
-  def lastBatchInputFiles(q: org.apache.spark.sql.streaming.StreamingQuery): Seq[String] = {
-    val se = q match {
-      case w: org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper =>
-        w.streamingQuery
-      case s: org.apache.spark.sql.execution.streaming.runtime.StreamExecution => s
-    }
-    Option(se.lastExecution).toSeq.flatMap(_.executedPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.relation.location.inputFiles.toSeq
-    }.flatten)
-  }
-
-  /** Re-flag a source's `getBatch` frame as a BATCH frame so a contract
-    * spec can collect it outside MicroBatchExecution (the engine itself
-    * does this substitution internally; `isStreaming` and
-    * `Dataset.ofRows` are private[sql], hence this shim seam). Test
-    * seam only — production consumption always goes through the
-    * engine. */
-  def asBatch(df: DataFrame): DataFrame = {
-    val session = df.sparkSession.asInstanceOf[ClassicSession]
-    val batchPlan = df.queryExecution.logical.transform {
-      case lr: LogicalRelation if lr.isStreaming => lr.copy(isStreaming = false)
-    }
-    Dataset.ofRows(session, batchPlan)
-  }
-}
 
 /** `format("graft-versioned")` provider (registered via
   * META-INF/services for [[DataSourceRegister]]). Options: `path`
@@ -378,7 +143,7 @@ class VersionedSourceProvider extends StreamSourceProvider with RelationProvider
         (if (entries.exists(_.partDir.nonEmpty)) partCols else Seq.empty)),
       s"graft-versioned: $path@v$version mixes partition layouts — use Versioned.read")
     val spark = sqlContext.sparkSession.asInstanceOf[ClassicSession]
-    val index = new VersionedFileIndex(spark, path, version, entries, schema, partCols)
+    val index = new VersionedFileIndex(spark, path, entries, schema, partCols)
     val dataSchema = StructType(schema.fields.filterNot(f => partCols.contains(f.name)))
     new GraftVersionedRelation(spark, path, index, index.partitionSchema, dataSchema)
   }
@@ -580,40 +345,53 @@ class VersionedSourceProvider extends StreamSourceProvider with RelationProvider
           "graft-versioned source: statsFilterColumn, statsFilterLower and statsFilterUpper " +
             "must be set together")
     }
-    cdfKeyOf(parameters) match {
-      case some @ Some(key) =>
-        require(statsFilter.isEmpty,
-          "graft-versioned CDF source: statsFilter* options apply to the append-log tail, " +
-            "not the change feed (rewrite feeds are keyed diffs, not file scans)")
-        new VersionedStreamSource(
-          sqlContext.sparkSession.asInstanceOf[ClassicSession],
-          path, cdfSchema(resolveSchema(None, path), key), ignoreChanges,
-          startingVersion, maxVersions, None, some)
-      case None =>
-        new VersionedStreamSource(
-          sqlContext.sparkSession.asInstanceOf[ClassicSession],
-          path, resolved, ignoreChanges, startingVersion, maxVersions, statsFilter)
-    }
+    val spark = sqlContext.sparkSession.asInstanceOf[ClassicSession]
+    val cdfKey = cdfKeyOf(parameters)
+    require(cdfKey.isEmpty || statsFilter.isEmpty,
+      "graft-versioned CDF source: statsFilter* options apply to the append-log tail, " +
+        "not the change feed (rewrite feeds are keyed diffs, not file scans)")
+    new TailSource(spark, new VersionedTail(spark, path, resolved, statsFilter, cdfKey),
+      cdfKey.fold(resolved)(cdfSchema(resolveSchema(None, path), _)), feed = cdfKey.isDefined,
+      startingVersion.map(_ - 1L), ignoreChanges, maxVersions)
   }
 }
 
-/** The v1 [[Sink]] behind `writeStream.format("graft-versioned")`.
-  *
-  * `addBatch`'s DataFrame carries the micro-batch's INCREMENTAL plan
-  * with the streaming flag still set — a direct `.write` would be
-  * rejected, and every extra action would re-run the stateful plan. The
-  * sink re-wraps the executed rows (`queryExecution.toRdd`) as a batch
-  * frame, the same de-streaming every v1 table-format sink performs,
-  * then lands it through ONE idempotent manifest commit. */
-private[graft] class VersionedSink(
-    path: String, sinkId: String, statsCols: Seq[String]) extends Sink {
+/** The [[Tail]] of a [[Versioned]] table; offsets are versions. A
+  * window's files are manifest(to) minus manifest(from), where version
+  * 0 is the empty table, and it only appended when manifest(from)
+  * survives whole into manifest(to). Merge-on-read delete commits add
+  * no data files, so with `ignoreChanges` they stream as empty batches.
+  * A FILTERED tail drops appended files whose manifest statistics
+  * cannot intersect the range before anything is listed or opened;
+  * files without statistics always stream, and the consumer's own row
+  * filter stays responsible for exactness. The feed is
+  * [[Versioned.changeFeed]] keyed on `cdfKey`: an unwindowed feed starts
+  * at the retention floor, bootstrapping that snapshot as inserts. A
+  * checkpoint below the floor fails loudly at the manifest read. The
+  * schema is pinned at stream start; files appended later with more
+  * columns still read, the extra columns ignored. */
+private final class VersionedTail(
+    spark: ClassicSession, val path: String, val fileSchema: StructType,
+    statsFilter: Option[(String, Any, Any)], cdfKey: Option[String]) extends Tail {
+  val name = "graft-versioned"
+  val origin = 0L
+  def head(): Option[Long] = Versioned.currentVersion(path)
+  def bootstrap(at: Long): Seq[Versioned.ManifestEntry] = window(origin, at).files
 
-  override def addBatch(batchId: Long, data: DataFrame): Unit = {
-    val spark = data.sparkSession.asInstanceOf[ClassicSession]
-    val batch = spark.internalCreateDataFrame(
-      data.queryExecution.toRdd, data.schema, isStreaming = false)
-    Versioned.appendCommitOnce(batch, path, s"$sinkId#$batchId", statsCols = statsCols): Unit
+  def window(from: Long, to: Long): Tail.Window = {
+    val mFrom = if (from == origin) Set.empty[Versioned.ManifestEntry]
+      else Versioned.manifest(path, from).toSet
+    val mTo = Versioned.manifest(path, to)
+    val added = mTo.filterNot(mFrom).filter(_.kind == Versioned.KindData)
+    Tail.Window(
+      statsFilter.fold(added) { case (c, lo, hi) =>
+        added.filter(Versioned.statsMayOverlap(_, c, lo, hi))
+      },
+      appendOnly = mFrom.subsetOf(mTo.toSet))
   }
 
-  override def toString: String = s"VersionedSink[$path]"
+  def changes(from: Long, to: Long): DataFrame =
+    Versioned.changeFeed(spark, path, from + 1L, to, cdfKey.get)
+
+  override def feedOrigin: Option[Long] = Some(Versioned.versions(path).head - 1L)
 }

@@ -100,4 +100,19 @@ class DdlCoerceSpec extends AnyFunSuite with SparkFixture {
     assert(coerced.schema.head.dataType.typeName == "long")
     assert(coerced.columns.toSeq == Seq("weird ` col"))
   }
+
+  test("the boolean guard agrees with lower(trim(..)).isin row by row; bestFit decides the same") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, lower, trim}
+    val samples = Seq("TRUE", " yes ", "\ttrue", "\u0130", "\u212A", "\uFF34\uFF32\uFF35\uFF25",
+      "No", "f", "0", "true\n", "k", "maybe", null)
+    val icu = lower(trim(col("s")))
+      .isin("true", "false", "t", "f", "y", "n", "yes", "no", "1", "0")
+    samples.toDF("s").select(col("s"), Coerce.plausible(col("s"), "boolean"), icu).collect()
+      .foreach(r => assert(r.get(1) == r.get(2), s"guards disagree on '${r.get(0)}'"))
+    val raw = Seq(("TRUE", "true", "\u212A"), (" yes ", "\ttrue", "t"), ("No", "f", "f"))
+      .toDF("flags", "tabbed", "kelvin")
+    val types = Coerce.bestFit(raw).schema.fields.map(f => f.name -> f.dataType.typeName).toMap
+    assert(types == Map("flags" -> "boolean", "tabbed" -> "string", "kelvin" -> "string"))
+  }
 }

@@ -1014,9 +1014,8 @@ class IcebergSpec extends AnyFunSuite with SparkFixture {
     Seq((3L, "c")).toDF("k", "v")
       .write.format("iceberg").mode("append").save(path)        // seq 2
     val schema = Iceberg.read(spark, path).schema
-    val src = new org.apache.spark.sql.graft.IcebergStreamSource(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-      path, schema, Nil, ignoreChanges = false)
+    val src = new IcebergSourceProvider().createSource(spark.sqlContext,
+      freshDir("ice_stream_pin_meta"), Some(schema), "iceberg", Map("path" -> path))
     // the engine checkpointed end=1 before seq 2 landed (crash-replay,
     // or a commit racing between getOffset and getBatch): the bootstrap
     // must serve snapshot seq 1 — the live set would re-deliver seq 2's

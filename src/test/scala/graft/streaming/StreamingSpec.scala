@@ -116,9 +116,10 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     graft.interop.DeltaLake.write(Seq((1L, "a")).toDF("k", "v"), tbl)
     // a source pinned while the table was (k, v) — the running-query state
     val pinned = graft.interop.DeltaLake.snapshot(s, tbl).schema
-    val src = new org.apache.spark.sql.graft.DeltaStreamSource(
-      s.asInstanceOf[org.apache.spark.sql.classic.SparkSession], tbl, pinned,
-      Nil, ignoreChanges = false, startingVersion = None)
+    def source(schema: org.apache.spark.sql.types.StructType) =
+      new graft.interop.DeltaSourceProvider().createSource(s.sqlContext,
+        base.resolve("meta").toString, Some(schema), "delta", Map("path" -> tbl))
+    val src = source(pinned)
     // evolution lands under the running query
     graft.interop.DeltaLake.write(Seq((2L, "b", 1L)).toDF("k", "v", "extra"), tbl,
       mode = SaveMode.Append, mergeSchema = true)
@@ -126,11 +127,8 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     assert(e.getMessage.contains("schemaTrackingLocation"),
       s"the refusal must name the unblock option, got: ${e.getMessage}")
     // a RESTARTED (re-pinned) query serves the evolved schema — Delta's
-    // restart-fresh contract, proven through the source directly
-    val src2 = new org.apache.spark.sql.graft.DeltaStreamSource(
-      s.asInstanceOf[org.apache.spark.sql.classic.SparkSession], tbl,
-      graft.interop.DeltaLake.snapshot(s, tbl).schema,
-      Nil, ignoreChanges = false, startingVersion = None)
+    // restart-fresh contract, proven through the provider
+    val src2 = source(graft.interop.DeltaLake.snapshot(s, tbl).schema)
     assert(src2.getBatch(Some(LongOffset(0L)), LongOffset(1L)).columns.toSeq ==
       Seq("k", "v", "extra"))
   }
