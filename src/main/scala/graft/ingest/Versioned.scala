@@ -1,11 +1,11 @@
 package graft.ingest
 
-import graft.interop.{MergeOnRead, RewriteFiles}
+import graft.interop.{Evolve, MergeOnRead, RewriteFiles}
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
-import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
 /** Snapshot-versioned parquet table — the transactional-table semantics
   * (snapshot isolation, time travel, MERGE, retention) the rewrite family
@@ -2577,128 +2577,81 @@ object Versioned {
     (fs, root, base, entries, schema, colIdsOf(fs, root, base))
   }
 
-  /** RENAME a column without touching a single data file (r6 verdict
-    * #7): a metadata-only derived commit — the manifest is carried
-    * verbatim (an empty delta), the new schema moves the old column's
-    * STABLE id under the new name, and readers align every owning
-    * version's files to the current names through the ids. Time travel
-    * below the rename still reads the old names — each snapshot
-    * presents the schema it committed. Partition columns and tables
-    * with outstanding MoR deletes are refused ([[evolutionBase]]). */
-  def renameColumn(path: String, from: String, to: String): Long = {
-    val (fs, root, base, _, schema, ids) = evolutionBase(path, "renameColumn")
-    require(schema.fieldNames.contains(from),
-      s"Versioned.renameColumn: no column '$from' in (${schema.fieldNames.mkString(", ")})")
-    require(!schema.fieldNames.contains(to),
-      s"Versioned.renameColumn: column '$to' already exists")
-    require(!layoutPartCols(readManifest(fs, root, base)).contains(from),
-      s"Versioned.renameColumn: '$from' is a partition column — its name is baked into " +
-        "the directory layout; repartition the table to rename it")
-    val newSchema = StructType(schema.fields.map(f =>
-      if (f.name == from) f.copy(name = to) else f))
-    val newIds = (ids - from) + (to -> ids.getOrElse(from,
-      (0 +: ids.values.toSeq).max + 1))
-    val v = claimExact(fs, root, base) // derived: lost-update guard
-    publishDelta(fs, root, v, base, adds = Nil, removes = Nil,
-      schema = newSchema, meta = Map(ColIdsKey -> renderColIds(newIds)))
+  /** Metadata-only SCHEMA EVOLUTION through the shared [[Evolve]] core:
+    * the manifest is carried verbatim (an empty delta) and the new
+    * schema and column-id map ride one derived commit. The column-id
+    * mapping applies at READ time per owning version — an added column
+    * takes a FRESH stable id (every pre-addition file serves it as
+    * NULL), a renamed one keeps its id under the new name, a dropped
+    * one leaves the map (its bytes stay in the files until the next
+    * natural rewrite folds them out), a widened one is CAST up at scan
+    * time. Time travel below a change presents the schema each
+    * snapshot committed. Refused here, besides the core's rules:
+    * outstanding legacy keyed deletes ([[evolutionBase]]); partition
+    * columns for every change but add and clear-default (their names
+    * and values are baked into the directory layout); and a widening
+    * across the xxhash64 domain of a column with BLOOM sidecars
+    * (byte/short/int hash alike, long differently — a probe at the
+    * widened type would wrongly skip files; compactFiles re-blooms). */
+  private[graft] def evolve(spark: SparkSession, path: String, c: Evolve.Change): Long = {
+    import Evolve._
+    val (fs, root, base, entries, schema0, ids) = evolutionBase(path, c.verb)
+    Evolve(new Table {
+      def name = "Versioned"
+      def schema = schema0
+      def refuse(c: Change): Unit = c match {
+        case _: Add | _: ClearDefault => ()
+        case _ =>
+          require(!layoutPartCols(entries).contains(c.column),
+            s"Versioned.${c.verb}: '${c.column}' is a partition column — its name and " +
+              "values come from the directory layout; repartition the table first")
+          c match {
+            case Widen(n, to) if to == LongType && schema0(n).dataType != LongType =>
+              require(loadBloomIndex(spark, fs, root, entries.filter(_.kind == KindData), n)
+                .isEmpty,
+                s"Versioned.widenColumnType: '$n' carries bloom point-lookup sidecars " +
+                  s"hashed at ${schema0(n).dataType.simpleString} — widening to " +
+                  s"${to.simpleString} changes the xxhash64 domain and equality probes " +
+                  "would wrongly skip files; compactFiles (re-bloom) first")
+            case _ => ()
+          }
+      }
+      def record(c: Change, next: StructType): Long = {
+        val fresh = (0 +: ids.values.toSeq).max + 1
+        val newIds = c match {
+          case Add(n, _) => ids + (n -> fresh)
+          case Rename(from, to) => (ids - from) + (to -> ids.getOrElse(from, fresh))
+          case Drop(n) => ids - n
+          case _ => ids
+        }
+        val v = claimExact(fs, root, base) // derived: lost-update guard
+        publishDelta(fs, root, v, base, adds = Nil, removes = Nil,
+          schema = next, meta = Map(ColIdsKey -> renderColIds(newIds)))
+      }
+    }, c)
   }
 
-  /** DROP a column without touching a single data file: metadata-only
-    * derived commit — the column leaves the schema and the id map;
-    * readers simply never select it (the bytes stay in the files until
-    * the next natural rewrite folds them out). Time travel below the
-    * drop still reads it. Dropping the last column, a partition
-    * column, or evolving under MoR deletes is refused. */
-  def dropColumn(path: String, name: String): Long = {
-    val (fs, root, base, _, schema, ids) = evolutionBase(path, "dropColumn")
-    require(schema.fieldNames.contains(name),
-      s"Versioned.dropColumn: no column '$name' in (${schema.fieldNames.mkString(", ")})")
-    require(schema.fields.length > 1,
-      s"Versioned.dropColumn: refusing to drop the last column '$name'")
-    require(!layoutPartCols(readManifest(fs, root, base)).contains(name),
-      s"Versioned.dropColumn: '$name' is a partition column — repartition the table to drop it")
-    val newSchema = StructType(schema.fields.filterNot(_.name == name))
-    val v = claimExact(fs, root, base) // derived: lost-update guard
-    publishDelta(fs, root, v, base, adds = Nil, removes = Nil,
-      schema = newSchema, meta = Map(ColIdsKey -> renderColIds(ids - name)))
-  }
+  /** RENAME a column (metadata only, see [[evolve]]). */
+  def renameColumn(path: String, from: String, to: String): Long =
+    evolve(SparkSession.active, path, Evolve.Rename(from, to))
 
-  /** ADD a nullable column without touching a single data file: a
-    * metadata-only derived commit — the schema gains the field under a
-    * FRESH stable column id, so the id-aligned read path serves every
-    * pre-addition file with the column as NULL (no file carries the
-    * id). Non-nullable additions are refused: every existing row would
-    * violate the constraint it claims. Time travel below the addition
-    * presents the schema each snapshot committed. */
-  def addColumn(path: String, name: String, dataType: DataType): Long = {
-    val (fs, root, base, _, schema, ids) = evolutionBase(path, "addColumn")
-    require(!schema.fieldNames.exists(_.equalsIgnoreCase(name)),
-      s"Versioned.addColumn: column '$name' already exists")
-    val newSchema = StructType(schema.fields :+ StructField(name, dataType, nullable = true))
-    val newIds = ids + (name -> ((0 +: ids.values.toSeq).max + 1))
-    val v = claimExact(fs, root, base) // derived: lost-update guard
-    publishDelta(fs, root, v, base, adds = Nil, removes = Nil,
-      schema = newSchema, meta = Map(ColIdsKey -> renderColIds(newIds)))
-  }
+  /** DROP a column (metadata only, see [[evolve]]). */
+  def dropColumn(path: String, name: String): Long =
+    evolve(SparkSession.active, path, Evolve.Drop(name))
 
-  /** WIDEN a column's type without touching a single data file: a
-    * metadata-only derived commit, the graft-native mirror of Delta's
-    * `typeWidening` / Iceberg's type promotion. Pre-widen files keep
-    * their narrow physical types; the id-aligned read path CASTS them
-    * up at scan time (Spark's parquet readers serve int32 as long,
-    * float as double, re-scaled decimals natively), and manifest
-    * min/max stats keep pruning because [[statsOverlap]] compares
-    * NUMERICALLY (BigDecimal), not by physical width. Allowed: the
-    * integer family upward, float→double, decimal precision widen at
-    * the same scale — anything else refuses (a promotion the reader
-    * can't upcast would misread every old file). Partition columns
-    * refuse (their values parse from directory strings). A column with
-    * BLOOM sidecars refuses when the widening crosses the xxhash64
-    * domain (byte/short/int hash alike; long hashes differently — a
-    * probe at the widened type would MISS membership recorded at the
-    * narrow type and wrongly skip files): compact to re-bloom first. */
-  def widenColumn(spark: SparkSession, path: String, name: String,
-      to: DataType): Long = {
-    import org.apache.spark.sql.types.{
-      ByteType, DecimalType, DoubleType, FloatType, IntegerType, LongType, ShortType}
-    val (fs, root, base, entries, schema, ids) = evolutionBase(path, "widenColumn")
-    require(schema.fieldNames.contains(name),
-      s"Versioned.widenColumn: no column '$name' in (${schema.fieldNames.mkString(", ")})")
-    val idx = schema.fieldIndex(name)
-    val from = schema.fields(idx).dataType
-    val ok = (from, to) match {
-      case (ByteType, ShortType | IntegerType | LongType) => true
-      case (ShortType, IntegerType | LongType) => true
-      case (IntegerType, LongType) => true
-      case (FloatType, DoubleType) => true
-      case (f: DecimalType, t: DecimalType) =>
-        t.scale == f.scale && t.precision > f.precision
-      case _ => false
-    }
-    require(ok,
-      s"Versioned.widenColumn: ${from.simpleString} -> ${to.simpleString} is not " +
-        "a widening promotion (allowed: the integer family upward, float->double, " +
-        "decimal precision widen at the same scale)")
-    require(!layoutPartCols(entries).contains(name),
-      s"Versioned.widenColumn: '$name' is a partition column — its values parse " +
-        "from the directory layout; repartition the table to widen it")
-    val crossesHashDomain = to == LongType && from != LongType
-    require(!crossesHashDomain ||
-      loadBloomIndex(spark, fs, root, entries.filter(_.kind == KindData), name).isEmpty,
-      s"Versioned.widenColumn: '$name' carries bloom point-lookup sidecars hashed at " +
-        s"${from.simpleString} — widening to ${to.simpleString} changes the xxhash64 " +
-        "domain and equality probes would wrongly skip files; compactFiles (re-bloom) first")
-    val newSchema = StructType(schema.fields.updated(idx,
-      schema.fields(idx).copy(dataType = to)))
-    val v = claimExact(fs, root, base) // derived: lost-update guard
-    publishDelta(fs, root, v, base, adds = Nil, removes = Nil,
-      schema = newSchema, meta = Map(ColIdsKey -> renderColIds(ids)))
-  }
+  /** ADD a nullable column (metadata only, see [[evolve]]). */
+  def addColumn(path: String, name: String, dataType: DataType): Long =
+    evolve(SparkSession.active, path, Evolve.Add(name, dataType))
 
-  /** The analyzer's own column-default field-metadata key — the same
-    * contract Delta rides, so the served schema makes SQL column-list
-    * INSERT omissions fill through Spark's resolver too. */
-  private val CurrentDefaultKey = "CURRENT_DEFAULT"
+  /** WIDEN a column's type (metadata only, see [[evolve]]) — the
+    * graft-native mirror of Delta's `typeWidening` / Iceberg's type
+    * promotion. Manifest min/max stats keep pruning because
+    * [[statsOverlap]] compares NUMERICALLY (BigDecimal), not by
+    * physical width. */
+  def widenColumn(spark: SparkSession, path: String, name: String, to: DataType): Long =
+    evolve(spark, path, Evolve.Widen(name, to))
+
+  private val CurrentDefaultKey = Evolve.DefaultKey
 
   /** The table's declared column defaults (column → default SQL) —
     * what [[appendCommit]]/[[appendCommitOnce]] fill omitted columns
@@ -2711,49 +2664,18 @@ object Versioned {
       .getOrElse(Map.empty)
   }
 
-  /** Declare a column DEFAULT (metadata-only derived commit): appends
+  /** Declare a column DEFAULT (metadata only, see [[evolve]]): appends
     * that omit the column fill it with the folded constant — the
-    * graft-native mirror of Delta's `allowColumnDefaults` /
-    * Iceberg's v3 `write-default`. Rows already written keep what they
-    * have (this is a WRITE default, not an existence default).
-    * Non-constant expressions and partition columns refuse. */
+    * graft-native mirror of Delta's `allowColumnDefaults` / Iceberg's
+    * v3 `write-default`. Rows already written keep what they have
+    * (this is a WRITE default, not an existence default). */
   def setColumnDefault(spark: SparkSession, path: String, name: String,
-      sqlExpr: String): Long = {
-    val (fs, root, base, entries, schema, ids) = evolutionBase(path, "setColumnDefault")
-    require(schema.fieldNames.contains(name),
-      s"Versioned.setColumnDefault: no column '$name' in (${schema.fieldNames.mkString(", ")})")
-    require(!layoutPartCols(entries).contains(name),
-      s"Versioned.setColumnDefault: '$name' is a partition column — its values come " +
-        "from the directory layout, a write default would never apply")
-    val parsed = spark.sessionState.sqlParser.parseExpression(sqlExpr)
-    require(parsed.foldable,
-      s"Versioned.setColumnDefault: '$sqlExpr' is not a constant expression")
-    val idx = schema.fieldIndex(name)
-    val f = schema.fields(idx)
-    val nf = f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
-      .withMetadata(f.metadata).putString(CurrentDefaultKey, sqlExpr).build())
-    val v = claimExact(fs, root, base) // derived: lost-update guard
-    publishDelta(fs, root, v, base, adds = Nil, removes = Nil,
-      schema = StructType(schema.fields.updated(idx, nf)),
-      meta = Map(ColIdsKey -> renderColIds(ids)))
-  }
+      sqlExpr: String): Long =
+    evolve(spark, path, Evolve.SetDefault(name, sqlExpr))
 
   /** DROP a column's default: appends omitting the column refuse again. */
-  def clearColumnDefault(spark: SparkSession, path: String, name: String): Long = {
-    val (fs, root, base, _, schema, ids) = evolutionBase(path, "clearColumnDefault")
-    require(schema.fieldNames.contains(name),
-      s"Versioned.clearColumnDefault: no column '$name' in (${schema.fieldNames.mkString(", ")})")
-    val idx = schema.fieldIndex(name)
-    val f = schema.fields(idx)
-    require(f.metadata.contains(CurrentDefaultKey),
-      s"Versioned.clearColumnDefault: '$name' has no default to clear")
-    val mb = new org.apache.spark.sql.types.MetadataBuilder().withMetadata(f.metadata)
-    mb.remove(CurrentDefaultKey)
-    val v = claimExact(fs, root, base)
-    publishDelta(fs, root, v, base, adds = Nil, removes = Nil,
-      schema = StructType(schema.fields.updated(idx, f.copy(metadata = mb.build()))),
-      meta = Map(ColIdsKey -> renderColIds(ids)))
-  }
+  def clearColumnDefault(spark: SparkSession, path: String, name: String): Long =
+    evolve(spark, path, Evolve.ClearDefault(name))
 
   // ------------------------------------------------- identity columns
   // the graft-native mirror of Delta's `identityColumns` writer

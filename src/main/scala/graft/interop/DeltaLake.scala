@@ -126,7 +126,12 @@ object DeltaLake {
       // latest `domainMetadata` configuration per domain (removed
       // domains dropped) — the protocol's keyed metadata channel; row
       // tracking stores its id high-water mark here
-      domains: Map[String, String] = Map.empty) {
+      domains: Map[String, String] = Map.empty,
+      // `metaData.id`, the table's unique identifier: every metaData
+      // re-emission and checkpoint carries it unchanged (delta-spark's
+      // streaming source refuses to continue when it moves); only a
+      // create, convert or shallow clone mints one
+      id: String = "") {
     def physicalName(c: String): String = columnMapping.getOrElse(c, c)
     def hasDeletionVectors: Boolean = files.exists(_.dv.nonEmpty)
     def cdfEnabled: Boolean =
@@ -168,7 +173,6 @@ object DeltaLake {
     * by range sort). */
   def enableClustering(spark: SparkSession, path: String, cols: Seq[String]): Long = {
     val snap = snapshot(spark, path)
-    gateWriter(snap, path, "enableClustering", mutates = false)
     require(cols.nonEmpty && cols.size <= 4,
       s"DeltaLake.enableClustering: 1-4 clustering columns, got ${cols.size}")
     val missing = cols.filterNot(snap.schema.fieldNames.contains)
@@ -185,23 +189,12 @@ object DeltaLake {
           s"z-curve — [${nonNumeric.mkString(", ")}] are not numeric (cluster on one " +
           "orderable column, or cast)")
     }
-    val (fs, root) = Writers.fsFor(path)
-    val now = System.currentTimeMillis()
-    val v = snap.version + 1
     val conf = Json.createObjectNode()
     val arr = conf.putArray("clusteringColumns")
     cols.foreach(c => arr.addArray().add(snap.physicalName(c)): Unit)
-    val lines = Seq(
-      protocolLine(withWriterFeatures(snap.protocol,
-        Seq("clusteringTable", "domainMetadata"))),
-      domainLine(ClusteringDomain, Json.writeValueAsString(conf)), {
-        val ci = Json.createObjectNode()
-        val info = ci.putObject("commitInfo")
-        info.put("timestamp", now); info.put("operation", "CLUSTER BY")
-        Json.writeValueAsString(ci)
-      })
-    commitLines(fs, root, v, lines, snap.configuration)
-    v
+    commitMetadata(snap, path, "CLUSTER BY")(
+      protocol = withWriterFeatures(snap.protocol, Seq("clusteringTable", "domainMetadata")),
+      actions = Seq(domainLine(ClusteringDomain, Json.writeValueAsString(conf))))
   }
 
   /** The table's clustering columns (LOGICAL names), from the
@@ -559,6 +552,9 @@ object DeltaLake {
     // other mode fails loudly.
     var mapMode: Option[String] = None
     var tableConf: Map[String, String] = Map.empty
+    // a foreign log without metaData.id (the protocol requires one)
+    // still gets a STABLE id: one derived from the table root
+    var tableId = java.util.UUID.nameUUIDFromBytes(root.toString.getBytes("UTF-8")).toString
     var txns: Map[String, Long] = Map.empty
     def gateColumnMapping(mode: Option[String]): Unit = {
       require(mode.forall(m => m == "none" || m.isEmpty || m == "name" || m == "id"),
@@ -598,6 +594,8 @@ object DeltaLake {
           .map(_.toMap).getOrElse(Map.empty)
         gateColumnMapping(conf.get("delta.columnMapping.mode"))
         tableConf = conf
+        if (m.schema.fieldNames.contains("id") && !m.isNullAt(m.fieldIndex("id")))
+          tableId = m.getAs[String]("id")
         schema = Some(DataType.fromJson(m.getAs[String]("schemaString")).asInstanceOf[StructType])
         partCols = m.getAs[scala.collection.Seq[String]]("partitionColumns").toSeq
       }
@@ -663,6 +661,7 @@ object DeltaLake {
         tableConf = Option(m.get("configuration")).filterNot(_.isNull).map { c =>
           c.properties().asScala.map(e => e.getKey -> e.getValue.asText).toMap
         }.getOrElse(Map.empty)
+        Option(m.get("id")).filterNot(_.isNull).foreach(i => tableId = i.asText)
         schema = Some(DataType.fromJson(m.get("schemaString").asText).asInstanceOf[StructType])
         partCols = Option(m.get("partitionColumns")).map(_.elements().asScala.map(_.asText).toSeq)
           .getOrElse(Nil)
@@ -813,7 +812,7 @@ object DeltaLake {
       f.copy(dataType = stripType(f.dataType), metadata = md)
     })
     Snapshot(target, logical, partCols, files.values.toSeq, mapping, tableConf,
-      rawSchema = raw, protocol = protocolV, txns = txns, domains = domains)
+      rawSchema = raw, protocol = protocolV, txns = txns, domains = domains, id = tableId)
   }
 
   /** (version, commit timestamp ms, operation) per JSON log entry —
@@ -1477,7 +1476,8 @@ object DeltaLake {
         f.copy(metadata = new MetadataBuilder().withMetadata(f.metadata)
           .putLong(IdHwmKey, h).build())).getOrElse(f)))
     if (prior.isEmpty || mode == SaveMode.Overwrite || schemaChanged || idMeta.nonEmpty)
-      lines += metaDataLine(rawTableCommit, partCols, now, newConf)
+      lines += metaDataLine(prior.fold(newTableId())(_.id), rawTableCommit, partCols, now,
+        newConf)
     if (mode == SaveMode.Overwrite)
       prior.toSeq.flatMap(_.files).foreach(f => lines += removeLine(f.path, now))
     adds.foreach(a => lines += addLine(a))
@@ -1773,6 +1773,14 @@ object DeltaLake {
       if (prior.minReader >= 2) Seq("columnMapping") else Nil,
       (legacyWriterFeatures(prior.minWriter) ++ feats).distinct)
 
+  /** The protocol after additionally requiring the writer feature
+    * `feat`: a table on the features protocol (either version) gains
+    * the feature; a legacy table bumps to `legacyWriter`, the writer
+    * version that implies it. */
+  private def ratchetWriter(prior: Protocol, feat: String, legacyWriter: Int): Protocol =
+    if (prior.minReader >= 3 || prior.minWriter >= 7) withWriterFeatures(prior, Seq(feat))
+    else prior.copy(minWriter = math.max(prior.minWriter, legacyWriter))
+
   /** The protocol after additionally requiring a READER+WRITER table
     * feature (the reader version bumps to 3, the writer to 7). A
     * table already on the features protocol — by EITHER version (a
@@ -1829,46 +1837,23 @@ object DeltaLake {
     require(snap.protocol.readerFeatures.contains("variantType"),
       s"DeltaLake.enableVariantShredding: $path does not carry the variantType " +
         "feature — shredding is a layout of variant columns; add one first")
-    gateWriter(snap, path, "enableVariantShredding", mutates = false)
-    val (fs, root) = Writers.fsFor(path)
-    val now = System.currentTimeMillis()
-    val v = snap.version + 1
-    val lines = Seq(
-      protocolLine(withReaderWriterFeature(snap.protocol, "variantShredding")), {
-        val ci = Json.createObjectNode()
-        val info = ci.putObject("commitInfo")
-        info.put("timestamp", now); info.put("operation", "SET TBLPROPERTIES")
-        Json.writeValueAsString(ci)
-      })
-    commitLines(fs, root, v, lines, snap.configuration)
-    v
+    commitMetadata(snap, path, "SET TBLPROPERTIES")(
+      protocol = withReaderWriterFeature(snap.protocol, "variantShredding"))
   }
 
   def enableRowTracking(spark: SparkSession, path: String): Long = {
     val snap = snapshot(spark, path)
     if (snap.rowTrackingEnabled) return snap.version
-    gateWriter(snap, path, "enableRowTracking", mutates = false)
     val (fs, root) = Writers.fsFor(path)
-    val now = System.currentTimeMillis()
-    val v = snap.version + 1
     val suffix = java.util.UUID.randomUUID().toString.take(8)
-    val conf = snap.configuration +
-      ("delta.enableRowTracking" -> "true",
+    val (stamped, wmLine) =
+      assignRowIds(fs, root, snap, snap.files, snap.version + 1, "enableRowTracking")
+    commitMetadata(snap, path, "SET TBLPROPERTIES")(
+      protocol = withWriterFeatures(snap.protocol, Seq("rowTracking", "domainMetadata")),
+      conf = snap.configuration + ("delta.enableRowTracking" -> "true",
         MatRowIdKey -> s"_row-id-col-$suffix",
-        MatRcvKey -> s"_row-commit-version-col-$suffix")
-    val (stamped, wmLine) = assignRowIds(fs, root, snap, snap.files, v, "enableRowTracking")
-    val lines = Seq(
-      protocolLine(withWriterFeatures(snap.protocol, Seq("rowTracking", "domainMetadata"))),
-      metaDataLine(snap.rawSchema, snap.partitionColumns, now, conf)) ++
-      stamped.map(addLine(_, dataChange = false)) ++
-      Seq(wmLine, {
-        val ci = Json.createObjectNode()
-        val info = ci.putObject("commitInfo")
-        info.put("timestamp", now); info.put("operation", "SET TBLPROPERTIES")
-        Json.writeValueAsString(ci)
-      })
-    commitLines(fs, root, v, lines, conf)
-    v
+        MatRcvKey -> s"_row-commit-version-col-$suffix"),
+      actions = stamped.map(addLine(_, dataChange = false)) :+ wmLine)
   }
 
   /** Read with the ROW TRACKING columns served: the table's columns
@@ -1965,25 +1950,13 @@ object DeltaLake {
   def enableInCommitTimestamps(spark: SparkSession, path: String): Long = {
     val snap = snapshot(spark, path)
     if (ictEnabled(snap.configuration)) return snap.version
-    gateWriter(snap, path, "enableInCommitTimestamps", mutates = false)
-    val (fs, root) = Writers.fsFor(path)
     val now = System.currentTimeMillis()
-    val v = snap.version + 1
-    val conf = snap.configuration +
-      ("delta.enableInCommitTimestamps" -> "true",
-        "delta.inCommitTimestampEnablementVersion" -> v.toString,
-        "delta.inCommitTimestampEnablementTimestamp" -> now.toString)
-    val lines = Seq(
-      protocolLine(withWriterFeatures(snap.protocol, Seq("inCommitTimestamp"))),
-      metaDataLine(snap.rawSchema, snap.partitionColumns, now, conf),
-      {
-        val ci = Json.createObjectNode()
-        val info = ci.putObject("commitInfo")
-        info.put("timestamp", now); info.put("operation", "SET TBLPROPERTIES")
-        Json.writeValueAsString(ci)
-      })
-    commitLines(fs, root, v, lines, conf)
-    v
+    commitMetadata(snap, path, "SET TBLPROPERTIES")(
+      protocol = withWriterFeatures(snap.protocol, Seq("inCommitTimestamp")),
+      conf = snap.configuration + ("delta.enableInCommitTimestamps" -> "true",
+        "delta.inCommitTimestampEnablementVersion" -> (snap.version + 1).toString,
+        "delta.inCommitTimestampEnablementTimestamp" -> now.toString),
+      now = now)
   }
 
   // ------------------------------------------------------ change data feed
@@ -1996,29 +1969,9 @@ object DeltaLake {
   def enableChangeDataFeed(spark: SparkSession, path: String): Long = {
     val snap = snapshot(spark, path)
     if (snap.cdfEnabled) return snap.version
-    val (fs, root) = Writers.fsFor(path)
-    val now = System.currentTimeMillis()
-    val v = snap.version + 1
-    // the protocol RATCHETS — a table already on table features keeps
-    // them and gains the changeDataFeed writer feature; legacy tables
-    // bump to the CDF writer version. The re-emitted metaData carries
-    // the RAW schema (field metadata such as physicalName intact).
-    val newProtocol =
-      if (snap.protocol.minReader >= 3 || snap.protocol.minWriter >= 7)
-        withWriterFeatures(snap.protocol, Seq("changeDataFeed"))
-      else snap.protocol.copy(minWriter = math.max(snap.protocol.minWriter, 4))
-    val lines = Seq(
-      protocolLine(newProtocol),
-      metaDataLine(snap.rawSchema, snap.partitionColumns, now,
-        snap.configuration + ("delta.enableChangeDataFeed" -> "true")),
-      {
-        val ci = Json.createObjectNode()
-        val info = ci.putObject("commitInfo")
-        info.put("timestamp", now); info.put("operation", "SET TBLPROPERTIES")
-        Json.writeValueAsString(ci)
-      })
-    commitLines(fs, root, v, lines, snap.configuration)
-    v
+    commitMetadata(snap, path, "SET TBLPROPERTIES")(
+      protocol = ratchetWriter(snap.protocol, "changeDataFeed", 4),
+      conf = snap.configuration + ("delta.enableChangeDataFeed" -> "true"))
   }
 
   /** Every table-relative data-file path the log has EVER recorded
@@ -2099,7 +2052,7 @@ object DeltaLake {
     val now = System.currentTimeMillis()
     val lines = scala.collection.mutable.ArrayBuffer.empty[String]
     lines += """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}"""
-    lines += metaDataLine(schema, partCols, now)
+    lines += metaDataLine(newTableId(), schema, partCols, now)
     adds.foreach(a => lines += addLine(a))
     val ci = Json.createObjectNode()
     val info = ci.putObject("commitInfo")
@@ -2195,23 +2148,9 @@ object DeltaLake {
       s"DeltaLake.addCheckConstraint: constraint $name already exists")
     enforceConstraints(read(spark, path), StructType(Nil),
       Map(s"delta.constraints.$name" -> sqlExpr), "addCheckConstraint")
-    val (fs, root) = Writers.fsFor(path)
-    val now = System.currentTimeMillis()
-    val v = snap.version + 1
-    val newProtocol =
-      if (snap.protocol.minReader >= 3)
-        snap.protocol.copy(writerFeatures =
-          (snap.protocol.writerFeatures :+ "checkConstraints").distinct)
-      else snap.protocol.copy(minWriter = math.max(snap.protocol.minWriter, 3))
-    val ci = Json.createObjectNode()
-    val info = ci.putObject("commitInfo")
-    info.put("timestamp", now); info.put("operation", "ADD CONSTRAINT")
-    commitLines(fs, root, v, conf = snap.configuration, lines = Seq(
-      protocolLine(newProtocol),
-      metaDataLine(snap.rawSchema, snap.partitionColumns, now,
-        snap.configuration + (s"delta.constraints.$name" -> sqlExpr)),
-      Json.writeValueAsString(ci)))
-    v
+    commitMetadata(snap, path, "ADD CONSTRAINT")(
+      protocol = ratchetWriter(snap.protocol, "checkConstraints", 3),
+      conf = snap.configuration + (s"delta.constraints.$name" -> sqlExpr))
   }
 
   /** ADD a GENERATED COLUMN (`GENERATED ALWAYS AS (expr)`): metadata
@@ -2223,33 +2162,8 @@ object DeltaLake {
     * library COMPUTES the column when the frame omits it and VALIDATES
     * it when present ([[enforceConstraints]]). */
   def addGeneratedColumn(spark: SparkSession, path: String,
-      name: String, dataType: DataType, sqlExpr: String): Long = {
-    val snap = snapshot(spark, path)
-    require(snap.mapMode.isEmpty,
-      s"DeltaLake.addGeneratedColumn: $path is column-mapped — adding mapped " +
-        "generated columns is not implemented")
-    require(!snap.schema.fieldNames.contains(name),
-      s"DeltaLake.addGeneratedColumn: column $name already exists")
-    val (fs, root) = Writers.fsFor(path)
-    val now = System.currentTimeMillis()
-    val v = snap.version + 1
-    val field = StructField(name, dataType, nullable = true,
-      new MetadataBuilder().putString("delta.generationExpression", sqlExpr).build())
-    val newProtocol =
-      if (snap.protocol.minReader >= 3)
-        snap.protocol.copy(writerFeatures =
-          (snap.protocol.writerFeatures :+ "generatedColumns").distinct)
-      else snap.protocol.copy(minWriter = math.max(snap.protocol.minWriter, 4))
-    val ci = Json.createObjectNode()
-    val info = ci.putObject("commitInfo")
-    info.put("timestamp", now); info.put("operation", "ADD COLUMNS")
-    commitLines(fs, root, v, conf = snap.configuration, lines = Seq(
-      protocolLine(newProtocol),
-      metaDataLine(StructType(snap.rawSchema.fields :+ field),
-        snap.partitionColumns, now, snap.configuration),
-      Json.writeValueAsString(ci)))
-    v
-  }
+      name: String, dataType: DataType, sqlExpr: String): Long =
+    evolve(spark, path, Evolve.Add(name, dataType), generated = Some(sqlExpr))
 
   /** Declare an EXISTING column GENERATED (`c T GENERATED ALWAYS AS
     * (expr)` at CREATE TABLE — the catalog's create lands the empty
@@ -2265,7 +2179,6 @@ object DeltaLake {
   def setGenerationExpression(spark: SparkSession, path: String, name: String,
       sqlExpr: String): Long = {
     val snap = snapshot(spark, path)
-    gateWriter(snap, path, "setGenerationExpression", mutates = false)
     require(snap.files.isEmpty || read(spark, path).isEmpty,
       s"DeltaLake.setGenerationExpression: $path already holds data — declare " +
         "generated columns at CREATE TABLE (use addGeneratedColumn to evolve a " +
@@ -2278,25 +2191,12 @@ object DeltaLake {
       !field.metadata.contains(IdStartKey),
       s"DeltaLake.setGenerationExpression: $name already has a default or identity " +
         "declaration — the fill rules would race")
-    val (fs, root) = Writers.fsFor(path)
-    val now = System.currentTimeMillis()
-    val v = snap.version + 1
     val newField = field.copy(metadata = new MetadataBuilder()
       .withMetadata(field.metadata)
       .putString("delta.generationExpression", sqlExpr).build())
-    val newProtocol =
-      if (snap.protocol.minReader >= 3 || snap.protocol.minWriter >= 7)
-        withWriterFeatures(snap.protocol, Seq("generatedColumns"))
-      else snap.protocol.copy(minWriter = math.max(snap.protocol.minWriter, 4))
-    val ci = Json.createObjectNode()
-    val info = ci.putObject("commitInfo")
-    info.put("timestamp", now); info.put("operation", "ALTER TABLE")
-    commitLines(fs, root, v, conf = snap.configuration, lines = Seq(
-      protocolLine(newProtocol),
-      metaDataLine(StructType(snap.rawSchema.fields.updated(idx, newField)),
-        snap.partitionColumns, now, snap.configuration),
-      Json.writeValueAsString(ci)))
-    v
+    commitMetadata(snap, path, "ALTER TABLE")(
+      schema = StructType(snap.rawSchema.fields.updated(idx, newField)),
+      protocol = ratchetWriter(snap.protocol, "generatedColumns", 4))
   }
 
   /** SET a column's DEFAULT (`ALTER COLUMN ... SET DEFAULT expr`) —
@@ -2308,38 +2208,10 @@ object DeltaLake {
     * written keep what they have (NULL included) — which is exactly
     * why the protocol forbids ADD COLUMN with a default, and so does
     * [[addColumn]]. Generated columns can't also carry a default (the
-    * two fill rules would race); the expression must be foldable — a
-    * non-constant default would make writes non-deterministic. */
+    * two fill rules would race). See [[evolve]]. */
   def setColumnDefault(spark: SparkSession, path: String, name: String,
-      sqlExpr: String): Long = {
-    val snap = snapshot(spark, path)
-    gateWriter(snap, path, "setColumnDefault", mutates = false)
-    require(snap.schema.fieldNames.contains(name),
-      s"DeltaLake.setColumnDefault: $name is not a column of $path")
-    val idx = snap.rawSchema.fieldIndex(name)
-    val field = snap.rawSchema.fields(idx)
-    require(!field.metadata.contains("delta.generationExpression"),
-      s"DeltaLake.setColumnDefault: $name is a generated column — it is " +
-        "always computed, a default would never apply")
-    val parsed = spark.sessionState.sqlParser.parseExpression(sqlExpr)
-    require(parsed.foldable,
-      s"DeltaLake.setColumnDefault: '$sqlExpr' is not a constant expression — " +
-        "the protocol requires literal (foldable) defaults")
-    val (fs, root) = Writers.fsFor(path)
-    val now = System.currentTimeMillis()
-    val v = snap.version + 1
-    val newField = field.copy(metadata = new MetadataBuilder()
-      .withMetadata(field.metadata).putString("CURRENT_DEFAULT", sqlExpr).build())
-    val newSchema = StructType(snap.rawSchema.fields.updated(idx, newField))
-    val ci = Json.createObjectNode()
-    val info = ci.putObject("commitInfo")
-    info.put("timestamp", now); info.put("operation", "ALTER COLUMN")
-    commitLines(fs, root, v, conf = snap.configuration, lines = Seq(
-      protocolLine(withWriterFeatures(snap.protocol, Seq("allowColumnDefaults"))),
-      metaDataLine(newSchema, snap.partitionColumns, now, snap.configuration),
-      Json.writeValueAsString(ci)))
-    v
-  }
+      sqlExpr: String): Long =
+    evolve(spark, path, Evolve.SetDefault(name, sqlExpr))
 
   // ------------------------------------------------- identity columns
 
@@ -2389,7 +2261,6 @@ object DeltaLake {
       spec: IdentitySpec = IdentitySpec()): Long = {
     require(spec.step != 0L, "DeltaLake.declareIdentity: step must be nonzero")
     val snap = snapshot(spark, path)
-    gateWriter(snap, path, "declareIdentity", mutates = false)
     // row-emptiness, not file-emptiness: an empty CREATE commits a
     // zero-row file whose presence must not block the declaration
     require(snap.files.isEmpty || read(spark, path).isEmpty,
@@ -2408,22 +2279,13 @@ object DeltaLake {
         "default — the fill rules would race")
     require(!snap.partitionColumns.contains(name),
       s"DeltaLake.declareIdentity: $name is a partition column")
-    val (fs, root) = Writers.fsFor(path)
-    val now = System.currentTimeMillis()
-    val v = snap.version + 1
     val newField = field.copy(metadata = new MetadataBuilder()
       .withMetadata(field.metadata)
       .putLong(IdStartKey, spec.start).putLong(IdStepKey, spec.step)
       .putBoolean(IdAllowKey, spec.allowExplicitInsert).build())
-    val ci = Json.createObjectNode()
-    val info = ci.putObject("commitInfo")
-    info.put("timestamp", now); info.put("operation", "ALTER TABLE")
-    commitLines(fs, root, v, conf = snap.configuration, lines = Seq(
-      protocolLine(withWriterFeatures(snap.protocol, Seq("identityColumns"))),
-      metaDataLine(StructType(snap.rawSchema.fields.updated(idx, newField)),
-        snap.partitionColumns, now, snap.configuration),
-      Json.writeValueAsString(ci)))
-    v
+    commitMetadata(snap, path, "ALTER TABLE")(
+      schema = StructType(snap.rawSchema.fields.updated(idx, newField)),
+      protocol = withWriterFeatures(snap.protocol, Seq("identityColumns")))
   }
 
   /** `ALTER TABLE ... SYNC IDENTITY`: recompute the high watermark
@@ -2434,7 +2296,6 @@ object DeltaLake {
   def syncIdentity(spark: SparkSession, path: String, name: String): Long = {
     import org.apache.spark.sql.functions.{col, max => fmax, min => fmin}
     val snap = snapshot(spark, path)
-    gateWriter(snap, path, "syncIdentity", mutates = false)
     val idx = snap.rawSchema.fieldIndex(name)
     val field = snap.rawSchema.fields(idx)
     val spec = identitySpec(field).getOrElse(throw new IllegalArgumentException(
@@ -2445,19 +2306,10 @@ object DeltaLake {
     val newHwm = seen.map(s => graft.core.IdentityGen.ratchet(
       spec.start, spec.step, cur.getOrElse(spec.start - spec.step), s))
     if (newHwm == cur || newHwm.isEmpty) return snap.version
-    val (fs, root) = Writers.fsFor(path)
-    val now = System.currentTimeMillis()
-    val v = snap.version + 1
     val newField = field.copy(metadata = new MetadataBuilder()
       .withMetadata(field.metadata).putLong(IdHwmKey, newHwm.get).build())
-    val ci = Json.createObjectNode()
-    val info = ci.putObject("commitInfo")
-    info.put("timestamp", now); info.put("operation", "ALTER TABLE")
-    commitLines(fs, root, v, conf = snap.configuration, lines = Seq(
-      metaDataLine(StructType(snap.rawSchema.fields.updated(idx, newField)),
-        snap.partitionColumns, now, snap.configuration),
-      Json.writeValueAsString(ci)))
-    v
+    commitMetadata(snap, path, "ALTER TABLE")(
+      schema = StructType(snap.rawSchema.fields.updated(idx, newField)))
   }
 
   // ----------------------------------------------------- shallow clone
@@ -2497,7 +2349,8 @@ object DeltaLake {
     val now = System.currentTimeMillis()
     val lines = scala.collection.mutable.ArrayBuffer.empty[String]
     lines += protocolLine(src.protocol)
-    lines += metaDataLine(src.rawSchema, src.partitionColumns, now, src.configuration)
+    lines += metaDataLine(newTableId(), src.rawSchema, src.partitionColumns, now,
+      src.configuration)
     src.domains.toSeq.sortBy(_._1).foreach { case (dom, conf) =>
       lines += domainLine(dom, conf)
     }
@@ -2540,7 +2393,6 @@ object DeltaLake {
     * protocol's rule). Returns column → ndv. */
   def analyzeTable(spark: SparkSession, path: String): Map[String, Long] = {
     val snap = snapshot(spark, path)
-    gateWriter(snap, path, "analyzeTable", mutates = false)
     val cols = graft.core.ThetaNdv.sketchable(snap.schema)
     require(cols.nonEmpty,
       s"DeltaLake.analyzeTable: $path has no sketchable primitive columns")
@@ -2555,19 +2407,9 @@ object DeltaLake {
     artifact.put("rowCount", rowCount)
     val nd = artifact.putObject("ndv")
     ndv.toSeq.sortBy(_._1).foreach { case (c, n) => nd.put(c, n): Unit }
-    val (fs, root) = Writers.fsFor(path)
-    val now = System.currentTimeMillis()
-    val ci = Json.createObjectNode()
-    val info = ci.putObject("commitInfo")
-    info.put("timestamp", now); info.put("operation", "ANALYZE TABLE")
-    val protoLines =
-      if (snap.protocol.minWriter >= 7 &&
-        snap.protocol.writerFeatures.contains("domainMetadata")) Nil
-      else Seq(protocolLine(withWriterFeatures(snap.protocol, Seq("domainMetadata"))))
-    commitLines(fs, root, snap.version + 1, conf = snap.configuration,
-      lines = protoLines ++ Seq(
-        domainLine(StatsDomain, Json.writeValueAsString(artifact)),
-        Json.writeValueAsString(ci)))
+    commitMetadata(snap, path, "ANALYZE TABLE")(
+      protocol = withWriterFeatures(snap.protocol, Seq("domainMetadata")),
+      actions = Seq(domainLine(StatsDomain, Json.writeValueAsString(artifact))))
     ndv
   }
 
@@ -2615,23 +2457,6 @@ object DeltaLake {
       Writers.fsFor(path)._2, s.schema, "delta", s.files.map(_.size).sum, rowCount, ndv)
   }
 
-  /** The type promotions the `typeWidening` table feature admits and
-    * Spark 4's parquet readers serve losslessly off NARROW physical
-    * files: the integer family upward, float→double, and decimal
-    * PRECISION widening at the same scale. Everything else — any
-    * narrowing, cross-family moves, scale changes — refuses loudly
-    * (a promotion the reader can't upcast would misread every
-    * pre-widen file). */
-  private[graft] def wideningOk(from: DataType, to: DataType): Boolean = (from, to) match {
-    case (ByteType, ShortType | IntegerType | LongType) => true
-    case (ShortType, IntegerType | LongType) => true
-    case (IntegerType, LongType) => true
-    case (FloatType, DoubleType) => true
-    case (f: DecimalType, t: DecimalType) =>
-      t.scale == f.scale && t.precision > f.precision
-    case _ => false
-  }
-
   /** TYPE WIDENING (`ALTER COLUMN ... TYPE`, the protocol's
     * `typeWidening` reader+writer feature): promote a column's type in
     * metadata ONLY — zero data files rewritten. Files written before
@@ -2643,46 +2468,10 @@ object DeltaLake {
     * tableVersion), and the protocol ratchets to the features shape
     * (reader 3 / writer 7) because a pre-feature reader would misread
     * the narrow files. Partition columns refuse — their values parse
-    * from directory strings, and widening silently changes file
-    * assignment semantics. */
+    * from directory strings. See [[evolve]]. */
   def widenColumnType(spark: SparkSession, path: String, name: String,
-      to: DataType): Long = {
-    val snap = snapshot(spark, path)
-    gateWriter(snap, path, "widenColumnType", mutates = false)
-    require(snap.schema.fieldNames.contains(name),
-      s"DeltaLake.widenColumnType: $name is not a column of $path")
-    require(!snap.partitionColumns.contains(name),
-      s"DeltaLake.widenColumnType: $name is a partition column — widening it " +
-        "would reinterpret every directory value")
-    val idx = snap.rawSchema.fieldIndex(name)
-    val field = snap.rawSchema.fields(idx)
-    require(wideningOk(field.dataType, to),
-      s"DeltaLake.widenColumnType: ${field.dataType.simpleString} -> " +
-        s"${to.simpleString} is not a widening promotion (allowed: the integer " +
-        "family upward, float->double, decimal precision widen at the same scale)")
-    val (fs, root) = Writers.fsFor(path)
-    val now = System.currentTimeMillis()
-    val v = snap.version + 1
-    val hist = if (field.metadata.contains("delta.typeChanges"))
-      field.metadata.getMetadataArray("delta.typeChanges").toSeq else Nil
-    val entry = new MetadataBuilder()
-      .putString("fromType", field.dataType.typeName)
-      .putString("toType", to.typeName)
-      .putLong("tableVersion", v)
-      .build()
-    val newField = field.copy(dataType = to, metadata = new MetadataBuilder()
-      .withMetadata(field.metadata)
-      .putMetadataArray("delta.typeChanges", (hist :+ entry).toArray).build())
-    val newSchema = StructType(snap.rawSchema.fields.updated(idx, newField))
-    val ci = Json.createObjectNode()
-    val info = ci.putObject("commitInfo")
-    info.put("timestamp", now); info.put("operation", "ALTER COLUMN")
-    commitLines(fs, root, v, conf = snap.configuration, lines = Seq(
-      protocolLine(withReaderWriterFeature(snap.protocol, "typeWidening")),
-      metaDataLine(newSchema, snap.partitionColumns, now, snap.configuration),
-      Json.writeValueAsString(ci)))
-    v
-  }
+      to: DataType): Long =
+    evolve(spark, path, Evolve.Widen(name, to))
 
   /** SET/UNSET free-form table properties (`ALTER TABLE ... SET
     * TBLPROPERTIES`) — one metaData commit updating `configuration`.
@@ -2695,7 +2484,6 @@ object DeltaLake {
   def setTableProperties(spark: SparkSession, path: String,
       set: Map[String, String], unset: Seq[String] = Nil): Long = {
     val snap = snapshot(spark, path)
-    gateWriter(snap, path, "setTableProperties", mutates = false)
     val behavioral = (set.keys ++ unset).filter(_.toLowerCase.startsWith("delta."))
     require(behavioral.isEmpty,
       s"DeltaLake.setTableProperties: [${behavioral.mkString(", ")}] are protocol " +
@@ -2704,17 +2492,7 @@ object DeltaLake {
     val missing = unset.filterNot(snap.configuration.contains)
     require(missing.isEmpty,
       s"DeltaLake.setTableProperties: UNSET of absent keys [${missing.mkString(", ")}]")
-    val (fs, root) = Writers.fsFor(path)
-    val now = System.currentTimeMillis()
-    val v = snap.version + 1
-    val conf = snap.configuration ++ set -- unset
-    val ci = Json.createObjectNode()
-    val info = ci.putObject("commitInfo")
-    info.put("timestamp", now); info.put("operation", "SET TBLPROPERTIES")
-    commitLines(fs, root, v, conf = conf, lines = Seq(
-      metaDataLine(snap.rawSchema, snap.partitionColumns, now, conf),
-      Json.writeValueAsString(ci)))
-    v
+    commitMetadata(snap, path, "SET TBLPROPERTIES")(conf = snap.configuration ++ set -- unset)
   }
 
   /** The table's declared column defaults as (column → SQL
@@ -2727,45 +2505,16 @@ object DeltaLake {
   /** DROP a column's DEFAULT — metadata only; the feature stays on the
     * protocol (features are never removed), the column simply stops
     * filling. */
-  def clearColumnDefault(spark: SparkSession, path: String, name: String): Long = {
-    val snap = snapshot(spark, path)
-    gateWriter(snap, path, "clearColumnDefault", mutates = false)
-    val idx = snap.rawSchema.fieldIndex(name)
-    val field = snap.rawSchema.fields(idx)
-    require(field.metadata.contains("CURRENT_DEFAULT"),
-      s"DeltaLake.clearColumnDefault: $name has no default")
-    val mb = new MetadataBuilder().withMetadata(field.metadata)
-    mb.remove("CURRENT_DEFAULT")
-    val newSchema = StructType(snap.rawSchema.fields.updated(idx,
-      field.copy(metadata = mb.build())))
-    val (fs, root) = Writers.fsFor(path)
-    val now = System.currentTimeMillis()
-    val v = snap.version + 1
-    val ci = Json.createObjectNode()
-    val info = ci.putObject("commitInfo")
-    info.put("timestamp", now); info.put("operation", "ALTER COLUMN")
-    commitLines(fs, root, v, conf = snap.configuration, lines = Seq(
-      metaDataLine(newSchema, snap.partitionColumns, now, snap.configuration),
-      Json.writeValueAsString(ci)))
-    v
-  }
+  def clearColumnDefault(spark: SparkSession, path: String, name: String): Long =
+    evolve(spark, path, Evolve.ClearDefault(name))
 
   /** DROP a CHECK constraint — metadata only. */
   def dropCheckConstraint(spark: SparkSession, path: String, name: String): Long = {
     val snap = snapshot(spark, path)
     require(snap.configuration.contains(s"delta.constraints.$name"),
       s"DeltaLake.dropCheckConstraint: no constraint $name")
-    val (fs, root) = Writers.fsFor(path)
-    val now = System.currentTimeMillis()
-    val v = snap.version + 1
-    val ci = Json.createObjectNode()
-    val info = ci.putObject("commitInfo")
-    info.put("timestamp", now); info.put("operation", "DROP CONSTRAINT")
-    commitLines(fs, root, v, conf = snap.configuration, lines = Seq(
-      metaDataLine(snap.rawSchema, snap.partitionColumns, now,
-        snap.configuration - s"delta.constraints.$name"),
-      Json.writeValueAsString(ci)))
-    v
+    commitMetadata(snap, path, "DROP CONSTRAINT")(
+      conf = snap.configuration - s"delta.constraints.$name")
   }
 
   // ------------------------------------------------- mapping lifecycle
@@ -2785,12 +2534,13 @@ object DeltaLake {
     if (snap.mapMode.contains("name")) return snap.version
     require(snap.mapMode.isEmpty,
       s"DeltaLake.upgradeColumnMapping: $path already uses mode=${snap.mapMode.get}")
-    val (fs, root) = Writers.fsFor(path)
-    val now = System.currentTimeMillis()
-    val v = snap.version + 1
+    // each field keeps its declarations (default, generation
+    // expression, identity, type history) next to the minted mapping
     val (fields, maxId) = snap.rawSchema.fields
-      .foldLeft((Vector.empty[StructField], 0L)) {
-        case ((acc, mx), f) => val (nf, mx2) = mintField(f, mx, _.name); (acc :+ nf, mx2)
+      .foldLeft((Vector.empty[StructField], 0L)) { case ((acc, mx), f) =>
+        val (nf, mx2) = mintField(f, mx, _.name)
+        (acc :+ nf.copy(metadata = new MetadataBuilder().withMetadata(f.metadata)
+          .withMetadata(nf.metadata).build()), mx2)
       }
     val newProtocol =
       if (snap.protocol.minReader >= 3)
@@ -2798,48 +2548,21 @@ object DeltaLake {
           readerFeatures = (snap.protocol.readerFeatures :+ "columnMapping").distinct,
           writerFeatures = (snap.protocol.writerFeatures :+ "columnMapping").distinct)
       else Protocol(math.max(snap.protocol.minReader, 2), math.max(snap.protocol.minWriter, 5))
-    val ci = Json.createObjectNode()
-    val info = ci.putObject("commitInfo")
-    info.put("timestamp", now); info.put("operation", "SET TBLPROPERTIES")
-    commitLines(fs, root, v, conf = snap.configuration, lines = Seq(
-      protocolLine(newProtocol),
-      metaDataLine(StructType(fields), snap.partitionColumns, now,
-        snap.configuration +
-          ("delta.columnMapping.mode" -> "name", MaxIdKey -> maxId.toString)),
-      Json.writeValueAsString(ci)))
-    v
+    commitMetadata(snap, path, "SET TBLPROPERTIES")(schema = StructType(fields),
+      protocol = newProtocol,
+      conf = snap.configuration +
+        ("delta.columnMapping.mode" -> "name", MaxIdKey -> maxId.toString))
   }
 
   /** Pure-metadata column RENAME — the operation column mapping exists
     * for: the LOGICAL name changes in the schema while the physical
     * name in every already-written data file stays, so renaming a
     * column on a 100 TB table writes ONE metaData line and moves zero
-    * bytes. Top-level columns only (nested renames would need a raw
-    * dotted-path edit — not implemented). Refuses unmapped tables
-    * loudly: without mapping, honoring the rename would mean rewriting
-    * every data file. */
-  def renameColumn(spark: SparkSession, path: String, from: String, to: String): Long = {
-    val snap = snapshot(spark, path)
-    require(snap.mapMode.nonEmpty,
-      s"DeltaLake.renameColumn: $path is not column-mapped — run " +
-        "upgradeColumnMapping first (a rename without mapping would rewrite every file)")
-    require(snap.schema.fieldNames.contains(from),
-      s"DeltaLake.renameColumn: no column $from")
-    require(!snap.schema.fieldNames.contains(to),
-      s"DeltaLake.renameColumn: column $to already exists")
-    val (fs, root) = Writers.fsFor(path)
-    val now = System.currentTimeMillis()
-    val v = snap.version + 1
-    val fields = snap.rawSchema.fields.map(f => if (f.name == from) f.copy(name = to) else f)
-    val parts = snap.partitionColumns.map(c => if (c == from) to else c)
-    val ci = Json.createObjectNode()
-    val info = ci.putObject("commitInfo")
-    info.put("timestamp", now); info.put("operation", "RENAME COLUMN")
-    commitLines(fs, root, v, conf = snap.configuration, lines = Seq(
-      metaDataLine(StructType(fields), parts, now, snap.configuration),
-      Json.writeValueAsString(ci)))
-    v
-  }
+    * bytes. Top-level columns only. Refuses unmapped tables loudly:
+    * without mapping, honoring the rename would mean rewriting every
+    * data file. See [[evolve]]. */
+  def renameColumn(spark: SparkSession, path: String, from: String, to: String): Long =
+    evolve(spark, path, Evolve.Rename(from, to))
 
   /** ADD a nullable column: one metaData commit, zero data files
     * touched — existing files simply lack the column and read as NULL
@@ -2847,31 +2570,9 @@ object DeltaLake {
     * `mergeSchema` appends produce). On a COLUMN-MAPPED table the new
     * field is minted a fresh id + physical name and
     * `delta.columnMapping.maxColumnId` advances (the spec's id-reuse
-    * guard). Non-nullable additions are refused — every existing row
-    * would violate the constraint. */
-  def addColumn(spark: SparkSession, path: String, name: String, dataType: DataType): Long = {
-    val snap = snapshot(spark, path)
-    require(!snap.schema.fieldNames.exists(_.equalsIgnoreCase(name)),
-      s"DeltaLake.addColumn: column $name already exists")
-    val newField = StructField(name, dataType, nullable = true)
-    val (fields, conf) =
-      if (snap.mapMode.isEmpty) (snap.rawSchema.fields :+ newField, snap.configuration)
-      else {
-        val maxId = snap.configuration.get(MaxIdKey).map(_.toLong).getOrElse(0L)
-        val (minted, newMax) = mintField(newField, maxId)
-        (snap.rawSchema.fields :+ minted, snap.configuration + (MaxIdKey -> newMax.toString))
-      }
-    val (fs, root) = Writers.fsFor(path)
-    val now = System.currentTimeMillis()
-    val v = snap.version + 1
-    val ci = Json.createObjectNode()
-    val info = ci.putObject("commitInfo")
-    info.put("timestamp", now); info.put("operation", "ADD COLUMN")
-    commitLines(fs, root, v, conf = snap.configuration, lines = Seq(
-      metaDataLine(StructType(fields), snap.partitionColumns, now, conf),
-      Json.writeValueAsString(ci)))
-    v
-  }
+    * guard). See [[evolve]]. */
+  def addColumn(spark: SparkSession, path: String, name: String, dataType: DataType): Long =
+    evolve(spark, path, Evolve.Add(name, dataType))
 
   /** DROP a column — metadata only, COLUMN-MAPPED tables only (the
     * protocol's own rule: without mapping, parquet-by-name resolution
@@ -2880,47 +2581,112 @@ object DeltaLake {
     * schema stops binding it, and a later re-ADD mints a FRESH
     * physical identity that reads NULL everywhere).
     * `delta.columnMapping.maxColumnId` never decreases, so mapping ids
-    * are never reused either. Refused for: the last column, partition
-    * and clustering columns, and columns referenced by a generation
-    * expression or CHECK constraint (dropping would orphan them). */
-  def dropColumn(spark: SparkSession, path: String, name: String): Long = {
+    * are never reused either. See [[evolve]]. */
+  def dropColumn(spark: SparkSession, path: String, name: String): Long =
+    evolve(spark, path, Evolve.Drop(name))
+
+  /** The column verbs through the shared [[Evolve]] core, which checks
+    * the universal rules and computes the logical schema; this records
+    * the change on the RAW schema (mapping ids, physical names and
+    * every declaration's field metadata intact) in one
+    * [[commitMetadata]]. Delta's own refusals: rename and drop need
+    * column mapping (without it a rename rewrites every file and a
+    * re-added name resurrects dropped data); a drop refuses partition
+    * and clustering columns and columns a generation expression or
+    * CHECK constraint references; a widening refuses partition
+    * columns; a generated column takes no default. An addition with a
+    * `generated` expression is [[addGeneratedColumn]] (unmapped tables
+    * only). */
+  private[graft] def evolve(spark: SparkSession, path: String, c: Evolve.Change,
+      generated: Option[String] = None): Long = {
+    import Evolve._
     val snap = snapshot(spark, path)
-    gateWriter(snap, path, "dropColumn", mutates = false)
-    require(snap.mapMode.nonEmpty,
-      s"DeltaLake.dropColumn: $path is not column-mapped — without mapping, " +
-        "re-adding the name would resurrect the dropped data by parquet-by-name " +
-        "resolution (upgradeColumnMapping first; the protocol requires it too)")
-    require(snap.schema.fieldNames.contains(name), s"DeltaLake.dropColumn: no column $name")
-    require(snap.schema.fieldNames.length > 1,
-      s"DeltaLake.dropColumn: $name is the last column")
-    require(!snap.partitionColumns.contains(name),
-      s"DeltaLake.dropColumn: $name is a partition column")
-    require(!clusteringColsOf(snap).contains(name),
-      s"DeltaLake.dropColumn: $name is a clustering column")
-    val genRefs = snap.rawSchema.fields.filter(f =>
-      f.metadata.contains("delta.generationExpression") &&
-        f.metadata.getString("delta.generationExpression").contains(name)).map(_.name)
-    require(genRefs.isEmpty,
-      s"DeltaLake.dropColumn: generation expression of [${genRefs.mkString(", ")}] " +
-        s"references $name")
-    val conRefs = snap.configuration.collect {
-      case (k, v) if k.startsWith("delta.constraints.") && v.contains(name) =>
-        k.stripPrefix("delta.constraints.")
+    val raw = snap.rawSchema.fields
+    def edit(n: String)(f: StructField => StructField): StructType = {
+      val i = raw.indexWhere(_.name == n)
+      StructType(raw.updated(i, f(raw(i))))
     }
-    require(conRefs.isEmpty,
-      s"DeltaLake.dropColumn: CHECK constraint(s) [${conRefs.mkString(", ")}] " +
-        s"reference $name")
-    val (fs, root) = Writers.fsFor(path)
-    val now = System.currentTimeMillis()
-    val v = snap.version + 1
-    val fields = snap.rawSchema.fields.filterNot(_.name == name)
-    val ci = Json.createObjectNode()
-    val info = ci.putObject("commitInfo")
-    info.put("timestamp", now); info.put("operation", "DROP COLUMNS")
-    commitLines(fs, root, v, conf = snap.configuration, lines = Seq(
-      metaDataLine(StructType(fields), snap.partitionColumns, now, snap.configuration),
-      Json.writeValueAsString(ci)))
-    v
+    Evolve(new Table {
+      def name = "DeltaLake"
+      def schema = snap.schema
+      def refuse(c: Change): Unit = {
+        val op = s"DeltaLake.${c.verb}"
+        def mapped(): Unit = require(snap.mapMode.nonEmpty,
+          s"$op: $path is not column-mapped — without mapping a rename would rewrite " +
+            "every file and a re-added name would resurrect dropped data by " +
+            "parquet-by-name resolution (upgradeColumnMapping first)")
+        def notPartition(n: String, why: String): Unit =
+          require(!snap.partitionColumns.contains(n), s"$op: $n is a partition column$why")
+        c match {
+          case Add(_, _) => require(generated.isEmpty || snap.mapMode.isEmpty,
+            s"DeltaLake.addGeneratedColumn: $path is column-mapped — adding mapped " +
+              "generated columns is not implemented")
+          case Rename(_, _) => mapped()
+          case Drop(n) =>
+            mapped()
+            notPartition(n, "")
+            require(!clusteringColsOf(snap).contains(n), s"$op: $n is a clustering column")
+            val genRefs = raw.filter(f => f.metadata.contains("delta.generationExpression") &&
+              f.metadata.getString("delta.generationExpression").contains(n)).map(_.name)
+            require(genRefs.isEmpty,
+              s"$op: generation expression of [${genRefs.mkString(", ")}] references $n")
+            val conRefs = snap.configuration.collect {
+              case (k, v) if k.startsWith("delta.constraints.") && v.contains(n) =>
+                k.stripPrefix("delta.constraints.")
+            }
+            require(conRefs.isEmpty,
+              s"$op: CHECK constraint(s) [${conRefs.mkString(", ")}] reference $n")
+          case Widen(n, _) =>
+            notPartition(n, " — widening it would reinterpret every directory value")
+          case SetDefault(n, _) =>
+            require(!snap.rawSchema(n).metadata.contains("delta.generationExpression"),
+              s"$op: $n is a generated column — it is always computed, a default " +
+                "would never apply")
+          case ClearDefault(_) => ()
+        }
+      }
+      def record(c: Change, next: StructType): Long = c match {
+        case Add(n, dt) =>
+          val field = StructField(n, dt, nullable = true, generated.fold(Metadata.empty)(e =>
+            new MetadataBuilder().putString("delta.generationExpression", e).build()))
+          val (added, conf) =
+            if (snap.mapMode.isEmpty) (field, snap.configuration)
+            else {
+              val (minted, max) =
+                mintField(field, snap.configuration.get(MaxIdKey).fold(0L)(_.toLong))
+              (minted, snap.configuration + (MaxIdKey -> max.toString))
+            }
+          commitMetadata(snap, path, if (generated.isEmpty) "ADD COLUMN" else "ADD COLUMNS")(
+            schema = StructType(raw :+ added), conf = conf,
+            protocol = generated.fold(snap.protocol)(_ =>
+              ratchetWriter(snap.protocol, "generatedColumns", 4)))
+        case Rename(from, to) =>
+          commitMetadata(snap, path, "RENAME COLUMN")(schema = edit(from)(_.copy(name = to)),
+            partitionColumns = snap.partitionColumns.map(p => if (p == from) to else p))
+        case Drop(n) =>
+          commitMetadata(snap, path, "DROP COLUMNS")(schema = StructType(raw.filterNot(_.name == n)))
+        case Widen(n, to) =>
+          val from = raw.find(_.name == n).get
+          val hist = if (from.metadata.contains("delta.typeChanges"))
+            from.metadata.getMetadataArray("delta.typeChanges").toSeq else Nil
+          val entry = new MetadataBuilder()
+            .putString("fromType", from.dataType.typeName)
+            .putString("toType", to.typeName)
+            .putLong("tableVersion", snap.version + 1)
+            .build()
+          commitMetadata(snap, path, "ALTER COLUMN")(
+            schema = edit(n)(f => withMeta(f.copy(dataType = to))(
+              _.putMetadataArray("delta.typeChanges", (hist :+ entry).toArray))),
+            protocol = withReaderWriterFeature(snap.protocol, "typeWidening"))
+        case SetDefault(n, sql) =>
+          commitMetadata(snap, path, "ALTER COLUMN")(
+            schema = edit(n)(withMeta(_)(_.putString(DefaultKey, sql))),
+            protocol = withWriterFeatures(snap.protocol, Seq("allowColumnDefaults")))
+        case ClearDefault(n) =>
+          commitMetadata(snap, path, "ALTER COLUMN")(
+            schema = edit(n)(withMeta(_)(_.remove(DefaultKey))))
+      }
+    }, c)
   }
 
   /** Stage `rows` (table columns + `_change_type`) as cdc parquet
@@ -3180,16 +2946,8 @@ object DeltaLake {
               metadata = new MetadataBuilder()
                 .withMetadata(snapNow.rawSchema.fields(idx).metadata)
                 .putLong(IdHwmKey, h).build())
-            val (fs2, root2) = Writers.fsFor(path)
-            val now2 = System.currentTimeMillis()
-            val ci2 = Json.createObjectNode()
-            val info2 = ci2.putObject("commitInfo")
-            info2.put("timestamp", now2); info2.put("operation", "ALTER TABLE")
-            commitLines(fs2, root2, snapNow.version + 1,
-              conf = snapNow.configuration, lines = Seq(
-                metaDataLine(StructType(snapNow.rawSchema.fields.updated(idx, nf)),
-                  snapNow.partitionColumns, now2, snapNow.configuration),
-                Json.writeValueAsString(ci2)))
+            commitMetadata(snapNow, path, "ALTER TABLE")(
+              schema = StructType(snapNow.rawSchema.fields.updated(idx, nf)))
           }
         }
       }
@@ -3634,11 +3392,43 @@ object DeltaLake {
     Json.writeValueAsString(o)
   }
 
-  private def metaDataLine(schema: StructType, partitionBy: Seq[String], now: Long,
+  /** A fresh `metaData.id` — for a NEW table only (create, convert,
+    * shallow clone); every later re-emission carries [[Snapshot.id]]. */
+  private def newTableId(): String = java.util.UUID.randomUUID().toString
+
+  /** ONE metadata commit at `snap.version + 1` — the shared tail of
+    * every verb that changes the table's definition rather than its
+    * rows: the writer-protocol gate ([[gateWriter]]), then the
+    * `protocol` action when it changed, a `metaData` re-emission under
+    * the table's own id when the schema (raw, field metadata intact),
+    * partition columns or configuration changed, the verb's other
+    * `actions`, and `commitInfo` with `operation` (what
+    * `table_history` shows). Returns the committed version. */
+  private def commitMetadata(snap: Snapshot, path: String, operation: String)(
+      schema: StructType = snap.rawSchema, conf: Map[String, String] = snap.configuration,
+      protocol: Protocol = snap.protocol, partitionColumns: Seq[String] = snap.partitionColumns,
+      actions: Seq[String] = Nil, now: Long = System.currentTimeMillis()): Long = {
+    gateWriter(snap, path, operation, mutates = false)
+    val (fs, root) = Writers.fsFor(path)
+    val v = snap.version + 1
+    val ci = Json.createObjectNode()
+    val info = ci.putObject("commitInfo")
+    info.put("timestamp", now); info.put("operation", operation)
+    val metaChanged = schema != snap.rawSchema || conf != snap.configuration ||
+      partitionColumns != snap.partitionColumns
+    commitLines(fs, root, v, conf = conf, lines =
+      Option.when(protocol != snap.protocol)(protocolLine(protocol)).toSeq ++
+        Option.when(metaChanged)(
+          metaDataLine(snap.id, schema, partitionColumns, now, conf)).toSeq ++
+        actions :+ Json.writeValueAsString(ci))
+    v
+  }
+
+  private def metaDataLine(id: String, schema: StructType, partitionBy: Seq[String], now: Long,
       configuration: Map[String, String] = Map.empty): String = {
     val o = Json.createObjectNode()
     val m = o.putObject("metaData")
-    m.put("id", java.util.UUID.randomUUID().toString)
+    m.put("id", id)
     val fmt = m.putObject("format")
     fmt.put("provider", "parquet"); fmt.putObject("options")
     m.put("schemaString", schema.json)
@@ -3677,7 +3467,7 @@ object DeltaLake {
       }
     val lines = scala.collection.mutable.ArrayBuffer.empty[String]
     newSchema.foreach { sc =>
-      lines += metaDataLine(sc, snap.partitionColumns, now, snap.configuration)
+      lines += metaDataLine(snap.id, sc, snap.partitionColumns, now, snap.configuration)
     }
     rowIdWm.foreach(lines += _)
     removedRel.toSeq.sorted.foreach(rel => lines += removeLine(rel, now))
@@ -3835,7 +3625,8 @@ object DeltaLake {
     val v = cur.version + 1
     val lines = scala.collection.mutable.ArrayBuffer.empty[String]
     if (schemaChanged)
-      lines += metaDataLine(tgt.rawSchema, tgt.partitionColumns, now, cur.configuration)
+      lines += metaDataLine(cur.id, tgt.rawSchema, tgt.partitionColumns, now,
+        cur.configuration)
     removed.foreach(f => lines += removeLine(f.path, now))
     added.foreach(a => lines += addLine(a.copy(modificationTime = now)))
     if (cur.cdfEnabled) {
@@ -4009,7 +3800,7 @@ object DeltaLake {
       if (p.minReader >= 3 || p.minWriter >= 7) p.writerFeatures else null)
     rows.add(Row(protocolRow, null, null, null, null, null))
     rows.add(Row(null,
-      Row(java.util.UUID.randomUUID().toString, Row("parquet", Map.empty[String, String]),
+      Row(s.id, Row("parquet", Map.empty[String, String]),
         // configuration MUST fold too — dropping it would silently
         // disable the change data feed (and any property)
         s.rawSchema.json, s.partitionColumns, s.configuration,

@@ -4226,36 +4226,28 @@ object Iceberg {
     if (newFields.nonEmpty) {
       val (fs, root) = Writers.fsFor(path)
       val (metaV, meta) = readMetadata(fs, root)
-      val curId = meta.get("current-schema-id").asInt
-      val sn = iterator(meta.get("schemas")).find(_.get("schema-id").asInt == curId).get
-      val maxSchemaId = iterator(meta.get("schemas")).map(_.get("schema-id").asInt).max
-      val m = meta.deepCopy[ObjectNode]
-      val newSchema = sn.deepCopy[ObjectNode]
-      newSchema.put("schema-id", maxSchemaId + 1)
-      var nextId = meta.get("last-column-id").asInt
-      val minted = newFields.map { f =>
-        nextId += 1
-        val nf = newSchema.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("fields")
-          .addObject()
-        nf.put("id", nextId); nf.put("name", f.name)
-        nf.put("required", false); nf.put("type", icebergType(f.dataType))
-        f.name -> nextId
-      }
-      m.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("schemas").add(newSchema)
-      m.put("current-schema-id", maxSchemaId + 1)
-      m.put("last-column-id", nextId)
-      m.put("last-updated-ms", System.currentTimeMillis())
-      val props = m.withObject("properties")
-      Option(props.get("schema.name-mapping.default")).filterNot(_.isNull).foreach { mp =>
-        val arr = Json.readTree(mp.asText).deepCopy[com.fasterxml.jackson.databind.node.ArrayNode]
-        minted.foreach { case (name, id) =>
-          val e = arr.addObject()
-          e.put("field-id", id)
-          e.putArray("names").add(name): Unit
+      commitSchemaVersion(fs, root, path, metaV, meta) { (m, newSchema) =>
+        var nextId = meta.get("last-column-id").asInt
+        val minted = newFields.map { f =>
+          nextId += 1
+          val nf = newSchema.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("fields")
+            .addObject()
+          nf.put("id", nextId); nf.put("name", f.name)
+          nf.put("required", false); nf.put("type", icebergType(f.dataType))
+          f.name -> nextId
         }
-        props.put("schema.name-mapping.default", Json.writeValueAsString(arr)): Unit
+        m.put("last-column-id", nextId)
+        val props = m.withObject("properties")
+        Option(props.get("schema.name-mapping.default")).filterNot(_.isNull).foreach { mp =>
+          val arr = Json.readTree(mp.asText).deepCopy[com.fasterxml.jackson.databind.node.ArrayNode]
+          minted.foreach { case (name, id) =>
+            val e = arr.addObject()
+            e.put("field-id", id)
+            e.putArray("names").add(name): Unit
+          }
+          props.put("schema.name-mapping.default", Json.writeValueAsString(arr)): Unit
+        }
       }
-      commitMetadata(fs, root, metaV + 1, m, path)
     }
     if (added.isEmpty && removedAbs.isEmpty) {
       // schema-only sync: the metadata commit above is the whole story
@@ -4748,47 +4740,11 @@ object Iceberg {
 
   /** Pure-metadata column RENAME — Iceberg's native strength: columns
     * resolve by FIELD ID, so a rename is just a new schema (same ids,
-    * new name) under a bumped schema-id joining the `schemas` list;
-    * every existing data file keeps serving the column through its
-    * parquet footer ids. Zero data movement at any scale. Refuses
-    * renaming a partition-spec source column (the spec's partition
-    * field names would go stale against the dirs and manifests). */
-  def renameColumn(spark: SparkSession, path: String, from: String, to: String): Long = {
-    val (fs, root) = Writers.fsFor(path)
-    val (metaV, meta) = readMetadata(fs, root)
-    require(meta.hasNonNull("current-schema-id"),
-      s"Iceberg.renameColumn: $path is a format-version 1 table — read-only here")
-    val curId = meta.get("current-schema-id").asInt
-    val sn = iterator(meta.get("schemas")).find(_.get("schema-id").asInt == curId).get
-    val names = iterator(sn.get("fields")).map(_.get("name").asText).toSeq
-    require(names.contains(from), s"Iceberg.renameColumn: no column $from")
-    require(!names.contains(to), s"Iceberg.renameColumn: column $to already exists")
-    // checks EVERY spec, not just the default: an evolved table's old
-    // manifests still resolve their spec's source-ids by name here
-    require(!specsFromMeta(meta)._2.values.flatten.exists(_.source == from),
-      s"Iceberg.renameColumn: $from is a partition source column — renaming it " +
-        "would orphan the partition spec")
-    // a NAME-MAPPED table (converted/imported files without parquet
-    // field ids) resolves columns by name — renaming the schema would
-    // silently read the old-named files as NULL
-    require(!Option(meta.get("properties"))
-      .exists(_.hasNonNull("schema.name-mapping.default")),
-      s"Iceberg.renameColumn: $path resolves columns by NAME MAPPING " +
-        "(converted files carry no field ids) — a rename cannot follow them")
-    val maxSchemaId = iterator(meta.get("schemas")).map(_.get("schema-id").asInt).max
-    val m = meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]
-    val newSchema = sn.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]
-    newSchema.put("schema-id", maxSchemaId + 1)
-    iterator(newSchema.get("fields")).foreach { f =>
-      if (f.get("name").asText == from)
-        f.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode].put("name", to): Unit
-    }
-    m.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("schemas").add(newSchema)
-    m.put("current-schema-id", maxSchemaId + 1)
-    m.put("last-updated-ms", System.currentTimeMillis())
-    commitMetadata(fs, root, metaV + 1, m, path)
-    metaV + 1
-  }
+    * new name); every existing data file keeps serving the column
+    * through its parquet footer ids. Zero data movement at any scale.
+    * See [[evolve]]. */
+  def renameColumn(spark: SparkSession, path: String, from: String, to: String): Long =
+    evolve(spark, path, Evolve.Rename(from, to))
 
   /** REPLACE the table's partition SPEC — the spec's layout-evolution
     * path (`ALTER TABLE ... REPLACE PARTITION FIELD`; daily → hourly
@@ -4892,49 +4848,14 @@ object Iceberg {
     * monotonic and ids are never reused, so a later re-ADD of the
     * same NAME mints a FRESH id that reads NULL from every old file —
     * dropped data can never resurrect under field-id resolution.
-    * Refused for: the last column, a partition source column of the
-    * default spec, a default-sort-order source, and while EQUALITY
-    * DELETE debt references the column (applying those retractions
-    * needs the field; compact first). */
-  def dropColumn(spark: SparkSession, path: String, name: String): Long = {
-    val (fs, root) = Writers.fsFor(path)
-    val (metaV, meta) = readMetadata(fs, root)
-    require(meta.hasNonNull("current-schema-id"),
-      s"Iceberg.dropColumn: $path is a format-version 1 table — read-only here")
-    val curId = meta.get("current-schema-id").asInt
-    val sn = iterator(meta.get("schemas")).find(_.get("schema-id").asInt == curId).get
-    val names = iterator(sn.get("fields")).map(_.get("name").asText).toSeq
-    require(names.contains(name), s"Iceberg.dropColumn: no column $name")
-    require(names.length > 1, s"Iceberg.dropColumn: $name is the last column")
-    require(!specsFromMeta(meta)._2.values.flatten.exists(_.source == name),
-      s"Iceberg.dropColumn: $name is a partition source column")
-    require(!sortFieldsOf(meta).exists(_._1 == name),
-      s"Iceberg.dropColumn: $name is a default-sort-order source " +
-        "(clearSortOrder or setSortOrder first)")
-    val eqRefs = snapshot(spark, path).eqDeletes.filter(_.columns.contains(name))
-    require(eqRefs.isEmpty,
-      s"Iceberg.dropColumn: ${eqRefs.size} outstanding equality-delete file(s) " +
-        s"reference $name — compact the table first to fold the debt")
-    val maxSchemaId = iterator(meta.get("schemas")).map(_.get("schema-id").asInt).max
-    val m = meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]
-    val newSchema = sn.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]
-    newSchema.put("schema-id", maxSchemaId + 1)
-    val fieldsArr = newSchema.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("fields")
-    val keep = iterator(sn.get("fields")).filterNot(_.get("name").asText == name).toSeq
-    fieldsArr.removeAll()
-    keep.foreach(f => fieldsArr.add(f.deepCopy[JsonNode]()): Unit)
-    m.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("schemas").add(newSchema)
-    m.put("current-schema-id", maxSchemaId + 1)
-    m.put("last-updated-ms", System.currentTimeMillis())
-    commitMetadata(fs, root, metaV + 1, m, path)
-    metaV + 1
-  }
+    * See [[evolve]]. */
+  def dropColumn(spark: SparkSession, path: String, name: String): Long =
+    evolve(spark, path, Evolve.Drop(name))
 
   /** ADD an optional column: a new schema version whose field gets a
     * FRESH id above `last-column-id` (the spec's id-reuse guard), zero
     * data files touched — files without the id serve it as NULL under
-    * field-id resolution. Required additions are refused (every
-    * existing row would violate them). */
+    * field-id resolution. See [[evolve]]. */
   def addColumn(spark: SparkSession, path: String, name: String, dataType: DataType,
       // v3 DEFAULT VALUES: rows in files written BEFORE this column
       // existed read this value instead of null (the spec's
@@ -4942,54 +4863,13 @@ object Iceberg {
       // contract — see schemaFromMeta). The string is the value
       // itself; it is typed into the metadata JSON per the spec's
       // single-value serialization.
-      initialDefault: Option[String] = None): Long = {
-    val (fs, root) = Writers.fsFor(path)
-    val (metaV, meta) = readMetadata(fs, root)
-    require(meta.hasNonNull("current-schema-id"),
-      s"Iceberg.addColumn: $path is a format-version 1 table — read-only here")
-    require(initialDefault.isEmpty || meta.get("format-version").asInt == 3,
-      s"Iceberg.addColumn: initial-default requires format-version 3 " +
-        s"(table is v${meta.get("format-version").asInt})")
-    require(!hasVariantType(dataType) || meta.get("format-version").asInt == 3,
-      s"Iceberg.addColumn: variant requires format-version 3 " +
-        s"(table is v${meta.get("format-version").asInt}; upgradeFormatVersion first)")
-    val curId = meta.get("current-schema-id").asInt
-    val sn = iterator(meta.get("schemas")).find(_.get("schema-id").asInt == curId).get
-    val names = iterator(sn.get("fields")).map(_.get("name").asText).toSeq
-    require(!names.exists(_.equalsIgnoreCase(name)),
-      s"Iceberg.addColumn: column $name already exists")
-    val renderedType = icebergType(dataType) // throws on unsupported types
-    val maxSchemaId = iterator(meta.get("schemas")).map(_.get("schema-id").asInt).max
-    val newFieldId = meta.get("last-column-id").asInt + 1
-    val m = meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]
-    val newSchema = sn.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]
-    newSchema.put("schema-id", maxSchemaId + 1)
-    val nf = newSchema.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("fields")
-      .addObject()
-    nf.put("id", newFieldId); nf.put("name", name)
-    nf.put("required", false); nf.put("type", renderedType)
-    initialDefault.foreach { v =>
-      // the spec's add-with-default contract: a column added with a
-      // default carries it as BOTH the existence default (rows in
-      // files predating the column) and the write default (writers
-      // that omit the column). ALTER later changes only the write
-      // default ([[setWriteDefault]]); initial-default is immutable
-      // for the column's lifetime.
-      putTypedDefault(nf, "initial-default", dataType, v)
-      putTypedDefault(nf, "write-default", dataType, v)
-    }
-    m.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("schemas").add(newSchema)
-    m.put("current-schema-id", maxSchemaId + 1)
-    m.put("last-column-id", newFieldId)
-    m.put("last-updated-ms", System.currentTimeMillis())
-    commitMetadata(fs, root, metaV + 1, m, path)
-    metaV + 1
-  }
+      initialDefault: Option[String] = None): Long =
+    evolve(spark, path, Evolve.Add(name, dataType), initialDefault)
 
   /** The spec's single-value JSON serialization for a default: typed
     * for the primitives, a string for everything else (dates,
     * timestamps, decimals ride as their ISO/plain renderings). */
-  private def putTypedDefault(node: com.fasterxml.jackson.databind.node.ObjectNode,
+  private def putTypedDefault(node: ObjectNode,
       key: String, dt: DataType, v: String): Unit = dt match {
     case IntegerType => node.put(key, v.toInt): Unit
     case LongType => node.put(key, v.toLong): Unit
@@ -5001,103 +4881,170 @@ object Iceberg {
 
   /** SET (`value = Some(v)`) or CLEAR (`None`) a column's WRITE
     * DEFAULT — the v3 spec's `write-default`: the value [[write]]
-    * fills when a frame omits the column. A new schema version joins
-    * `schemas` (defaults are schema attributes, and schema ids are
-    * never mutated in place); the column's `initial-default` — what
-    * rows written before the column existed read — stays untouched,
-    * exactly the spec's ALTER COLUMN SET DEFAULT semantics. The value
-    * string is typed into the metadata per the spec's single-value
-    * serialization and validated against the reader's literal parser
-    * BEFORE the commit (an unservable default must refuse loudly, not
-    * poison every subsequent write). */
+    * fills when a frame omits the column. The column's
+    * `initial-default` — what rows written before the column existed
+    * read — stays untouched, exactly the spec's ALTER COLUMN SET
+    * DEFAULT semantics. `v` is the value itself (not SQL). See
+    * [[evolve]]. */
   def setWriteDefault(spark: SparkSession, path: String, name: String,
-      value: Option[String]): Long = {
+      value: Option[String]): Long =
+    evolve(spark, path, value.fold[Evolve.Change](Evolve.ClearDefault(name))(v =>
+      Evolve.SetDefault(name, "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'")))
+
+  /** TYPE PROMOTION (`ALTER COLUMN ... TYPE`, the spec's schema
+    * evolution rules): widen a column's type in a NEW schema version —
+    * zero data files rewritten. Old manifests' narrow bounds keep
+    * pruning through [[decodeBound]]'s width upcast; declared defaults
+    * survive untouched (their single-value JSON reads identically
+    * under the wider type). See [[evolve]]. */
+  def widenColumnType(spark: SparkSession, path: String, name: String,
+      to: DataType): Long =
+    evolve(spark, path, Evolve.Widen(name, to))
+
+  /** The column verbs through the shared [[Evolve]] core, which checks
+    * the universal rules; this records the change as ONE new schema
+    * version ([[commitSchemaVersion]]) — columns resolve by FIELD ID,
+    * so an addition mints `last-column-id + 1`, a rename keeps the id
+    * under the new name, and every existing data file keeps serving
+    * through its parquet footer ids. Iceberg's own refusals: format
+    * version 1 (read-only here); defaults, an `initialDefault` and
+    * variant columns need format version 3; a partition source column
+    * of ANY spec (an evolved table's old manifests still resolve their
+    * spec's source ids) cannot be renamed, dropped or widened; a
+    * NAME-MAPPED table (converted files without field ids resolve by
+    * name) cannot rename; a drop refuses a default-sort-order source
+    * and outstanding EQUALITY-DELETE debt on the column (applying
+    * those retractions needs the field — compact first). A SQL default
+    * is folded to the spec's single-value serialization
+    * ([[foldedDefault]]) and checked against the reader's literal
+    * parser BEFORE the commit. */
+  private[graft] def evolve(spark: SparkSession, path: String, c: Evolve.Change,
+      initialDefault: Option[String] = None): Long = {
+    import Evolve._
     val (fs, root) = Writers.fsFor(path)
     val (metaV, meta) = readMetadata(fs, root)
     require(meta.hasNonNull("current-schema-id"),
-      s"Iceberg.setWriteDefault: $path is a format-version 1 table — read-only here")
-    require(meta.get("format-version").asInt == 3,
-      s"Iceberg.setWriteDefault: default values require format-version 3 " +
-        s"(table is v${meta.get("format-version").asInt}; upgradeFormatVersion first)")
-    val curId = meta.get("current-schema-id").asInt
-    val sn = iterator(meta.get("schemas")).find(_.get("schema-id").asInt == curId).get
-    val maxSchemaId = iterator(meta.get("schemas")).map(_.get("schema-id").asInt).max
-    val m = meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]
-    val newSchema = sn.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]
-    newSchema.put("schema-id", maxSchemaId + 1)
-    val fieldNode = iterator(newSchema.get("fields"))
-      .find(_.get("name").asText == name)
-      .getOrElse(throw new IllegalArgumentException(
-        s"Iceberg.setWriteDefault: $name is not a column of $path"))
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    value match {
-      case Some(v) =>
-        val tpe = sparkType(fieldNode.get("type").asText)
-        putTypedDefault(fieldNode, "write-default", tpe, v)
-        defaultSql(tpe, fieldNode.get("write-default")) // loud pre-commit type gate
-      case None => fieldNode.remove("write-default")
-    }
-    m.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("schemas").add(newSchema)
-    m.put("current-schema-id", maxSchemaId + 1)
+      s"Iceberg.${c.verb}: $path is a format-version 1 table — read-only here")
+    val formatVersion = meta.get("format-version").asInt
+    def field(schema: ObjectNode, n: String): ObjectNode =
+      iterator(schema.get("fields")).find(_.get("name").asText == n).get.asInstanceOf[ObjectNode]
+    Evolve(new Table {
+      def name = "Iceberg"
+      def schema = schemaFromMeta(meta)
+      def refuse(c: Change): Unit = {
+        val op = s"Iceberg.${c.verb}"
+        def v3(what: String): Unit = require(formatVersion == 3,
+          s"$op: $what requires format-version 3 (table is v$formatVersion; " +
+            "upgradeFormatVersion first)")
+        def notPartitionSource(n: String): Unit =
+          require(!specsFromMeta(meta)._2.values.flatten.exists(_.source == n),
+            s"$op: $n is a partition source column — changing it would orphan the " +
+              "partition spec or reinterpret its committed values")
+        c match {
+          case Add(_, dt) =>
+            if (initialDefault.nonEmpty) v3("initial-default")
+            if (hasVariantType(dt)) v3("variant")
+          case Rename(from, _) =>
+            notPartitionSource(from)
+            require(!Option(meta.get("properties"))
+              .exists(_.hasNonNull("schema.name-mapping.default")),
+              s"$op: $path resolves columns by NAME MAPPING (converted files carry no " +
+                "field ids) — a rename cannot follow them")
+          case Drop(n) =>
+            notPartitionSource(n)
+            require(!sortFieldsOf(meta).exists(_._1 == n),
+              s"$op: $n is a default-sort-order source (clearSortOrder or setSortOrder first)")
+            val eqRefs = snapshot(spark, path).eqDeletes.filter(_.columns.contains(n))
+            require(eqRefs.isEmpty,
+              s"$op: ${eqRefs.size} outstanding equality-delete file(s) reference $n — " +
+                "compact the table first to fold the debt")
+          case Widen(n, _) => notPartitionSource(n)
+          case SetDefault(_, _) | ClearDefault(_) => v3("default values")
+        }
+      }
+      def record(c: Change, next: StructType): Long =
+        commitSchemaVersion(fs, root, path, metaV, meta) { (m, schema) =>
+          c match {
+            case Add(n, dt) =>
+              val id = m.get("last-column-id").asInt + 1
+              val nf = schema.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("fields")
+                .addObject()
+              nf.put("id", id); nf.put("name", n)
+              nf.put("required", false); nf.put("type", icebergType(dt))
+              initialDefault.foreach { v =>
+                // the spec's add-with-default contract: a column added
+                // with a default carries it as BOTH the existence default
+                // (rows in files predating the column) and the write
+                // default (writers that omit the column); initial-default
+                // is immutable for the column's lifetime
+                putTypedDefault(nf, "initial-default", dt, v)
+                putTypedDefault(nf, "write-default", dt, v)
+              }
+              m.put("last-column-id", id)
+            case Rename(from, to) => field(schema, from).put("name", to)
+            case Drop(n) =>
+              val fields = schema.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("fields")
+              fields.remove(iterator(fields).indexWhere(_.get("name").asText == n))
+            case Widen(n, to) => field(schema, n).put("type", icebergType(to))
+            case SetDefault(n, sql) =>
+              val f = field(schema, n)
+              val tpe = sparkType(f.get("type").asText)
+              putTypedDefault(f, "write-default", tpe, foldedDefault(spark, sql))
+              defaultSql(tpe, f.get("write-default")) // loud pre-commit type gate
+            case ClearDefault(n) => field(schema, n).remove("write-default")
+          }
+          ()
+        }
+    }, c)
+  }
+
+  /** Commit a NEW SCHEMA VERSION: the current schema deep-copied under
+    * the next schema-id, edited by `edit(metadata, schema)`, appended
+    * to `schemas` and made current (schema ids are never mutated in
+    * place). Returns the committed metadata version. */
+  private def commitSchemaVersion(fs: FileSystem, root: HPath, path: String, metaV: Long,
+      meta: JsonNode)(edit: (ObjectNode, ObjectNode) => Unit): Long = {
+    val nextId = iterator(meta.get("schemas")).map(_.get("schema-id").asInt).max + 1
+    val m = meta.deepCopy[ObjectNode]
+    val schema = currentSchemaNode(meta).deepCopy[ObjectNode]
+    schema.put("schema-id", nextId)
+    edit(m, schema)
+    m.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("schemas").add(schema)
+    m.put("current-schema-id", nextId)
     m.put("last-updated-ms", System.currentTimeMillis())
     commitMetadata(fs, root, metaV + 1, m, path)
     metaV + 1
   }
 
-  /** TYPE PROMOTION (`ALTER COLUMN ... TYPE`, the spec's schema
-    * evolution rules): widen a column's type in a NEW schema version —
-    * zero data files rewritten. The spec admits exactly int→long,
-    * float→double, and decimal precision widening at the SAME scale;
-    * anything else refuses loudly (old files resolve by field id and
-    * must upcast losslessly at scan time). Old manifests' narrow
-    * bounds keep pruning through [[decodeBound]]'s width upcast;
-    * declared defaults survive untouched (their single-value JSON
-    * reads identically under the wider type). Identity partition
-    * columns refuse — a promoted partition field would reinterpret
-    * the spec's partition-value serialization. */
-  def widenColumnType(spark: SparkSession, path: String, name: String,
-      to: DataType): Long = {
-    val (fs, root) = Writers.fsFor(path)
-    val (metaV, meta) = readMetadata(fs, root)
-    require(meta.hasNonNull("current-schema-id"),
-      s"Iceberg.widenColumnType: $path is a format-version 1 table — read-only here")
-    val curId = meta.get("current-schema-id").asInt
-    val sn = iterator(meta.get("schemas")).find(_.get("schema-id").asInt == curId).get
-    val maxSchemaId = iterator(meta.get("schemas")).map(_.get("schema-id").asInt).max
-    val m = meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]
-    val newSchema = sn.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]
-    newSchema.put("schema-id", maxSchemaId + 1)
-    val fieldNode = iterator(newSchema.get("fields"))
-      .find(_.get("name").asText == name)
-      .getOrElse(throw new IllegalArgumentException(
-        s"Iceberg.widenColumnType: $name is not a column of $path"))
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    val from = sparkType(fieldNode.get("type").asText)
-    val ok = (from, to) match {
-      case (IntegerType, LongType) => true
-      case (FloatType, DoubleType) => true
-      case (f: DecimalType, t: DecimalType) =>
-        t.scale == f.scale && t.precision > f.precision
-      case _ => false
+  /** Fold a SQL DEFAULT expression to the bare single value Iceberg's
+    * TYPED metadata stores (one constant — driver-side by definition).
+    * The rendering is the spec's single-value serialization, NOT
+    * Spark's internal representation: `eval` yields days-since-epoch
+    * for DATE and epoch-micros for TIMESTAMP, and storing those raw
+    * would commit `write-default: "19723"` — an invalid literal that
+    * poisons every subsequent default-filling write. Dates render ISO
+    * `YYYY-MM-DD`, timestamps ISO-8601 (`timestamptz` with an explicit
+    * UTC offset, NTZ without), matching what the Iceberg reader's
+    * literal parser (`DATE '...'` / `TIMESTAMP '...'`) accepts back. */
+  private def foldedDefault(spark: SparkSession, sql: String): String = {
+    val e = Evolve.constant(spark, sql, "Iceberg.setWriteDefault")
+    val v = e.eval(null)
+    require(v != null,
+      "Iceberg: DEFAULT NULL is the same as no default — omit it (or DROP DEFAULT)")
+    def ntz(micros: Long): String =
+      java.time.LocalDateTime.ofEpochSecond(
+        Math.floorDiv(micros, 1000000L),
+        (Math.floorMod(micros, 1000000L) * 1000L).toInt,
+        java.time.ZoneOffset.UTC
+      ).format(java.time.format.DateTimeFormatter
+        .ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS"))
+    e.dataType match {
+      case DateType =>
+        java.time.LocalDate.ofEpochDay(v.asInstanceOf[Int].toLong).toString
+      case TimestampType => ntz(v.asInstanceOf[Long]) + "+00:00"
+      case TimestampNTZType => ntz(v.asInstanceOf[Long])
+      case _ => v.toString
     }
-    require(ok,
-      s"Iceberg.widenColumnType: ${from.simpleString} -> ${to.simpleString} is " +
-        "not a spec type promotion (allowed: int->long, float->double, " +
-        "decimal precision widen at the same scale)")
-    val fieldId = fieldNode.get("id").asInt
-    val partitionSourceIds = iterator(
-      Option(m.get("partition-specs")).getOrElse(Json.createArrayNode()))
-      .flatMap(spec => iterator(spec.get("fields")).map(_.get("source-id").asInt))
-      .toSet
-    require(!partitionSourceIds.contains(fieldId),
-      s"Iceberg.widenColumnType: $name sources a partition field — widening it " +
-        "would reinterpret the committed partition values")
-    fieldNode.put("type", icebergType(to))
-    m.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("schemas").add(newSchema)
-    m.put("current-schema-id", maxSchemaId + 1)
-    m.put("last-updated-ms", System.currentTimeMillis())
-    commitMetadata(fs, root, metaV + 1, m, path)
-    metaV + 1
   }
 
   /** The table's properties (spec `properties` map) — empty when the

@@ -7,6 +7,7 @@
 package org.apache.spark.sql.graft
 
 import graft.ingest.{Versioned, Writers}
+import graft.interop.Evolve
 
 import java.util.Collections
 
@@ -413,19 +414,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // CURRENT_DEFAULT metadata + allowColumnDefaults feature, Iceberg's
     // v3 write-default (the create upgrades in place first — defaults
     // are a v3 schema attribute)
-    if (defaulted.nonEmpty) fmt match {
-      case "delta" => defaulted.foreach { case (n, sql) =>
-        graft.interop.DeltaLake.setColumnDefault(spark, dir.toString, n, sql)
+    if (defaulted.nonEmpty) {
+      if (fmt == "iceberg") graft.interop.Iceberg.upgradeToV3(spark, dir.toString)
+      defaulted.foreach { case (n, sql) =>
+        Evolve.alter(spark, fmt, dir.toString, Evolve.SetDefault(n, sql))
       }
-      case "graft" => defaulted.foreach { case (n, sql) =>
-        Versioned.setColumnDefault(spark, dir.toString, n, sql)
-      }
-      case _ =>
-        graft.interop.Iceberg.upgradeToV3(spark, dir.toString)
-        defaulted.foreach { case (n, sql) =>
-          graft.interop.Iceberg.setWriteDefault(spark, dir.toString, n,
-            Some(GraftCatalog.foldedDefault(spark, sql)))
-        }
     }
     if (identityCols.nonEmpty) fmt match {
       case "delta" => identityCols.foreach { case (n, start, step, allow) =>
@@ -449,6 +442,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val fmt = formatOf(dir).getOrElse(throw new NoSuchTableException(ident))
     val path = dir.toString
     val spark = SparkSession.active
+    def evolve(c: Evolve.Change): Unit = Evolve.alter(spark, fmt, path, c): Unit
     changes.foreach {
       // ALTER TABLE ADD CONSTRAINT name CHECK (expr): Delta's
       // checkConstraints writer feature — the API validates the whole
@@ -503,44 +497,21 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         require(add.position() == null,
           "GraftCatalog ALTER ADD COLUMN: FIRST/AFTER positions are not supported " +
             "(columns append at the end)")
-        fmt match {
-          case "graft" => Versioned.addColumn(path, add.fieldNames.head, add.dataType)
-          case "delta" => graft.interop.DeltaLake.addColumn(spark, path, add.fieldNames.head, add.dataType)
-          case _ => graft.interop.Iceberg.addColumn(spark, path, add.fieldNames.head, add.dataType)
-        }
+        evolve(Evolve.Add(add.fieldNames.head, add.dataType))
       case ren: TableChange.RenameColumn =>
         require(ren.fieldNames.length == 1,
           "GraftCatalog ALTER RENAME COLUMN: nested renames are not supported")
-        fmt match {
-          case "graft" => Versioned.renameColumn(path, ren.fieldNames.head, ren.newName)
-          case "delta" => graft.interop.DeltaLake.renameColumn(spark, path, ren.fieldNames.head, ren.newName)
-          case _ => graft.interop.Iceberg.renameColumn(spark, path, ren.fieldNames.head, ren.newName)
-        }
+        evolve(Evolve.Rename(ren.fieldNames.head, ren.newName))
       case del: TableChange.DeleteColumn =>
         require(del.fieldNames.length == 1,
           "GraftCatalog ALTER DROP COLUMN: nested drops are not supported")
-        fmt match {
-          case "graft" => Versioned.dropColumn(path, del.fieldNames.head)
-          case "delta" => graft.interop.DeltaLake.dropColumn(spark, path, del.fieldNames.head)
-          case _ => graft.interop.Iceberg.dropColumn(spark, path, del.fieldNames.head)
-        }
+        evolve(Evolve.Drop(del.fieldNames.head))
       case upd: TableChange.UpdateColumnDefaultValue =>
         require(upd.fieldNames.length == 1,
           "GraftCatalog ALTER SET DEFAULT: nested columns are not supported")
         val colName = upd.fieldNames.head
         val sql = Option(upd.newDefaultValue()).map(_.trim).getOrElse("")
-        fmt match {
-          case "delta" =>
-            if (sql.isEmpty) graft.interop.DeltaLake.clearColumnDefault(spark, path, colName)
-            else graft.interop.DeltaLake.setColumnDefault(spark, path, colName, sql)
-          case "iceberg" =>
-            if (sql.isEmpty) graft.interop.Iceberg.setWriteDefault(spark, path, colName, None)
-            else graft.interop.Iceberg.setWriteDefault(spark, path, colName,
-              Some(GraftCatalog.foldedDefault(spark, sql)))
-          case _ =>
-            if (sql.isEmpty) Versioned.clearColumnDefault(spark, path, colName)
-            else Versioned.setColumnDefault(spark, path, colName, sql)
-        }
+        evolve(if (sql.isEmpty) Evolve.ClearDefault(colName) else Evolve.SetDefault(colName, sql))
       case sp: TableChange.SetProperty =>
         fmt match {
           case "delta" =>
@@ -555,17 +526,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       case ut: TableChange.UpdateColumnType =>
         require(ut.fieldNames.length == 1,
           "GraftCatalog ALTER COLUMN TYPE: nested columns are not supported")
-        fmt match {
-          case "delta" =>
-            graft.interop.DeltaLake.widenColumnType(spark, path,
-              ut.fieldNames.head, ut.newDataType())
-          case "iceberg" =>
-            graft.interop.Iceberg.widenColumnType(spark, path,
-              ut.fieldNames.head, ut.newDataType())
-          case _ =>
-            graft.ingest.Versioned.widenColumn(spark, path,
-              ut.fieldNames.head, ut.newDataType())
-        }
+        evolve(Evolve.Widen(ut.fieldNames.head, ut.newDataType()))
       case rp: TableChange.RemoveProperty =>
         fmt match {
           case "delta" =>
@@ -717,40 +678,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 }
 
 object GraftCatalog {
-
-  /** Fold a SQL DEFAULT expression to the bare single value Iceberg's
-    * TYPED metadata stores (one constant — driver-side by definition;
-    * non-constants refuse loudly). The rendering is the spec's
-    * single-value serialization, NOT Spark's internal representation:
-    * `eval` yields days-since-epoch for DATE and epoch-micros for
-    * TIMESTAMP, and storing those raw would commit `write-default:
-    * "19723"` — an invalid literal that poisons every subsequent
-    * default-filling write. Dates render ISO `YYYY-MM-DD`, timestamps
-    * ISO-8601 (`timestamptz` with an explicit UTC offset, NTZ
-    * without), matching what the Iceberg reader's literal parser
-    * (`DATE '...'` / `TIMESTAMP '...'`) accepts back. */
-  private[graft] def foldedDefault(spark: SparkSession, sql: String): String = {
-    val e = spark.sessionState.sqlParser.parseExpression(sql)
-    require(e.foldable, s"GraftCatalog: DEFAULT '$sql' is not a constant expression")
-    val v = e.eval(null)
-    require(v != null,
-      "GraftCatalog: DEFAULT NULL is the same as no default — omit it (or DROP DEFAULT)")
-    import org.apache.spark.sql.types.{DateType, TimestampType, TimestampNTZType}
-    def ntz(micros: Long): String =
-      java.time.LocalDateTime.ofEpochSecond(
-        Math.floorDiv(micros, 1000000L),
-        (Math.floorMod(micros, 1000000L) * 1000L).toInt,
-        java.time.ZoneOffset.UTC
-      ).format(java.time.format.DateTimeFormatter
-        .ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS"))
-    e.dataType match {
-      case DateType =>
-        java.time.LocalDate.ofEpochDay(v.asInstanceOf[Int].toLong).toString
-      case TimestampType => ntz(v.asInstanceOf[Long]) + "+00:00"
-      case TimestampNTZType => ntz(v.asInstanceOf[Long])
-      case _ => v.toString
-    }
-  }
 
   /** Commit-meta key recording a graft table's DECLARED partition
     * columns while the table is still empty (no Hive dirs to derive

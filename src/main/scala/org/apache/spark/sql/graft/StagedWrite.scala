@@ -20,8 +20,13 @@ import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
   * call (so legitimately scoped writer conf like s65b's per-era
   * shredding flags still reaches the write) and takes the staging
   * overrides privately; the parent session's conf is never written.
-  * A clone shares the SparkContext and all executor state; its
-  * per-write cost is one SessionState build (~ms, driver-only).
+  * A clone shares the SparkContext and all executor state, but it is
+  * NOT driver-only: at Spark's default
+  * `spark.sql.artifact.isolation.enabled=true` each clone runs its
+  * tasks under its own class loader, and the codegen cache is keyed
+  * by class loader, so every staged write recompiles its task-side
+  * generated classes (1–7 classes per upsert or delete call, measured
+  * on 200-row tables). ROADMAP direction 10 owns the fix.
   *
   * [[withWriterConf]] is the caller-side scoping companion: entries
   * that need a write-encoding key for ONE producer write (s65b's
