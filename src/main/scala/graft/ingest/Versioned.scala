@@ -1,6 +1,6 @@
 package graft.ingest
 
-import graft.interop.{Evolve, MergeOnRead, RewriteFiles}
+import graft.interop.{CommitIntrospect, Evolve, MergeOnRead, OptimisticCommit, RewriteFiles}
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
@@ -474,20 +474,16 @@ object Versioned {
     lockProvider.tryAcquire(fs, dir)
 
   /** Claim the next free version ≥ current+1 (atomic create-if-absent;
-    * the loser of a race advances). Returns the claimed version. Used by
-    * the REPLACE-ALL [[commit]], whose content does not depend on the
-    * base snapshot — concurrent replace-alls are last-writer-wins by
-    * contract, so advancing past a taken slot is safe. */
+    * the loser of a race advances, within [[OptimisticCommit.MaxAttempts]]).
+    * Returns the claimed version. Used by the REPLACE-ALL [[commit]],
+    * whose content does not depend on the base snapshot — concurrent
+    * replace-alls are last-writer-wins by contract, so advancing past a
+    * taken slot is safe (no rival can conflict). */
   private def claimNext(fs: FileSystem, root: HPath, path: String): Long = {
     fs.mkdirs(root)
-    var v = currentVersion(path).getOrElse(0L) + 1
-    while (true) {
-      val dir = versionDir(root, v)
-      fs.mkdirs(dir)
-      if (atomicClaim(fs, dir)) return v
-      v += 1
-    }
-    v // unreachable
+    OptimisticCommit.run(s"Versioned.commit to $path", OptimisticCommit.Append,
+        currentVersion(path).getOrElse(0L), CommitIntrospect.versionedRebases)(_ => ())(
+      (b, _) => claimExact(fs, root, b))(b => (Iterator.empty, b + 1))
   }
 
   /** Claim EXACTLY base+1 or fail — the optimistic-concurrency rule for
@@ -535,21 +531,6 @@ object Versioned {
     }
   }
 
-  /** Claim for a PARTITION-SCOPED derived commit, with conflict
-    * detection instead of blanket serialization (Delta's logical
-    * conflict check on top of the physical claim): when base+1 is
-    * already taken, wait (bounded) for the in-flight rival to publish,
-    * then inspect every version that landed after `base` — if each is a
-    * partition-scoped delta whose changed partitions are DISJOINT from
-    * `touchedDirs`, this writer's read set (the touched partitions'
-    * files) and remove set are untouched in the new current manifest,
-    * so the commit REBASES: derive from the new current and claim
-    * again, no data recomputed, no retry surfaced to the caller. Any
-    * overlap, any rival whose change set is unknowable (rewrites,
-    * checkpoints, MoR deletes), or a rival that never publishes inside
-    * the wait window throws ConcurrentModificationException exactly as
-    * before — the lost-update guard is narrowed, not weakened. Returns
-    * (claimed version, the base actually derived from). */
   /** How long a rebasing claim waits for an in-flight rival to publish
     * before treating it as crashed. Property-tunable so specs that
     * deliberately stage a crashed claim don't pay the full window. */
@@ -562,11 +543,9 @@ object Versioned {
     * abandoned its claim without publishing (an [[appendCommitOnce]]
     * that discovered its batch already committed removes `_claim` and
     * walks away; the slot is claimable again). A rival that does
-    * neither inside the window is indistinguishable from a crash:
-    * rethrows `orig` for [[recoverClaims]] to arbitrate. */
-  private def awaitRival(
-      fs: FileSystem, root: HPath, path: String, b: Long,
-      orig: java.util.ConcurrentModificationException): Seq[Long] = {
+    * neither inside the window is indistinguishable from a crash: the
+    * conflict surfaces for [[recoverClaims]] to arbitrate. */
+  private def awaitRival(fs: FileSystem, root: HPath, path: String, b: Long): Seq[Long] = {
     val claimDir = versionDir(root, b + 1)
     val deadline = System.currentTimeMillis() + inflightWaitMs
     var landed = versions(path).filter(_ > b)
@@ -582,42 +561,33 @@ object Versioned {
         landed = versions(path).filter(_ > b)
       }
     }
-    if (landed.isEmpty) throw orig
+    if (landed.isEmpty) throw OptimisticCommit.conflictError(
+      s"Versioned: version ${b + 1} of $path stayed claimed without publishing for " +
+        s"${inflightWaitMs} ms — a crashed attempt (see recoverClaims). Re-read and retry.")
     landed
   }
 
+  /** Claim for a PARTITION-SCOPED derived commit ([[OptimisticCommit]]
+    * with the touched partitions as the read set): when base+1 is
+    * taken, wait for the in-flight rival, then rebase when every
+    * version that landed after `base` is a partition-scoped delta whose
+    * changed partitions (adds and removes) are DISJOINT from
+    * `touchedDirs` — this writer's read and remove sets are then
+    * untouched in the new current manifest, so it derives from the new
+    * head with no data recomputed. Any overlap, or a rival whose change
+    * set is unknowable (rewrites, checkpoints, MoR deletes), refuses.
+    * Returns (claimed version, the base actually derived from). */
   private def claimDisjoint(
       fs: FileSystem, root: HPath, path: String, base: Long,
-      touchedDirs: Set[String]): (Long, Long) = {
-    var b = base
-    var rebases = 0
-    while (rebases <= 64) { // a bound far above any plausible contention, not a policy knob
-      try return (claimExact(fs, root, b), b)
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          // the rival holds the b+1 claim; give it the wait window to
-          // publish (its data write is in flight) — a crashed rival
-          // times out and surfaces the conflict for recoverClaims.
-          // An EMPTY result means the rival abandoned: re-claim b+1.
-          val landed = awaitRival(fs, root, path, b, e)
-          for (w <- landed) {
-            val dirs = changedPartDirs(fs, root, w).getOrElse(
-              throw new java.util.ConcurrentModificationException(
-                s"Versioned: concurrent commit v$w of $path is not partition-scoped — " +
-                  "cannot prove disjointness. Re-read and retry."))
-            val overlap = dirs.intersect(touchedDirs)
-            if (overlap.nonEmpty)
-              throw new java.util.ConcurrentModificationException(
-                s"Versioned: concurrent commit v$w of $path touched overlapping " +
-                  s"partition(s) ${overlap.mkString(", ")}. Re-read and retry.")
-          }
-          if (landed.nonEmpty) b = landed.max
-          rebases += 1
-      }
+      touchedDirs: Set[String]): (Long, Long) =
+    OptimisticCommit.run(s"Versioned merge into $path", OptimisticCommit.Rewrite(touchedDirs),
+        base, CommitIntrospect.versionedRebases)(_ => ())((b, _) => (claimExact(fs, root, b), b)) {
+      b =>
+        // empty = the rival abandoned its claim: re-claim b+1 as-is
+        val landed = awaitRival(fs, root, path, b)
+        (landed.iterator.map(w => OptimisticCommit.Touched(s"concurrent commit v$w",
+          changedPartDirs(fs, root, w))), (b +: landed).max)
     }
-    throw new java.util.ConcurrentModificationException(
-      s"Versioned: gave up rebasing after 64 disjoint rivals on $path — livelock guard")
-  }
 
   /** Claim for a PURE-ADD derived commit ([[appendCommit]] and friends):
     * an append has no read set and removes nothing, so it commutes with
@@ -652,33 +622,18 @@ object Versioned {
     // (carry-by-name from an equal schema reuses the rival's ids), so
     // only the schema must match what this append is about to publish
     val want = if (base == 0L) None else Some(mapping(base))
-    var b = base
-    var rebases = 0
-    while (rebases <= 64) { // bound far above plausible contention, not a policy knob
-      try return (claimExact(fs, root, b), b)
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          // empty = the rival abandoned its claim: re-claim b+1 as-is
-          val landed = awaitRival(fs, root, path, b, e)
-          if (landed.nonEmpty) {
-            val head = landed.max
-            val got = mapping(head)
-            val ok = want match {
-              case Some(w) => got == w
-              case None    => got._1.contains(idHwmErased(
-                asNullable(schema).asInstanceOf[StructType]).json)
-            }
-            if (!ok)
-              throw new java.util.ConcurrentModificationException(
-                s"Versioned: concurrent commit v$head of $path changed the schema/column-id " +
-                  "mapping — rebasing this append would republish the old one. Re-read and retry.")
-            b = head
-          }
-          rebases += 1
-      }
+    def moved(head: Long): Boolean = want match {
+      case Some(w) => mapping(head) != w
+      case None => !mapping(head)._1.contains(
+        idHwmErased(asNullable(schema).asInstanceOf[StructType]).json)
     }
-    throw new java.util.ConcurrentModificationException(
-      s"Versioned: gave up rebasing after 64 rival appends on $path — livelock guard")
+    OptimisticCommit.run(s"Versioned append to $path", OptimisticCommit.Append, base,
+        CommitIntrospect.versionedRebases)(_ => ())((b, _) => (claimExact(fs, root, b), b)) { b =>
+      // empty = the rival abandoned its claim: re-claim b+1 as-is
+      val head = (b +: awaitRival(fs, root, path, b)).max
+      (Iterator(head).filter(h => h != b && moved(h)).map(h => OptimisticCommit.Restructured(
+        s"concurrent commit v$h", "changed the schema/column-id mapping")), head)
+    }
   }
 
   /** Operator-driven recovery of CRASHED derived commits: delete
@@ -1747,19 +1702,24 @@ object Versioned {
     * `groupBy(input_file_name)` over Spark's own codegen'd
     * `bloom_filter_agg` (xxhash64 domain) — and consulted by
     * [[readSkippingEq]] and the connector's FileIndex for `col = k`
-    * predicates. ~1.2 MB per file per column at the default 1M
-    * items / 3% fpp — sidecar metadata, never scanned by readers that
-    * don't probe. The index rides the version that CREATED the files,
+    * predicates. About 0.9 bytes per row of the commit's largest file,
+    * per file and column, at 3% fpp — sidecar metadata, never scanned
+    * by readers that don't probe. The index rides the version that CREATED the files,
     * so carried-by-reference files keep their blooms through
     * append/restore history exactly like file stats do. */
   private def writeBloomIndex(
       spark: SparkSession, fs: FileSystem, root: HPath, v: Long,
-      entries: Seq[ManifestEntry], bloomCols: Seq[String],
-      expectedItemsPerFile: Long = 1000000L): Unit = {
+      entries: Seq[ManifestEntry], bloomCols: Seq[String]): Unit = {
     import org.apache.spark.sql.functions.{col, input_file_name}
     import org.apache.spark.sql.graft.ColumnBridge
     if (entries.isEmpty) return
     val files = entries.map(e => new HPath(root, e.relPath).toString)
+    // every bloom of this commit is sized for its largest new file (row
+    // counts from the parquet footers; the aggregate's default 3%
+    // false-positive rate) — a fixed size would make a small file's
+    // bloom as large as a million-row file's
+    val expectedItemsPerFile = math.max(1L, entries.map(e => graft.interop.FooterStats
+      .read(fs.getConf, new HPath(root, e.relPath), Nil).records).max)
     val df = spark.read.parquet(files: _*)
     val types = df.schema.map(f => f.name -> f.dataType).toMap
     val tracked = bloomCols.filter(c => types.get(c).exists {

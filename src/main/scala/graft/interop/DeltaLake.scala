@@ -477,6 +477,20 @@ object DeltaLake {
   private def checkpointFile(root: HPath, v: Long) =
     new HPath(logDir(root), f"$v%020d.checkpoint.parquet")
 
+  /** The non-empty lines of commit `v`'s JSON. Commit files are
+    * published whole ([[CommitFiles.publish]]), so an EMPTY one is the
+    * claim of a writer that died before it wrote its payload: refused
+    * by name, never read as a commit with no actions. */
+  private def logLines(fs: FileSystem, root: HPath, v: Long): Iterator[String] = {
+    val f = jsonFile(root, v)
+    val in = fs.open(f)
+    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+    if (text.trim.isEmpty) throw new IllegalStateException(
+      s"DeltaLake: commit file $f is empty — a writer died after claiming version $v; " +
+        "delete the file so the next commit can take the version")
+    text.split('\n').iterator.map(_.trim).filter(_.nonEmpty)
+  }
+
   private def listLog(fs: FileSystem, root: HPath): (Seq[Long], Seq[Long]) = {
     val dir = logDir(root)
     if (!fs.exists(dir)) return (Nil, Nil)
@@ -779,14 +793,10 @@ object DeltaLake {
     for (v <- from to target) {
       require(jsonVs.contains(v),
         s"DeltaLake: $path log has a gap at version $v (have ${jsonVs.mkString(",")})")
-      val in = fs.open(jsonFile(root, v))
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
       // sidecar actions only appear inside v2 checkpoint files, never
       // in commit JSON — a buffer that must stay empty enforces that
       val none = scala.collection.mutable.ArrayBuffer.empty[HPath]
-      text.split('\n').iterator.map(_.trim).filter(_.nonEmpty).foreach { line =>
-        replayJsonNode(Json.readTree(line), none)
-      }
+      logLines(fs, root, v).foreach(line => replayJsonNode(Json.readTree(line), none))
       require(none.isEmpty,
         s"DeltaLake: $path commit $v carries sidecar actions outside a checkpoint")
     }
@@ -825,10 +835,7 @@ object DeltaLake {
     val (jsonVs, _) = listLog(fs, root)
     jsonVs.map { v =>
       val f = jsonFile(root, v)
-      val in = fs.open(f)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      val ci = text.split('\n').iterator.map(_.trim).filter(_.nonEmpty)
-        .map(Json.readTree).flatMap(n => Option(n.get("commitInfo"))).toSeq.headOption
+      val ci = logLines(fs, root, v).map(Json.readTree).flatMap(n => Option(n.get("commitInfo"))).toSeq.headOption
       // an inCommitTimestamp (monotone, rewrite/copy-proof) wins over
       // the recorded wall clock, which wins over the file mtime
       val ts = ci.flatMap(c =>
@@ -906,9 +913,7 @@ object DeltaLake {
     val (fs, root) = Writers.fsFor(path)
     val f = jsonFile(root, v)
     if (!fs.exists(f)) return None
-    val in = fs.open(f)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    text.split('\n').iterator.map(_.trim).filter(_.nonEmpty).flatMap { line =>
+    logLines(fs, root, v).flatMap { line =>
       Option(Json.readTree(line).get("metaData")).filterNot(_.isNull)
         .flatMap(m => Option(m.get("schemaString")).filterNot(_.isNull))
         .map(s => DataType.fromJson(s.asText).asInstanceOf[StructType])
@@ -921,11 +926,9 @@ object DeltaLake {
     require(fs.exists(f),
       s"DeltaLake: commit $v of $path has no JSON log entry (vacuumed?) — " +
         "a streaming tail cannot replay it; restart the stream from the current snapshot")
-    val in = fs.open(f)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
     var hasRemoves = false
     val adds = scala.collection.mutable.ArrayBuffer.empty[AddFile]
-    text.split('\n').iterator.map(_.trim).filter(_.nonEmpty).foreach { line =>
+    logLines(fs, root, v).foreach { line =>
       val n = Json.readTree(line)
       Option(n.get("protocol")).foreach { p =>
         val mr = p.get("minReaderVersion").asInt
@@ -1396,7 +1399,7 @@ object DeltaLake {
     // are fixed; everything version-derived (row-id ranges, the commit
     // lines) re-derives in here so the optimistic-concurrency rebase
     // can re-run it against a newer head.
-    def commitAttempt(vTry: Long, priorForIds: Option[Snapshot]): Long = {
+    def attemptLines(vTry: Long, priorForIds: Option[Snapshot]): Seq[String] = {
     // row tracking: every committed add carries its id range default —
     // assigned from the snapshot this attempt is based ON, so a rebase
     // re-stamps past the rival's advanced high-watermark
@@ -1525,72 +1528,40 @@ object DeltaLake {
     info.put("operation", if (mode == SaveMode.Append) "WRITE" else "CREATE OR REPLACE TABLE AS SELECT")
     lines += Json.writeValueAsString(ci)
 
-    commitLines(fs, root, vTry, lines.toSeq, newConf)
-    vTry
-    } // commitAttempt
+    lines.toSeq
+    } // attemptLines
 
-    // OPTIMISTIC-CONCURRENCY RETRY: the first attempt runs at the
-    // version this write validated. An APPEND that loses the
-    // create-if-absent race REBASES when every rival commit commutes
-    // with a blind append under the protocol's conflict matrix: a
-    // blind append READS NOTHING, so rival adds, deletes, and
-    // compactions (remove+add with an empty intersection against our
-    // empty read set) all commute; a rival metaData/protocol change
-    // keeps throwing, as does any lost race on our own overwrite (its
-    // read set is the whole table — not rebasable).
+    // OPTIMISTIC CONCURRENCY ([[OptimisticCommit]]): the first attempt
+    // runs at the version this write validated. A blind APPEND reads
+    // nothing, so it rebases past rival adds, deletes and compactions;
+    // a rival metaData/protocol change refuses, except an identity
+    // append's watermark-only ratchet (the rebase re-stamps past it).
+    // An overwrite or a create reads the whole table: never rebases.
     val idMetaCommutes: com.fasterxml.jackson.databind.JsonNode => Boolean =
       m => idFields.nonEmpty && prior.exists(p => identityRatchetOnly(p, m))
-
-    val committed = try commitAttempt(v, prior) catch {
-      case e0: java.util.ConcurrentModificationException
-          if mode == SaveMode.Append && prior.nonEmpty =>
-        def rebase(): Long = {
-          var lastErr = e0
-          var base = v
-          var attempts = 0
-          while (attempts < 4) {
-            attempts += 1
-            val (jsonVs2, cpVs2) = listLog(fs, root)
-            val head = ((jsonVs2 ++ cpVs2) :+ base).max
-            rivalConflict(fs, root, base, head,
-                metaCommutes = idMetaCommutes).foreach { reason =>
-              throw new java.util.ConcurrentModificationException(
-                s"DeltaLake.write: append to $path lost to a concurrent commit " +
-                  s"that does not commute with a blind append ($reason) — not rebasing",
-                lastErr)
-            }
-            try {
-              val freshSnap = snapshot(spark, path)
-              // identity re-stamp: the rival advanced a generated
-              // column's watermark past the base this staging assigned
-              // from — the staged ids collide, and they live IN the
-              // files, so regenerate from the head's watermark and
-              // re-stage before committing
-              if (idGenFields.nonEmpty) {
-                val moved = idGenFields.exists { f =>
-                  val spec = identitySpec(f).get
-                  val pf = freshSnap.rawSchema.fields.find(_.name == f.name).getOrElse(f)
-                  identityHwm(pf)
-                    .map(h => graft.core.IdentityGen.ratchet(spec.start, spec.step,
-                      spec.start - spec.step, h))
-                    .getOrElse(spec.start - spec.step) != idBases(f.name)
-                }
-                if (moved) { df = generateIdentity(freshSnap); adds0 = stage(df) }
-              }
-              val got = commitAttempt(head + 1, Some(freshSnap))
-              CommitIntrospect.deltaRebases.incrementAndGet()
-              return got
-            } catch {
-              case e: java.util.ConcurrentModificationException =>
-                lastErr = e; base = head + 1
-              // a THIRD writer mid-commit while we replayed the log:
-              // its file parses next loop, after its bytes land
-              case _: com.fasterxml.jackson.core.JacksonException => ()
-            }
-          }
-          throw lastErr
-        }
-        rebase()
+    val ours =
+      if (prior.isEmpty) OptimisticCommit.Pinned("a table create reads nothing it could rebase")
+      else if (mode == SaveMode.Overwrite) OptimisticCommit.Pinned("an overwrite reads the whole table")
+      else OptimisticCommit.Append
+    // identity re-stamp: a rival advanced a generated column's
+    // watermark past the base this staging assigned from — the staged
+    // ids collide, and they live IN the files, so a rebase regenerates
+    // from the head's watermark and re-stages
+    def idsMoved(head: Snapshot): Boolean = idGenFields.exists { f =>
+      val spec = identitySpec(f).get
+      val pf = head.rawSchema.fields.find(_.name == f.name).getOrElse(f)
+      identityHwm(pf)
+        .map(h => graft.core.IdentityGen.ratchet(spec.start, spec.step, spec.start - spec.step, h))
+        .getOrElse(spec.start - spec.step) != idBases(f.name)
+    }
+    val committed = OptimisticCommit.run(s"DeltaLake.write to $path", ours, (v, prior),
+        CommitIntrospect.deltaRebases) { case (vTry, snapAt) =>
+      if (vTry != v && idsMoved(snapAt.get)) { df = generateIdentity(snapAt.get); adds0 = stage(df) }
+      attemptLines(vTry, snapAt)
+    } { case ((vTry, _), lines) => commitLines(fs, root, vTry, lines, newConf); vTry } {
+      case (lost, _) =>
+        val head = logHead(fs, root, lost)
+        (rivals(fs, root, lost, head, idMetaCommutes), (head + 1, Some(snapshot(spark, path))))
     }
     if (committed > 0 && committed % CheckpointEvery == 0) checkpoint(spark, path)
     committed
@@ -1984,9 +1955,7 @@ object DeltaLake {
     val out = scala.collection.mutable.Set.empty[String]
     val (jsonVs, cpVs) = listLog(fs, root)
     jsonVs.foreach { v =>
-      val in = fs.open(jsonFile(root, v))
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      text.split('\n').iterator.map(_.trim).filter(_.nonEmpty).foreach { line =>
+      logLines(fs, root, v).foreach { line =>
         val n = Json.readTree(line)
         Option(n.get("add")).foreach(a => out += decodePath(a.get("path").asText))
         Option(n.get("remove")).foreach(r => out += decodePath(r.get("path").asText))
@@ -2751,13 +2720,11 @@ object DeltaLake {
       val f = jsonFile(root, v)
       require(fs.exists(f),
         s"DeltaLake.changeFeed: commit $v of $path has no JSON log entry (vacuumed?)")
-      val in = fs.open(f)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
       val cdcRels = scala.collection.mutable.ArrayBuffer.empty[String]
       val addRels = scala.collection.mutable.ArrayBuffer.empty[String]
       var mutRemoves = false
       var dvAdds = false
-      text.split('\n').iterator.map(_.trim).filter(_.nonEmpty).foreach { line =>
+      logLines(fs, root, v).foreach { line =>
         val n = Json.readTree(line)
         Option(n.get("cdc")).foreach(c => cdcRels += decodePath(c.get("path").asText))
         def changesData(node: JsonNode): Boolean =
@@ -3041,7 +3008,7 @@ object DeltaLake {
     // the commit lines referencing them are rebuilt per attempt
     val cdcLines: Seq[String] =
       cdcRows.map(rows => stageCdc(spark, root, snap, rows, now)).getOrElse(Nil)
-    def attemptAt(v: Long, snapAt: Snapshot): Long = {
+    def attemptLines(v: Long, snapAt: Snapshot): Seq[String] = {
       val (adds, rowIdLine): (Seq[AddFile], Option[String]) =
         if (!tracked) (adds0, None)
         else {
@@ -3066,50 +3033,26 @@ object DeltaLake {
       val info = ci.putObject("commitInfo")
       info.put("timestamp", now); info.put("operation", operation)
       lines += Json.writeValueAsString(ci)
-      commitLines(fs, root, v, lines.toSeq, snapAt.configuration)
-      v
+      lines.toSeq
     }
-    // OPTIMISTIC-CONCURRENCY RETRY for MAINTENANCE rewrites (OCC level
-    // 2 — the compaction-vs-ingest race): a dataChange=false rewrite's
-    // read set is EXACTLY its source files by identity (no predicate
-    // over rows it didn't rewrite), so a lost commit race rebases when
-    // every rival commit left that read set untouched — rival blind
-    // appends and disjoint removes commute (the protocol's conflict
-    // matrix); a rival that removed/rewrote one of OUR source files,
-    // or changed metaData/protocol, keeps throwing. dataChange=true
-    // rewrites (DELETE/UPDATE/MERGE/dynamic overwrite) read the table
-    // through a PREDICATE — a rival append may add matching rows their
-    // result never saw — so their lost races surface unconditionally.
-    val committed = try attemptAt(snap.version + 1, snap) catch {
-      case e0: java.util.ConcurrentModificationException if !dataChange =>
-        val readSet = removedRel.toSet
-        var lastErr = e0
-        var base = snap.version + 1
-        var attempts = 0
-        var got = -1L
-        while (got < 0 && attempts < 4) {
-          attempts += 1
-          val (jsonVs2, cpVs2) = listLog(fs, root)
-          val head = ((jsonVs2 ++ cpVs2) :+ base).max
-          // an identity append's watermark-only metaData commutes: this
-          // rewrite re-emits no metaData, so the rival's stays current
-          rivalConflict(fs, root, base, head, readSet,
-              metaCommutes = m => identityRatchetOnly(snap, m)).foreach { reason =>
-            throw new java.util.ConcurrentModificationException(
-              s"DeltaLake.$operation: rewrite of $path lost to a concurrent commit " +
-                s"that does not commute with it ($reason) — not rebasing", lastErr)
-          }
-          try {
-            got = attemptAt(head + 1, snapshot(spark, path))
-            CommitIntrospect.deltaRewriteRebases.incrementAndGet()
-          } catch {
-            case e: java.util.ConcurrentModificationException =>
-              lastErr = e; base = head + 1
-            case _: com.fasterxml.jackson.core.JacksonException => ()
-          }
-        }
-        if (got < 0) throw lastErr
-        got
+    // OPTIMISTIC CONCURRENCY ([[OptimisticCommit]]) for MAINTENANCE
+    // rewrites: a dataChange=false rewrite's read set is EXACTLY its
+    // source files, so it rebases when no rival removed one of them (an
+    // identity append's watermark-only metaData commutes too: this
+    // rewrite re-emits no metaData). DELETE/UPDATE/MERGE/dynamic
+    // overwrite read the table through a PREDICATE — a rival append may
+    // add rows their result never saw — so they never rebase.
+    val ours =
+      if (dataChange) OptimisticCommit.Pinned("a data-changing rewrite reads through a predicate")
+      else OptimisticCommit.Rewrite(removedRel.toSet)
+    val committed = OptimisticCommit.run(s"DeltaLake.$operation of $path", ours,
+        (snap.version + 1, snap), CommitIntrospect.deltaRewriteRebases) {
+      case (v, snapAt) => attemptLines(v, snapAt)
+    } { case ((v, snapAt), lines) => commitLines(fs, root, v, lines, snapAt.configuration); v } {
+      case (lost, _) =>
+        val head = logHead(fs, root, lost)
+        (rivals(fs, root, lost, head, m => identityRatchetOnly(snap, m)),
+          (head + 1, snapshot(spark, path)))
     }
     // the log folds on the SAME cadence as write() — a DML-heavy table
     // (only rewrite commits) must not grow an unbounded json chain
@@ -3171,9 +3114,6 @@ object DeltaLake {
     placed
   }
 
-  /** Atomically create version `v`'s commit file from `lines` — the ONE
-    * arbitration point every commit path shares (create-if-absent; the
-    * loser of a race surfaces as ConcurrentModificationException). */
   private def ictEnabled(conf: Map[String, String]): Boolean =
     conf.get("delta.enableInCommitTimestamps").exists(_.equalsIgnoreCase("true"))
 
@@ -3183,39 +3123,13 @@ object DeltaLake {
     * binds while the predecessor is observable). */
   private def lastIct(fs: FileSystem, root: HPath, v: Long): Option[Long] = {
     if (v == 0) return None
-    val pf = jsonFile(root, v - 1)
-    if (!fs.exists(pf)) return None
-    val in = fs.open(pf)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    text.split('\n').iterator.map(_.trim).filter(_.nonEmpty)
-      .map(Json.readTree)
+    if (!fs.exists(jsonFile(root, v - 1))) return None
+    logLines(fs, root, v - 1).map(Json.readTree)
       .flatMap(n => Option(n.get("commitInfo")).filterNot(_.isNull))
       .flatMap(c => Option(c.get("inCommitTimestamp")).filterNot(_.isNull).map(_.asLong))
       .toSeq.headOption
   }
 
-  /** Gate for the lost-race REBASE — the protocol's logical conflict
-    * matrix restricted to what this writer can prove commutes. Every
-    * rival commit in [from, to] must be a readable JSON commit whose
-    * actions all commute with the losing transaction:
-    *
-    *  - `add`/`commitInfo`/`txn`/`domainMetadata` always commute (the
-    *    row-id high-watermark rides domainMetadata and is re-derived
-    *    on rebase);
-    *  - `remove` commutes iff its path is DISJOINT from `readSet` —
-    *    the files the losing transaction read (a blind append reads
-    *    nothing, so rival compactions/deletes commute with it; a
-    *    compaction's read set is exactly its source files, so a rival
-    *    that rewrote one of them is a genuine conflict). A rival
-    *    DV-style delete removes-and-re-adds its target file, so it
-    *    surfaces through the same path check;
-    *  - `cdc` rides rival data changes whose row images belong to the
-    *    rival's own version — no table-state interaction, commutes;
-    *  - `metaData`/`protocol` (schema, config, contract) and any
-    *    unknown action refuse.
-    *
-    * Returns the first disqualifying reason; None when rebasing is
-    * safe. */
   /** True iff a rival `metaData` action matches `base`'s table
     * metadata MODULO identity high-watermark values — the ratchet
     * identity appends emit. Such a rival commutes with a blind append
@@ -3254,60 +3168,54 @@ object DeltaLake {
     } catch { case _: Exception => false }
   }
 
+  /** The lost-race rebase gate over the rival commits in [from, to]:
+    * a blind append when `readSet` is empty, else a rewrite of those
+    * files (a rival DV-style delete removes-and-re-adds its target, so
+    * it is caught by the same path check). Returns the first
+    * disqualifying reason; None when rebasing is safe. */
   private[interop] def rivalConflict(fs: FileSystem, root: HPath,
       from: Long, to: Long, readSet: Set[String] = Set.empty,
       metaCommutes: com.fasterxml.jackson.databind.JsonNode => Boolean = _ => false)
-      : Option[String] = {
-    val allowed = Set("add", "remove", "cdc", "commitInfo", "txn", "domainMetadata")
-    (from to to).foreach { rv =>
-      val pf = jsonFile(root, rv)
-      if (!fs.exists(pf)) return Some(s"rival version $rv has no readable JSON commit")
-      // commitLines claims the file atomically then writes the bytes —
-      // a just-claimed rival can read EMPTY or TRUNCATED for the
-      // milliseconds its write is in flight; wait that window out
-      // (bounded) before judging its actions
-      var attempt = 0
-      var parsed = false
-      while (!parsed) {
-        val in = fs.open(pf)
-        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-        try {
-          val nodes = text.split('\n').iterator.map(_.trim).filter(_.nonEmpty)
-            .map(Json.readTree).toSeq
-          if (text.trim.isEmpty) throw new IllegalStateException("empty commit")
-          parsed = true
-          nodes.foreach { n =>
-            val it = n.fieldNames()
-            while (it.hasNext) {
-              val k = it.next()
-              // an identity append's watermark ratchet is a metaData
-              // action too — the caller's predicate admits the ones
-              // that differ ONLY by identity high watermarks (the
-              // rebase re-stamps); any other metaData still refuses
-              if (k == "metaData" && metaCommutes(n.get("metaData"))) ()
-              else if (!allowed.contains(k))
-                return Some(s"rival version $rv carries a '$k' action")
-              if (k == "remove" && readSet.nonEmpty) {
-                val p = decodePath(n.get("remove").get("path").asText)
-                if (readSet.contains(p))
-                  return Some(s"rival version $rv removed $p, a file in this " +
-                    "transaction's read set")
-              }
-            }
-          }
-        } catch {
-          case e @ (_: com.fasterxml.jackson.core.JacksonException | _: IllegalStateException) =>
-            attempt += 1
-            if (attempt >= 40)
-              return Some(s"rival version $rv stayed unreadable: ${e.getMessage}")
-            Thread.sleep(50)
+      : Option[String] =
+    OptimisticCommit.conflict(
+      if (readSet.isEmpty) OptimisticCommit.Append else OptimisticCommit.Rewrite(readSet),
+      rivals(fs, root, from, to, metaCommutes))
+
+  /** The rival commits in [from, to], classified for
+    * [[OptimisticCommit.conflict]]: `add`/`cdc`/`commitInfo`/`txn`/
+    * `domainMetadata` need no class (they commute); a `remove` touches
+    * its path; `metaData` (unless `metaCommutes` admits it),
+    * `protocol` and any unknown action restructure. */
+  private def rivals(fs: FileSystem, root: HPath, from: Long, to: Long,
+      metaCommutes: com.fasterxml.jackson.databind.JsonNode => Boolean)
+      : Iterator[OptimisticCommit.Rival] = {
+    val commutes = Set("add", "cdc", "commitInfo", "txn", "domainMetadata")
+    (from to to).iterator.flatMap { rv =>
+      val who = s"rival version $rv"
+      if (!fs.exists(jsonFile(root, rv)))
+        Iterator(OptimisticCommit.Restructured(who, "has no readable JSON commit"))
+      else logLines(fs, root, rv).map(Json.readTree).flatMap { n =>
+        n.fieldNames().asScala.flatMap {
+          case "remove" => Some(OptimisticCommit.Touched(who,
+            Some(Set(decodePath(n.get("remove").get("path").asText)))))
+          case "metaData" if metaCommutes(n.get("metaData")) => None
+          case k if commutes.contains(k) => None
+          case k => Some(OptimisticCommit.Restructured(who, s"carries a '$k' action"))
         }
       }
     }
-    None
   }
 
-  /** Atomic create of the commit JSON. When the table's configuration
+  /** The newest version in the log, at least `lost` (the version a
+    * commit just lost): where a rebase resumes. */
+  private def logHead(fs: FileSystem, root: HPath, lost: Long): Long = {
+    val (jsonVs, cpVs) = listLog(fs, root)
+    ((jsonVs ++ cpVs) :+ lost).max
+  }
+
+  /** Publish version `v`'s commit JSON whole ([[CommitFiles.publish]]:
+    * a lost race surfaces as ConcurrentModificationException). When the
+    * table's configuration
     * (post-commit — the caller passes the governing map) enables
     * IN-COMMIT TIMESTAMPS, the commitInfo action is stamped with a
     * MONOTONE `inCommitTimestamp` (max of its wall clock and the
@@ -3336,12 +3244,7 @@ object DeltaLake {
         ci.put("inCommitTimestamp", ict)
         Json.writeValueAsString(ciNode) +: rest
       }
-    val out = try CommitFiles.createExclusive(fs, jsonFile(root, v)) catch {
-      case e: java.io.IOException =>
-        throw new java.util.ConcurrentModificationException(
-          s"DeltaLake: version $v of $root was committed concurrently", e)
-    }
-    try out.write((finalLines.mkString("\n") + "\n").getBytes("UTF-8")) finally out.close()
+    CommitFiles.publish(fs, jsonFile(root, v), (finalLines.mkString("\n") + "\n").getBytes("UTF-8"))
   }
 
 
@@ -3713,11 +3616,7 @@ object DeltaLake {
         val m = scala.collection.mutable.HashMap.empty[String, Long]
         val (jsonVs, _) = listLog(fs, root)
         jsonVs.sorted.foreach { v =>
-          val in = fs.open(jsonFile(root, v))
-          val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-            finally in.close()
-          text.split('\n').iterator.map(_.trim).filter(_.nonEmpty)
-            .filter(_.contains("\"remove\"")).foreach { line =>
+          logLines(fs, root, v).filter(_.contains("\"remove\"")).foreach { line =>
               Option(Json.readTree(line).get("remove")).filterNot(_.isNull).foreach { rm =>
                 val p = decodePath(rm.get("path").asText)
                 Option(rm.get("deletionTimestamp")).filterNot(_.isNull).map(_.asLong)

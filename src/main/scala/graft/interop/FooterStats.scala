@@ -25,7 +25,7 @@ import org.apache.spark.sql.types._
   * or unordered (NaN floats) is OMITTED from the result rather than
   * guessed at — both the Delta stats JSON and the Iceberg bounds maps
   * treat a missing column as "not prunable", which is always correct. */
-private[interop] object FooterStats {
+private[graft] object FooterStats {
 
   /** `mins`/`maxs` carry Spark EXTERNAL values (Int / Long / Float /
     * Double / Boolean / String / java.math.BigDecimal / java.sql.Date /

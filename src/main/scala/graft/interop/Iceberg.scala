@@ -673,57 +673,42 @@ object Iceberg {
   // ------------------------------------------------------------- reader
 
   private def readMetadata(fs: FileSystem, root: HPath): (Long, JsonNode) = {
-    // the commit protocol claims the next metadata version with an
-    // atomic create-if-absent, then writes the bytes — so a reader can
-    // observe the newest file EMPTY or TRUNCATED for the milliseconds
-    // a rival commit is in flight. Wait that window out (bounded)
-    // instead of misreading an in-flight commit as a corrupt table.
-    var attempt = 0
-    while (true) {
-      val vs = metaVersions(fs, root)
-      require(vs.nonEmpty, s"Iceberg: ${root} is not an Iceberg table (no metadata/*.metadata.json)")
-      val v = vs.max
-      val in = fs.open(metaFile(root, v))
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      val metaOpt: Option[JsonNode] =
-        try Option(Json.readTree(text))
-        catch { case _: com.fasterxml.jackson.core.JacksonException => None }
-      // a parsed JSON OBJECT lacking format-version is NOT a torn
-      // write — a torn write is empty (readTree gives a MissingNode)
-      // or fails to parse. It's a foreign/corrupt metadata file;
-      // refuse immediately with the format diagnosis instead of
-      // burning the 2 s in-flight window on a misleading message
-      metaOpt.filter(m => m.isObject && !m.hasNonNull("format-version")).foreach { _ =>
-        throw new IllegalStateException(
-          s"Iceberg: newest metadata v$v of $root parses as JSON but declares no " +
-            "format-version — not an Iceberg table-metadata file this from-spec " +
-            "reader recognizes (versions 1-3)")
-      }
-      metaOpt.filter(_.hasNonNull("format-version")) match {
-        case Some(meta) =>
-          // this from-spec reader implements the v2 metadata shape (schemas
-          // list, sequence numbers, manifest lists) plus v1's different
-          // field layout (top-level schema, inline manifests, read-only) and
-          // v3's additions (puffin deletion vectors, row-lineage fields;
-          // features beyond that — default values, new types — refuse at
-          // their own gates). An unknown future version would misread or
-          // crash mid-replay — refuse at the door instead
-          val fv = meta.get("format-version").asInt
-          require(fv == 1 || fv == 2 || fv == 3,
-            s"Iceberg: $root declares format-version $fv — this from-spec reader " +
-              "implements versions 1 (read-only), 2, and 3")
-          return (v, meta)
-        case None =>
-          attempt += 1
-          if (attempt >= 40) throw new IllegalStateException(
-            s"Iceberg: newest metadata v$v of $root stayed unreadable after " +
-              "the in-flight-commit wait window — the file is genuinely truncated")
-          Thread.sleep(50)
-      }
+    val vs = metaVersions(fs, root)
+    require(vs.nonEmpty, s"Iceberg: ${root} is not an Iceberg table (no metadata/*.metadata.json)")
+    val v = vs.max
+    val f = metaFile(root, v)
+    val in = fs.open(f)
+    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+    // metadata files are published whole ([[CommitFiles.publish]]), so
+    // an empty newest file is the claim of a writer that died before
+    // it wrote its payload, and one that does not parse is corrupt:
+    // both refuse by name, at once
+    if (text.trim.isEmpty) throw new IllegalStateException(
+      s"Iceberg: newest metadata file $f is empty — a writer died after claiming " +
+        s"version $v; delete the file so the next commit can take the version")
+    val meta = try Json.readTree(text) catch {
+      case e: com.fasterxml.jackson.core.JacksonException =>
+        throw new IllegalStateException(s"Iceberg: newest metadata file $f does not parse", e)
     }
-    sys.error("unreachable")
+    // a parsed JSON OBJECT lacking format-version is a foreign/corrupt
+    // metadata file: refuse with the format diagnosis
+    if (!meta.hasNonNull("format-version")) throw new IllegalStateException(
+      s"Iceberg: newest metadata v$v of $root parses as JSON but declares no " +
+        "format-version — not an Iceberg table-metadata file this from-spec " +
+        "reader recognizes (versions 1-3)")
+    // this from-spec reader implements the v2 metadata shape (schemas
+    // list, sequence numbers, manifest lists) plus v1's different
+    // field layout (top-level schema, inline manifests, read-only) and
+    // v3's additions (puffin deletion vectors, row-lineage fields;
+    // features beyond that — default values, new types — refuse at
+    // their own gates). An unknown future version would misread or
+    // crash mid-replay — refuse at the door instead
+    val fv = meta.get("format-version").asInt
+    require(fv == 1 || fv == 2 || fv == 3,
+      s"Iceberg: $root declares format-version $fv — this from-spec reader " +
+        "implements versions 1 (read-only), 2, and 3")
+    (v, meta)
   }
-
 
   /** Metadata-insensitive schema compare key: field metadata (e.g. the
     * scan plumbing's parquet.field.id, or mapping bookkeeping a user's
@@ -1221,8 +1206,23 @@ object Iceberg {
   def snapshot(spark: SparkSession, path: String,
       snapshotId: Option[Long] = None): Snapshot = {
     val (fs, root) = Writers.fsFor(path)
-    snapshotOf(spark, path, fs, readMetadata(fs, root)._2, snapshotId)
+    snapshotOf(spark, path, fs, asOfSnapshot(readMetadata(fs, root)._2, snapshotId), snapshotId)
   }
+
+  /** `meta` as of snapshot `id`: its current schema becomes the
+    * `schema-id` that snapshot recorded, so time travel serves the
+    * schema the snapshot was written under (as Delta and Versioned
+    * time travel do). Unchanged for the head, or when the snapshot
+    * records no schema-id. */
+  private def asOfSnapshot(meta: JsonNode, id: Option[Long]): JsonNode = id.flatMap { sid =>
+    iterator(meta.get("snapshots")).find(_.get("snapshot-id").asLong == sid)
+      .filter(sn => sn.hasNonNull("schema-id") && meta.hasNonNull("schemas"))
+      .map { sn =>
+        val m = meta.deepCopy[ObjectNode]()
+        m.put("current-schema-id", sn.get("schema-id").asInt)
+        m: JsonNode
+      }
+  }.getOrElse(meta)
 
   /** [[snapshot]] of already-read metadata `meta`, so a writer's
     * discovery and commit see the same table version. */
@@ -1860,7 +1860,7 @@ object Iceberg {
     if (!manifestPruningEnabled(spark)) return None
     val (fs, root) = Writers.fsFor(path)
     if (metaVersions(fs, root).isEmpty) return None // not a table: eager path's require reports
-    val (_, meta) = readMetadata(fs, root)
+    val meta = asOfSnapshot(readMetadata(fs, root)._2, snapshotId)
     val wantId = snapshotId.orElse(
       if (meta.hasNonNull("current-snapshot-id")) Some(meta.get("current-snapshot-id").asLong)
       else None).getOrElse(return None)
@@ -2527,7 +2527,7 @@ object Iceberg {
     // ---- one commit ATTEMPT against one observed head `pa`.
     // Everything sequence-/version-derived lives in here so the
     // optimistic-concurrency rebase can re-run it on a newer head.
-    def attemptCommit(pa: Option[(Long, JsonNode)]): Long = {
+    def attemptCommit(pa: Option[(Long, JsonNode)]): (ObjectNode, Long) = {
     val now = System.currentTimeMillis()
     val lastSeq = pa.map(_._2.get("last-sequence-number").asLong).getOrElse(0L)
     val seq = lastSeq + 1
@@ -2785,49 +2785,26 @@ object Iceberg {
       se.put("timestamp-ms", now); se.put("snapshot-id", snapshotId): Unit
     }
     meta.putArray("metadata-log")
-
-    val out = try CommitFiles.createExclusive(fs, metaFile(root, newMetaV)) catch {
-      case e: java.io.IOException =>
-        throw new java.util.ConcurrentModificationException(
-          s"Iceberg: metadata version $newMetaV of $path was committed concurrently", e)
-    }
-    try out.write(Json.writerWithDefaultPrettyPrinter().writeValueAsString(meta)
-      .getBytes("UTF-8")) finally out.close()
-    // advisory pointer (readers list the metadata dir regardless)
-    val hint = fs.create(new HPath(metaDir(root), "version-hint.text"), true)
-    try hint.write(newMetaV.toString.getBytes("UTF-8")) finally hint.close()
-    snapshotId
+    (meta, snapshotId)
     } // attemptCommit
 
-    // OPTIMISTIC-CONCURRENCY RETRY (the spec's commit arbitration): the
-    // first attempt runs against the head this write validated. An
-    // APPEND that loses the create-if-absent race REBASES when every
-    // rival commit was itself a blind append and nothing structural
-    // moved (disjoint adds commute — the protocols' logical conflict
-    // rule); a rival overwrite/delete/replace, schema change, or spec
-    // change keeps throwing, as does any lost race on our own
-    // overwrite or branch write (their read sets are not rebasable).
-    try attemptCommit(prior) catch {
-      case e0: java.util.ConcurrentModificationException
-          if mode == SaveMode.Append && toBranch.isEmpty && prior.nonEmpty =>
-        val pm = prior.get._2
-        var lastErr = e0
-        var attempts = 0
-        while (attempts < 4) {
-          attempts += 1
-          val (mv2, m2) = readMetadata(fs, root)
-          appendRebaseConflict(pm, m2).foreach { reason =>
-            throw new java.util.ConcurrentModificationException(
-              s"Iceberg.write: append to $path lost to a concurrent commit that " +
-                s"is not a blind append ($reason) — not rebasing", lastErr)
-          }
-          try {
-            val got = attemptCommit(Some((mv2, m2)))
-            CommitIntrospect.icebergRebases.incrementAndGet()
-            return got
-          } catch { case e: java.util.ConcurrentModificationException => lastErr = e }
-        }
-        throw lastErr
+    // OPTIMISTIC CONCURRENCY ([[OptimisticCommit]], the spec's commit
+    // arbitration): the first attempt runs against the head this write
+    // validated. A blind APPEND rebases past any known row-set rival;
+    // a schema, spec or format-version change refuses. An overwrite,
+    // a branch write or a create reads the whole table: never rebases.
+    val ours =
+      if (prior.isEmpty) OptimisticCommit.Pinned("a table create reads nothing it could rebase")
+      else if (mode != SaveMode.Append) OptimisticCommit.Pinned("an overwrite reads the whole table")
+      else if (toBranch.nonEmpty) OptimisticCommit.Pinned("a branch write reads its branch head")
+      else OptimisticCommit.Append
+    OptimisticCommit.run(s"Iceberg.write to $path", ours, prior,
+        CommitIntrospect.icebergRebases)(attemptCommit) { case (pa, (meta, snapshotId)) =>
+      publishMetadata(fs, root, pa.map(_._1 + 1).getOrElse(1L), meta)
+      snapshotId
+    } { _ =>
+      val head = readMetadata(fs, root)
+      (rivals(prior.get._2, head._2), Some(head))
     }
   }
 
@@ -2839,51 +2816,41 @@ object Iceberg {
     * conflict the caller must surface (the spec's commit-arbitration
     * rules). Package-visible so the race specs can prove the gate's
     * decisions deterministically. */
-  private[interop] def appendRebaseConflict(pm: JsonNode, m2: JsonNode): Option[String] = {
-    structuralRivalConflict(pm, m2).foreach(r => return Some(r))
-    rivalOps(pm, m2).foreach { op =>
-      // a blind append reads NO table state, so every known row-set
-      // operation commutes with it — rival appends trivially, rival
-      // compactions (`replace`) and merge-on-read deletes/overwrites
-      // because their file/row work cannot touch files this append is
-      // about to create (the reference FastAppend validates nothing).
-      // Only an operation this writer does not recognize refuses: its
-      // invariants are unknowable.
-      if (!KnownRowSetOps.contains(op)) return Some(s"rival snapshot operation '$op'")
-    }
-    None
-  }
+  private[interop] def appendRebaseConflict(pm: JsonNode, m2: JsonNode): Option[String] =
+    OptimisticCommit.conflict(OptimisticCommit.Append, rivals(pm, m2))
 
   private val KnownRowSetOps = Set("append", "replace", "delete", "overwrite")
 
-  /** The table-structure half of every rebase gate: a changed format
-    * version, schema, or partition spec is a genuine conflict for ANY
-    * losing transaction (its staged files were laid out under the old
-    * contract). */
-  private def structuralRivalConflict(pm: JsonNode, m2: JsonNode): Option[String] = {
-    if (m2.get("format-version").asInt != pm.get("format-version").asInt)
-      Some("format-version changed")
-    else if (m2.get("current-schema-id").asInt != pm.get("current-schema-id").asInt ||
-        m2.get("schemas") != pm.get("schemas"))
-      Some("the table schema changed")
-    else if (m2.get("default-spec-id").asInt != pm.get("default-spec-id").asInt ||
-        m2.get("partition-specs") != pm.get("partition-specs"))
-      Some("the partition spec changed")
-    else None
-  }
-
-  /** Summary operations of the snapshots in `m2` that `pm` has not
-    * seen — the rival commits a lost race must arbitrate against. */
-  private def rivalOps(pm: JsonNode, m2: JsonNode): Seq[String] = {
+  /** The rival snapshots in `m2` that `pm` has not seen, as far as
+    * every rebase gate shares them: a changed format version, schema or
+    * partition spec restructures the table for ANY losing commit (its
+    * staged files were laid out under the old contract), and so does an
+    * operation this writer does not recognize (its invariants are
+    * unknowable). Known row-set operations need no class here: they
+    * commute with a blind append, and [[rewriteRebaseConflict]] names
+    * the files they touched in a rewrite's scope. */
+  private def rivals(pm: JsonNode, m2: JsonNode): Iterator[OptimisticCommit.Rival] = {
+    val structural =
+      if (m2.get("format-version").asInt != pm.get("format-version").asInt)
+        Some("changed the format-version")
+      else if (m2.get("current-schema-id").asInt != pm.get("current-schema-id").asInt ||
+          m2.get("schemas") != pm.get("schemas"))
+        Some("changed the table schema")
+      else if (m2.get("default-spec-id").asInt != pm.get("default-spec-id").asInt ||
+          m2.get("partition-specs") != pm.get("partition-specs"))
+        Some("changed the partition spec")
+      else None
     val knownIds: Set[Long] =
       iterator(pm.get("snapshots")).map(_.get("snapshot-id").asLong).toSet
-    iterator(m2.get("snapshots"))
+    val unknownOps = iterator(m2.get("snapshots"))
       .filterNot(sn => knownIds.contains(sn.get("snapshot-id").asLong))
       .map { sn =>
         Option(sn.get("summary")).filterNot(_.isNull)
           .flatMap(su => Option(su.get("operation")).map(_.asText))
           .getOrElse("unknown")
-      }.toSeq
+      }.filterNot(KnownRowSetOps.contains)
+    structural.iterator.map(OptimisticCommit.Restructured("a rival commit", _)) ++
+      unknownOps.map(op => OptimisticCommit.Restructured("a rival snapshot", s"ran operation '$op'"))
   }
 
   /** The rewrite-rebase gate (OCC level 2 — the compaction-vs-ingest
@@ -2898,23 +2865,28 @@ object Iceberg {
     * position-delete file — that one small delete parquet's
     * `file_path` column. */
   private[interop] def rewriteRebaseConflict(spark: SparkSession, fs: FileSystem,
-      pm: JsonNode, m2: JsonNode, scopeAbs: Set[String]): Option[String] = {
-    structuralRivalConflict(pm, m2).foreach(r => return Some(r))
-    rivalOps(pm, m2).foreach { op =>
-      if (!KnownRowSetOps.contains(op)) return Some(s"rival snapshot operation '$op'")
-    }
+      pm: JsonNode, m2: JsonNode, scopeAbs: Set[String]): Option[String] =
+    OptimisticCommit.conflict(OptimisticCommit.Rewrite(scopeAbs),
+      rivals(pm, m2) ++ scopeTouched(spark, fs, pm, m2, scopeAbs))
+
+  /** The scope files rival snapshots touched: scope files no longer
+    * live at the head, and scope files a rival DELETE file targets. */
+  private def scopeTouched(spark: SparkSession, fs: FileSystem,
+      pm: JsonNode, m2: JsonNode, scopeAbs: Set[String]): Iterator[OptimisticCommit.Rival] = {
+    import OptimisticCommit.{Restructured, Touched}
     val knownIds: Set[Long] =
       iterator(pm.get("snapshots")).map(_.get("snapshot-id").asLong).toSet
     val rivalIds: Set[Long] = iterator(m2.get("snapshots"))
       .map(_.get("snapshot-id").asLong).toSet -- knownIds
-    if (rivalIds.isEmpty) return None
+    if (rivalIds.isEmpty) return Iterator.empty
     val curId = m2.get("current-snapshot-id").asLong
     val curSnap = iterator(m2.get("snapshots"))
       .find(_.get("snapshot-id").asLong == curId)
-      .getOrElse(return Some("the head metadata has no current snapshot"))
+      .getOrElse(return Iterator(Restructured("the head metadata", "has no current snapshot")))
     if (!curSnap.hasNonNull("manifest-list"))
-      return Some("the head snapshot carries no manifest list")
+      return Iterator(Restructured("the head snapshot", "carries no manifest list"))
     val live = scala.collection.mutable.HashSet.empty[String]
+    val targeted = scala.collection.mutable.HashSet.empty[String]
     readAvro(fs, new HPath(curSnap.get("manifest-list").asText)).foreach { mf =>
       val content = avroOpt(mf, "content").map(_.asInstanceOf[Int]).getOrElse(0)
       val mPath = new HPath(mf.get("manifest_path").toString)
@@ -2937,30 +2909,21 @@ object Iceberg {
               case _ => Nil
             }
             if (eqIds.nonEmpty)
-              return Some("a rival committed an equality delete — its target " +
-                "files are not checkable against this rewrite's scope")
+              return Iterator(Touched("a rival equality delete", None))
             avroOpt(dfr, "referenced_data_file") match {
-              case Some(ref) =>
-                if (scopeAbs.contains(Hive.fsPathNoDecode(ref.toString)))
-                  return Some("a rival delete targets a file in this rewrite's scope")
+              case Some(ref) => targeted += Hive.fsPathNoDecode(ref.toString)
               case None =>
                 // a multi-file position delete: its targets live in the
                 // (small) delete parquet itself
                 val delPath = Hive.fsPathNoDecode(dfr.get("file_path").toString)
-                val targets = spark.read.parquet(delPath)
-                  .select("file_path").distinct().collect()
-                  .map(r => Hive.fsPathNoDecode(r.getString(0)))
-                if (targets.exists(scopeAbs.contains))
-                  return Some("a rival delete targets a file in this rewrite's scope")
+                spark.read.parquet(delPath).select("file_path").distinct().collect()
+                  .foreach(r => targeted += Hive.fsPathNoDecode(r.getString(0)))
             }
           }
       }
     }
-    val missing = scopeAbs.filterNot(live.contains)
-    if (missing.nonEmpty)
-      return Some(s"a rival commit removed or rewrote ${missing.size} file(s) in " +
-        "this rewrite's scope")
-    None
+    Iterator(Touched("a rival delete", Some(targeted.toSet.intersect(scopeAbs))),
+      Touched("a rival commit", Some(scopeAbs.filterNot(live.contains))))
   }
 
   /** Merge-on-read `DELETE FROM t WHERE cond`, through
@@ -4001,7 +3964,7 @@ object Iceberg {
     // list, metadata) rebuilds per commit attempt against the head
     // metadata it commits on — the OCC rebase re-does only metadata
     // work, never the data staging
-    def attempt(headV: Long, headMeta: JsonNode): Long = {
+    def attempt(headV: Long, headMeta: JsonNode): (ObjectNode, Long) = {
     val snapshotId = math.abs(java.util.UUID.randomUUID().getMostSignificantBits)
     val seq = headMeta.get("last-sequence-number").asLong + 1
     val nextRowId: Long =
@@ -4155,36 +4118,26 @@ object Iceberg {
     val se = newMeta.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshot-log")
       .addObject()
     se.put("timestamp-ms", now); se.put("snapshot-id", snapshotId)
-    commitMetadata(fs, root, headV + 1, newMeta, path)
-    snapshotId
+    (newMeta, snapshotId)
     } // attempt
 
-    // OPTIMISTIC-CONCURRENCY RETRY for MAINTENANCE rewrites (OCC level
-    // 2 — the compaction-vs-ingest race): a `replace` rewrite preserves
-    // the row set and reads exactly its scope files by identity, so a
-    // lost commit race rebases when [[rewriteRebaseConflict]] proves
-    // every rival commit left the scope untouched. Row-set-CHANGING
-    // rewrites (delete/overwrite — predicate reads a rival append may
-    // invalidate) surface their lost races unconditionally.
-    try attempt(metaV, meta) catch {
-      case e0: java.util.ConcurrentModificationException if operation == "replace" =>
-        var lastErr = e0
-        var attempts = 0
-        while (attempts < 4) {
-          attempts += 1
-          val (mv2, m2) = readMetadata(fs, root)
-          rewriteRebaseConflict(spark, fs, meta, m2, removedAbs).foreach { reason =>
-            throw new java.util.ConcurrentModificationException(
-              s"Iceberg.$operation: rewrite of $path lost to a concurrent commit " +
-                s"that does not commute with it ($reason) — not rebasing", lastErr)
-          }
-          try {
-            val got = attempt(mv2, m2)
-            CommitIntrospect.icebergRewriteRebases.incrementAndGet()
-            return got
-          } catch { case e: java.util.ConcurrentModificationException => lastErr = e }
-        }
-        throw lastErr
+    // OPTIMISTIC CONCURRENCY ([[OptimisticCommit]]) for MAINTENANCE
+    // rewrites: a `replace` rewrite preserves the row set and reads
+    // exactly its scope files, so it rebases when no rival touched the
+    // scope ([[rewriteRebaseConflict]]). Row-set-CHANGING rewrites
+    // (delete/overwrite — predicate reads a rival append may
+    // invalidate) never rebase.
+    val ours =
+      if (operation == "replace") OptimisticCommit.Rewrite(removedAbs)
+      else OptimisticCommit.Pinned(s"an '$operation' rewrite reads through a predicate")
+    OptimisticCommit.run(s"Iceberg.$operation of $path", ours, (metaV, meta: JsonNode),
+        CommitIntrospect.icebergRewriteRebases) { case (v, m) => attempt(v, m) } {
+      case ((v, _), (newMeta, snapshotId)) =>
+        commitMetadata(fs, root, v + 1, newMeta, path)
+        snapshotId
+    } { _ =>
+      val head = readMetadata(fs, root)
+      (rivals(meta, head._2) ++ scopeTouched(spark, fs, meta, head._2, removedAbs), head)
     }
   }
 
@@ -4268,13 +4221,16 @@ object Iceberg {
     require(Option(meta.get("format-version")).exists(f => f.asInt == 2 || f.asInt == 3),
       "Iceberg: v1 tables are READ-ONLY here — their metadata layout predates " +
         "sequence numbers; migrate to v2 before mutating")
-    val out = try CommitFiles.createExclusive(fs, metaFile(root, v)) catch {
-      case e: java.io.IOException =>
-        throw new java.util.ConcurrentModificationException(
-          s"Iceberg: metadata version $v of $path was committed concurrently", e)
-    }
-    try out.write(Json.writerWithDefaultPrettyPrinter().writeValueAsString(meta)
-      .getBytes("UTF-8")) finally out.close()
+    publishMetadata(fs, root, v, meta)
+  }
+
+  /** Publish metadata version `v` whole ([[CommitFiles.publish]]; a
+    * lost race surfaces as ConcurrentModificationException), then the
+    * advisory version hint (readers list the metadata dir regardless). */
+  private[interop] def publishMetadata(fs: FileSystem, root: HPath, v: Long,
+      meta: JsonNode): Unit = {
+    CommitFiles.publish(fs, metaFile(root, v),
+      Json.writerWithDefaultPrettyPrinter().writeValueAsString(meta).getBytes("UTF-8"))
     val hint = fs.create(new HPath(metaDir(root), "version-hint.text"), true)
     try hint.write(v.toString.getBytes("UTF-8")) finally hint.close()
   }
@@ -5288,16 +5244,7 @@ object Iceberg {
         keptStats._1.foreach(e => sArr.add(e.deepCopy[JsonNode]()): Unit)
       }
     }
-    val v = metaV + 1
-    val out = try CommitFiles.createExclusive(fs, metaFile(root, v)) catch {
-      case e: java.io.IOException =>
-        throw new java.util.ConcurrentModificationException(
-          s"Iceberg: metadata version $v of $path was committed concurrently", e)
-    }
-    try out.write(Json.writerWithDefaultPrettyPrinter().writeValueAsString(newMeta)
-      .getBytes("UTF-8")) finally out.close()
-    val hint = fs.create(new HPath(metaDir(root), "version-hint.text"), true)
-    try hint.write(v.toString.getBytes("UTF-8")) finally hint.close()
+    publishMetadata(fs, root, metaV + 1, newMeta)
     reclaimedData
   }
 
@@ -5731,15 +5678,7 @@ object Iceberg {
     val se = slog.addObject()
     se.put("timestamp-ms", now); se.put("snapshot-id", snapshotId)
     meta.putArray("metadata-log")
-    val out = try CommitFiles.createExclusive(fs, metaFile(root, 1L)) catch {
-      case e: java.io.IOException =>
-        throw new java.util.ConcurrentModificationException(
-          s"Iceberg: metadata version 1 of $path was committed concurrently", e)
-    }
-    try out.write(Json.writerWithDefaultPrettyPrinter().writeValueAsString(meta)
-      .getBytes("UTF-8")) finally out.close()
-    val hint = fs.create(new HPath(metaDir(root), "version-hint.text"), true)
-    try hint.write("1".getBytes("UTF-8")) finally hint.close()
+    publishMetadata(fs, root, 1L, meta)
     snapshotId
   }
 

@@ -136,19 +136,6 @@ object IcebergView {
     v.defaultNamespace.foreach(n => ns.add(n): Unit)
   }
 
-  private def commit(fs: FileSystem, root: HPath, v: Long, meta: ObjectNode,
-      path: String): Unit = {
-    val out = try CommitFiles.createExclusive(fs, Iceberg.metaFile(root, v)) catch {
-      case e: java.io.IOException =>
-        throw new java.util.ConcurrentModificationException(
-          s"IcebergView: metadata version $v of $path was committed concurrently", e)
-    }
-    try out.write(Json.writerWithDefaultPrettyPrinter().writeValueAsString(meta)
-      .getBytes("UTF-8")) finally out.close()
-    val hint = fs.create(new HPath(Iceberg.metaDir(root), "version-hint.text"), true)
-    try hint.write(v.toString.getBytes("UTF-8")) finally hint.close()
-  }
-
   /** CREATE (replace = false) or CREATE OR REPLACE (replace = true).
     * Create refuses over an existing view; replace appends a new
     * view-version (and a new schema when it changed) under a bumped
@@ -204,7 +191,7 @@ object IcebergView {
     allSchemas.toSeq.sortBy(_._1).foreach { case (id, s) => writeSchema(sa, id, s) }
     val pn = meta.putObject("properties")
     properties.foreach { case (k, v2) => pn.put(k, v2): Unit }
-    commit(fs, root, priorV + 1, meta, path)
+    Iceberg.publishMetadata(fs, root, priorV + 1, meta)
   }
 
   /** ALTER VIEW SET/UNSET TBLPROPERTIES — a new metadata version with
@@ -219,6 +206,6 @@ object IcebergView {
       .map(_.asInstanceOf[ObjectNode]).getOrElse(nm.putObject("properties"))
     remove.foreach(k => props.remove(k): Unit)
     set.foreach { case (k, v2) => props.put(k, v2): Unit }
-    commit(fs, root, v + 1, nm, path)
+    Iceberg.publishMetadata(fs, root, v + 1, nm)
   }
 }

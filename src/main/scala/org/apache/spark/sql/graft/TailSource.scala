@@ -77,10 +77,10 @@ object StreamSchemaTracking {
 
   /** Append a schema entry (no-op when the newest entry already equals
     * it — detection can fire once per in-flight batch attempt). The
-    * journal slot is claimed with the same EXCLUSIVE-create arbitration
-    * the commit files use ([[graft.interop.CommitFiles.createExclusive]]):
-    * a rival writer racing for the same `last+1` index loses the kernel
-    * O_EXCL claim instead of silently clobbering the winner's entry —
+    * journal entry is published whole with the same put-if-absent the
+    * commit files use ([[graft.interop.CommitFiles.publish]]): a rival
+    * writer racing for the same `last+1` index loses instead of
+    * silently clobbering the winner's entry —
     * if the winner recorded the SAME schema the loser no-ops (both
     * attempts of one evolution), a DIFFERENT schema fails loudly (two
     * checkpoints genuinely disagree about the table's shape). */
@@ -97,23 +97,16 @@ object StreamSchemaTracking {
     val node = Json.createObjectNode()
     node.put("schema", schema.json)
     node.put("deltaVersion", deltaVersion)
-    val out = try graft.interop.CommitFiles.createExclusive(
-      fs, new org.apache.hadoop.fs.Path(d, s"$next.json"))
+    try graft.interop.CommitFiles.publish(fs, new org.apache.hadoop.fs.Path(d, s"$next.json"),
+      Json.writeValueAsString(node).getBytes("UTF-8"),
+      onLost = "lost the _schema_log entry to a writer recording a DIFFERENT schema — two " +
+        "streams share this tracking location; give each checkpoint its own")
     catch {
-      // ONLY the typed exists-failure is a lost O_EXCL race; a genuine
-      // IO failure (disk full, permissions) propagates unchanged
-      // instead of masquerading as a shared-tracking-location conflict
-      case e @ (_: org.apache.hadoop.fs.FileAlreadyExistsException |
-                _: java.nio.file.FileAlreadyExistsException) =>
-        // lost the slot: a rival recorded first — same schema is the
-        // benign double-fire, anything else is a real conflict
-        if (read(dir).exists { case (s, _) => canonical(s) == canonical(schema) }) return
-        throw new java.util.ConcurrentModificationException(
-          s"schemaTrackingLocation: lost the _schema_log claim for entry $next under $dir " +
-            "to a writer recording a DIFFERENT schema — two streams share this tracking " +
-            "location; give each checkpoint its own", e)
+      // lost the slot: a rival recorded first — the same schema is the
+      // benign double-fire, anything else is a real conflict
+      case _: java.util.ConcurrentModificationException
+          if read(dir).exists { case (s, _) => canonical(s) == canonical(schema) } => ()
     }
-    try out.write(Json.writeValueAsString(node).getBytes("UTF-8")) finally out.close()
   }
 
   /** The schema a file tail serves: the newest tracked entry when

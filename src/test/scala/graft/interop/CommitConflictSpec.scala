@@ -6,12 +6,15 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.types.StringType
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** The optimistic-commit conflict table, cell by cell, on all three
   * table formats. Each cell lands a rival commit exactly between our
   * staging and our publish (Delta and Iceberg through [[HookFs]],
   * Versioned through its claim provider), then checks whether our
-  * commit rebased or refused and which rows the table reads after. */
+  * commit rebased or refused and which rows the table reads after. A
+  * source scan keeps the loop in one place: only the commit core and
+  * the publish primitives construct the conflict. */
 class CommitConflictSpec extends AnyFunSuite with SparkFixture {
 
   /** One format under test: how to create, append to, compact, evolve
@@ -157,5 +160,28 @@ class CommitConflictSpec extends AnyFunSuite with SparkFixture {
       assert(keys(f, path) == Seq(1L, 2L, 3L))
       assert(f.read(path).columns.contains("extra"), "the rival's column must survive")
     }
+  }
+
+  test("only the commit core and the publish primitives construct the conflict") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val marker = "new java.util.ConcurrentModificationException"
+    val hits: Map[String, Seq[Int]] = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { p =>
+        val lines = java.nio.file.Files.readAllLines(p).asScala.toIndexedSeq
+        lines.indices.filter(i => lines(i).contains(marker))
+          .map(i => root.relativize(p).toString -> i)
+      }.groupMap(_._1)(_._2)
+    assert(hits.keySet == Set("graft/interop/OptimisticCommit.scala",
+      "graft/interop/CommitIntrospect.scala", "graft/ingest/Versioned.scala"),
+      s"the conflict is constructed outside the core and the publish primitives: $hits")
+    assert(hits.values.forall(_.size == 1), s"one construction site per file: $hits")
+    // Versioned's one site is its version claim
+    val versioned = java.nio.file.Files.readAllLines(
+      root.resolve("graft/ingest/Versioned.scala")).asScala.toIndexedSeq
+    val claim = versioned.indexWhere(_.contains("private def claimExact("))
+    val next = versioned.indexWhere(_.trim.startsWith("/**"), claim)
+    assert(claim >= 0 && hits("graft/ingest/Versioned.scala").forall(i => i > claim && i < next),
+      "Versioned constructs the conflict outside claimExact")
   }
 }

@@ -1,22 +1,27 @@
 package graft.interop
 
 import graft.ingest.Writers
-import java.nio.file.Paths
+import java.nio.file.{Files, Paths}
 import org.apache.hadoop.fs.{Path => HPath}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
-/** The commit-arbitration PRIMITIVE both interop writers claim
-  * versions through (r12): Hadoop's local filesystem implements
-  * `create(f, overwrite = false)` as check-then-act, so two
-  * simultaneous committers could BOTH pass the exists probe and the
-  * second silently overwrote the first — an actual lost commit,
-  * observed under 4-way append contention before the fix.
-  * [[CommitFiles.createExclusive]] routes `file:` claims through
-  * O_EXCL; this spec locks the kernel-arbitrated exactly-one-winner
-  * contract under direct contention. */
+/** The commit-file PUBLISH step every table format commits through:
+  * Hadoop's local filesystem implements `create(f, overwrite = false)`
+  * as check-then-act, so two simultaneous committers could BOTH pass
+  * the exists probe and the second silently overwrote the first — an
+  * actual lost commit, observed under 4-way append contention.
+  * [[CommitFiles.publish]] writes a hidden temporary file and makes it
+  * visible with a kernel-arbitrated hard link; this spec locks the
+  * exactly-one-winner contract under direct contention. */
 class CommitFilesSpec extends AnyFunSuite {
 
-  test("createExclusive: exactly one of N simultaneous claimants wins; content survives") {
+  private def text(fs: org.apache.hadoop.fs.FileSystem, p: HPath): String = {
+    val in = fs.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+  }
+
+  test("publish: exactly one of N simultaneous publishers wins; content survives") {
     val dir = Paths.get(System.getProperty("java.io.tmpdir"), "graft_test", "commitfiles")
     Writers.deleteTree(dir)
     val (fs, _) = Writers.fsFor(dir.toString)
@@ -30,33 +35,30 @@ class CommitFilesSpec extends AnyFunSuite {
         Future {
           gate.await()
           try {
-            val out = CommitFiles.createExclusive(fs, dest)
-            try out.write(s"winner-$i".getBytes("UTF-8")) finally out.close()
+            CommitFiles.publish(fs, dest, s"winner-$i".getBytes("UTF-8"))
             Some(i)
-          } catch { case _: java.io.IOException => None }
+          } catch { case _: java.util.ConcurrentModificationException => None }
         }
       })
       gate.countDown()
       val wins = Await.result(results, 60.seconds).flatten
       assert(wins.size == 1,
-        s"round $round: exactly one claimant must win, got $wins")
-      val in = fs.open(dest)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      assert(text == s"winner-${wins.head}",
-        s"round $round: the winner's bytes must survive intact (got '$text')")
+        s"round $round: exactly one publisher must win, got $wins")
+      assert(text(fs, dest) == s"winner-${wins.head}",
+        s"round $round: the winner's bytes must survive intact")
     }
+    assert(Files.list(dir).iterator().asScala.forall(!_.getFileName.toString.endsWith(".tmp")),
+      "a publisher left its temporary file behind")
   }
 
-  test("createExclusive refuses a pre-existing file like create-if-absent did") {
+  test("publish refuses a pre-existing file and leaves it as it was") {
     val dir = Paths.get(System.getProperty("java.io.tmpdir"), "graft_test", "commitfiles2")
     Writers.deleteTree(dir)
     val (fs, _) = Writers.fsFor(dir.toString)
     val dest = new HPath(dir.toString, "v1.json")
-    val out = CommitFiles.createExclusive(fs, dest)
-    try out.write("first".getBytes("UTF-8")) finally out.close()
-    intercept[java.io.IOException](CommitFiles.createExclusive(fs, dest))
-    val in = fs.open(dest)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    assert(text == "first")
+    CommitFiles.publish(fs, dest, "first".getBytes("UTF-8"))
+    intercept[java.util.ConcurrentModificationException](
+      CommitFiles.publish(fs, dest, "second".getBytes("UTF-8")))
+    assert(text(fs, dest) == "first")
   }
 }

@@ -79,7 +79,6 @@ object HookFs {
   def register(conf: Configuration): Unit = {
     conf.set(s"fs.$Scheme.impl", classOf[HookFs].getName)
     conf.set(s"fs.AbstractFileSystem.$Scheme.impl", classOf[HookAbstractFs].getName)
-    conf.setBoolean(s"fs.$Scheme.impl.disable.cache", false)
   }
 
   /** `graftrace:` path of a fresh local directory named `name`. */
