@@ -835,7 +835,8 @@ object DeltaLake {
     val (jsonVs, _) = listLog(fs, root)
     jsonVs.map { v =>
       val f = jsonFile(root, v)
-      val ci = logLines(fs, root, v).map(Json.readTree).flatMap(n => Option(n.get("commitInfo"))).toSeq.headOption
+      val ci = logLines(fs, root, v).map(Json.readTree)
+        .flatMap(n => Option(n.get("commitInfo"))).toSeq.headOption
       // an inCommitTimestamp (monotone, rewrite/copy-proof) wins over
       // the recorded wall clock, which wins over the file mtime
       val ts = ci.flatMap(c =>
@@ -1540,7 +1541,7 @@ object DeltaLake {
     val idMetaCommutes: com.fasterxml.jackson.databind.JsonNode => Boolean =
       m => idFields.nonEmpty && prior.exists(p => identityRatchetOnly(p, m))
     val ours =
-      if (prior.isEmpty) OptimisticCommit.Pinned("a table create reads nothing it could rebase")
+      if (prior.isEmpty) OptimisticCommit.Pinned("two creates of one table never commute")
       else if (mode == SaveMode.Overwrite) OptimisticCommit.Pinned("an overwrite reads the whole table")
       else OptimisticCommit.Append
     // identity re-stamp: a rival advanced a generated column's

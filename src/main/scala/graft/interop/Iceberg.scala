@@ -2794,7 +2794,7 @@ object Iceberg {
     // a schema, spec or format-version change refuses. An overwrite,
     // a branch write or a create reads the whole table: never rebases.
     val ours =
-      if (prior.isEmpty) OptimisticCommit.Pinned("a table create reads nothing it could rebase")
+      if (prior.isEmpty) OptimisticCommit.Pinned("two creates of one table never commute")
       else if (mode != SaveMode.Append) OptimisticCommit.Pinned("an overwrite reads the whole table")
       else if (toBranch.nonEmpty) OptimisticCommit.Pinned("a branch write reads its branch head")
       else OptimisticCommit.Append

@@ -68,7 +68,8 @@ private[graft] object OptimisticCommit {
 
   /** Build the conflict a commit path raises (the one type every
     * caller's retry contract matches on). */
-  def conflictError(msg: String, cause: Throwable = null): java.util.ConcurrentModificationException =
+  def conflictError(msg: String,
+      cause: Throwable = null): java.util.ConcurrentModificationException =
     new java.util.ConcurrentModificationException(msg, cause)
 
   /** Run one commit: `stage` the commit for state `s`, `publish` it

@@ -227,10 +227,11 @@ def main():
     extra = sorted({k for c in counts.values() for k in c} - set(cols))
     cols += extra
     names = [s[0] for s in spans]
-    print("phase".ljust(12) + "".join(k.replace("executor_repeat_of_", "exec_rep_")
-                                      .rjust(max(10, len(k) - 8)) for k in cols))
+    short = {k: k.replace("executor_repeat_of_", "exec_rep_").replace("_body", "") for k in cols}
+    width = {k: max(8, len(short[k]) + 1) for k in cols}
+    print("phase".ljust(12) + "".join(short[k].rjust(width[k]) for k in cols))
     for n in names:
-        print(n.ljust(12) + "".join(str(counts[n][k]).rjust(max(10, len(k) - 8)) for k in cols))
+        print(n.ljust(12) + "".join(str(counts[n][k]).rjust(width[k]) for k in cols))
     print(json.dumps({"workload": a.workload, "seed": a.seed, "seconds": seconds,
                       "cpus": os.cpu_count(),
                       "phases": {n: dict(counts[n]) for n in names}}, sort_keys=True))
