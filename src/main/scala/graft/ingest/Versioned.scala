@@ -538,14 +538,16 @@ object Versioned {
     sys.props.get("graft.versioned.inflightWaitMs").map(_.toLong).getOrElse(10000L)
 
   /** Wait (bounded) for the in-flight rival holding `b`+1 to resolve.
-    * Returns the versions that landed above `b` — non-empty when the
-    * rival (and possibly others) published, EMPTY when the rival
+    * Returns Right(the versions that landed above `b`) — non-empty when
+    * the rival (and possibly others) published, EMPTY when the rival
     * abandoned its claim without publishing (an [[appendCommitOnce]]
     * that discovered its batch already committed removes `_claim` and
     * walks away; the slot is claimable again). A rival that does
-    * neither inside the window is indistinguishable from a crash: the
-    * conflict surfaces for [[recoverClaims]] to arbitrate. */
-  private def awaitRival(fs: FileSystem, root: HPath, path: String, b: Long): Seq[Long] = {
+    * neither inside the window is indistinguishable from a crash: it
+    * comes back as Left, a rival the commit core refuses to rebase
+    * over, for [[recoverClaims]] to arbitrate. */
+  private def awaitRival(fs: FileSystem, root: HPath, path: String,
+      b: Long): Either[OptimisticCommit.Rival, Seq[Long]] = {
     val claimDir = versionDir(root, b + 1)
     val deadline = System.currentTimeMillis() + inflightWaitMs
     var landed = versions(path).filter(_ > b)
@@ -554,17 +556,17 @@ object Versioned {
         // claim gone, nothing committed: the rival abandoned — but
         // re-check for a publication that raced the claim removal
         val last = versions(path).filter(_ > b)
-        if (last.isEmpty) return Nil
+        if (last.isEmpty) return Right(Nil)
         landed = last
       } else {
         Thread.sleep(50L)
         landed = versions(path).filter(_ > b)
       }
     }
-    if (landed.isEmpty) throw OptimisticCommit.conflictError(
-      s"Versioned: version ${b + 1} of $path stayed claimed without publishing for " +
-        s"${inflightWaitMs} ms — a crashed attempt (see recoverClaims). Re-read and retry.")
-    landed
+    if (landed.isEmpty) Left(OptimisticCommit.Restructured(s"version ${b + 1} of $path",
+      s"stayed claimed without publishing for $inflightWaitMs ms, a crashed attempt " +
+        "(see recoverClaims)"))
+    else Right(landed)
   }
 
   /** Claim for a PARTITION-SCOPED derived commit ([[OptimisticCommit]]
@@ -584,9 +586,9 @@ object Versioned {
         base, CommitIntrospect.versionedRebases)(_ => ())((b, _) => (claimExact(fs, root, b), b)) {
       b =>
         // empty = the rival abandoned its claim: re-claim b+1 as-is
-        val landed = awaitRival(fs, root, path, b)
-        (landed.iterator.map(w => OptimisticCommit.Touched(s"concurrent commit v$w",
-          changedPartDirs(fs, root, w))), (b +: landed).max)
+        awaitRival(fs, root, path, b).fold(stuck => (Iterator(stuck), b), landed =>
+          (landed.iterator.map(w => OptimisticCommit.Touched(s"concurrent commit v$w",
+            changedPartDirs(fs, root, w))), (b +: landed).max))
     }
 
   /** Claim for a PURE-ADD derived commit ([[appendCommit]] and friends):
@@ -630,9 +632,11 @@ object Versioned {
     OptimisticCommit.run(s"Versioned append to $path", OptimisticCommit.Append, base,
         CommitIntrospect.versionedRebases)(_ => ())((b, _) => (claimExact(fs, root, b), b)) { b =>
       // empty = the rival abandoned its claim: re-claim b+1 as-is
-      val head = (b +: awaitRival(fs, root, path, b)).max
-      (Iterator(head).filter(h => h != b && moved(h)).map(h => OptimisticCommit.Restructured(
-        s"concurrent commit v$h", "changed the schema/column-id mapping")), head)
+      awaitRival(fs, root, path, b).fold(stuck => (Iterator(stuck), b), landed => {
+        val head = (b +: landed).max
+        (Iterator(head).filter(h => h != b && moved(h)).map(h => OptimisticCommit.Restructured(
+          s"concurrent commit v$h", "changed the schema/column-id mapping")), head)
+      })
     }
   }
 

@@ -2540,7 +2540,6 @@ object Iceberg {
     val nextRowId: Long = pa
       .flatMap(p => Option(p._2.get("next-row-id")).filterNot(_.isNull).map(_.asLong))
       .getOrElse(0L)
-    val newMetaV = pa.map(_._1 + 1).getOrElse(1L)
 
     // ---- manifest list: prior manifests (append) + the new one
     // the append BASE: the branch head when writing to a branch (a
@@ -4409,7 +4408,7 @@ object Iceberg {
         .withColumn("_snapshot_id", graft.functions.BoundLong.column(id))
     var prev: Option[Snapshot] = mainSnaps
       .filter(sn => seqOf(sn) <= fromSeq).lastOption
-      .map(sn => snapshot(spark, path, Some(sn.get("snapshot-id").asLong)))
+      .map(sn => snapshotOf(spark, path, fs, meta, Some(sn.get("snapshot-id").asLong)))
     var prevSrc: Option[Map[String, Seq[graft.functions.DvPositionSource]]] = None
     val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     // chunk spill state (see the ChangeLogChunk contract above):
@@ -4452,7 +4451,7 @@ object Iceberg {
       val sq = seqOf(sn)
       val op = Option(sn.get("summary")).filterNot(_.isNull)
         .flatMap(su => Option(su.get("operation")).map(_.asText)).getOrElse("unknown")
-      val cur = snapshot(spark, path, Some(id))
+      val cur = snapshotOf(spark, path, fs, meta, Some(id))
       val curSrc = deleteSources(spark, root, cur)
       if (op != "replace") { // replace is row-neutral by contract
         val prevFiles = prev.map(_.files).getOrElse(Nil)

@@ -66,12 +66,6 @@ private[graft] object OptimisticCommit {
     }.collectFirst { case Some(r) => r }
   }
 
-  /** Build the conflict a commit path raises (the one type every
-    * caller's retry contract matches on). */
-  def conflictError(msg: String,
-      cause: Throwable = null): java.util.ConcurrentModificationException =
-    new java.util.ConcurrentModificationException(msg, cause)
-
   /** Run one commit: `stage` the commit for state `s`, `publish` it
     * (which throws ConcurrentModificationException when a rival took
     * its slot), and on a loss ask `rebase` which rivals landed and the
@@ -91,11 +85,14 @@ private[graft] object OptimisticCommit {
         return r
       } catch {
         case lost: java.util.ConcurrentModificationException =>
-          if (attempt >= MaxAttempts) throw conflictError(
-            s"$what gave up after $MaxAttempts attempts, each lost to a rival commit", lost)
-          ours match { case Pinned(why) => throw refusal(what, why, lost); case _ => }
+          def noncommuting(why: String) = refusal(what,
+            s"lost to a concurrent commit that does not commute with it ($why) — not rebasing",
+            lost)
+          if (attempt >= MaxAttempts) throw refusal(what,
+            s"each of its $MaxAttempts attempts lost to a rival commit — giving up", lost)
+          ours match { case Pinned(why) => throw noncommuting(why); case _ => }
           val (rivals, next) = rebase(s)
-          conflict(ours, rivals).foreach(r => throw refusal(what, r, lost))
+          conflict(ours, rivals).foreach(r => throw noncommuting(r))
           s = next
           attempt += 1
       }
@@ -103,7 +100,9 @@ private[graft] object OptimisticCommit {
     sys.error("unreachable")
   }
 
-  private def refusal(what: String, reason: String, cause: Throwable) = conflictError(
-    s"$what lost to a concurrent commit that does not commute with it ($reason) — not rebasing",
-    cause)
+  /** The one refusal: a conflict, or the attempt bound spent. It is a
+    * ConcurrentModificationException, the type every caller's retry
+    * contract matches on. */
+  private def refusal(what: String, reason: String, cause: Throwable) =
+    new java.util.ConcurrentModificationException(s"$what refused: $reason", cause)
 }

@@ -44,34 +44,21 @@ object StreamSchemaTracking {
       .filter(_.endsWith(".json"))
       .flatMap(n => n.stripSuffix(".json").toLongOption)
     entries.maxOption.map { v =>
-      // the writer claims the entry file EXCLUSIVELY first, then writes
-      // the payload ([[record]]) — a reader landing inside that window
-      // sees an empty/partial file. Wait the in-flight append out (the
-      // same torn-read rule the commit files follow); a claim that
-      // never fills is a crashed writer — fail loudly, never serve a
-      // torn schema.
-      var attempt = 0
-      var parsed: Option[(StructType, Long)] = None
-      while (parsed.isEmpty) {
-        val in = fs.open(new org.apache.hadoop.fs.Path(d, s"$v.json"))
-        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-        parsed =
-          try {
-            val node = Json.readTree(text)
-            if (node == null || !node.hasNonNull("schema") || !node.hasNonNull("deltaVersion"))
-              None
-            else Some((org.apache.spark.sql.types.DataType.fromJson(node.get("schema").asText)
-              .asInstanceOf[StructType], node.get("deltaVersion").asLong))
-          } catch { case _: com.fasterxml.jackson.core.JacksonException => None }
-        if (parsed.isEmpty) {
-          attempt += 1
-          if (attempt > 100) throw new IllegalStateException(
-            s"schemaTrackingLocation: _schema_log entry $v under $dir never filled — " +
-              "a schema-recording writer crashed mid-append; remove the torn entry to recover")
-          Thread.sleep(20L)
-        }
+      // entries are published whole ([[record]]), so one that is empty
+      // or does not parse was left by an older writer that died
+      // mid-append: refuse it by name, never serve a torn schema
+      val f = new org.apache.hadoop.fs.Path(d, s"$v.json")
+      val in = fs.open(f)
+      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+      val node = try Json.readTree(text) catch {
+        case _: com.fasterxml.jackson.core.JacksonException => null
       }
-      parsed.get
+      if (node == null || !node.hasNonNull("schema") || !node.hasNonNull("deltaVersion"))
+        throw new IllegalStateException(
+          s"schemaTrackingLocation: _schema_log entry $f is empty or torn — a " +
+            "schema-recording writer died mid-append; remove the entry to recover")
+      (org.apache.spark.sql.types.DataType.fromJson(node.get("schema").asText)
+        .asInstanceOf[StructType], node.get("deltaVersion").asLong)
     }
   }
 

@@ -1447,6 +1447,27 @@ class IcebergSpec extends AnyFunSuite with SparkFixture {
       Seq("k", "v", "_change_type", "_sequence_number", "_snapshot_id"))
   }
 
+  test("changeLog reads every window snapshot through the head schema after a column change") {
+    import spark.implicits._
+    val path = freshDir("ice_changelog_evolved")
+    Iceberg.write(Seq((1L, "a"), (2L, "b")).toDF("k", "v").coalesce(1), path) // seq1
+    // column changes add no snapshot: seq1's snapshot still records the old schema
+    Iceberg.addColumn(spark, path, "n", org.apache.spark.sql.types.IntegerType)
+    Iceberg.renameColumn(spark, path, "v", "w")
+    Iceberg.write(Seq((3L, "c", 7)).toDF("k", "w", "n").coalesce(1), path,
+      mode = SaveMode.Append)                                                 // seq2
+    val all = Iceberg.changeLog(spark, path, 0L)
+    assert(all.columns.toSeq ==
+      Seq("k", "w", "n", "_change_type", "_sequence_number", "_snapshot_id"))
+    val rows = all.select("k", "w", "n", "_change_type", "_sequence_number")
+      .as[(Long, String, Option[Int], String, Long)].collect().toSet
+    assert(rows == Set((1L, "a", None, "insert", 1L), (2L, "b", None, "insert", 1L),
+      (3L, "c", Some(7), "insert", 2L)), s"got $rows")
+    // a window that starts after the old snapshot reads it as its base too
+    assert(Iceberg.changeLog(spark, path, 1L).select("k").as[Long].collect().toSeq ==
+      Seq(3L))
+  }
+
   test("streaming changelog source delivers per-commit images exactly once") {
     import spark.implicits._
     import org.apache.spark.sql.streaming.Trigger
