@@ -1,6 +1,9 @@
 package graft.ingest
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -8,11 +11,16 @@ import org.apache.spark.sql.types._
   * after header-only CSV/JSON ingestion (SURVEY.md P4 as a reusable
   * utility rather than a single query).
   *
-  * Strategy: one aggregate pass computes, per candidate column, how many
-  * non-null values survive try_cast to each candidate type; a column is
-  * promoted to the narrowest type that loses nothing. The decision pass
-  * is a single scan (all counters in one agg), the rewrite is a
-  * projection — two linear passes total, no collect of data rows.
+  * Strategy: a column is promoted to the first candidate type that every
+  * one of its non-null values holds (passes the shape guard, then
+  * try_cast). The decision is one Spark job that scans each partition
+  * once and, per column, keeps the set of candidates no value has failed
+  * yet: a (column, candidate) pair is evaluated only until its first
+  * failing value. Each task returns per column its non-null count,
+  * max length and surviving-candidate mask; the driver sums, maxes and
+  * ANDs them. The rewrite is a projection — two linear passes total, no
+  * collect of data rows, and the scan's code is the same for every
+  * schema (one predicate per candidate, over a single bound input).
   */
 object Coerce {
 
@@ -21,7 +29,7 @@ object Coerce {
 
   /** Backtick-escape a column name: bestFit does not require a prior
     * Sanitize pass, so a raw header containing a backtick must not break
-    * (or redirect) the try_cast SQL — and `functions.col` itself parses
+    * (or redirect) the output cast — and `functions.col` itself parses
     * backticks as quoting, so even Column-API references need this. */
   private def quoted(n: String): String = "`" + n.replace("`", "``") + "`"
 
@@ -48,39 +56,96 @@ object Coerce {
     case _ => lit(true)
   }
 
-  private def parses(n: String, t: String): Column =
-    count(when(plausible(col(quoted(n)), t), expr(s"try_cast(${quoted(n)} AS $t)")))
+  /** One predicate per candidate over the single string input at ordinal
+    * 0: the guard holds and try_cast yields a value. Resolved by the
+    * session's analyzer over a one-column relation (so the cast carries
+    * the session's time zone, as a try_cast in a query would) and bound
+    * to that column. */
+  private def holds(df: DataFrame): Array[Expression] = {
+    val v = df.sparkSession.createDataFrame(
+      java.util.List.of[Row](), StructType(Seq(StructField("v", StringType))))
+    val probe = v.select(candidates.map(t =>
+      when(plausible(col("v"), t), expr(s"try_cast(v AS $t)")).isNotNull): _*)
+    probe.queryExecution.analyzed match {
+      case p: Project => p.projectList.map(e =>
+        BindReferences.bindReference(e.children.head, p.child.output)).toArray
+      case other => throw new IllegalStateException(s"bestFit: unexpected probe plan $other")
+    }
+  }
+
+  /** Per string column (by position in `ords`): non-null count, max
+    * length (-1 when none) and the mask of candidates (bit j for
+    * `candidates(j)`) that every non-null value holds. One Spark job,
+    * run as one SQL execution of `df`'s plan. */
+  private def scan(df: DataFrame, ords: Array[Int]): (Array[Long], Array[Int], Array[Int]) = {
+    val preds = holds(df)
+    val k = ords.length
+    val all = (1 << preds.length) - 1
+    val qe = df.queryExecution
+    val parts = SQLExecution.withNewExecutionId(qe, Some("bestFit")) {
+      qe.toRdd.mapPartitions { rows =>
+        val n = new Array[Long](k)
+        val len = Array.fill(k)(-1)
+        val alive = Array.fill(k)(all)
+        val slot = new GenericInternalRow(1)
+        rows.foreach { r =>
+          var i = 0
+          while (i < k) {
+            if (!r.isNullAt(ords(i))) {
+              val s = r.getUTF8String(ords(i))
+              n(i) += 1
+              len(i) = math.max(len(i), s.numChars)
+              var m = alive(i)
+              if (m != 0) {
+                slot.update(0, s)
+                var j = 0
+                while (j < preds.length) {
+                  if ((m & (1 << j)) != 0 && !preds(j).eval(slot).asInstanceOf[Boolean]) m &= ~(1 << j)
+                  j += 1
+                }
+                alive(i) = m
+              }
+            }
+            i += 1
+          }
+        }
+        Iterator.single((n, len, alive))
+      }.collect()
+    }
+    val n = new Array[Long](k)
+    val len = Array.fill(k)(-1)
+    val alive = Array.fill(k)(all)
+    parts.foreach { case (pn, pl, pa) =>
+      for (i <- 0 until k) {
+        n(i) += pn(i)
+        len(i) = math.max(len(i), pl(i))
+        alive(i) &= pa(i)
+      }
+    }
+    (n, len, alive)
+  }
 
   /** Infer the best-fit type for each string column of `df` (other
     * columns pass through). Date-only columns (every value ≤ 10 chars and
     * timestamp-parsable) become DATE rather than midnight timestamps. */
   def bestFit(df: DataFrame): DataFrame = {
-    val stringCols = df.schema.fields.filter(_.dataType == StringType).map(_.name)
-    if (stringCols.isEmpty) return df
-    val counters = stringCols.flatMap { n =>
-      Seq(
-        count(when(col(quoted(n)).isNotNull, 1)).as(s"${n}__n"),
-        max(length(col(quoted(n)))).as(s"${n}__len"),
-      ) ++ candidates.map(t => parses(n, t).as(s"${n}__$t"))
-    }
-    val row = df.agg(counters.head, counters.tail.toIndexedSeq: _*).collect().head
-    def cnt(name: String): Long = row.getAs[Long](name)
-    val decisions: Map[String, Option[String]] = stringCols.map { n =>
-      val nonNull = cnt(s"${n}__n")
+    val fields = df.schema.fields
+    val ords = fields.indices.filter(i => fields(i).dataType == StringType).toArray
+    if (ords.isEmpty) return df
+    val (n, len, alive) = scan(df, ords)
+    val decisions: Map[String, Option[String]] = ords.indices.map { i =>
       val best =
-        if (nonNull == 0) None
-        else candidates.find(t => cnt(s"${n}__$t") == nonNull) match {
-          case Some("timestamp_ntz")
-              if !row.isNullAt(row.fieldIndex(s"${n}__len")) && row.getAs[Int](s"${n}__len") <= 10 =>
-            Some("date")
+        if (n(i) == 0) None
+        else candidates.indices.find(j => (alive(i) & (1 << j)) != 0).map(candidates) match {
+          case Some("timestamp_ntz") if len(i) <= 10 => Some("date")
           case other => other
         }
-      n -> best
+      fields(ords(i)).name -> best
     }.toMap
-    df.select(df.columns.toIndexedSeq.map { n =>
-      decisions.get(n).flatten match {
-        case Some(t) => col(quoted(n)).cast(t).as(n)
-        case _ => col(quoted(n))
+    df.select(df.columns.toIndexedSeq.map { name =>
+      decisions.get(name).flatten match {
+        case Some(t) => col(quoted(name)).cast(t).as(name)
+        case _ => col(quoted(name))
       }
     }: _*)
   }

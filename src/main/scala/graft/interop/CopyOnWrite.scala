@@ -201,9 +201,11 @@ private[graft] object CopyOnWrite {
 
   /** The lineage version of a row this commit writes: `next` where
     * `changed` holds (every row without a condition), the old version
-    * elsewhere, and NULL for a row without lineage. */
-  private def stamped(l: Lineage, changed: Option[Column]): Column = {
-    val bumped = changed.fold(lit(l.next))(p => when(p, lit(l.next)).otherwise(col(l.version)))
+    * elsewhere, and NULL for a row without lineage. `next` is bound, not
+    * inlined, so every commit of a table runs the same generated code. */
+  private[interop] def stamped(l: Lineage, changed: Option[Column]): Column = {
+    val next = graft.functions.BoundLong.column(l.next)
+    val bumped = changed.fold(next)(p => when(p, next).otherwise(col(l.version)))
     when(col(l.rowId).isNull, lit(null)).otherwise(bumped).cast(LongType)
   }
 

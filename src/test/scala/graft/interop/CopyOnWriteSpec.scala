@@ -4,7 +4,7 @@ import graft.SparkFixture
 import graft.ingest.Writers
 import java.nio.file.Paths
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, functions}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -242,6 +242,24 @@ class CopyOnWriteSpec extends AnyFunSuite with SparkFixture {
         }
       }
     }
+  }
+
+  test("the lineage stamp binds the commit's version: two commits run the same generated code") {
+    def code(next: Long): Seq[String] = {
+      val l = CopyOnWrite.Lineage("_row_id", "_version", next)
+      val live = spark.range(8).select(
+        functions.when(col("id") % 3 =!= 0, col("id")).as("_row_id"), col("id").as("_version"))
+      val stamped = live.select(CopyOnWrite.stamped(l, Some(col("_version") > 4)).as("a"),
+        CopyOnWrite.stamped(l, None).as("b"))
+      assert(stamped.collect().map(r => (r.get(0), r.get(1))).toSeq == (0 until 8).map(i =>
+        if (i % 3 == 0) (null, null) else (if (i > 4) next else i.toLong, next)))
+      org.apache.spark.sql.execution.debug.codegenStringSeq(stamped.queryExecution.executedPlan).map(_._2)
+    }
+    val (seven, eight) = (code(7L), code(8L))
+    assert(seven.nonEmpty)
+    val differ = seven.flatMap(_.linesIterator).zip(eight.flatMap(_.linesIterator)).find(p => p._1 != p._2)
+    assert(seven.size == eight.size && differ.isEmpty,
+      s"the stamped projection's generated code depends on `next`: $differ")
   }
 }
 

@@ -19,13 +19,32 @@ JSON line:
                                       "ratio": change/parent,
                                       "wins": pairs the change won (lower is
                                               better unless BENCHMARK.json
-                                              says higher),
+                                              says higher; ties win for
+                                              neither side),
                                       "pairs": n,
-                                      "parent_iqr": q3-q1 of the parent}},
-                       "detail": {...the same for the report's workload
-                                  metrics, e.g. ops.<family>_s},
+                                      "parent_iqr": q3-q1 of the parent,
+                                      "gain_shown": at least 10 pairs, wins
+                                                    >= 9/10 of them, and
+                                                    the medians differ, in
+                                                    the change's favour, by
+                                                    more than parent_iqr,
+                                      "within_bound": the change's median is
+                                                      worse than the parent's
+                                                      by at most the metric's
+                                                      BENCHMARK.json bound
+                                                      (a fraction of the
+                                                      parent's median)}},
+                       "detail": {...the same without the two verdicts for
+                                  the report's workload metrics, e.g.
+                                  ops.<family>_s; a metric whose unit is a
+                                  rate (rows/s, 1/s) is higher-is-better,
+                                  any other lower-is-better},
                        "failed": {"parent": n, "change": n}}},
      "failed": n}
+
+The two verdicts follow the small-sandbox rule for claiming a gain (at
+least ten alternating pairs, 9/10 wins, a median shift beyond the
+parent's own quartile spread) and the per-metric regression bound.
 
 `failed` adds the failed operations both sides reported and the runs that
 produced no result. The directories are removed at the end; their names
@@ -96,9 +115,18 @@ def quartiles(xs):
     return q[0], q[2]
 
 
-def summarize(pairs, better):
+def rate_directions(pairs):
+    """Each report metric's direction, from the unit the report gives it:
+    a rate (`rows/s`, `1/s`) is higher-is-better, anything else lower."""
+    return {m: "higher" if str(v.get("unit", "")).endswith("/s") else "lower"
+            for run in pairs for side in run if side for m, v in side.items()}
+
+
+def summarize(pairs, better, bounds=None):
     """Per-metric medians, ratio, pair wins and the parent's spread over
-    `pairs` of {metric: {"value": v}} maps (None for a run without result)."""
+    `pairs` of {metric: {"value": v}} maps (None for a run without result).
+    For the metrics in `bounds` (name -> allowed fractional worsening) it
+    adds the `gain_shown` and `within_bound` verdicts."""
     names = sorted({m for p, _ in pairs for m in (p or {})})
     out = {}
     for m in names:
@@ -110,10 +138,14 @@ def summarize(pairs, better):
         ps, cs = [p for p, _ in both], [c for _, c in both]
         sign = 1 if better.get(m) == "higher" else -1
         q1, q3 = quartiles(ps)
-        out[m] = {"parent": statistics.median(ps), "change": statistics.median(cs),
-                  "ratio": statistics.median(cs) / statistics.median(ps) if statistics.median(ps) else None,
-                  "wins": sum(1 for p, c in both if sign * (c - p) > 0),
-                  "pairs": len(both), "parent_iqr": q3 - q1}
+        pm, cm = statistics.median(ps), statistics.median(cs)
+        wins = sum(1 for p, c in both if sign * (c - p) > 0)
+        out[m] = {"parent": pm, "change": cm, "ratio": cm / pm if pm else None,
+                  "wins": wins, "pairs": len(both), "parent_iqr": q3 - q1}
+        if bounds and m in bounds:
+            out[m]["gain_shown"] = (len(both) >= 10 and 10 * wins >= 9 * len(both)
+                                    and sign * (cm - pm) > q3 - q1)
+            out[m]["within_bound"] = -sign * (cm - pm) <= bounds[m] * abs(pm)
     return out
 
 
@@ -129,6 +161,7 @@ def main():
     bench = json.loads((root / "BENCHMARK.json").read_text())
     seconds = bench["run_seconds"]
     better = {m["name"]: m["better"] for m in bench["end_to_end"] + bench["per_layer"]}
+    bounds = {m["name"]: m["bound"] for m in bench["end_to_end"]}
     seeds = [int(s) for s in a.seeds.split(",")]
     workloads = a.workloads.split(",")
 
@@ -150,10 +183,12 @@ def main():
                 for side, r in got.items():
                     failed[side] += 1 if r is None else r["failed"]
                 pairs.append((got["parent"], got["change"]))
+            detail = [(p and p["report"]["workload_metrics"], c and c["report"]["workload_metrics"])
+                      for p, c in pairs]
             report["workloads"][w] = {
-                "metrics": summarize([(p and p["metrics"], c and c["metrics"]) for p, c in pairs], better),
-                "detail": summarize([(p and p["report"]["workload_metrics"],
-                                      c and c["report"]["workload_metrics"]) for p, c in pairs], {}),
+                "metrics": summarize([(p and p["metrics"], c and c["metrics"]) for p, c in pairs],
+                                     better, bounds),
+                "detail": summarize(detail, rate_directions(detail)),
                 "failed": failed}
             report["failed"] += failed["parent"] + failed["change"]
         print(json.dumps(report, sort_keys=True))
