@@ -2298,6 +2298,275 @@ object Iceberg {
     }
   }
 
+  // -------------------------------------------------- snapshot producer
+
+  /** A manifest a commit wrote, as its list record needs it: `stats`
+    * holds (files, rows, bytes) of its entries per status (0 existing,
+    * 1 added, 2 deleted). */
+  private final case class WrittenManifest(path: HPath, length: Long, specId: Int,
+      content: Int, stats: Map[Int, (Int, Long, Long)], partitions: AnyRef) {
+    def stat(status: Int): (Int, Long, Long) = stats.getOrElse(status, (0, 0L, 0L))
+  }
+
+  /** Write `entries` as one manifest (`content` 0 data, 1 deletes)
+    * under `specId`; a data manifest gets its partition summaries. */
+  private def writeManifest(fs: FileSystem, root: HPath, entrySchema: org.apache.avro.Schema,
+      entries: Seq[GenericRecord], specId: Int, content: Int,
+      partNames: Seq[String]): WrittenManifest = {
+    val path = new HPath(metaDir(root),
+      s"${java.util.UUID.randomUUID()}-${if (content == 0) "m0" else "d0"}.avro")
+    val length = writeAvro(fs, path, entrySchema, entries)
+    val stats = entries.groupBy(_.get("status").asInstanceOf[Int]).map { case (status, es) =>
+      val files = es.map(_.get("data_file").asInstanceOf[GenericRecord])
+      status -> ((es.size, files.map(_.get("record_count").asInstanceOf[Long]).sum,
+        files.map(_.get("file_size_in_bytes").asInstanceOf[Long]).sum))
+    }
+    WrittenManifest(path, length, specId, content, stats,
+      if (content == 0) partitionSummariesOfEntries(entries, partNames) else null)
+  }
+
+  /** The one SNAPSHOT PRODUCER. Every commit that adds a snapshot —
+    * [[write]], the merge-on-read delete commit, [[rewriteManifests]],
+    * the copy-on-write and maintenance rewrite commit, and
+    * [[publishConverted]] — builds it here, over the head metadata it
+    * commits on (a new table's head is [[SnapshotProducer.initial]]).
+    * Iceberg's own library keeps this in one `SnapshotProducer` for the
+    * reason it exists here: the list record, the snapshot node and the
+    * head bookkeeping each have one correct shape, and hand-built
+    * copies drift apart (a v3 snapshot without `first-row-id`, `total-*`
+    * summaries lost after every delete or rewrite).
+    *
+    * Callers keep what is their own: which manifests they carry,
+    * rewrite or add, their list records' sequence numbers, the
+    * operation name and their [[OptimisticCommit]] role. The producer
+    * owns the snapshot id and sequence number, the list record (one
+    * constructor, one carry), the EXISTING/DELETED re-emission of a
+    * rewritten manifest's entries, the manifest list, the snapshot node
+    * (`first-row-id` on every v3 snapshot, the `total-*` summary),
+    * `next-row-id` advanced by the rows the commit assigns by
+    * inheritance, `current-snapshot-id` or the branch ref, the
+    * main-lineage `snapshot-log` and `last-updated-ms`. */
+  private final class SnapshotProducer(fs: FileSystem, root: HPath, head: JsonNode,
+      branch: Option[String] = None, val snapshotId: Long = SnapshotProducer.mintId()) {
+    private val seq = head.get("last-sequence-number").asLong + 1
+    private val v3 = head.get("format-version").asInt == 3
+    private val nextRowId =
+      Option(head.get("next-row-id")).filterNot(_.isNull).map(_.asLong).getOrElse(0L)
+    /** The snapshot this one follows: the branch head on a branch
+      * write (a new branch forks from main), else main's current. */
+    private val baseId: Option[Long] =
+      branch.flatMap(b => Option(head.path("refs").get(b))).map(_.get("snapshot-id").asLong)
+        .orElse(Option(head.get("current-snapshot-id")).filterNot(_.isNull).map(_.asLong))
+    private val base: Option[JsonNode] =
+      baseId.map(id => iterator(head.get("snapshots")).find(_.get("snapshot-id").asLong == id)
+        .getOrElse(throw new IllegalStateException(s"Iceberg: the head lists no snapshot $id")))
+    private val listed = scala.collection.mutable.ArrayBuffer.empty[GenericRecord]
+    private var assigned = 0L // rows this commit assigns ids by inheritance
+    private val delta = Array(0L, 0L, 0L) // data files, records, bytes: added minus removed
+
+    def baseManifests: Seq[GenericRecord] =
+      base.map(sn => readAvro(fs, new HPath(sn.get("manifest-list").asText))).getOrElse(Nil)
+
+    private def record(fill: GenericData.Record => Unit): Unit = {
+      val r = new GenericData.Record(manifestFileSchema)
+      fill(r)
+      listed += r
+    }
+
+    /** List `r` (a record of an earlier list) unchanged. */
+    def carry(r: GenericRecord): Unit =
+      record(c => manifestFileSchema.getFields.forEach(f => c.put(f.name(), avroOpt(r, f.name()).orNull)))
+
+    /** List a manifest this commit wrote. On v3, `assignRowIds` gives its
+      * inheriting rows the next free id range. */
+    def list(m: WrittenManifest, sequence: Long = seq, minSequence: Long = seq,
+        addedBy: Long = snapshotId, assignRowIds: Boolean = false): Unit = record { r =>
+      val Seq(added, existing, deleted) = Seq(1, 0, 2).map(m.stat)
+      r.put("manifest_path", m.path.toUri.getPath)
+      r.put("manifest_length", m.length)
+      r.put("partition_spec_id", m.specId)
+      r.put("content", m.content)
+      r.put("sequence_number", sequence)
+      r.put("min_sequence_number", minSequence)
+      r.put("added_snapshot_id", addedBy)
+      r.put("added_files_count", added._1)
+      r.put("existing_files_count", existing._1)
+      r.put("deleted_files_count", deleted._1)
+      r.put("added_rows_count", added._2)
+      r.put("existing_rows_count", existing._2)
+      r.put("deleted_rows_count", deleted._2)
+      r.put("partitions", m.partitions)
+      if (v3 && assignRowIds) { r.put("first_row_id", nextRowId + assigned); assigned += added._2 }
+      if (m.content == 0) {
+        delta(0) += added._1 - deleted._1
+        delta(1) += added._2 - deleted._2
+        delta(2) += added._3 - deleted._3
+      }
+    }
+
+    /** `live`, the live entries of the manifest `mf` lists, re-emitted
+      * under `entrySchema` for a manifest that replaces it: EXISTING,
+      * or DELETED by this snapshot where `removed` names the file, each
+      * with explicit sequence numbers and, on v3, its inherited
+      * `first_row_id` made explicit in the source's entry order — the
+      * new list record must not re-stamp either. */
+    def reemit(mf: GenericRecord, live: Seq[GenericRecord], entrySchema: org.apache.avro.Schema,
+        removed: String => Boolean = _ => false): Seq[GenericRecord] = {
+      val r2 = entrySchema.getField("data_file").schema()
+      val mSeq = avroOpt(mf, "sequence_number").map(_.asInstanceOf[Long]).getOrElse(0L)
+      val mFirstRow = avroOpt(mf, "first_row_id").map(_.asInstanceOf[Long])
+      var inherited = 0L
+      live.map { e =>
+        val dfr = e.get("data_file").asInstanceOf[GenericRecord]
+        val eSeq = Option(e.get("sequence_number")).map(_.asInstanceOf[Long]).getOrElse(mSeq)
+        val gone = removed(Hive.fsPathNoDecode(dfr.get("file_path").toString))
+        val ndf = recopy(dfr, r2)
+        if (avroOpt(dfr, "first_row_id").isEmpty) mFirstRow.foreach { first =>
+          ndf.put("first_row_id", first + inherited)
+          inherited += dfr.get("record_count").asInstanceOf[Long]
+        }
+        val ne = new GenericData.Record(entrySchema)
+        ne.put("status", if (gone) 2 else 0)
+        ne.put("snapshot_id", if (gone) snapshotId else e.get("snapshot_id"))
+        ne.put("sequence_number", eSeq)
+        ne.put("file_sequence_number", Option(e.get("file_sequence_number")).getOrElse(eSeq))
+        ne.put("data_file", ndf)
+        ne
+      }
+    }
+
+    /** Write the manifest list and add the snapshot to `meta` (a copy
+      * of the head, with whatever else the caller's commit changes).
+      * `summary` follows the operation in the snapshot summary. The
+      * `total-*` summary is the base's plus this commit's data-file
+      * delta; it is omitted when the base has none, unless the commit
+      * `replacesTable`. */
+    def commit(meta: ObjectNode, operation: String, summary: Seq[(String, String)] = Nil,
+        replacesTable: Boolean = false): ObjectNode = {
+      val listPath = new HPath(metaDir(root), s"snap-$snapshotId-manifest-list.avro")
+      writeAvro(fs, listPath, manifestFileSchema, listed.toSeq)
+      val now = System.currentTimeMillis()
+      meta.put("last-sequence-number", seq)
+      meta.put("last-updated-ms", now)
+      if (v3) meta.put("next-row-id", nextRowId + assigned)
+      val sn = meta.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshots")
+        .addObject()
+      sn.put("snapshot-id", snapshotId)
+      baseId.foreach(sn.put("parent-snapshot-id", _))
+      sn.put("timestamp-ms", now)
+      sn.put("sequence-number", seq)
+      if (v3) sn.put("first-row-id", nextRowId)
+      val su = sn.putObject("summary")
+      su.put("operation", operation)
+      summary.foreach { case (k, v) => su.put(k, v) }
+      // the spec-standard totals: readers take total-files-size as the
+      // EXACT planning size without opening a manifest
+      // ([[IcebergManifestListIndex.sizeInBytes]])
+      val baseTotals: Option[Seq[Long]] =
+        if (replacesTable) Some(Seq(0L, 0L, 0L))
+        else base.flatMap { b =>
+          val t = SnapshotProducer.Totals.flatMap(k =>
+            Option(b.path("summary").get(k)).flatMap(_.asText.toLongOption))
+          Option.when(t.size == 3)(t)
+        }
+      baseTotals.foreach(t => SnapshotProducer.Totals.indices.foreach(i =>
+        su.put(SnapshotProducer.Totals(i), (t(i) + delta(i)).toString)))
+      sn.put("manifest-list", listPath.toUri.getPath)
+      sn.put("schema-id", meta.get("current-schema-id").asInt)
+      branch match {
+        case None =>
+          meta.put("current-snapshot-id", snapshotId)
+          SnapshotProducer.logMain(meta, Seq(snapshotId), now)
+        case Some(b) =>
+          // a BRANCH write leaves main untouched and repoints (or
+          // creates) the branch ref — write-audit-publish's staging step
+          val refs =
+            if (meta.path("refs").isObject) meta.get("refs").asInstanceOf[ObjectNode]
+            else meta.putObject("refs")
+          refs.putObject(b).put("snapshot-id", snapshotId).put("type", "branch")
+      }
+      meta
+    }
+  }
+
+  private object SnapshotProducer {
+    val Totals = Seq("total-data-files", "total-records", "total-files-size")
+
+    def mintId(): Long = math.abs(java.util.UUID.randomUUID().getMostSignificantBits)
+
+    /** Append `ids` to the main-lineage `snapshot-log` at `now`. */
+    def logMain(meta: ObjectNode, ids: Seq[Long], now: Long): Unit = {
+      val log = meta.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshot-log")
+      ids.foreach(id => log.addObject().put("timestamp-ms", now).put("snapshot-id", id))
+    }
+
+    /** A new table's metadata before its first snapshot: schema 0 over
+      * `schema`, spec 0 over `partFields`, the unsorted order 0. */
+    def initial(root: HPath, formatVersion: Int, schema: StructType,
+        fieldIds: Map[String, Int], partFields: Seq[PartField]): ObjectNode = {
+      val m = Json.createObjectNode()
+      m.put("format-version", formatVersion)
+      if (formatVersion == 3) m.put("next-row-id", 0L)
+      m.put("table-uuid", java.util.UUID.randomUUID().toString)
+      m.put("location", root.toUri.getPath)
+      m.put("last-sequence-number", 0L)
+      m.put("last-updated-ms", System.currentTimeMillis())
+      m.put("last-column-id", fieldIds.values.max)
+      m.put("current-schema-id", 0)
+      addSchema(m.putArray("schemas"), 0, schema, fieldIds, Map.empty)
+      m.put("default-spec-id", 0)
+      addSpec(m.putArray("partition-specs"), 0, partFields, fieldIds)
+      m.put("last-partition-id", (partFields.map(_.fieldId) :+ 999).max)
+      m.put("default-sort-order-id", 0)
+      addUnsortedOrder(m.putArray("sort-orders"))
+      m.putObject("properties")
+      m.putArray("snapshots")
+      m.putArray("snapshot-log")
+      m.putArray("metadata-log")
+      m
+    }
+  }
+
+  /** Append schema `id` over `schema` to `schemas`. `defaults` (by
+    * field id) carries a prior schema's v3 `initial-default` /
+    * `write-default`: dropping them on a re-emitted field would flip
+    * pre-column rows back to null on the next read. */
+  private def addSchema(schemas: com.fasterxml.jackson.databind.node.ArrayNode, id: Int,
+      schema: StructType, fieldIds: Map[String, Int], defaults: Map[Int, JsonNode]): Unit = {
+    val node = schemas.addObject()
+    node.put("type", "struct"); node.put("schema-id", id)
+    val fields = node.putArray("fields")
+    schema.fields.foreach { f =>
+      val fn = fields.addObject()
+      fn.put("id", fieldIds(f.name)); fn.put("name", f.name)
+      fn.put("required", !f.nullable); fn.put("type", icebergType(f.dataType))
+      defaults.get(fieldIds(f.name)).foreach { pf =>
+        Seq("initial-default", "write-default").foreach { k =>
+          if (pf.hasNonNull(k)) fn.set[JsonNode](k, pf.get(k).deepCopy[JsonNode]()): Unit
+        }
+      }
+    }
+  }
+
+  /** Append partition spec `id` over `partFields` to `specs`. */
+  private def addSpec(specs: com.fasterxml.jackson.databind.node.ArrayNode, id: Int,
+      partFields: Seq[PartField], fieldIds: Map[String, Int]): Unit = {
+    val node = specs.addObject()
+    node.put("spec-id", id)
+    val fields = node.putArray("fields")
+    partFields.foreach { f =>
+      val pf = fields.addObject()
+      pf.put("name", f.name); pf.put("transform", f.transform.spec)
+      pf.put("source-id", fieldIds(f.source)); pf.put("field-id", f.fieldId)
+    }
+  }
+
+  /** Append the spec's unsorted order, id 0, to `orders`. */
+  private def addUnsortedOrder(orders: com.fasterxml.jackson.databind.node.ArrayNode): Unit = {
+    val order0 = orders.addObject()
+    order0.put("order-id", 0); order0.putArray("fields"): Unit
+  }
+
   // ------------------------------------------------------------- writer
 
   /** Write `df` as the next snapshot; returns its snapshot id.
@@ -2503,7 +2772,7 @@ object Iceberg {
       }
 
     // ---- metadata: ids, sequence numbers, snapshot
-    val snapshotId = math.abs(java.util.UUID.randomUUID().getMostSignificantBits)
+    val snapshotId = SnapshotProducer.mintId()
     // v3 VARIANT gate: a fresh table with a variant column MINTS v3
     // (the spec version that defines the type); an existing v2 table
     // must upgrade first — committing "variant" into v2 metadata would
@@ -2521,271 +2790,72 @@ object Iceberg {
     // ---- one new manifest with the added files — written ONCE; a
     // lost-race rebase (below) re-publishes the same manifest under a
     // recomputed sequence number (entries inherit from the list record)
-    val (manifestPath, manifestLen, partSummaries) = writeAddedManifest(
-      fs, root, moved, snapshotId, partFieldTriples, fieldIds, df.schema)
+    val manifest = writeAddedManifest(
+      fs, root, moved, snapshotId, specId, partFieldTriples, fieldIds, df.schema)
+    val added = Seq("added-data-files" -> moved.size.toString,
+      "added-records" -> moved.map(_.recordCount).sum.toString,
+      "added-files-size" -> moved.map(_.sizeInBytes).sum.toString)
 
-    // ---- one commit ATTEMPT against one observed head `pa`.
-    // Everything sequence-/version-derived lives in here so the
-    // optimistic-concurrency rebase can re-run it on a newer head.
+    /** The head `m` with what this write changes besides its snapshot. */
+    def evolved(m: JsonNode): ObjectNode = {
+      val meta = m.deepCopy[ObjectNode]()
+      // last-column-id is MONOTONIC (the spec's id-reuse guard): an
+      // overwrite that drops columns must not lower it, or a later
+      // evolution would mint an id an old schema in the history still binds
+      meta.put("last-column-id", math.max(fieldIds.values.max, m.get("last-column-id").asInt))
+      // a changed table schema (overwrite, mergeSchema evolution) joins
+      // the `schemas` list under a bumped schema-id — the spec's
+      // add-column evolution; an unchanged one keeps its id
+      if (cleanJson(schemaFromMeta(m)) != cleanJson(tableSchema)) {
+        val id = iterator(m.get("schemas")).map(_.get("schema-id").asInt).maxOption.fold(0)(_ + 1)
+        meta.put("current-schema-id", id)
+        addSchema(meta.withArray("schemas"), id, tableSchema, fieldIds,
+          iterator(currentSchemaNode(m).get("fields")).map(f => f.get("id").asInt -> f).toMap)
+      }
+      // every PRIOR spec stays (immutable — committed manifests key
+      // into them by id), then the minted one when new
+      meta.put("default-spec-id", specId)
+      if (mintNewSpec) addSpec(meta.withArray("partition-specs"), specId, partFields, fieldIds)
+      // monotonic, like last-column-id: partition field ids are never
+      // reused even if an overwrite retired the spec that held the max
+      meta.put("last-partition-id", (partFields.map(_.fieldId) :+ 999 :+
+        Option(m.get("last-partition-id")).filterNot(_.isNull).map(_.asInt).getOrElse(999)).max)
+      // SORT ORDERS stay ([[setSortOrder]]); an Overwrite that REPLACES
+      // the schema can drop the default order's source column: keep
+      // the declared orders (order ids are forever) but reset the
+      // default to 0 — a dangling default would make the NEXT write
+      // throw in sortFieldsOf, leaving the table unwritable until
+      // clearSortOrder
+      if (!meta.path("sort-orders").isArray || meta.get("sort-orders").size == 0)
+        addUnsortedOrder(meta.putArray("sort-orders"))
+      val oid = Option(meta.get("default-sort-order-id")).filterNot(_.isNull).map(_.asInt)
+        .getOrElse(0)
+      val newIds = fieldIds.values.toSet
+      val servable = oid == 0 || iterator(meta.get("sort-orders"))
+        .find(_.get("order-id").asInt == oid)
+        .exists(o => iterator(o.get("fields")).forall(f =>
+          newIds.contains(f.get("source-id").asInt)))
+      meta.put("default-sort-order-id", if (servable) oid else 0)
+      meta
+    }
+
+    // ---- one commit ATTEMPT against one observed head `pa` (none for
+    // a create). Everything sequence-/version-derived lives in here so
+    // the optimistic-concurrency rebase can re-run it on a newer head.
+    // An append carries the base's manifests (the branch head on a
+    // branch write) and adds the new one; an overwrite lists only it.
     def attemptCommit(pa: Option[(Long, JsonNode)]): (ObjectNode, Long) = {
-    val now = System.currentTimeMillis()
-    val lastSeq = pa.map(_._2.get("last-sequence-number").asLong).getOrElse(0L)
-    val seq = lastSeq + 1
-    // v3 ROW LINEAGE: this commit's rows get ids [next-row-id,
-    // next-row-id + added). The new data manifest records the range
-    // start explicitly (manifest_file.first_row_id) — carried
-    // manifests keep their own assignment (null for pre-upgrade ones:
-    // their rows have null lineage, the spec's upgraded-table shape)
-    val fv = pa.map(_._2.get("format-version").asInt).getOrElse(fv0)
-    val nextRowId: Long = pa
-      .flatMap(p => Option(p._2.get("next-row-id")).filterNot(_.isNull).map(_.asLong))
-      .getOrElse(0L)
-
-    // ---- manifest list: prior manifests (append) + the new one
-    // the append BASE: the branch head when writing to a branch (a
-    // new branch forks from the current snapshot), else current
-    val baseId: Option[Long] = pa.flatMap { case (_, m) =>
-      val branchHead = toBranch.flatMap(b =>
-        Option(m.get("refs")).filter(_.isObject).flatMap(r => Option(r.get(b)))
-          .map(_.get("snapshot-id").asLong))
-      branchHead.orElse(
-        if (m.hasNonNull("current-snapshot-id")) Some(m.get("current-snapshot-id").asLong)
-        else None)
+      val meta = pa.fold(SnapshotProducer.initial(root, fv0, tableSchema, fieldIds, partFields))(
+        p => evolved(p._2))
+      val p = new SnapshotProducer(fs, root, pa.fold[JsonNode](meta)(_._2), toBranch, snapshotId)
+      if (mode == SaveMode.Append) p.baseManifests.foreach(p.carry)
+      p.list(manifest, assignRowIds = true)
+      // caller-supplied summary properties — e.g. a streaming sink's
+      // (query-id, epoch) exactly-once watermark, the mechanism the
+      // spec's real streaming integrations use
+      (p.commit(meta, if (mode == SaveMode.Append) "append" else "overwrite",
+        added ++ summaryProps, replacesTable = pa.isEmpty || mode != SaveMode.Append), snapshotId)
     }
-    val priorManifests: Seq[GenericRecord] = pa match {
-      case Some((_, m)) if mode == SaveMode.Append && baseId.nonEmpty =>
-        val sn = iterator(m.get("snapshots"))
-          .find(_.get("snapshot-id").asLong == baseId.get).get
-        readAvro(fs, new HPath(sn.get("manifest-list").asText))
-      case _ => Nil
-    }
-    val newManifest = new GenericData.Record(manifestFileSchema)
-    newManifest.put("manifest_path", manifestPath.toUri.getPath)
-    newManifest.put("manifest_length", manifestLen)
-    newManifest.put("partition_spec_id", specId)
-    newManifest.put("content", 0) // data
-    newManifest.put("sequence_number", seq)
-    newManifest.put("min_sequence_number", seq)
-    newManifest.put("added_snapshot_id", snapshotId)
-    newManifest.put("added_files_count", moved.size)
-    newManifest.put("existing_files_count", 0)
-    newManifest.put("deleted_files_count", 0)
-    newManifest.put("added_rows_count", moved.map(_.recordCount).sum)
-    newManifest.put("existing_rows_count", 0L)
-    newManifest.put("deleted_rows_count", 0L)
-    newManifest.put("partitions", partSummaries)
-    if (fv == 3) newManifest.put("first_row_id", nextRowId)
-    // re-emit prior manifest records under the shared schema
-    val carried = priorManifests.map { r =>
-      val c = new GenericData.Record(manifestFileSchema)
-      manifestFileSchema.getFields.forEach(f => c.put(f.name(), r.get(f.name())))
-      c
-    }
-    val listPath = new HPath(metaDir(root), s"snap-$snapshotId-manifest-list.avro")
-    writeAvro(fs, listPath, manifestFileSchema, carried :+ newManifest)
-
-    // ---- new metadata.json (atomic create = the commit)
-    val meta = Json.createObjectNode()
-    meta.put("format-version", fv) // carried — a write never downgrades a v3 table
-    if (fv == 3) meta.put("next-row-id", nextRowId + moved.map(_.recordCount).sum)
-    meta.put("table-uuid", pa.map(_._2.get("table-uuid").asText)
-      .getOrElse(java.util.UUID.randomUUID().toString))
-    meta.put("location", root.toUri.getPath)
-    meta.put("last-sequence-number", seq)
-    meta.put("last-updated-ms", now)
-    // last-column-id is MONOTONIC (the spec's id-reuse guard): an
-    // overwrite that drops columns must not lower it, or a later
-    // evolution would mint an id an old schema in the history still binds
-    meta.put("last-column-id", math.max(fieldIds.values.max,
-      pa.map(_._2.get("last-column-id").asInt).getOrElse(0)))
-    // schema history: an UNCHANGED append carries the prior `schemas`
-    // list + current-schema-id verbatim; a changed table schema (first
-    // write, overwrite, mergeSchema evolution) joins the list under a
-    // bumped schema-id — the spec's add-column evolution
-    val priorSchemaNodes: Seq[JsonNode] = pa.toSeq.flatMap { case (_, m) =>
-      iterator(m.get("schemas")).toSeq
-    }
-    val priorCurId: Option[Int] = pa.map(_._2.get("current-schema-id").asInt)
-    val schemaUnchanged = pa.exists { case (_, m) =>
-      cleanJson(schemaFromMeta(m)) == cleanJson(tableSchema)
-    }
-    val curSchemaId: Int =
-      if (schemaUnchanged) priorCurId.get
-      else priorSchemaNodes.map(_.get("schema-id").asInt).maxOption.map(_ + 1).getOrElse(0)
-    meta.put("current-schema-id", curSchemaId)
-    val schemas = meta.putArray("schemas")
-    priorSchemaNodes.foreach(schemas.add)
-    if (!schemaUnchanged) {
-      // v3 DEFAULTS survive evolution: a changed schema re-emits its
-      // fields from the Spark StructType, and dropping a carried
-      // field's initial-default/write-default here would silently flip
-      // pre-column rows back to null on the next read
-      val priorFieldNodes: Map[Int, JsonNode] = pa.map { case (_, m) =>
-        iterator(currentSchemaNode(m).get("fields"))
-          .map(f => f.get("id").asInt -> f).toMap
-      }.getOrElse(Map.empty)
-      val schemaNode = schemas.addObject()
-      schemaNode.put("type", "struct"); schemaNode.put("schema-id", curSchemaId)
-      val fieldsArr = schemaNode.putArray("fields")
-      tableSchema.fields.foreach { f =>
-        val fn = fieldsArr.addObject()
-        fn.put("id", fieldIds(f.name)); fn.put("name", f.name)
-        fn.put("required", !f.nullable); fn.put("type", icebergType(f.dataType))
-        priorFieldNodes.get(fieldIds(f.name)).foreach { pf =>
-          Seq("initial-default", "write-default").foreach { k =>
-            if (pf.hasNonNull(k)) fn.set[JsonNode](k, pf.get(k).deepCopy[JsonNode]()): Unit
-          }
-        }
-      }
-    }
-    meta.put("default-spec-id", specId)
-    val specs = meta.putArray("partition-specs")
-    // every PRIOR spec carries verbatim (immutable — committed
-    // manifests key into them by id), then the minted one when new
-    pa.foreach { case (_, m) =>
-      if (m.hasNonNull("partition-specs"))
-        iterator(m.get("partition-specs")).foreach(sn =>
-          specs.add(sn.deepCopy[JsonNode]()): Unit)
-    }
-    if (mintNewSpec) {
-      val specN = specs.addObject()
-      specN.put("spec-id", specId)
-      val specFields = specN.putArray("fields")
-      partFields.foreach { f =>
-        val pf = specFields.addObject()
-        pf.put("name", f.name); pf.put("transform", f.transform.spec)
-        pf.put("source-id", fieldIds(f.source)); pf.put("field-id", f.fieldId)
-      }
-    }
-    // monotonic, like last-column-id: partition field ids are never
-    // reused even if an overwrite retired the spec that held the max
-    meta.put("last-partition-id", math.max(
-      partFields.map(_.fieldId).maxOption.getOrElse(999),
-      pa.flatMap(p => Option(p._2.get("last-partition-id"))
-        .filterNot(_.isNull).map(_.asInt)).getOrElse(999)))
-    // SORT ORDERS carry forward ([[setSortOrder]] — a write must not
-    // strip the table's declared order); a fresh table starts with
-    // order 0, the spec's unsorted order
-    pa.flatMap { case (_, m) =>
-      Option(m.get("sort-orders")).filter(n => n.isArray && n.size > 0)
-    } match {
-      case Some(po) =>
-        meta.set[JsonNode]("sort-orders", po.deepCopy[JsonNode]())
-        val priorOid = pa.flatMap { case (_, m) =>
-          Option(m.get("default-sort-order-id")).filterNot(_.isNull).map(_.asInt)
-        }.getOrElse(0)
-        // an Overwrite that REPLACES the schema can drop the default
-        // order's source column: keep the declared orders (order ids
-        // are forever) but reset the default to 0 — carrying a
-        // dangling default forward would make the NEXT write throw in
-        // sortFieldsOf, leaving the table unwritable until
-        // clearSortOrder
-        val newIds = fieldIds.values.toSet
-        val servable = priorOid == 0 || iterator(po)
-          .find(_.get("order-id").asInt == priorOid)
-          .exists(o => iterator(o.get("fields")).forall(f =>
-            newIds.contains(f.get("source-id").asInt)))
-        meta.put("default-sort-order-id", if (servable) priorOid else 0): Unit
-      case None =>
-        meta.put("default-sort-order-id", 0)
-        val orders = meta.putArray("sort-orders")
-        val order0 = orders.addObject()
-        order0.put("order-id", 0); order0.putArray("fields"): Unit
-    }
-    // table PROPERTIES carry forward (a converted table's
-    // name-mapping marker, user-set properties) — dropping them on
-    // every commit would silently strip behavior
-    val propsNode = meta.putObject("properties")
-    pa.foreach { case (_, m) =>
-      Option(m.get("properties")).filter(_.isObject).foreach(
-        _.properties().forEach(e => propsNode.set[JsonNode](e.getKey, e.getValue): Unit))
-      // named refs survive commits too — a write must not unpin tags
-      Option(m.get("refs")).filter(_.isObject).foreach(r =>
-        meta.set[JsonNode]("refs", r.deepCopy()): Unit)
-      // the spec's statistics lists carry too — entries are keyed by
-      // snapshot id, and a write must not strip an ANALYZE's
-      // published ndv from the snapshots that still have it
-      Seq("statistics", "partition-statistics").foreach { k =>
-        Option(m.get(k)).filter(n => n.isArray && n.size > 0)
-          .foreach(n => meta.set[JsonNode](k, n.deepCopy[JsonNode]()): Unit)
-      }
-    }
-    toBranch match {
-      case None => meta.put("current-snapshot-id", snapshotId): Unit
-      case Some(b) =>
-        // a BRANCH write leaves main untouched and repoints (or
-        // creates) the branch ref — the write-audit-publish pattern's
-        // staging step
-        meta.put("current-snapshot-id",
-          pa.map(_._2.get("current-snapshot-id").asLong).getOrElse(snapshotId)): Unit
-        val refsNode =
-          if (meta.hasNonNull("refs") && meta.get("refs").isObject)
-            meta.get("refs").asInstanceOf[ObjectNode]
-          else meta.putObject("refs")
-        val e = refsNode.putObject(b)
-        e.put("snapshot-id", snapshotId); e.put("type", "branch")
-    }
-    val snaps = meta.putArray("snapshots")
-    // carry prior snapshots (time travel), then the new one
-    pa.foreach { case (_, m) =>
-      iterator(m.get("snapshots")).foreach(sn => snaps.add(sn))
-    }
-    val snapNode = snaps.addObject()
-    snapNode.put("snapshot-id", snapshotId)
-    baseId.foreach(snapNode.put("parent-snapshot-id", _))
-    snapNode.put("timestamp-ms", now)
-    snapNode.put("sequence-number", seq)
-    if (fv == 3) snapNode.put("first-row-id", nextRowId)
-    val summary = snapNode.putObject("summary")
-    summary.put("operation", if (mode == SaveMode.Append) "append" else "overwrite")
-    // spec-standard metrics: added-* for this commit; total-* carried
-    // forward on append when the parent recorded them (an overwrite
-    // restarts the totals at its own adds). Readers use
-    // total-files-size as the EXACT planning size without opening a
-    // single manifest ([[IcebergManifestListIndex.sizeInBytes]]);
-    // other verbs simply omit totals and planning falls back to a
-    // row-count estimate — absence is never wrong, only coarser.
-    val addedBytes = moved.map(_.sizeInBytes).sum
-    val addedRecs = moved.map(_.recordCount).sum
-    summary.put("added-data-files", moved.size.toString)
-    summary.put("added-records", addedRecs.toString)
-    summary.put("added-files-size", addedBytes.toString)
-    val parentSummary: Option[JsonNode] = baseId.flatMap(bid => pa.flatMap { case (_, m) =>
-      iterator(m.get("snapshots")).find(_.get("snapshot-id").asLong == bid)
-        .flatMap(sn => Option(sn.get("summary")).filterNot(_.isNull))
-    })
-    def parentTotal(key: String): Option[Long] =
-      parentSummary.flatMap(s => Option(s.get(key)).filterNot(_.isNull))
-        .flatMap(v => v.asText.toLongOption)
-    val totals: Option[(Long, Long, Long)] =
-      if (mode != SaveMode.Append) Some((moved.size.toLong, addedRecs, addedBytes))
-      else for {
-        tf <- parentTotal("total-data-files")
-        tr <- parentTotal("total-records")
-        tb <- parentTotal("total-files-size")
-      } yield (tf + moved.size, tr + addedRecs, tb + addedBytes)
-    totals.foreach { case (tf, tr, tb) =>
-      summary.put("total-data-files", tf.toString)
-      summary.put("total-records", tr.toString)
-      summary.put("total-files-size", tb.toString): Unit
-    }
-    // caller-supplied summary properties — e.g. a streaming sink's
-    // (query-id, epoch) exactly-once watermark, the mechanism the
-    // spec's real streaming integrations use
-    summaryProps.foreach { case (k, v) => summary.put(k, v): Unit }
-    snapNode.put("manifest-list", listPath.toUri.getPath)
-    snapNode.put("schema-id", curSchemaId)
-    val slog = meta.putArray("snapshot-log")
-    pa.foreach { case (_, m) =>
-      iterator(m.get("snapshot-log")).foreach(e => slog.add(e))
-    }
-    if (toBranch.isEmpty) { // snapshot-log tracks the MAIN lineage only
-      val se = slog.addObject()
-      se.put("timestamp-ms", now); se.put("snapshot-id", snapshotId): Unit
-    }
-    meta.putArray("metadata-log")
-    (meta, snapshotId)
-    } // attemptCommit
 
     // OPTIMISTIC CONCURRENCY ([[OptimisticCommit]], the spec's commit
     // arbitration): the first attempt runs against the head this write
@@ -3153,18 +3223,12 @@ object Iceberg {
     * created atomically. `replaceDvFor` implements the v3 invariant of
     * at most ONE deletion vector per data file: carried delete
     * manifests holding a puffin entry for any of those (raw,
-    * manifest-convention) data-file paths are REWRITTEN without them —
-    * survivors re-emitted as EXISTING with their explicit sequence
-    * numbers — because the new merged DV supersedes them. On a v3
-    * table the new snapshot records `first-row-id` (unchanged
-    * `next-row-id`: a delete adds no rows). */
+    * manifest-convention) data-file paths are rewritten without them
+    * ([[carryWithoutDvs]]), because the new merged DV supersedes them. */
   private def commitDeleteFile(fs: FileSystem, root: HPath, metaV: Long, meta: JsonNode,
       s: Snapshot, entries: Seq[DeleteEntrySpec],
       replaceDvFor: Set[String] = Set.empty): Long = {
-    val path = root.toString
-    val fv = meta.get("format-version").asInt
-    val seq = meta.get("last-sequence-number").asLong + 1
-    val snapshotId = math.abs(java.util.UUID.randomUUID().getMostSignificantBits)
+    val p = new SnapshotProducer(fs, root, meta)
     val partFieldTriples: Seq[(String, DataType, Int)] = s.partFields.map { f =>
       (f.name, transformResultType(f.transform, s.schema(f.source).dataType), f.fieldId)
     }
@@ -3209,161 +3273,57 @@ object Iceberg {
       spec.contentSize.foreach(v => dfr.put("content_size_in_bytes", v))
       val e = new GenericData.Record(entrySchema)
       e.put("status", 1) // ADDED
-      e.put("snapshot_id", snapshotId)
+      e.put("snapshot_id", p.snapshotId)
       e.put("sequence_number", null) // inherited from the manifest list
       e.put("file_sequence_number", null)
       e.put("data_file", dfr)
       e
     }
-    val n = entries.map(_.recordCount).sum
-    val manifestPath = new HPath(metaDir(root), s"${java.util.UUID.randomUUID()}-d0.avro")
-    val manifestLen = writeAvro(fs, manifestPath, entrySchema, added)
-
-    // ---- manifest list: every current manifest carried (delete
-    // manifests minus any replaced DV entries) + the new delete one
-    val curSnapNode = iterator(meta.get("snapshots"))
-      .find(_.get("snapshot-id").asLong == s.snapshotId).get
-    val carried = readAvro(fs, new HPath(curSnapNode.get("manifest-list").asText)).flatMap { r =>
-      val c = new GenericData.Record(manifestFileSchema)
-      manifestFileSchema.getFields.forEach(f => c.put(f.name(), r.get(f.name())))
-      val isDeleteManifest = Option(r.get("content")).exists(_.asInstanceOf[Int] == 1)
-      if (replaceDvFor.isEmpty || !isDeleteManifest) Some(c)
-      else rewriteDeleteManifestWithoutDvs(fs, c, entrySchema, r2Schema, r102Schema,
-        mkEqIds, replaceDvFor)
+    val deletes = writeManifest(fs, root, entrySchema, added, s.defaultSpecId, content = 1, Nil)
+    p.baseManifests.foreach { r =>
+      if (replaceDvFor.isEmpty || !avroOpt(r, "content").contains(1)) p.carry(r)
+      else carryWithoutDvs(fs, root, p, r, entrySchema, replaceDvFor)
     }
-    val delManifest = new GenericData.Record(manifestFileSchema)
-    delManifest.put("manifest_path", manifestPath.toUri.getPath)
-    delManifest.put("manifest_length", manifestLen)
-    delManifest.put("partition_spec_id", s.defaultSpecId)
-    delManifest.put("content", 1) // deletes
-    delManifest.put("sequence_number", seq)
-    delManifest.put("min_sequence_number", seq)
-    delManifest.put("added_snapshot_id", snapshotId)
-    delManifest.put("added_files_count", entries.size)
-    delManifest.put("existing_files_count", 0)
-    delManifest.put("deleted_files_count", 0)
-    delManifest.put("added_rows_count", n)
-    delManifest.put("existing_rows_count", 0L)
-    delManifest.put("deleted_rows_count", 0L)
-    val listPath = new HPath(metaDir(root), s"snap-$snapshotId-manifest-list.avro")
-    writeAvro(fs, listPath, manifestFileSchema, carried :+ delManifest)
-
-    // ---- next metadata version: same schema/spec, one more snapshot
-    val now = System.currentTimeMillis()
-    val newMeta = meta.deepCopy[ObjectNode]()
-    newMeta.put("last-sequence-number", seq)
-    newMeta.put("last-updated-ms", now)
-    newMeta.put("current-snapshot-id", snapshotId)
-    val snapNode = newMeta.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshots")
-      .addObject()
-    snapNode.put("snapshot-id", snapshotId)
-    snapNode.put("parent-snapshot-id", s.snapshotId)
-    snapNode.put("timestamp-ms", now)
-    snapNode.put("sequence-number", seq)
-    // v3 row lineage: a delete adds no rows — first-row-id records the
-    // (unchanged) next-row-id, which the deepCopy above carries
-    if (fv == 3) snapNode.put("first-row-id",
-      Option(meta.get("next-row-id")).filterNot(_.isNull).map(_.asLong).getOrElse(0L))
-    snapNode.putObject("summary").put("operation", "delete")
-    snapNode.put("manifest-list", listPath.toUri.getPath)
-    snapNode.put("schema-id", meta.get("current-schema-id").asInt)
-    val se = newMeta.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshot-log")
-      .addObject()
-    se.put("timestamp-ms", now); se.put("snapshot-id", snapshotId)
-    commitMetadata(fs, root, metaV + 1, newMeta, path)
-    snapshotId
+    p.list(deletes)
+    // a delete adds no rows: on v3 the snapshot's first-row-id is the
+    // unchanged next-row-id
+    commitMetadata(fs, root, metaV + 1, p.commit(meta.deepCopy[ObjectNode](), "delete"),
+      root.toString)
+    p.snapshotId
   }
 
-  /** Rewrite one carried DELETE manifest without the puffin DV
-    * entries naming a replaced data file (the v3 one-DV-per-file
-    * invariant: a merged successor DV is being committed). Returns
-    * the updated manifest-list record — unchanged when nothing in it
-    * is replaced, None when every live entry was a replaced DV (the
-    * manifest disappears from the new list). Survivors re-emit as
-    * EXISTING with their EXPLICIT sequence numbers (they must not
-    * inherit the new commit's). */
-  private def rewriteDeleteManifestWithoutDvs(fs: FileSystem,
-      listRec: GenericData.Record, entrySchema: org.apache.avro.Schema,
-      r2Schema: org.apache.avro.Schema, r102Schema: org.apache.avro.Schema,
-      mkEqIds: Seq[Int] => AnyRef,
-      replaced: Set[String]): Option[GenericData.Record] = {
-    val mPath = new HPath(listRec.get("manifest_path").toString)
-    val listSeq = Option(listRec.get("sequence_number"))
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
-    val all = readAvro(fs, mPath)
+  /** Carry one DELETE manifest without the puffin DV entries naming a
+    * `replaced` data file (the v3 one-DV-per-file invariant: a merged
+    * successor DV is being committed): unchanged when nothing in it is
+    * replaced, dropped when every live entry was, else rewritten with
+    * the survivors re-emitted EXISTING under their explicit sequence
+    * numbers (they must not inherit the new commit's). */
+  private def carryWithoutDvs(fs: FileSystem, root: HPath, p: SnapshotProducer,
+      listRec: GenericRecord, entrySchema: org.apache.avro.Schema, replaced: Set[String]): Unit = {
+    def live(e: GenericRecord) = e.get("status").asInstanceOf[Int] != 2
     def isReplacedDv(e: GenericRecord): Boolean = {
       val df = e.get("data_file").asInstanceOf[GenericRecord]
-      e.get("status").asInstanceOf[Int] != 2 &&
-        df.get("file_format").toString.equalsIgnoreCase("PUFFIN") &&
+      live(e) && df.get("file_format").toString.equalsIgnoreCase("PUFFIN") &&
         avroOpt(df, "referenced_data_file").exists(r =>
           replaced.contains(Hive.fsPathNoDecode(r.toString)))
     }
-    val (dropped, keptEntries) = all.partition(isReplacedDv)
-    if (dropped.isEmpty) return Some(listRec)
-    val survivors = keptEntries.filter(_.get("status").asInstanceOf[Int] != 2).map { old =>
-      val effSeq = avroOpt(old, "sequence_number").map(_.asInstanceOf[Long]).getOrElse(listSeq)
-      val odf = old.get("data_file").asInstanceOf[GenericRecord]
-      val ndf = new GenericData.Record(r2Schema)
-      ndf.put("content", avroOpt(odf, "content").map(_.asInstanceOf[Int]).getOrElse(1))
-      ndf.put("file_path", odf.get("file_path").toString)
-      ndf.put("file_format", odf.get("file_format").toString)
-      ndf.put("partition", new GenericData.Record(r102Schema)) // null values: path-scoped
-      ndf.put("record_count", odf.get("record_count"))
-      ndf.put("file_size_in_bytes", odf.get("file_size_in_bytes"))
-      // survivors keep their recorded bounds (re-encoded under the new
-      // entry schema): dropping them would cost readers the
-      // file_path-bounds probe skip for the manifest's remaining life
-      def copyBounds(field: String): AnyRef =
-        if (odf.getSchema.getField(field) == null) null
-        else odf.get(field) match {
-          case l: java.util.List[_] if !l.isEmpty =>
-            val arrSchema = r2Schema.getField(field).schema().getTypes.get(1)
-            val arr = new java.util.ArrayList[GenericRecord]()
-            l.forEach { kvo =>
-              val kv0 = kvo.asInstanceOf[GenericRecord]
-              val kv = new GenericData.Record(arrSchema.getElementType)
-              kv.put("key", kv0.get("key"))
-              kv.put("value", kv0.get("value"))
-              arr.add(kv): Unit
-            }
-            new GenericData.Array(arrSchema, arr)
-          case _ => null
-        }
-      ndf.put("lower_bounds", copyBounds("lower_bounds"))
-      ndf.put("upper_bounds", copyBounds("upper_bounds"))
-      val eqIds: Seq[Int] = avroOpt(odf, "equality_ids") match {
-        case Some(l: java.util.List[_]) => l.toArray.toSeq.map(_.asInstanceOf[Int])
-        case _ => Nil
+    val all = readAvro(fs, new HPath(listRec.get("manifest_path").toString))
+    if (!all.exists(isReplacedDv)) p.carry(listRec)
+    else {
+      val survivors = all.filter(e => live(e) && !isReplacedDv(e))
+      if (survivors.nonEmpty) {
+        val r102 = entrySchema.getField("data_file").schema().getField("partition").schema()
+        val kept = p.reemit(listRec, survivors, entrySchema)
+        kept.foreach(_.get("data_file").asInstanceOf[GenericData.Record]
+          .put("partition", new GenericData.Record(r102))) // null values: path-scoped
+        val m = writeManifest(fs, root, entrySchema, kept,
+          listRec.get("partition_spec_id").asInstanceOf[Int], content = 1, Nil)
+        p.list(m.copy(partitions = listRec.get("partitions")),
+          sequence = listRec.get("sequence_number").asInstanceOf[Long],
+          minSequence = listRec.get("min_sequence_number").asInstanceOf[Long],
+          addedBy = listRec.get("added_snapshot_id").asInstanceOf[Long])
       }
-      ndf.put("equality_ids", mkEqIds(eqIds))
-      avroOpt(odf, "referenced_data_file").foreach(v => ndf.put("referenced_data_file", v.toString))
-      avroOpt(odf, "content_offset").foreach(v => ndf.put("content_offset", v))
-      avroOpt(odf, "content_size_in_bytes").foreach(v => ndf.put("content_size_in_bytes", v))
-      val e2 = new GenericData.Record(entrySchema)
-      e2.put("status", 0) // EXISTING
-      e2.put("snapshot_id", avroOpt(old, "snapshot_id").orNull)
-      e2.put("sequence_number", effSeq)
-      e2.put("file_sequence_number",
-        avroOpt(old, "file_sequence_number").map(_.asInstanceOf[Long]).getOrElse(effSeq))
-      e2.put("data_file", ndf)
-      e2
     }
-    if (survivors.isEmpty) return None
-    val newPath = new HPath(mPath.getParent, s"${java.util.UUID.randomUUID()}-d0.avro")
-    val newLen = writeAvro(fs, newPath, entrySchema, survivors)
-    val c = new GenericData.Record(manifestFileSchema)
-    manifestFileSchema.getFields.forEach(f => c.put(f.name(), listRec.get(f.name())))
-    c.put("manifest_path", newPath.toUri.getPath)
-    c.put("manifest_length", newLen)
-    c.put("added_files_count", 0)
-    c.put("existing_files_count", survivors.size)
-    c.put("deleted_files_count", 0)
-    c.put("added_rows_count", 0L)
-    c.put("existing_rows_count", survivors.map(
-      _.get("data_file").asInstanceOf[GenericRecord]
-        .get("record_count").asInstanceOf[Long]).sum)
-    c.put("deleted_rows_count", 0L)
-    Some(c)
   }
 
   /** COPY-ON-WRITE DELETE (`DELETE FROM t WHERE cond`, rewrite shape)
@@ -3724,10 +3684,8 @@ object Iceberg {
       .orElse(tableProperties(path).get("commit.manifest.target-size-bytes").map(_.toLong))
       .getOrElse(8L * 1024 * 1024)
     require(target > 0, "Iceberg.rewriteManifests: target size must be positive")
-    val curSnapNode = iterator(meta.get("snapshots"))
-      .find(_.get("snapshot-id").asLong == meta.get("current-snapshot-id").asLong).get
-    val listRecords = readAvro(fs, new HPath(curSnapNode.get("manifest-list").asText))
-    val (dataMfs, deleteMfs) = listRecords.partition(
+    val p = new SnapshotProducer(fs, root, meta)
+    val (dataMfs, deleteMfs) = p.baseManifests.partition(
       mf => avroOpt(mf, "content").map(_.asInstanceOf[Int]).getOrElse(0) == 0)
     val (small, big) = dataMfs.partition(
       _.get("manifest_length").asInstanceOf[Long] < target)
@@ -3765,98 +3723,24 @@ object Iceberg {
         sid -> manifestEntrySchema(fields.map(f =>
           (f.name, transformResultType(f.transform, schema(f.source).dataType), f.fieldId)))
       }.toMap
-    val snapshotId = math.abs(java.util.UUID.randomUUID().getMostSignificantBits)
-    val seq = meta.get("last-sequence-number").asLong + 1
-    val outManifests = scala.collection.mutable.ArrayBuffer.empty[GenericRecord]
-    def carry(mf: GenericRecord): Unit = {
-      val c = new GenericData.Record(manifestFileSchema)
-      manifestFileSchema.getFields.forEach(f2 => c.put(f2.name(), mf.get(f2.name())))
-      outManifests += c
-    }
-    (big ++ deleteMfs).foreach(carry)
+    (big ++ deleteMfs).foreach(p.carry)
     bins.foreach {
-      case (_, bin) if bin.size == 1 => carry(bin.head)
+      case (_, bin) if bin.size == 1 => p.carry(bin.head)
       case (binSpecId, bin) =>
         val entrySchema = entrySchemaOf(binSpecId)
-        val r2 = entrySchema.getField("data_file").schema()
-        var kept = 0; var keptRows = 0L
-        val merged = bin.flatMap { mf =>
-          val mSeq = avroOpt(mf, "sequence_number").map(_.asInstanceOf[Long]).getOrElse(0L)
-          val mFirstRow = avroOpt(mf, "first_row_id").map(_.asInstanceOf[Long])
-          var lineageAssigned = 0L
-          // status-2 (deleted) entries drop: they exist so incremental
-          // consumers see removals, and a replace commit is exactly
-          // where the spec allows aging them out
+        // status-2 (deleted) entries drop: they exist so incremental
+        // consumers see removals, and a replace commit is exactly
+        // where the spec allows aging them out
+        val merged = bin.flatMap(mf => p.reemit(mf,
           readAvro(fs, new HPath(mf.get("manifest_path").toString))
-            .filter(_.get("status").asInstanceOf[Int] != 2).map { e =>
-              val dfr = e.get("data_file").asInstanceOf[GenericRecord]
-              val eSeq = Option(e.get("sequence_number"))
-                .map(_.asInstanceOf[Long]).getOrElse(mSeq)
-              val rc = dfr.get("record_count").asInstanceOf[Long]
-              kept += 1; keptRows += rc
-              val ndf = recopy(dfr, r2)
-              // v3: the merged list record cannot assign id ranges, so
-              // materialize each inherited first_row_id explicitly, in
-              // the SOURCE manifest's entry order
-              if (avroOpt(dfr, "first_row_id").isEmpty) mFirstRow.foreach { base =>
-                ndf.put("first_row_id", base + lineageAssigned)
-                lineageAssigned += rc
-              }
-              val ne = new GenericData.Record(entrySchema)
-              ne.put("status", 0) // EXISTING
-              ne.put("snapshot_id", e.get("snapshot_id"))
-              ne.put("sequence_number", eSeq)
-              ne.put("file_sequence_number",
-                Option(e.get("file_sequence_number")).getOrElse(eSeq))
-              ne.put("data_file", ndf)
-              ne
-            }
-        }
-        val newPath = new HPath(metaDir(root), s"${java.util.UUID.randomUUID()}-m0.avro")
-        val len = writeAvro(fs, newPath, entrySchema, merged)
-        val rec = new GenericData.Record(manifestFileSchema)
-        rec.put("manifest_path", newPath.toUri.getPath)
-        rec.put("manifest_length", len)
-        rec.put("partition_spec_id", binSpecId)
-        rec.put("content", 0)
-        rec.put("sequence_number", seq)
-        rec.put("min_sequence_number", bin.map(mf =>
-          avroOpt(mf, "min_sequence_number").map(_.asInstanceOf[Long]).getOrElse(0L)).min)
-        rec.put("added_snapshot_id", snapshotId)
-        rec.put("added_files_count", 0)
-        rec.put("existing_files_count", kept)
-        rec.put("deleted_files_count", 0)
-        rec.put("added_rows_count", 0L)
-        rec.put("existing_rows_count", keptRows)
-        rec.put("deleted_rows_count", 0L)
-        rec.put("partitions", partitionSummariesOfEntries(merged,
-          allSpecs.getOrElse(binSpecId, Nil).map(_.name)))
-        outManifests += rec
+            .filter(_.get("status").asInstanceOf[Int] != 2), entrySchema))
+        p.list(writeManifest(fs, root, entrySchema, merged, binSpecId, content = 0,
+            allSpecs.getOrElse(binSpecId, Nil).map(_.name)),
+          minSequence = bin.map(mf => avroOpt(mf, "min_sequence_number")
+            .map(_.asInstanceOf[Long]).getOrElse(0L)).min)
     }
-    val listPath = new HPath(metaDir(root), s"snap-$snapshotId-manifest-list.avro")
-    writeAvro(fs, listPath, manifestFileSchema, outManifests.toSeq)
-    val now = System.currentTimeMillis()
-    val newMeta = meta.deepCopy[ObjectNode]()
-    newMeta.put("last-sequence-number", seq)
-    newMeta.put("last-updated-ms", now)
-    newMeta.put("current-snapshot-id", snapshotId)
-    val snapNode = newMeta.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshots")
-      .addObject()
-    snapNode.put("snapshot-id", snapshotId)
-    snapNode.put("parent-snapshot-id", meta.get("current-snapshot-id").asLong)
-    snapNode.put("timestamp-ms", now)
-    snapNode.put("sequence-number", seq)
-    // row lineage: every merged entry carries an explicit first_row_id
-    // (or had none to begin with) — next-row-id is untouched
-    snapNode.putObject("summary").put("operation", "replace")
-    snapNode.put("manifest-list", listPath.toUri.getPath)
-    snapNode.put("schema-id", meta.get("current-schema-id").asInt)
-    val se = newMeta.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshot-log")
-      .addObject()
-    se.put("timestamp-ms", now); se.put("snapshot-id", snapshotId)
-    commitMetadata(fs, root, metaV + 1, newMeta, path)
-    (dataMfs.size, outManifests.count(mf =>
-      avroOpt(mf, "content").map(_.asInstanceOf[Int]).getOrElse(0) == 0))
+    commitMetadata(fs, root, metaV + 1, p.commit(meta.deepCopy[ObjectNode](), "replace"), path)
+    (dataMfs.size, big.size + bins.size)
   }
 
   /** Re-emit a GenericRecord under a (possibly wider) target schema by
@@ -3931,13 +3815,11 @@ object Iceberg {
     // OLD-spec manifest re-emits its survivors under ITS OWN spec (the
     // partition sub-record layouts differ — mixing them would
     // serialize old records against the wrong Avro schema)
-    val partFieldTriples: Seq[(String, DataType, Int)] = partFields.map { f =>
-      (f.name, transformResultType(f.transform, schema(f.source).dataType), f.fieldId)
-    }
     def triplesOf(sid: Int): Seq[(String, DataType, Int)] =
       allSpecs.getOrElse(sid, partFields).map { f =>
         (f.name, transformResultType(f.transform, schema(f.source).dataType), f.fieldId)
       }
+    val partFieldTriples = triplesOf(defaultSpecId)
     val stageIds = fieldIds ++ (if (fv == 3)
       Map(RowIdCol -> RowIdFieldId, LastUpdCol -> LastUpdFieldId) else Map.empty)
     val added0 = newData.map(df =>
@@ -3951,174 +3833,45 @@ object Iceberg {
     // ids assigned by inheritance from their own manifest's range
     val fresh = freshData.map(df =>
       stageWithTransforms(spark, df, fs, root, partFields, fieldIds)).getOrElse(Nil)
-    val freshRows = fresh.map(_.recordCount).sum
-    // v3 sync commits (preStaged, no newData): the mirrored files mint
-    // a fresh inherited id range, like any append's rows
-    val syncAddedRows: Long =
-      if (fv == 3 && newData.isEmpty && preStaged.nonEmpty)
-        preStaged.map(_.recordCount).sum
-      else 0L
 
     // everything ABOVE staged once; everything BELOW (manifest carry,
     // list, metadata) rebuilds per commit attempt against the head
     // metadata it commits on — the OCC rebase re-does only metadata
     // work, never the data staging
-    def attempt(headV: Long, headMeta: JsonNode): (ObjectNode, Long) = {
-    val snapshotId = math.abs(java.util.UUID.randomUUID().getMostSignificantBits)
-    val seq = headMeta.get("last-sequence-number").asLong + 1
-    val nextRowId: Long =
-      Option(headMeta.get("next-row-id")).filterNot(_.isNull).map(_.asLong).getOrElse(0L)
-    val curSnapNode = iterator(headMeta.get("snapshots"))
-      .find(_.get("snapshot-id").asLong == headMeta.get("current-snapshot-id").asLong).get
-    val outManifests = scala.collection.mutable.ArrayBuffer.empty[GenericRecord]
-    readAvro(fs, new HPath(curSnapNode.get("manifest-list").asText)).foreach { mf =>
-      val mContent = mf.get("content").asInstanceOf[Int]
-      val mSeq = mf.get("sequence_number").asInstanceOf[Long]
-      def carry(): Unit = {
-        val c = new GenericData.Record(manifestFileSchema)
-        manifestFileSchema.getFields.forEach(f2 => c.put(f2.name(), mf.get(f2.name())))
-        outManifests += c
-      }
-      if (mContent == 1) { if (!dropDeleteManifests) carry() }
-      else {
-        val live = readAvro(fs, new HPath(mf.get("manifest_path").toString))
-          .filter(_.get("status").asInstanceOf[Int] != 2)
-        val touched = live.exists(e => removedAbs.contains(Hive.fsPathNoDecode(
-          e.get("data_file").asInstanceOf[GenericRecord].get("file_path").toString)))
-        if (!touched) carry()
+    def attempt(headMeta: JsonNode): (ObjectNode, Long) = {
+      val p = new SnapshotProducer(fs, root, headMeta)
+      p.baseManifests.foreach { mf =>
+        if (mf.get("content").asInstanceOf[Int] == 1) { if (!dropDeleteManifests) p.carry(mf) }
         else {
-          val mfSpecId = avroOpt(mf, "partition_spec_id")
-            .map(_.asInstanceOf[Int]).getOrElse(defaultSpecId)
-          val entrySchema = manifestEntrySchema(triplesOf(mfSpecId))
-          val r2 = entrySchema.getField("data_file").schema()
-          val mFirstRow = avroOpt(mf, "first_row_id").map(_.asInstanceOf[Long])
-          var kept = 0; var dropped = 0
-          var keptRows = 0L; var droppedRows = 0L
-          // v3: the rewrite makes every entry EXISTING/DELETED, so the
-          // list-level id range can no longer assign — stamp each
-          // surviving entry's inherited first_row_id EXPLICITLY, in the
-          // original entry order, before the order is disturbed
-          var lineageAssigned = 0L
-          val rewritten = live.map { e =>
-            val dfr = e.get("data_file").asInstanceOf[GenericRecord]
-            val eSeq = Option(e.get("sequence_number"))
-              .map(_.asInstanceOf[Long]).getOrElse(mSeq)
-            val removed = removedAbs.contains(
-              Hive.fsPathNoDecode(dfr.get("file_path").toString))
-            val rc = dfr.get("record_count").asInstanceOf[Long]
-            if (removed) { dropped += 1; droppedRows += rc }
-            else { kept += 1; keptRows += rc }
-            // re-emit under the CURRENT entry schema by name — the old
-            // record may predate this schema's newer optional fields
-            val ndf = recopy(dfr, r2)
-            if (avroOpt(dfr, "first_row_id").isEmpty) mFirstRow.foreach { base =>
-              ndf.put("first_row_id", base + lineageAssigned)
-              lineageAssigned += rc
-            }
-            val ne = new GenericData.Record(entrySchema)
-            ne.put("status", if (removed) 2 else 0)
-            ne.put("snapshot_id", if (removed) snapshotId else e.get("snapshot_id"))
-            ne.put("sequence_number", eSeq)
-            ne.put("file_sequence_number",
-              Option(e.get("file_sequence_number")).getOrElse(eSeq))
-            ne.put("data_file", ndf)
-            ne
+          val live = readAvro(fs, new HPath(mf.get("manifest_path").toString))
+            .filter(_.get("status").asInstanceOf[Int] != 2)
+          val touched = live.exists(e => removedAbs.contains(Hive.fsPathNoDecode(
+            e.get("data_file").asInstanceOf[GenericRecord].get("file_path").toString)))
+          if (!touched) p.carry(mf)
+          else {
+            // the manifest re-emits under ITS OWN spec, its entries
+            // re-marked DELETED where removed, EXISTING otherwise
+            val mfSpecId = avroOpt(mf, "partition_spec_id")
+              .map(_.asInstanceOf[Int]).getOrElse(defaultSpecId)
+            val entrySchema = manifestEntrySchema(triplesOf(mfSpecId))
+            p.list(writeManifest(fs, root, entrySchema,
+                p.reemit(mf, live, entrySchema, removedAbs.contains), mfSpecId, content = 0,
+                allSpecs.getOrElse(mfSpecId, Nil).map(_.name)),
+              sequence = mf.get("sequence_number").asInstanceOf[Long],
+              minSequence = mf.get("min_sequence_number").asInstanceOf[Long])
           }
-          val newPath = new HPath(metaDir(root), s"${java.util.UUID.randomUUID()}-m0.avro")
-          val len = writeAvro(fs, newPath, entrySchema, rewritten)
-          val rec = new GenericData.Record(manifestFileSchema)
-          rec.put("manifest_path", newPath.toUri.getPath)
-          rec.put("manifest_length", len)
-          rec.put("partition_spec_id", mfSpecId)
-          rec.put("content", 0)
-          rec.put("sequence_number", mSeq)
-          rec.put("min_sequence_number", mf.get("min_sequence_number"))
-          rec.put("added_snapshot_id", snapshotId)
-          rec.put("added_files_count", 0)
-          rec.put("existing_files_count", kept)
-          rec.put("deleted_files_count", dropped)
-          rec.put("added_rows_count", 0L)
-          rec.put("existing_rows_count", keptRows)
-          rec.put("deleted_rows_count", droppedRows)
-          rec.put("partitions", partitionSummariesOfEntries(rewritten,
-            allSpecs.getOrElse(mfSpecId, Nil).map(_.name)))
-          outManifests += rec
         }
       }
+      // v3 row lineage: rewritten rows keep their ids via the
+      // materialized columns; a sync commit's mirrored rows (preStaged,
+      // no newData) and FRESH (inserted) rows take new id ranges, in
+      // that order, like any append's rows
+      if (added.nonEmpty) p.list(writeAddedManifest(fs, root, added, p.snapshotId,
+        defaultSpecId, partFieldTriples, fieldIds, schema), assignRowIds = newData.isEmpty)
+      if (fresh.nonEmpty) p.list(writeAddedManifest(fs, root, fresh, p.snapshotId,
+        defaultSpecId, partFieldTriples, fieldIds, schema), assignRowIds = true)
+      (p.commit(headMeta.deepCopy[ObjectNode](), operation), p.snapshotId)
     }
-    if (added.nonEmpty) {
-      val (mp, ml, summ) = writeAddedManifest(
-        fs, root, added, snapshotId, partFieldTriples, fieldIds, schema)
-      val rec = new GenericData.Record(manifestFileSchema)
-      rec.put("manifest_path", mp.toUri.getPath)
-      rec.put("manifest_length", ml)
-      rec.put("partition_spec_id", defaultSpecId)
-      rec.put("content", 0)
-      rec.put("sequence_number", seq)
-      rec.put("min_sequence_number", seq)
-      rec.put("added_snapshot_id", snapshotId)
-      rec.put("added_files_count", added.size)
-      rec.put("existing_files_count", 0)
-      rec.put("deleted_files_count", 0)
-      rec.put("added_rows_count", added.map(_.recordCount).sum)
-      rec.put("existing_rows_count", 0L)
-      rec.put("deleted_rows_count", 0L)
-      rec.put("partitions", summ)
-      // the sync path's fresh id range (see syncAddedRows above)
-      if (syncAddedRows > 0) rec.put("first_row_id", nextRowId)
-      outManifests += rec
-    }
-    if (fresh.nonEmpty) {
-      val (mp, ml, summ) = writeAddedManifest(
-        fs, root, fresh, snapshotId, partFieldTriples, fieldIds, schema)
-      val rec = new GenericData.Record(manifestFileSchema)
-      rec.put("manifest_path", mp.toUri.getPath)
-      rec.put("manifest_length", ml)
-      rec.put("partition_spec_id", defaultSpecId)
-      rec.put("content", 0)
-      rec.put("sequence_number", seq)
-      rec.put("min_sequence_number", seq)
-      rec.put("added_snapshot_id", snapshotId)
-      rec.put("added_files_count", fresh.size)
-      rec.put("existing_files_count", 0)
-      rec.put("deleted_files_count", 0)
-      rec.put("added_rows_count", freshRows)
-      rec.put("existing_rows_count", 0L)
-      rec.put("deleted_rows_count", 0L)
-      rec.put("partitions", summ)
-      // the fresh id range (after any sync adds' range)
-      if (fv == 3) rec.put("first_row_id", nextRowId + syncAddedRows)
-      outManifests += rec
-    }
-    val listPath = new HPath(metaDir(root), s"snap-$snapshotId-manifest-list.avro")
-    writeAvro(fs, listPath, manifestFileSchema, outManifests.toSeq)
-
-    val now = System.currentTimeMillis()
-    val newMeta = headMeta.deepCopy[ObjectNode]()
-    newMeta.put("last-sequence-number", seq)
-    newMeta.put("last-updated-ms", now)
-    newMeta.put("current-snapshot-id", snapshotId)
-    val snapNode = newMeta.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshots")
-      .addObject()
-    snapNode.put("snapshot-id", snapshotId)
-    snapNode.put("parent-snapshot-id", headMeta.get("current-snapshot-id").asLong)
-    snapNode.put("timestamp-ms", now)
-    snapNode.put("sequence-number", seq)
-    // v3 row lineage: rewritten rows keep their ids via the
-    // materialized columns; FRESH (inserted) rows and a sync commit's
-    // mirrored rows consume new ids
-    if (fv == 3) {
-      snapNode.put("first-row-id", nextRowId)
-      newMeta.put("next-row-id", nextRowId + syncAddedRows + freshRows)
-    }
-    snapNode.putObject("summary").put("operation", operation)
-    snapNode.put("manifest-list", listPath.toUri.getPath)
-    snapNode.put("schema-id", headMeta.get("current-schema-id").asInt)
-    val se = newMeta.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshot-log")
-      .addObject()
-    se.put("timestamp-ms", now); se.put("snapshot-id", snapshotId)
-    (newMeta, snapshotId)
-    } // attempt
 
     // OPTIMISTIC CONCURRENCY ([[OptimisticCommit]]) for MAINTENANCE
     // rewrites: a `replace` rewrite preserves the row set and reads
@@ -4130,7 +3883,7 @@ object Iceberg {
       if (operation == "replace") OptimisticCommit.Rewrite(removedAbs)
       else OptimisticCommit.Pinned(s"an '$operation' rewrite reads through a predicate")
     OptimisticCommit.run(s"Iceberg.$operation of $path", ours, (metaV, meta: JsonNode),
-        CommitIntrospect.icebergRewriteRebases) { case (v, m) => attempt(v, m) } {
+        CommitIntrospect.icebergRewriteRebases) { case (_, m) => attempt(m) } {
       case ((v, _), (newMeta, snapshotId)) =>
         commitMetadata(fs, root, v + 1, newMeta, path)
         snapshotId
@@ -4535,8 +4288,7 @@ object Iceberg {
     val m = meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]
     m.put("current-snapshot-id", snapshotId)
     m.put("last-updated-ms", now)
-    val e = m.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshot-log").addObject()
-    e.put("timestamp-ms", now); e.put("snapshot-id", snapshotId)
+    SnapshotProducer.logMain(m, Seq(snapshotId), now)
     commitMetadata(fs, root, metaV + 1, m, path)
     snapshotId
   }
@@ -4658,7 +4410,6 @@ object Iceberg {
     // parent chain to the first already-published snapshot), oldest
     // first — a checkpointed tail of main must deliver EVERY staged
     // commit, not just the head, or intermediate batches vanish
-    val slog = m.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshot-log")
     val logged: Set[Long] =
       iterator(meta.get("snapshot-log")).map(_.get("snapshot-id").asLong).toSet
     val parentOf: Map[Long, Option[Long]] = iterator(meta.get("snapshots")).map(sn =>
@@ -4667,10 +4418,7 @@ object Iceberg {
     val chain = Iterator.iterate(Option(head))(_.flatMap(parentOf.getOrElse(_, None)))
       .takeWhile(id => id.exists(!logged.contains(_)))
       .flatten.toSeq.reverse
-    chain.foreach { id =>
-      val e = slog.addObject()
-      e.put("timestamp-ms", now); e.put("snapshot-id", id): Unit
-    }
+    SnapshotProducer.logMain(m, chain, now)
     commitMetadata(fs, root, metaV + 1, m, path)
     head
   }
@@ -5169,8 +4917,8 @@ object Iceberg {
 
   /** EXPIRE SNAPSHOTS: drop every snapshot except the newest
     * `keepLast` from the metadata (a new metadata version — atomic
-    * like any commit) and delete the manifests and data files only
-    * the expired snapshots referenced. The spec's snapshot-expiration
+    * like any commit) and, once that version is published, delete the
+    * manifests and data files only the expired snapshots referenced. The spec's snapshot-expiration
     * operation: bounded metadata growth and storage reclamation, at
     * the cost of time travel past the horizon. Returns the number of
     * data files reclaimed. */
@@ -5215,14 +4963,6 @@ object Iceberg {
     // two expired snapshots routinely share manifests (append carries
     // them), and reading the second after deleting the first's would fail
     val expiredFiles = expired.map(filesOf)
-    var reclaimedData = 0
-    expired.zip(expiredFiles).foreach { case (sn, (ms, ds)) =>
-      ds.diff(keptData).foreach { p =>
-        if (fs.delete(new HPath(p), false)) reclaimedData += 1
-      }
-      ms.diff(keptManifests).foreach(p => fs.delete(new HPath(p), false))
-      fs.delete(new HPath(sn.get("manifest-list").asText), false)
-    }
     // new metadata version with only the kept snapshots
     val newMeta = meta.deepCopy[ObjectNode]()
     val snapsArr = newMeta.putArray("snapshots")
@@ -5233,17 +4973,29 @@ object Iceberg {
       .filter(e => keptIds.contains(e.get("snapshot-id").asLong)).foreach(logArr.add)
     // statistics entries of expired snapshots age out with them (the
     // spec keys the list by snapshot id); their Puffin files reclaim
-    Seq("statistics", "partition-statistics").foreach { k =>
-      if (newMeta.hasNonNull(k)) {
-        val keptStats = iterator(meta.get(k)).toSeq
+    val expiredStats = Seq("statistics", "partition-statistics").flatMap { k =>
+      if (!newMeta.hasNonNull(k)) Nil
+      else {
+        val (keptStats, gone) = iterator(meta.get(k)).toSeq
           .partition(e => keptIds.contains(e.get("snapshot-id").asLong))
-        keptStats._2.foreach(e => Option(e.get("statistics-path")).foreach(p =>
-          fs.delete(new HPath(p.asText), false): Unit))
         val sArr = newMeta.putArray(k)
-        keptStats._1.foreach(e => sArr.add(e.deepCopy[JsonNode]()): Unit)
+        keptStats.foreach(e => sArr.add(e.deepCopy[JsonNode]()): Unit)
+        gone.flatMap(e => Option(e.get("statistics-path")).map(_.asText))
       }
     }
+    // PUBLISH FIRST: until the new version is in, the head still lists
+    // the expired snapshots, and a crash or a lost race here must leave
+    // every one of them readable — so nothing is deleted before it
     publishMetadata(fs, root, metaV + 1, newMeta)
+    var reclaimedData = 0
+    expired.zip(expiredFiles).foreach { case (sn, (ms, ds)) =>
+      ds.diff(keptData).foreach { p =>
+        if (fs.delete(new HPath(p), false)) reclaimedData += 1
+      }
+      ms.diff(keptManifests).foreach(p => fs.delete(new HPath(p), false))
+      fs.delete(new HPath(sn.get("manifest-list").asText), false)
+    }
+    expiredStats.foreach(p => fs.delete(new HPath(p), false): Unit)
     reclaimedData
   }
 
@@ -5266,12 +5018,12 @@ object Iceberg {
     case _ => s
   }
 
-  /** Write a data manifest of ADDED entries for `files` (sequence
-    * numbers inherited from the manifest-list record). Shared by
-    * [[write]] and the copy-on-write rewrite paths. */
+  /** Write a data manifest of ADDED entries for `files` under spec
+    * `specId` (sequence numbers inherited from the manifest-list
+    * record). Shared by [[write]] and the copy-on-write rewrite paths. */
   private def writeAddedManifest(fs: FileSystem, root: HPath, files: Seq[DataFileRef],
-      snapshotId: Long, partFieldTriples: Seq[(String, DataType, Int)],
-      fieldIds: Map[String, Int], schema: StructType): (HPath, Long, AnyRef) = {
+      snapshotId: Long, specId: Int, partFieldTriples: Seq[(String, DataType, Int)],
+      fieldIds: Map[String, Int], schema: StructType): WrittenManifest = {
     val entrySchema = manifestEntrySchema(partFieldTriples)
     val r2Schema = entrySchema.getField("data_file").schema()
     val r102Schema = r2Schema.getField("partition").schema()
@@ -5312,10 +5064,7 @@ object Iceberg {
       e.put("data_file", dfr)
       e
     }
-    val manifestPath = new HPath(metaDir(root), s"${java.util.UUID.randomUUID()}-m0.avro")
-    val manifestLen = writeAvro(fs, manifestPath, entrySchema, entries)
-    (manifestPath, manifestLen,
-      partitionSummariesOfEntries(entries, partFieldTriples.map(_._1)))
+    writeManifest(fs, root, entrySchema, entries, specId, content = 0, partFieldTriples.map(_._1))
   }
 
   // ------------------------------------------- table statistics (Puffin)
@@ -5601,61 +5350,7 @@ object Iceberg {
     val partFields = partCols.zipWithIndex.map { case (c, i) =>
       PartField(c, c, TIdentity, 1000 + i)
     }
-    val now = System.currentTimeMillis()
-    val snapshotId = math.abs(java.util.UUID.randomUUID().getMostSignificantBits)
-    val partFieldTriples = partFields.map(f => (f.name, schema(f.source).dataType, f.fieldId))
-    val (manifestPath, manifestLen, partSummaries) = writeAddedManifest(
-      fs, root, files, snapshotId, partFieldTriples, fieldIds, schema)
-    val newManifest = new GenericData.Record(manifestFileSchema)
-    newManifest.put("manifest_path", manifestPath.toUri.getPath)
-    newManifest.put("manifest_length", manifestLen)
-    newManifest.put("partition_spec_id", 0)
-    newManifest.put("content", 0)
-    newManifest.put("sequence_number", 1L)
-    newManifest.put("min_sequence_number", 1L)
-    newManifest.put("added_snapshot_id", snapshotId)
-    newManifest.put("added_files_count", files.size)
-    newManifest.put("existing_files_count", 0)
-    newManifest.put("deleted_files_count", 0)
-    newManifest.put("added_rows_count", files.map(_.recordCount).sum)
-    newManifest.put("existing_rows_count", 0L)
-    newManifest.put("deleted_rows_count", 0L)
-    newManifest.put("partitions", partSummaries)
-    val listPath = new HPath(metaDir(root), s"snap-$snapshotId-manifest-list.avro")
-    writeAvro(fs, listPath, manifestFileSchema, Seq(newManifest))
-    val meta = Json.createObjectNode()
-    meta.put("format-version", 2)
-    meta.put("table-uuid", java.util.UUID.randomUUID().toString)
-    meta.put("location", root.toUri.getPath)
-    meta.put("last-sequence-number", 1L)
-    meta.put("last-updated-ms", now)
-    meta.put("last-column-id", fieldIds.values.max)
-    meta.put("current-schema-id", 0)
-    val schemas = meta.putArray("schemas")
-    val schemaNode = schemas.addObject()
-    schemaNode.put("type", "struct"); schemaNode.put("schema-id", 0)
-    val fieldsArr = schemaNode.putArray("fields")
-    schema.fields.foreach { f =>
-      val fn = fieldsArr.addObject()
-      fn.put("id", fieldIds(f.name)); fn.put("name", f.name)
-      fn.put("required", !f.nullable); fn.put("type", icebergType(f.dataType))
-    }
-    meta.put("default-spec-id", 0)
-    val specs = meta.putArray("partition-specs")
-    val spec0 = specs.addObject()
-    spec0.put("spec-id", 0)
-    val specFields = spec0.putArray("fields")
-    partFields.foreach { f =>
-      val pf = specFields.addObject()
-      pf.put("name", f.name); pf.put("transform", f.transform.spec)
-      pf.put("source-id", fieldIds(f.source)); pf.put("field-id", f.fieldId)
-    }
-    meta.put("last-partition-id", partFields.lastOption.map(_.fieldId).getOrElse(999))
-    meta.put("default-sort-order-id", 0)
-    val orders = meta.putArray("sort-orders")
-    val order0 = orders.addObject()
-    order0.put("order-id", 0); order0.putArray("fields")
-    val props = meta.putObject("properties")
+    val meta = SnapshotProducer.initial(root, 2, schema, fieldIds, partFields)
     // spec shape: [{"field-id": n, "names": ["col"]}, ...]
     val mapping = Json.createArrayNode()
     schema.fields.foreach { f =>
@@ -5663,22 +5358,13 @@ object Iceberg {
       e.put("field-id", fieldIds(f.name))
       e.putArray("names").add(f.name): Unit
     }
-    props.put("schema.name-mapping.default", Json.writeValueAsString(mapping))
-    meta.put("current-snapshot-id", snapshotId)
-    val snaps = meta.putArray("snapshots")
-    val snapNode = snaps.addObject()
-    snapNode.put("snapshot-id", snapshotId)
-    snapNode.put("timestamp-ms", now)
-    snapNode.put("sequence-number", 1L)
-    snapNode.putObject("summary").put("operation", "append")
-    snapNode.put("manifest-list", listPath.toUri.getPath)
-    snapNode.put("schema-id", 0)
-    val slog = meta.putArray("snapshot-log")
-    val se = slog.addObject()
-    se.put("timestamp-ms", now); se.put("snapshot-id", snapshotId)
-    meta.putArray("metadata-log")
-    publishMetadata(fs, root, 1L, meta)
-    snapshotId
+    meta.withObject("properties").put("schema.name-mapping.default",
+      Json.writeValueAsString(mapping))
+    val p = new SnapshotProducer(fs, root, meta)
+    p.list(writeAddedManifest(fs, root, files, p.snapshotId, 0,
+      partFields.map(f => (f.name, schema(f.source).dataType, f.fieldId)), fieldIds, schema))
+    publishMetadata(fs, root, 1L, p.commit(meta, "append", replacesTable = true))
+    p.snapshotId
   }
 
   /** [[stageDataFiles]] under a partition spec that may carry

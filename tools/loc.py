@@ -6,6 +6,14 @@ comments are excluded. Prints ONE JSON line:
 
 Usage: python3 tools/loc.py [repo_root]   (default: the current directory)
 
+With `--against REV` it compares the working tree with git revision REV
+(read through `git show`; the working tree is never touched) and prints
+
+    {"against": "REV", "total": [parent, change],
+     "files": {"src/main/...": [parent, change], ...}}
+
+listing only the files whose counts differ (0 for a file one side lacks).
+
 The lexer knows Scala/Java comments (`//`, nested `/* */`), string
 literals (plain, interpolated with `${...}` expressions, and
 triple-quoted across lines) and character literals, so comment markers
@@ -13,6 +21,7 @@ inside strings and lines inside multi-line strings count correctly.
 """
 import json
 import os
+import subprocess
 import sys
 
 SOURCE_SUFFIXES = (".scala", ".java")
@@ -109,8 +118,8 @@ def _char(line, i):
     return i + 1
 
 
-def main():
-    root = sys.argv[1] if len(sys.argv) > 1 else "."
+def tree_counts(root):
+    """Code lines per source file under `root`/src/main."""
     files = {}
     for dirpath, _, names in os.walk(os.path.join(root, "src", "main")):
         for name in names:
@@ -118,8 +127,37 @@ def main():
                 full = os.path.join(dirpath, name)
                 with open(full, encoding="utf-8") as fh:
                     files[os.path.relpath(full, root)] = code_lines(fh.read())
-    files = dict(sorted(files.items()))
-    print(json.dumps({"total": sum(files.values()), "files": files}, separators=(",", ":")))
+    return files
+
+
+def rev_counts(root, rev):
+    """Code lines per source file under src/main at git revision `rev`."""
+    def git(*args):
+        return subprocess.run(["git", "-C", root, *args], check=True,
+                              capture_output=True).stdout.decode("utf-8")
+    names = git("ls-tree", "-r", "--name-only", rev, "--", "src/main").splitlines()
+    return {n: code_lines(git("show", f"{rev}:{n}"))
+            for n in names if n.endswith(SOURCE_SUFFIXES)}
+
+
+def main():
+    args = sys.argv[1:]
+    rev = None
+    if "--against" in args:
+        i = args.index("--against")
+        rev = args[i + 1]
+        del args[i:i + 2]
+    root = args[0] if args else "."
+    files = tree_counts(root)
+    if rev is None:
+        files = dict(sorted(files.items()))
+        print(json.dumps({"total": sum(files.values()), "files": files}, separators=(",", ":")))
+        return
+    before = rev_counts(root, rev)
+    changed = {n: [before.get(n, 0), files.get(n, 0)]
+               for n in sorted(set(before) | set(files)) if before.get(n, 0) != files.get(n, 0)}
+    print(json.dumps({"against": rev, "total": [sum(before.values()), sum(files.values())],
+                      "files": changed}, separators=(",", ":")))
 
 
 if __name__ == "__main__":
