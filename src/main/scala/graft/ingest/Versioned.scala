@@ -1,6 +1,7 @@
 package graft.ingest
 
-import graft.interop.{CommitIntrospect, Evolve, MergeOnRead, OptimisticCommit, RewriteFiles}
+import graft.interop.{CommitIntrospect, Evolve, Identity, MergeOnRead, OptimisticCommit,
+  RewriteFiles}
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
@@ -615,8 +616,8 @@ object Versioned {
       val m = readMeta(fs, root, v)
       // identity watermark metadata is ERASED from the compare: a
       // rival append's ratchet is the same logical schema, and the
-      // caller re-runs its identity fill against the derived base
-      (m.get(SchemaKey).map(j => idHwmErased(
+      // caller conforms again on the derived base
+      (m.get(SchemaKey).map(j => Ids.hwmErased(
           asNullable(DataType.fromJson(j)).asInstanceOf[StructType]).json),
         m.get(ColIdsKey).map(parseColIds).getOrElse(Map.empty))
     }
@@ -627,7 +628,7 @@ object Versioned {
     def moved(head: Long): Boolean = want match {
       case Some(w) => mapping(head) != w
       case None => !mapping(head)._1.contains(
-        idHwmErased(asNullable(schema).asInstanceOf[StructType]).json)
+        Ids.hwmErased(asNullable(schema).asInstanceOf[StructType]).json)
     }
     OptimisticCommit.run(s"Versioned append to $path", OptimisticCommit.Append, base,
         CommitIntrospect.versionedRebases)(_ => ())((b, _) => (claimExact(fs, root, b), b)) { b =>
@@ -935,7 +936,8 @@ object Versioned {
     // overwrite: an omitted identity column generates past the
     // watermark (truncate never resets identity), an ALWAYS-carried
     // one refuses, and the declaration rides the republished schema
-    val df = prev.map(b => fillIdentity(df0, fs, root, b)._1).getOrElse(df0)
+    val df = prev.flatMap(metaSchema(fs, root, _)).fold(df0)(t =>
+      conformIdentity("Versioned.commit", df0, t, Identity.seenIn(df0)))
     val v = claimNext(fs, root, path)
     df.write.mode(SaveMode.Overwrite).parquet(dataDir(root, v).toString)
     val entries = localEntries(fs, root, v, partitioned = false)
@@ -1463,12 +1465,12 @@ object Versioned {
     require(statsCols.forall(c => !layout.contains(c)),
       s"Versioned.appendCommitPartitioned: statsCols must be data columns, not partition " +
         s"columns (${layout.mkString(", ")})")
-    val (df1, idGenerated) = fillIdentity(fillDefaults(df, fs, root, base), fs, root, base)
+    val seen = Identity.seenIn(df)
+    val df1 = conformAppend("Versioned.appendCommitPartitioned", df, fs, root, base, seen)
     val (v, derivedBase) = claimAppend(fs, root, path, base, df1.schema)
-    // identity re-stamp on a derived base — same rule as appendCommit
-    val dfW = if (idGenerated && derivedBase != base)
-      fillIdentity(fillDefaults(df, fs, root, derivedBase), fs, root, derivedBase)._1
-    else df1
+    // conformed again on a derived base — same rule as appendCommit
+    val dfW = if (derivedBase == base) df1
+      else conformAppend("Versioned.appendCommitPartitioned", df, fs, root, derivedBase, seen)
     dfW.write.mode(SaveMode.Overwrite).partitionBy(layout: _*)
       .parquet(dataDir(root, v).toString)
     val local = localEntries(fs, root, v, partitioned = true)
@@ -1485,19 +1487,19 @@ object Versioned {
     val (fs, root) = Writers.fsFor(path)
     fs.mkdirs(root)
     val base = currentVersion(path).getOrElse(0L)
-    val (df1, idGenerated) = fillIdentity(fillDefaults(df0, fs, root, base), fs, root, base)
+    val seen = Identity.seenIn(df0)
+    val df1 = conformAppend("Versioned.appendCommit", df0, fs, root, base, seen)
     // lost-update guard narrowed for the pure-add shape: a rival that
     // published under us (same schema mapping) is rebased over, so
     // concurrent same-schema feeds land without serializing
     val (v, derivedBase) = claimAppend(fs, root, path, base, df1.schema)
-    // identity re-stamp: the claim derived a NEWER base, so a rival
-    // may have advanced the watermark the fill generated from — re-run
-    // the fill against the derived base. The claim precedes the data
-    // write, so nothing is re-staged (cheaper than the post-staging
-    // re-stamp Delta's OCC needs).
-    val df = if (idGenerated && derivedBase != base)
-      fillIdentity(fillDefaults(df0, fs, root, derivedBase), fs, root, derivedBase)._1
-    else df1
+    // the claim derived a NEWER base: a rival may have advanced a
+    // watermark this append generates from or publishes, so it
+    // conforms again on the base it commits on. The claim precedes the
+    // data write, so nothing is re-staged (cheaper than the
+    // post-staging re-stamp Delta's OCC needs).
+    val df = if (derivedBase == base) df1
+      else conformAppend("Versioned.appendCommit", df0, fs, root, derivedBase, seen)
     df.write.mode(SaveMode.Overwrite).parquet(dataDir(root, v).toString)
     // O(delta) commit: only the fresh files are recorded; the base
     // manifest is never even read unless this commit folds a checkpoint.
@@ -1585,16 +1587,16 @@ object Versioned {
     val (fs, root) = Writers.fsFor(path)
     fs.mkdirs(root)
     val base = currentVersion(path).getOrElse(0L)
-    val (df1, idGenerated) = fillIdentity(fillDefaults(df0, fs, root, base), fs, root, base)
+    val seen = Identity.seenIn(df0)
+    val df1 = conformAppend("Versioned.appendCommitOnce", df0, fs, root, base, seen)
     val idx = batchIndexAt(fs, root, base)
     idx.get(batchId) match {
       case Some(v) => v // replay: already committed, skip
       case None =>
         val (v, derivedBase) = claimAppend(fs, root, path, base, df1.schema)
-        // identity re-stamp on a derived base — same rule as appendCommit
-        val df = if (idGenerated && derivedBase != base)
-          fillIdentity(fillDefaults(df0, fs, root, derivedBase), fs, root, derivedBase)._1
-        else df1
+        // conformed again on a derived base — same rule as appendCommit
+        val df = if (derivedBase == base) df1
+          else conformAppend("Versioned.appendCommitOnce", df0, fs, root, derivedBase, seen)
         // a rebase means rivals landed between the index read and the
         // claim — re-read the index AT THE DERIVED BASE before writing:
         // one of them may have been THIS batch replayed concurrently,
@@ -2194,12 +2196,12 @@ object Versioned {
     Writers.requireUniqueKeys("Versioned.upsert", updates, key)
     val (fs, root) = Writers.fsFor(path)
     val base = headOf(path, "upsert")
-    gateIdentityUpsert(spark, path, base, updates, key, "upsert")
+    gateIdentityMerge(spark, path, base, updates, key, "upsert")
     val merged = readAt(spark, path, base)
       .join(updates, Seq(key), "left_anti")
       .unionByName(updates)
     val v = rewriteFrom(fs, root, base, merged) // re-attaches declared metadata
-    ratchetIdentityAfter(spark, path, updates)
+    ratchetAfterMerge(path, updates)
     v
   }
 
@@ -2235,7 +2237,7 @@ object Versioned {
     Writers.requireUniqueKeys("Versioned.upsertPartitioned", updates, key)
     val (fs, root) = Writers.fsFor(path)
     val cur = headOf(path, "upsertPartitioned")
-    gateIdentityUpsert(spark, path, cur, updates, key, "upsertPartitioned")
+    gateIdentityMerge(spark, path, cur, updates, key, "upsertPartitioned")
     val entries = readManifest(fs, root, cur)
     require(entries.forall(_.kind == KindData),
       s"Versioned.upsertPartitioned: $path has outstanding merge-on-read deletes — " +
@@ -2287,7 +2289,7 @@ object Versioned {
     // are still valid there (disjoint rivals never touched them).
     val got = publishDelta(fs, root, v, derivedBase,
       adds = fresh, removes = touched.map(e => (e.partDir, e.relPath)), schema = merged.schema)
-    ratchetIdentityAfter(spark, path, updates)
+    ratchetAfterMerge(path, updates)
     got
   }
 
@@ -2489,6 +2491,7 @@ object Versioned {
       cond: Option[org.apache.spark.sql.Column]): Long = {
     val (fs, root) = Writers.fsFor(path)
     val base = headOf(path, "updateWhere")
+    metaSchema(fs, root, base).foreach(t => Ids.gateUpdate("Versioned.updateWhere", t, set.keys))
     val snap = readAt(spark, path, base)
     rewriteFrom(fs, root, base, snap.select(
       graft.interop.CopyOnWrite.assignments("Versioned.updateWhere", snap.schema, set, cond): _*))
@@ -2643,38 +2646,18 @@ object Versioned {
 
   // ------------------------------------------------- identity columns
   // the graft-native mirror of Delta's `identityColumns` writer
-  // feature: the declaration and high watermark live as field metadata
-  // in the published schema, appends that omit the column GENERATE
-  // contiguous values from the watermark ([[graft.core.IdentityGen]]),
-  // and the watermark rides the same commit
-  private val IdStartKey = "graft.identity.start"
-  private val IdStepKey = "graft.identity.step"
-  private val IdHwmKey = "graft.identity.highWaterMark"
-  private val IdAllowKey = "graft.identity.allowExplicitInsert"
-
-  /** Schema with identity high-watermark metadata ERASED — the
-    * claim-rebase schema compare must treat a rival's watermark
-    * ratchet as the SAME schema (the regeneration handles the ids). */
-  private def idHwmErased(s: StructType): StructType = StructType(s.fields.map { f =>
-    if (!f.metadata.contains(IdHwmKey)) f
-    else {
-      val mb = new org.apache.spark.sql.types.MetadataBuilder().withMetadata(f.metadata)
-      mb.remove(IdHwmKey)
-      f.copy(metadata = mb.build())
-    }
-  })
+  // feature, through the shared rules ([[Identity]]): the declaration
+  // and high watermark live as field metadata in the published schema
+  // under `graft.identity.`, and each watermark rides the commit that
+  // moves it
+  private val Ids = Identity.Versioned
 
   /** The table's identity declarations: column → (start, step,
     * allowExplicitInsert, high watermark). */
-  def identityColumns(path: String): Map[String, (Long, Long, Boolean, Option[Long])] = {
-    val (fs, root) = Writers.fsFor(path)
-    currentVersion(path).flatMap(v => metaSchema(fs, root, v)).map(_.fields.toSeq
-      .filter(_.metadata.contains(IdStartKey))
-      .map(f => f.name -> (f.metadata.getLong(IdStartKey), f.metadata.getLong(IdStepKey),
-        f.metadata.contains(IdAllowKey) && f.metadata.getBoolean(IdAllowKey),
-        if (f.metadata.contains(IdHwmKey)) Some(f.metadata.getLong(IdHwmKey)) else None))
-      .toMap).getOrElse(Map.empty)
-  }
+  def identityColumns(path: String): Map[String, (Long, Long, Boolean, Option[Long])] =
+    schemaOf(path).map(Ids.columns).getOrElse(Map.empty).map { case (n, (sp, h)) =>
+      n -> ((sp.start, sp.step, sp.allowExplicitInsert, h))
+    }
 
   /** Declare `name` as an IDENTITY column (GENERATED ALWAYS when
     * `allowExplicitInsert` is false, BY DEFAULT when true) — a
@@ -2683,31 +2666,23 @@ object Versioned {
     * column, and not defaulted. */
   def declareIdentity(spark: SparkSession, path: String, name: String,
       start: Long = 1L, step: Long = 1L, allowExplicitInsert: Boolean = false): Long = {
-    require(step != 0L, "Versioned.declareIdentity: step must be nonzero")
     val (fs, root, base, entries, schema, ids) = evolutionBase(path, "declareIdentity")
-    // row-emptiness, not file-emptiness: an empty CREATE commits a
-    // zero-row file whose presence must not block the declaration
-    require(entries.forall(_.kind != KindData) || read(spark, path).isEmpty,
-      s"Versioned.declareIdentity: $path already holds data — identity columns " +
-        "are declared at creation (empty-table-only)")
-    require(schema.fieldNames.contains(name),
-      s"Versioned.declareIdentity: no column '$name' in (${schema.fieldNames.mkString(", ")})")
-    val idx = schema.fieldIndex(name)
-    val f = schema.fields(idx)
-    require(f.dataType == org.apache.spark.sql.types.LongType,
-      s"Versioned.declareIdentity: identity columns must be BIGINT, $name is ${f.dataType.sql}")
-    require(!f.metadata.contains(CurrentDefaultKey),
-      s"Versioned.declareIdentity: $name already has a default — the fill rules would race")
-    require(!layoutPartCols(entries).contains(name),
-      s"Versioned.declareIdentity: $name is a partition column")
-    val nf = f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
-      .withMetadata(f.metadata).putLong(IdStartKey, start).putLong(IdStepKey, step)
-      .putBoolean(IdAllowKey, allowExplicitInsert).build())
+    val declared = Ids.declare("Versioned.declareIdentity", schema, name,
+      Identity.Spec(start, step, allowExplicitInsert), layoutPartCols(entries))(
+      entries.exists(_.kind == KindData) && !read(spark, path).isEmpty)
     val v = claimExact(fs, root, base)
-    publishDelta(fs, root, v, base, adds = Nil, removes = Nil,
-      schema = StructType(schema.fields.updated(idx, nf)),
+    publishDelta(fs, root, v, base, adds = Nil, removes = Nil, schema = declared,
       meta = Map(ColIdsKey -> renderColIds(ids)))
   }
+
+  /** `df` with the columns of `t` (matched case-insensitively) in its
+    * order, named and carrying field metadata as `t` does — the frame
+    * a commit publishes the schema of. */
+  private def withFieldsOf(df: DataFrame, t: StructType): DataFrame =
+    df.select(t.fields.toIndexedSeq.map { f =>
+      org.apache.spark.sql.functions.col(df.columns.find(_.equalsIgnoreCase(f.name)).get)
+        .as(f.name, f.metadata)
+    }: _*)
 
   /** Re-attach the TABLE's declared field metadata (identity
     * declarations, CURRENT_DEFAULT, ...) to a frame about to be
@@ -2718,139 +2693,66 @@ object Versioned {
     * the column sets diverge (schema-changing rewrites publish their
     * own shape). */
   private def withTableMetadata(df: DataFrame, fs: FileSystem, root: HPath,
-      base: Long): DataFrame = {
-    import org.apache.spark.sql.functions.col
+      base: Long): DataFrame =
     metaSchema(fs, root, base) match {
       case Some(t) if t.fields.exists(_.metadata != org.apache.spark.sql.types.Metadata.empty) &&
           t.fieldNames.map(_.toLowerCase).toSet == df.columns.map(_.toLowerCase).toSet =>
-        df.select(t.fields.toIndexedSeq.map { f =>
-          val src = df.columns.find(_.equalsIgnoreCase(f.name)).get
-          col(src).as(f.name, f.metadata)
-        }: _*)
+        withFieldsOf(df, t)
       case _ => df
     }
-  }
 
-  /** MERGE gates for identity columns — the graft-native mirror of the
-    * Delta rules: a GENERATED ALWAYS column forbids merge INSERTs
-    * (their ids would be user-chosen) and matched updates that CHANGE
-    * a row's id; both checks ride one aggregate over the joined update
-    * set, skipped entirely on non-identity tables. */
-  private def gateIdentityUpsert(spark: SparkSession, path: String, base: Long,
+  /** The merge gate ([[Identity.gateMerge]]) against the table at `base`. */
+  private def gateIdentityMerge(spark: SparkSession, path: String, base: Long,
       updates: DataFrame, key: String, op: String): Unit = {
-    import org.apache.spark.sql.functions.{col, count => fCount, lit, sum => fSum, when => fWhen}
     val (fs, root) = Writers.fsFor(path)
-    val table = metaSchema(fs, root, base).getOrElse(return)
-    val idFs = table.fields.toSeq.filter(f => f.metadata.contains(IdStartKey) &&
-      !(f.metadata.contains(IdAllowKey) && f.metadata.getBoolean(IdAllowKey)))
-    idFs.filter(f => updates.columns.exists(_.equalsIgnoreCase(f.name))).foreach { f =>
-      val cur = readAt(spark, path, base)
-        .select(col(key), col(f.name).as("__graft_cur_id"))
-      val probe = updates.select(col(key), col(f.name)).join(cur, Seq(key), "left")
-        .agg(
-          fSum(fWhen(col("__graft_cur_id").isNull, 1L).otherwise(0L)).as("ins"),
-          fSum(fWhen(col("__graft_cur_id").isNotNull &&
-            !(col(f.name) <=> col("__graft_cur_id")), 1L).otherwise(0L)).as("chg"),
-          fCount(lit(1)).as("n"))
-        .head()
-      require(probe.getAs[Long]("n") == 0L || probe.getAs[Long]("ins") == 0L,
-        s"Versioned.$op: ${f.name} is GENERATED ALWAYS AS IDENTITY — a merge " +
-          "INSERT would land explicit values (append through appendCommit to " +
-          "generate, or declare allowExplicitInsert)")
-      require(probe.getAs[Long]("chg") == 0L,
-        s"Versioned.$op: ${f.name} is GENERATED ALWAYS AS IDENTITY — a matched " +
-          "update must not change a row's identity value")
+    metaSchema(fs, root, base).foreach(t =>
+      Ids.gateMerge(s"Versioned.$op", t, updates, key, readAt(spark, path, base)))
+  }
+
+  /** Ratchet the BY-DEFAULT watermarks a landed merge of `updates`
+    * moved ([[Identity.mergeRatchets]]) — a metadata-only derived
+    * commit on the head, only when something moved. */
+  private def ratchetAfterMerge(path: String, updates: DataFrame): Unit = {
+    val (fs, root) = Writers.fsFor(path)
+    val head = currentVersion(path).getOrElse(return)
+    val table = metaSchema(fs, root, head).getOrElse(return)
+    val moved = Ids.ratcheted(table, Ids.mergeRatchets(table, updates),
+      Identity.seenIn(updates))
+    if (moved.nonEmpty) {
+      val v = claimExact(fs, root, head)
+      publishDelta(fs, root, v, head, adds = Nil, removes = Nil,
+        schema = Ids.withHwms(table, moved),
+        meta = Map(ColIdsKey -> renderColIds(colIdsOf(fs, root, head)))): Unit
     }
   }
 
-  /** Ratchet BY-DEFAULT identity watermarks past an update frame's
-    * extreme after a merge landed — O(updates), never O(table); a
-    * metadata-only derived commit, only when something moved. */
-  private def ratchetIdentityAfter(spark: SparkSession, path: String,
-      updates: DataFrame): Unit = {
-    import org.apache.spark.sql.functions.{col, max => fMax, min => fMin}
-    val (fs0, root0) = Writers.fsFor(path)
-    val curV = currentVersion(path).getOrElse(return)
-    val table = metaSchema(fs0, root0, curV).getOrElse(return)
-    val idFs = table.fields.toSeq.filter(f => f.metadata.contains(IdStartKey) &&
-      f.metadata.contains(IdAllowKey) && f.metadata.getBoolean(IdAllowKey) &&
-      updates.columns.exists(_.equalsIgnoreCase(f.name)))
-    if (idFs.isEmpty) return
-    val moved = idFs.flatMap { f =>
-      val (start, step) = (f.metadata.getLong(IdStartKey), f.metadata.getLong(IdStepKey))
-      val cur =
-        if (f.metadata.contains(IdHwmKey)) f.metadata.getLong(IdHwmKey)
-        else start - step
-      val agg = if (step > 0) fMax(col(f.name)) else fMin(col(f.name))
-      Option(updates.agg(agg).head().get(0)).map(_.asInstanceOf[Long])
-        .map(s2 => graft.core.IdentityGen.ratchet(start, step, cur, s2))
-        .filter(_ != cur).map(f.name -> _)
-    }.toMap
-    if (moved.isEmpty) return
-    val (fs, root, base2, _, schema, ids) = evolutionBase(path, "identityRatchet")
-    val newSchema = StructType(schema.fields.map(f => moved.get(f.name).map(h =>
-      f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
-        .withMetadata(f.metadata).putLong(IdHwmKey, h).build())).getOrElse(f)))
-    val v = claimExact(fs, root, base2)
-    publishDelta(fs, root, v, base2, adds = Nil, removes = Nil,
-      schema = newSchema, meta = Map(ColIdsKey -> renderColIds(ids))): Unit
-  }
+  /** Conform an append frame to the table at `b` — ONE schema read per
+    * attempt: omitted defaulted columns fill ([[fillDefaults]]), then
+    * the identity rules apply ([[conformIdentity]]). `seen` is the
+    * frame's [[Identity.seenIn]], shared by every attempt. */
+  private def conformAppend(op: String, df: DataFrame, fs: FileSystem, root: HPath, b: Long,
+      seen: (String, Identity.Spec) => Option[Long]): DataFrame =
+    (if (b == 0L) None else metaSchema(fs, root, b)).fold(df)(t =>
+      conformIdentity(op, fillDefaults(df, t), t, seen))
 
-  /** Conform an append frame to the table's identity contract against
-    * the schema AT `base`: generate omitted identity columns from the
-    * watermark, refuse explicit values under ALWAYS, ratchet the
-    * watermark past explicit BY-DEFAULT values (one max/min agg), and
-    * re-attach field metadata with the NEW watermark so the published
-    * schema carries it. Returns the conformed frame and whether any
-    * column was GENERATED (the append re-runs the fill when its claim
-    * derives a newer base — a rival may have advanced the watermark). */
-  private def fillIdentity(df: DataFrame, fs: FileSystem, root: HPath,
-      base: Long): (DataFrame, Boolean) = {
-    import org.apache.spark.sql.functions.{col, max => fmax, min => fmin}
-    if (base == 0L) return (df, false)
-    val tableOpt = metaSchema(fs, root, base)
-    if (tableOpt.isEmpty) return (df, false)
-    val table = tableOpt.get
-    val idFs = table.fields.toSeq.filter(_.metadata.contains(IdStartKey))
-    if (idFs.isEmpty) return (df, false)
-    def has(c: String) = df.columns.exists(_.equalsIgnoreCase(c))
-    var frame = df
-    var generated = false
-    var newMeta = Map.empty[String, org.apache.spark.sql.types.Metadata]
-    idFs.foreach { f =>
-      val (start, step) = (f.metadata.getLong(IdStartKey), f.metadata.getLong(IdStepKey))
-      val allow = f.metadata.contains(IdAllowKey) && f.metadata.getBoolean(IdAllowKey)
-      val cur =
-        if (f.metadata.contains(IdHwmKey))
-          graft.core.IdentityGen.ratchet(start, step, start - step,
-            f.metadata.getLong(IdHwmKey))
-        else start - step
-      def withHwm(h: Long) = new org.apache.spark.sql.types.MetadataBuilder()
-        .withMetadata(f.metadata).putLong(IdHwmKey, h).build()
-      if (has(f.name)) {
-        require(allow,
-          s"Versioned.appendCommit: ${f.name} is GENERATED ALWAYS AS IDENTITY — " +
-            "explicit values refuse (declare allowExplicitInsert to allow them)")
-        val agg = if (step > 0) fmax(col(f.name)) else fmin(col(f.name))
-        val seen = Option(df.agg(agg).head().get(0)).map(_.asInstanceOf[Long])
-        seen.map(s => graft.core.IdentityGen.ratchet(start, step, cur, s))
-          .filter(_ != cur).foreach(h => newMeta += f.name -> withHwm(h))
-      } else {
-        val (g, last) = graft.core.IdentityGen.assign(frame, f.name, cur, step)
-        frame = g; generated = true
-        if (last != cur) newMeta += f.name -> withHwm(last)
-      }
+  /** `df` under the identity rules of `table` ([[Identity.conform]];
+    * returned as is when the table declares none): the frame must hold
+    * exactly the table's columns, and its field metadata carries the
+    * watermarks this commit moves on `table`, so the published schema
+    * records them. */
+  private def conformIdentity(op: String, df: DataFrame, table: StructType,
+      seen: (String, Identity.Spec) => Option[Long]): DataFrame =
+    if (Ids.columns(table).isEmpty) df
+    else {
+      val c = Ids.conform(op, df, table)
+      val has = (n: String) => c.frame.columns.exists(_.equalsIgnoreCase(n))
+      val extra = c.frame.columns.filterNot(x => table.fieldNames.exists(_.equalsIgnoreCase(x)))
+      val missing = table.fieldNames.filterNot(has)
+      require(extra.isEmpty && missing.isEmpty,
+        s"$op: an identity table's append must match its columns exactly " +
+          s"(extra: ${extra.mkString(",")}; missing: ${missing.mkString(",")})")
+      withFieldsOf(c.frame, Ids.withHwms(table, Ids.published(table, c, seen)))
     }
-    val extra = frame.columns.filterNot(c => table.fieldNames.exists(_.equalsIgnoreCase(c)))
-    val missing = table.fields.filterNot(f => frame.columns.exists(_.equalsIgnoreCase(f.name)))
-    require(extra.isEmpty && missing.isEmpty,
-      s"Versioned.appendCommit: an identity table's append must match its columns " +
-        s"exactly (extra: ${extra.mkString(",")}; missing: ${missing.map(_.name).mkString(",")})")
-    (frame.select(table.fields.toIndexedSeq.map { f =>
-      val src = frame.columns.find(_.equalsIgnoreCase(f.name)).get
-      col(src).as(f.name, newMeta.getOrElse(f.name, f.metadata))
-    }: _*), generated)
-  }
 
   /** Conform an append frame to the table's defaults contract: fill
     * omitted CURRENT_DEFAULT columns with their folded constants and
@@ -2859,24 +2761,15 @@ object Versioned {
     * declared defaults). A frame that evolves the schema (new columns)
     * or omits a default-less column passes through untouched — the
     * existing evolution/refusal behavior owns those shapes. */
-  private def fillDefaults(df: DataFrame, fs: FileSystem, root: HPath,
-      base: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{col, expr}
-    if (base == 0L) return df
-    val tableOpt = metaSchema(fs, root, base)
-    if (tableOpt.isEmpty) return df
-    val table = tableOpt.get
+  private def fillDefaults(df: DataFrame, table: StructType): DataFrame = {
     if (!table.fields.exists(_.metadata.contains(CurrentDefaultKey))) return df
     def has(c: String) = df.columns.exists(_.equalsIgnoreCase(c))
     val missing = table.fields.filterNot(f => has(f.name))
     val extra = df.columns.filterNot(c => table.fieldNames.exists(_.equalsIgnoreCase(c)))
     if (extra.nonEmpty || missing.exists(!_.metadata.contains(CurrentDefaultKey))) return df
-    val filled = missing.foldLeft(df)((acc, f) => acc.withColumn(f.name,
-      expr(f.metadata.getString(CurrentDefaultKey)).cast(f.dataType)))
-    filled.select(table.fields.toIndexedSeq.map { f =>
-      val src = filled.columns.find(_.equalsIgnoreCase(f.name)).get
-      col(src).as(f.name, f.metadata)
-    }: _*)
+    withFieldsOf(missing.foldLeft(df)((acc, f) => acc.withColumn(f.name,
+      org.apache.spark.sql.functions.expr(f.metadata.getString(CurrentDefaultKey))
+        .cast(f.dataType))), table)
   }
 
   /** RESTORE: roll the table back to retained `version` by publishing

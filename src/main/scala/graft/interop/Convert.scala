@@ -175,10 +175,11 @@ object Convert {
 
   /** Re-SYNC a stale Iceberg layer from the Delta state — the
     * conversion is one-shot, so Delta-side writes leave the Iceberg
-    * metadata at the conversion-time snapshot; this DROPS the Iceberg
-    * metadata (its snapshot history with it — Delta is the source of
-    * truth here) and publishes it afresh. O(files) metadata, no data
-    * movement. */
+    * metadata at the conversion-time snapshot; this publishes the layer
+    * afresh as the next metadata version, which drops the snapshot
+    * history from the head (Delta is the source of truth here). Nothing
+    * is deleted: a crash before the publish leaves the stale layer
+    * readable. O(files) metadata, no data movement. */
   def resyncIceberg(spark: SparkSession, path: String): Long = {
     require(DeltaLake.isDeltaTable(path),
       s"Convert.resyncIceberg: $path has no Delta log to sync from")
@@ -186,9 +187,7 @@ object Convert {
     // mapping, unparseable stats, foreign paths) must leave the stale
     // but working layer untouched
     val (schema, partCols, files) = prepareDeltaToIceberg(spark, path)
-    val (fs, root) = Writers.fsFor(path)
-    fs.delete(new org.apache.hadoop.fs.Path(root, "metadata"), true): Unit
-    Iceberg.publishConverted(spark, path, schema, partCols, files)
+    Iceberg.publishConverted(spark, path, schema, partCols, files, replace = true)
   }
 
   /** Re-SYNC a stale Delta layer from the Iceberg state (drops the

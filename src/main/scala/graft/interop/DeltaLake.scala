@@ -1228,53 +1228,15 @@ object DeltaLake {
         else filled
       case None => dfIn
     }
-    // IDENTITY columns (the protocol's `identityColumns` writer
-    // feature): a frame CARRYING a GENERATED ALWAYS column refuses; an
-    // OMITTED identity column generates contiguous values from the
-    // high watermark ([[graft.core.IdentityGen]] — two distributed
-    // passes, O(partitions) driver bytes). Generation is re-runnable:
-    // identity values live IN the data files, so an OCC rebase that
-    // finds the rival advanced the watermark cannot fix the collision
-    // with metadata alone — it REGENERATES from the head's watermark
-    // and re-stages, the same re-stamp discipline row tracking applies
-    // to its id ranges (there at the add-action layer).
-    val idFields: Seq[StructField] =
-      prior.map(_.rawSchema.fields.toSeq.filter(_.metadata.contains(IdStartKey)))
-        .getOrElse(Nil)
-    idFields.filter(f => dfFilled.columns.contains(f.name)).foreach { f =>
-      require(identitySpec(f).exists(_.allowExplicitInsert),
-        s"DeltaLake.write: ${f.name} is GENERATED ALWAYS AS IDENTITY — explicit " +
-          "values refuse (declare BY DEFAULT AS IDENTITY to allow them)")
-    }
-    val idGenFields: Seq[StructField] =
-      idFields.filterNot(f => dfFilled.columns.contains(f.name))
-    // the watermark each generation attempt started from / reached —
-    // commitAttempt publishes the reached values in its metaData action
-    var idBases = Map.empty[String, Long]
-    var idHwms = Map.empty[String, Long]
-    def generateIdentity(p: Snapshot): DataFrame = {
-      idBases = Map.empty; idHwms = Map.empty
-      val out = idGenFields.foldLeft(dfFilled) { (acc, f) =>
-        val spec = identitySpec(f).get
-        val pf = p.rawSchema.fields.find(_.name == f.name).getOrElse(f)
-        // ratchet-normalize: a foreign writer may have left an
-        // off-grid watermark; generation resumes from the grid
-        val base = identityHwm(pf)
-          .map(h => graft.core.IdentityGen.ratchet(spec.start, spec.step,
-            spec.start - spec.step, h))
-          .getOrElse(spec.start - spec.step)
-        val (g, last) = graft.core.IdentityGen.assign(acc, f.name, base, spec.step)
-        idBases += f.name -> base
-        if (last != base) idHwms += f.name -> last
-        g
-      }
-      val tableNames = prior.get.schema.fieldNames.toSeq
-      if (out.columns.length == tableNames.length && out.columns.toSet == tableNames.toSet)
-        out.select(tableNames.map(org.apache.spark.sql.functions.col): _*)
-      else out
-    }
-    var df: DataFrame =
-      if (idGenFields.isEmpty) dfFilled else generateIdentity(prior.get)
+    // IDENTITY columns ([[Identity.conform]]): identity values live
+    // IN the data files, so an OCC rebase that finds the rival advanced
+    // a generated column's watermark cannot fix the collision with
+    // metadata alone — it conforms again on the head and re-stages, the
+    // same re-stamp discipline row tracking applies to its id ranges
+    // (there at the add-action layer)
+    var conformed =
+      Ids.conform("DeltaLake.write", dfFilled, prior.fold(new StructType())(_.rawSchema))
+    var df: DataFrame = conformed.frame
     // append inherits the table's partitioning when the caller names
     // none (the familiar Delta behavior); naming a DIFFERENT layout is
     // the loud error
@@ -1450,35 +1412,20 @@ object DeltaLake {
     } else if (needsVariant &&
         !prior.get.protocol.readerFeatures.contains("variantType"))
       lines += protocolLine(withReaderWriterFeature(prior.get.protocol, "variantType"))
-    // identity watermark ratchet, re-derived PER ATTEMPT: generated
-    // columns publish the watermark their assignment reached; a
-    // BY-DEFAULT column the frame carried ratchets past the staged
-    // files' recorded max (min for negative step) — free, the stats
-    // were already computed — so later generated values stay unique
-    val idExplicit: Map[String, Long] = idFields
-      .filter(f => df.columns.contains(f.name)).flatMap { f =>
-        val spec = identitySpec(f).get
-        val pf = priorForIds.flatMap(p => p.rawSchema.fields.find(_.name == f.name))
-          .getOrElse(f)
-        val cur = identityHwm(pf).getOrElse(spec.start - spec.step)
-        val phys = physName(f.name)
-        val seenPerFile = adds.flatMap(_.stats).flatMap { st =>
-          val side = if (spec.step > 0) "maxValues" else "minValues"
-          val v = Json.readTree(st).path(side).path(phys)
-          if (v.isNumber) Some(v.asLong) else None
-        }
-        val seen = if (seenPerFile.isEmpty) None
-          else Some(if (spec.step > 0) seenPerFile.max else seenPerFile.min)
-        seen.map(s => f.name ->
-            graft.core.IdentityGen.ratchet(spec.start, spec.step, cur, s))
-          .filter(_._2 != cur)
-      }.toMap
-    val idMeta = idHwms ++ idExplicit
-    val rawTableCommit =
-      if (idMeta.isEmpty) rawTable
-      else StructType(rawTable.fields.map(f => idMeta.get(f.name).map(h =>
-        f.copy(metadata = new MetadataBuilder().withMetadata(f.metadata)
-          .putLong(IdHwmKey, h).build())).getOrElse(f)))
+    // identity watermarks, re-derived PER ATTEMPT on the head it
+    // commits on: a carried BY-DEFAULT column ratchets past the staged
+    // files' recorded max (min for a negative step) — free, the stats
+    // were already computed — and a column this commit does not move
+    // keeps the head's watermark, not the base's
+    val idMeta = priorForIds.fold(Map.empty[String, Long])(h =>
+      Ids.published(h.rawSchema, conformed, (c, sp) => {
+        val side = if (sp.step > 0) "maxValues" else "minValues"
+        val perFile = adds.flatMap(_.stats).map(st => Json.readTree(st).path(side).path(physName(c)))
+          .filter(_.isNumber).map(_.asLong)
+        if (perFile.isEmpty) None else Some(if (sp.step > 0) perFile.max else perFile.min)
+      }))
+    val rawTableCommit = Ids.withHwms(rawTable,
+      priorForIds.fold(idMeta)(h => Ids.hwms(h.rawSchema) ++ idMeta))
     if (prior.isEmpty || mode == SaveMode.Overwrite || schemaChanged || idMeta.nonEmpty)
       lines += metaDataLine(prior.fold(newTableId())(_.id), rawTableCommit, partCols, now,
         newConf)
@@ -1539,25 +1486,17 @@ object DeltaLake {
     // append's watermark-only ratchet (the rebase re-stamps past it).
     // An overwrite or a create reads the whole table: never rebases.
     val idMetaCommutes: com.fasterxml.jackson.databind.JsonNode => Boolean =
-      m => idFields.nonEmpty && prior.exists(p => identityRatchetOnly(p, m))
+      m => prior.exists(p => Ids.columns(p.rawSchema).nonEmpty && identityRatchetOnly(p, m))
     val ours =
       if (prior.isEmpty) OptimisticCommit.Pinned("two creates of one table never commute")
       else if (mode == SaveMode.Overwrite) OptimisticCommit.Pinned("an overwrite reads the whole table")
       else OptimisticCommit.Append
-    // identity re-stamp: a rival advanced a generated column's
-    // watermark past the base this staging assigned from — the staged
-    // ids collide, and they live IN the files, so a rebase regenerates
-    // from the head's watermark and re-stages
-    def idsMoved(head: Snapshot): Boolean = idGenFields.exists { f =>
-      val spec = identitySpec(f).get
-      val pf = head.rawSchema.fields.find(_.name == f.name).getOrElse(f)
-      identityHwm(pf)
-        .map(h => graft.core.IdentityGen.ratchet(spec.start, spec.step, spec.start - spec.step, h))
-        .getOrElse(spec.start - spec.step) != idBases(f.name)
-    }
     val committed = OptimisticCommit.run(s"DeltaLake.write to $path", ours, (v, prior),
         CommitIntrospect.deltaRebases) { case (vTry, snapAt) =>
-      if (vTry != v && idsMoved(snapAt.get)) { df = generateIdentity(snapAt.get); adds0 = stage(df) }
+      if (vTry != v && Ids.stale(snapAt.get.rawSchema, conformed)) {
+        conformed = Ids.conform("DeltaLake.write", dfFilled, snapAt.get.rawSchema)
+        df = conformed.frame; adds0 = stage(df)
+      }
       attemptLines(vTry, snapAt)
     } { case ((vTry, _), lines) => commitLines(fs, root, vTry, lines, newConf); vTry } {
       case (lost, _) =>
@@ -2157,8 +2096,7 @@ object DeltaLake {
       s"DeltaLake.setGenerationExpression: $name is not a column of $path")
     val idx = snap.rawSchema.fieldIndex(name)
     val field = snap.rawSchema.fields(idx)
-    require(!field.metadata.contains("CURRENT_DEFAULT") &&
-      !field.metadata.contains(IdStartKey),
+    require(!field.metadata.contains("CURRENT_DEFAULT") && Ids.spec(field).isEmpty,
       s"DeltaLake.setGenerationExpression: $name already has a default or identity " +
         "declaration — the fill rules would race")
     val newField = field.copy(metadata = new MetadataBuilder()
@@ -2185,33 +2123,18 @@ object DeltaLake {
 
   // ------------------------------------------------- identity columns
 
-  /** One identity declaration: `GENERATED ALWAYS AS IDENTITY` when
-    * `allowExplicitInsert` is false, `GENERATED BY DEFAULT` when true. */
-  final case class IdentitySpec(start: Long = 1L, step: Long = 1L,
-      allowExplicitInsert: Boolean = false)
+  /** One identity declaration ([[Identity.Spec]]). */
+  type IdentitySpec = Identity.Spec
+  val IdentitySpec: Identity.Spec.type = Identity.Spec
 
   // the protocol's identity field-metadata keys (Delta spec, Identity
-  // Columns section): start/step/allowExplicitInsert are the
-  // declaration, highWaterMark is the last value handed out — absent
-  // until the first generation, ratcheted by every generating commit
-  private val IdStartKey = "delta.identity.start"
-  private val IdStepKey = "delta.identity.step"
-  private val IdHwmKey = "delta.identity.highWaterMark"
-  private val IdAllowKey = "delta.identity.allowExplicitInsert"
-
-  private[interop] def identitySpec(f: StructField): Option[IdentitySpec] =
-    if (!f.metadata.contains(IdStartKey)) None
-    else Some(IdentitySpec(f.metadata.getLong(IdStartKey), f.metadata.getLong(IdStepKey),
-      f.metadata.contains(IdAllowKey) && f.metadata.getBoolean(IdAllowKey)))
-
-  private def identityHwm(f: StructField): Option[Long] =
-    if (f.metadata.contains(IdHwmKey)) Some(f.metadata.getLong(IdHwmKey)) else None
+  // Columns section) under `delta.identity.`
+  private val Ids = Identity.Delta
 
   /** The table's identity declarations: column → (spec, high watermark). */
   def identityColumns(spark: SparkSession, path: String)
       : Map[String, (IdentitySpec, Option[Long])] =
-    snapshot(spark, path).rawSchema.fields.flatMap(f =>
-      identitySpec(f).map(s => f.name -> (s, identityHwm(f)))).toMap
+    Ids.columns(snapshot(spark, path).rawSchema)
 
   /** Declare `name` as an IDENTITY column — `GENERATED {ALWAYS | BY
     * DEFAULT} AS IDENTITY (START WITH s INCREMENT BY k)`, the
@@ -2221,40 +2144,17 @@ object DeltaLake {
     * first, then lands declarations here — same flow as column
     * defaults). The column must be BIGINT and cannot also be
     * generated, defaulted, or a partition column. Every subsequent
-    * [[write]] GENERATES the column when the frame omits it (gap-free
-    * contiguous values via [[graft.core.IdentityGen]]) and ratchets
-    * `delta.identity.highWaterMark` in the same commit; a frame that
-    * CARRIES the column refuses under ALWAYS and passes through under
-    * BY DEFAULT (with the watermark ratcheted past the staged max, so
-    * later generated values stay unique). */
+    * [[write]] applies [[Identity]]'s rules: it GENERATES the column
+    * when the frame omits it and ratchets the high watermark in the
+    * same commit; a frame that CARRIES the column refuses under ALWAYS
+    * and passes through under BY DEFAULT (with the watermark ratcheted
+    * past the staged max, so later generated values stay unique). */
   def declareIdentity(spark: SparkSession, path: String, name: String,
       spec: IdentitySpec = IdentitySpec()): Long = {
-    require(spec.step != 0L, "DeltaLake.declareIdentity: step must be nonzero")
     val snap = snapshot(spark, path)
-    // row-emptiness, not file-emptiness: an empty CREATE commits a
-    // zero-row file whose presence must not block the declaration
-    require(snap.files.isEmpty || read(spark, path).isEmpty,
-      s"DeltaLake.declareIdentity: $path already holds data — Delta identity " +
-        "columns are declared at CREATE TABLE (empty-table-only here)")
-    require(snap.schema.fieldNames.contains(name),
-      s"DeltaLake.declareIdentity: $name is not a column of $path")
-    val idx = snap.rawSchema.fieldIndex(name)
-    val field = snap.rawSchema.fields(idx)
-    require(stripType(field.dataType) == LongType,
-      s"DeltaLake.declareIdentity: identity columns must be BIGINT, $name is " +
-        field.dataType.sql)
-    require(!field.metadata.contains("delta.generationExpression") &&
-      !field.metadata.contains("CURRENT_DEFAULT"),
-      s"DeltaLake.declareIdentity: $name already has a generation expression or " +
-        "default — the fill rules would race")
-    require(!snap.partitionColumns.contains(name),
-      s"DeltaLake.declareIdentity: $name is a partition column")
-    val newField = field.copy(metadata = new MetadataBuilder()
-      .withMetadata(field.metadata)
-      .putLong(IdStartKey, spec.start).putLong(IdStepKey, spec.step)
-      .putBoolean(IdAllowKey, spec.allowExplicitInsert).build())
-    commitMetadata(snap, path, "ALTER TABLE")(
-      schema = StructType(snap.rawSchema.fields.updated(idx, newField)),
+    val schema = Ids.declare("DeltaLake.declareIdentity", snap.rawSchema, name, spec,
+      snap.partitionColumns)(snap.files.nonEmpty && !read(spark, path).isEmpty)
+    commitMetadata(snap, path, "ALTER TABLE")(schema = schema,
       protocol = withWriterFeatures(snap.protocol, Seq("identityColumns")))
   }
 
@@ -2264,22 +2164,13 @@ object DeltaLake {
     * the watermark behind the stored values. Metadata-only commit;
     * returns the new version (the current one when nothing moved). */
   def syncIdentity(spark: SparkSession, path: String, name: String): Long = {
-    import org.apache.spark.sql.functions.{col, max => fmax, min => fmin}
     val snap = snapshot(spark, path)
-    val idx = snap.rawSchema.fieldIndex(name)
-    val field = snap.rawSchema.fields(idx)
-    val spec = identitySpec(field).getOrElse(throw new IllegalArgumentException(
-      s"DeltaLake.syncIdentity: $name is not an identity column of $path"))
-    val agg = if (spec.step > 0) fmax(col(name)) else fmin(col(name))
-    val seen = Option(read(spark, path).agg(agg).head().get(0)).map(_.asInstanceOf[Long])
-    val cur = identityHwm(field)
-    val newHwm = seen.map(s => graft.core.IdentityGen.ratchet(
-      spec.start, spec.step, cur.getOrElse(spec.start - spec.step), s))
-    if (newHwm == cur || newHwm.isEmpty) return snap.version
-    val newField = field.copy(metadata = new MetadataBuilder()
-      .withMetadata(field.metadata).putLong(IdHwmKey, newHwm.get).build())
-    commitMetadata(snap, path, "ALTER TABLE")(
-      schema = StructType(snap.rawSchema.fields.updated(idx, newField)))
+    require(snap.rawSchema.fields.exists(f => f.name == name && Ids.spec(f).nonEmpty),
+      s"DeltaLake.syncIdentity: $name is not an identity column of $path")
+    val moved = Ids.ratcheted(snap.rawSchema, Seq(name),
+      (c, sp) => Identity.extreme(read(spark, path), c, sp))
+    if (moved.isEmpty) snap.version
+    else commitMetadata(snap, path, "ALTER TABLE")(schema = Ids.withHwms(snap.rawSchema, moved))
   }
 
   // ----------------------------------------------------- shallow clone
@@ -2826,14 +2717,7 @@ object DeltaLake {
       set: Map[String, org.apache.spark.sql.Column],
       cond: Option[org.apache.spark.sql.Column]): Long = {
     val snap = snapshot(spark, path)
-    // GENERATED ALWAYS identity values cannot be updated; BY DEFAULT
-    // sets are legal but bypass the watermark — syncIdentity repairs
-    set.keys.foreach { c =>
-      snap.rawSchema.fields.find(_.name == c).flatMap(identitySpec).foreach(sp =>
-        require(sp.allowExplicitInsert,
-          s"DeltaLake.updateWhere: $c is GENERATED ALWAYS AS IDENTITY — its " +
-            "values cannot be updated"))
-    }
+    Ids.gateUpdate("DeltaLake.updateWhere", snap.rawSchema, set.keys)
     CopyOnWrite.updateWhere(cowTable(spark, path, snap, "UPDATE"), set, cond)
   }
 
@@ -2853,7 +2737,6 @@ object DeltaLake {
       // autoMerge; a reader between the commits sees the column as
       // NULL, which is also what every pre-merge row reads after)
       mergeSchema: Boolean = false): Long = {
-    import org.apache.spark.sql.functions.col
     val snap0 = snapshot(spark, path)
     // idempotent replay guard — a foreachBatch MERGE replayed after a
     // crash between the commit and the checkpoint advance skips here,
@@ -2869,58 +2752,19 @@ object DeltaLake {
       added.foreach(f => addColumn(spark, path, f.name, stripType(f.dataType)))
       snapshot(spark, path)
     }
-    // IDENTITY columns under MERGE (r13): the update frame necessarily
-    // CARRIES them (the schema gate above). GENERATED ALWAYS forbids
-    // explicit values — so a merge may neither INSERT rows (their ids
-    // would be user-chosen) nor CHANGE a matched row's id; both checks
-    // ride ONE aggregate over the joined update set. BY DEFAULT passes
-    // through, and the watermark ratchets past the update frame's
-    // extreme AFTER the merge commit (O(updates), never O(table)) so
-    // later generated values stay unique — the same repair
-    // [[syncIdentity]] offers after the fact.
-    val idMergeFields = snap.rawSchema.fields.toSeq
-      .filter(_.metadata.contains(IdStartKey))
-    idMergeFields.filter(f => !identitySpec(f).get.allowExplicitInsert).foreach { f =>
-      import org.apache.spark.sql.functions.{count => fCount, lit, sum => fSum, when => fWhen}
-      val cur = read(spark, path).select(col(key),
-        col(f.name).as("__graft_cur_id"))
-      val probe = updates.select(col(key), col(f.name)).join(cur, Seq(key), "left")
-        .agg(
-          fSum(fWhen(col("__graft_cur_id").isNull, 1L).otherwise(0L)).as("ins"),
-          fSum(fWhen(col("__graft_cur_id").isNotNull &&
-            !(col(f.name) <=> col("__graft_cur_id")), 1L).otherwise(0L)).as("chg"),
-          fCount(lit(1)).as("n"))
-        .head()
-      require(probe.getAs[Long]("n") == 0L || probe.getAs[Long]("ins") == 0L,
-        s"DeltaLake.upsertByKey: ${f.name} is GENERATED ALWAYS AS IDENTITY — a " +
-          "merge INSERT would land explicit values (append through write() to " +
-          "generate, or declare BY DEFAULT)")
-      require(probe.getAs[Long]("chg") == 0L,
-        s"DeltaLake.upsertByKey: ${f.name} is GENERATED ALWAYS AS IDENTITY — a " +
-          "matched update must not change a row's identity value")
-    }
-    def ratchetByDefaultIdentity(): Unit =
-      idMergeFields.filter(f => identitySpec(f).get.allowExplicitInsert).foreach { f =>
-        import org.apache.spark.sql.functions.{max => fMax, min => fMin}
-        val spec = identitySpec(f).get
-        val agg = if (spec.step > 0) fMax(col(f.name)) else fMin(col(f.name))
-        Option(updates.agg(agg).head().get(0)).map(_.asInstanceOf[Long]).foreach { seen =>
-          val cur = identityHwm(f).getOrElse(spec.start - spec.step)
-          val h = graft.core.IdentityGen.ratchet(spec.start, spec.step, cur, seen)
-          if (h != cur) {
-            val snapNow = snapshot(spark, path)
-            val idx = snapNow.rawSchema.fieldIndex(f.name)
-            val nf = snapNow.rawSchema.fields(idx).copy(
-              metadata = new MetadataBuilder()
-                .withMetadata(snapNow.rawSchema.fields(idx).metadata)
-                .putLong(IdHwmKey, h).build())
-            commitMetadata(snapNow, path, "ALTER TABLE")(
-              schema = StructType(snapNow.rawSchema.fields.updated(idx, nf)))
-          }
-        }
-      }
+    // IDENTITY columns under MERGE ([[Identity.gateMerge]]): the
+    // update frame necessarily CARRIES them (the schema gate above). A
+    // BY-DEFAULT watermark ratchets past the merged values AFTER the
+    // merge commit, on the head it lands on
+    Ids.gateMerge("DeltaLake.upsertByKey", snap.rawSchema, updates, key, read(spark, path))
     val got = CopyOnWrite.upsertByKey(cowTable(spark, path, snap, "MERGE", txn), updates, key)
-    ratchetByDefaultIdentity()
+    val ratchets = Ids.mergeRatchets(snap.rawSchema, updates)
+    if (ratchets.nonEmpty) {
+      val head = snapshot(spark, path)
+      val moved = Ids.ratcheted(head.rawSchema, ratchets, Identity.seenIn(updates))
+      if (moved.nonEmpty)
+        commitMetadata(head, path, "ALTER TABLE")(schema = Ids.withHwms(head.rawSchema, moved))
+    }
     got
   }
 
@@ -3142,13 +2986,6 @@ object DeltaLake {
     * schema change (the append gate itself is nullability-erased). */
   private def identityRatchetOnly(base: Snapshot,
       m: com.fasterxml.jackson.databind.JsonNode): Boolean = {
-    def eraseIdHwm(s: StructType): StructType = StructType(s.fields.map { f =>
-      if (!f.metadata.contains(IdHwmKey)) f
-      else {
-        val mb = new MetadataBuilder().withMetadata(f.metadata); mb.remove(IdHwmKey)
-        f.copy(metadata = mb.build())
-      }
-    })
     try {
       val rs = DataType.fromJson(m.get("schemaString").asText).asInstanceOf[StructType]
       val rp = {
@@ -3163,8 +3000,8 @@ object DeltaLake {
         while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asText }
         b.result()
       }
-      Versioned.nullabilityErased(eraseIdHwm(rs)) ==
-        Versioned.nullabilityErased(eraseIdHwm(base.rawSchema)) &&
+      Versioned.nullabilityErased(Ids.hwmErased(rs)) ==
+        Versioned.nullabilityErased(Ids.hwmErased(base.rawSchema)) &&
         rp == base.partitionColumns && rc == base.configuration
     } catch { case _: Exception => false }
   }

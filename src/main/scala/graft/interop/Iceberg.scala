@@ -5334,16 +5334,23 @@ object Iceberg {
   /** Publish ICEBERG METADATA over an EXISTING file set without
     * touching a byte of data — the conversion seam [[Convert]] uses
     * (UniForm's model: one copy of data, a second metadata layer on
-    * top). Writes metadata v1: fresh sequential field ids, an identity
+    * top). Writes the next metadata version (v1 on a table without
+    * Iceberg metadata): fresh sequential field ids, an identity
     * partition spec over `partCols`, ONE manifest of all `files`
     * (already absolute-pathed), and — because converted files carry no
     * parquet field ids — the spec's `schema.name-mapping.default`
     * property, which flips this reader (and spec-compliant foreign
-    * readers) to name-based column resolution for the table. */
+    * readers) to name-based column resolution for the table. With
+    * `replace`, an existing layer is superseded whole by that one
+    * put-if-absent publish — nothing is deleted, so a crash before it
+    * leaves the old layer readable; otherwise existing metadata
+    * refuses. */
   private[interop] def publishConverted(spark: SparkSession, path: String,
-      schema: StructType, partCols: Seq[String], files: Seq[DataFileRef]): Long = {
+      schema: StructType, partCols: Seq[String], files: Seq[DataFileRef],
+      replace: Boolean = false): Long = {
     val (fs, root) = Writers.fsFor(path)
-    require(metaVersions(fs, root).isEmpty,
+    val head = metaVersions(fs, root).lastOption
+    require(replace || head.isEmpty,
       s"Iceberg.publishConverted: $path already has Iceberg metadata")
     fs.mkdirs(metaDir(root))
     val fieldIds = schema.fieldNames.zipWithIndex.map { case (n, i) => n -> (i + 1) }.toMap
@@ -5363,7 +5370,8 @@ object Iceberg {
     val p = new SnapshotProducer(fs, root, meta)
     p.list(writeAddedManifest(fs, root, files, p.snapshotId, 0,
       partFields.map(f => (f.name, schema(f.source).dataType, f.fieldId)), fieldIds, schema))
-    publishMetadata(fs, root, 1L, p.commit(meta, "append", replacesTable = true))
+    publishMetadata(fs, root, head.getOrElse(0L) + 1, p.commit(meta, "append",
+      replacesTable = true))
     p.snapshotId
   }
 

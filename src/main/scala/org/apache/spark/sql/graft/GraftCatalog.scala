@@ -20,6 +20,7 @@ import org.apache.spark.sql.catalyst.analysis.{
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.util.IdentityColumn
 import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
 import org.apache.spark.sql.connector.catalog.{
   Identifier, SupportsNamespaces, Table, TableCatalog, TableChange}
@@ -292,9 +293,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       var changed = false
       Option(c.identityColumnSpec()).foreach { spec =>
         changed = true
-        mb.putLong("identity.start", spec.getStart)
-          .putLong("identity.step", spec.getStep)
-          .putBoolean("identity.allowExplicitInsert", spec.isAllowExplicitInsert)
+        mb.putLong(IdentityColumn.IDENTITY_INFO_START, spec.getStart)
+          .putLong(IdentityColumn.IDENTITY_INFO_STEP, spec.getStep)
+          .putBoolean(IdentityColumn.IDENTITY_INFO_ALLOW_EXPLICIT_INSERT,
+            spec.isAllowExplicitInsert)
       }
       // GENERATED ALWAYS AS (expr) rides the same dropped-by-conversion
       // path — re-encode it under the analyzer's own metadata key
@@ -355,12 +357,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // analyzer delivers the declaration as identity.* field metadata
     // (the SUPPORTS_CREATE_TABLE_WITH_IDENTITY_COLUMNS contract) —
     // recorded per format after the create, like defaults
-    val identityCols: Seq[(String, Long, Long, Boolean)] = schema.fields.toSeq
-      .filter(_.metadata.contains("identity.start"))
-      .map(f => (f.name, f.metadata.getLong("identity.start"),
-        f.metadata.getLong("identity.step"),
-        f.metadata.contains("identity.allowExplicitInsert") &&
-          f.metadata.getBoolean("identity.allowExplicitInsert")))
+    val identityCols: Seq[(String, graft.interop.Identity.Spec)] = schema.fields.toSeq
+      .flatMap(f => IdentityColumn.getIdentityInfo(f).map(i => f.name ->
+        graft.interop.Identity.Spec(i.getStart, i.getStep, i.isAllowExplicitInsert)))
     // refuse BEFORE anything lands on disk — Iceberg's table spec has
     // no identity/sequence concept to record the declaration in
     if (identityCols.nonEmpty && fmt == "iceberg")
@@ -380,7 +379,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
     val persistSchema = StructType(schema.fields.map { f =>
       val analyzerKeys = Seq("CURRENT_DEFAULT", "EXISTS_DEFAULT",
-        "identity.start", "identity.step", "identity.allowExplicitInsert",
+        IdentityColumn.IDENTITY_INFO_START, IdentityColumn.IDENTITY_INFO_STEP,
+        IdentityColumn.IDENTITY_INFO_ALLOW_EXPLICIT_INSERT,
         "GENERATION_EXPRESSION")
       if (!analyzerKeys.exists(f.metadata.contains)) f
       else {
@@ -421,12 +421,12 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       }
     }
     if (identityCols.nonEmpty) fmt match {
-      case "delta" => identityCols.foreach { case (n, start, step, allow) =>
-        graft.interop.DeltaLake.declareIdentity(spark, dir.toString, n,
-          graft.interop.DeltaLake.IdentitySpec(start, step, allow))
+      case "delta" => identityCols.foreach { case (n, sp) =>
+        graft.interop.DeltaLake.declareIdentity(spark, dir.toString, n, sp)
       }
-      case _ => identityCols.foreach { case (n, start, step, allow) =>
-        Versioned.declareIdentity(spark, dir.toString, n, start, step, allow)
+      case _ => identityCols.foreach { case (n, sp) =>
+        Versioned.declareIdentity(spark, dir.toString, n, sp.start, sp.step,
+          sp.allowExplicitInsert)
       }
     }
     generatedCols.foreach { case (n, e) =>

@@ -150,10 +150,28 @@ class IcebergSnapshotSpec extends AnyFunSuite with SparkFixture {
     val replaced = (20L to 22L).map(r(_))
     DeltaLake.write(s.frame(replaced), s.path, partitionBy = Seq("p"))
     s.step("syncIceberg overwrite")(Convert.syncIceberg(spark, s.path))(_ => replaced)
-    // a resync republishes the whole layer: of its files, only the
-    // manifest and the manifest list take new names
-    assert(s.added == Seq("deltaToIceberg" -> 4, "resyncIceberg" -> 2,
+    // a resync republishes the whole layer as the next metadata
+    // version: a manifest, a manifest list and the metadata version
+    assert(s.added == Seq("deltaToIceberg" -> 4, "resyncIceberg" -> 3,
       "syncIceberg append" -> 3, "syncIceberg overwrite" -> 5))
+  }
+
+  test("a crash at resyncIceberg's publish leaves the stale layer readable") {
+    import spark.implicits._
+    HookFs.register(spark.sparkContext.hadoopConfiguration)
+    val path = HookFs.freshDir("snapshot_resync_crash")
+    DeltaLake.write(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), path)
+    Convert.deltaToIceberg(spark, path)
+    DeltaLake.write(Seq((3L, "c")).toDF("k", "v"), path, mode = SaveMode.Append)
+    HookFs.crashAtCommit()
+    try intercept[Exception](Convert.resyncIceberg(spark, path)) finally HookFs.disarm()
+    assert(Iceberg.read(spark, path).select("k").as[Long].collect().sorted.toSeq == Seq(1L, 2L),
+      "the crashed resync must leave the pre-resync snapshot readable")
+    Convert.resyncIceberg(spark, path)
+    val bad = IcebergCheck.verify(path)
+    assert(bad.isEmpty, s"after a clean resync: ${bad.mkString("; ")}")
+    assert(Iceberg.read(spark, path).select("k").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L, 3L))
   }
 
   test("total-* summaries follow the live data files through append, delete, compact, upsert") {

@@ -1,11 +1,14 @@
 package graft.interop
 
 import graft.SparkFixture
-import graft.ingest.{Versioned, Writers}
-import java.nio.file.Paths
+import graft.ingest.{LocalExclusiveLock, LockProvider, Versioned, Writers}
+import java.nio.file.{Files, Paths}
+import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.SaveMode
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.graft.JobCount
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** IDENTITY columns (r12 verdict "missing #2"): Delta's
   * `identityColumns` writer feature — GENERATED {ALWAYS | BY DEFAULT}
@@ -306,6 +309,14 @@ class IdentityColumnsSpec extends AnyFunSuite with SparkFixture {
       DeltaLake.updateWhere(spark, ap,
         Map("id" -> org.apache.spark.sql.functions.lit(50L)), Some(col("v") === "a")))
     assert(e3.getMessage.contains("cannot be updated"), e3.getMessage)
+    // the graft-native table refuses the same UPDATE
+    val gp = freshDir("id_update_graft")
+    Versioned.commit(Seq.empty[(Long, String)].toDF("id", "v"), gp)
+    Versioned.declareIdentity(spark, gp, "id")
+    Versioned.appendCommit(Seq("a", "b").toDF("v"), gp)
+    val e4 = intercept[IllegalArgumentException](
+      Versioned.updateWhere(spark, gp, Map("id" -> lit(50L)), Some(col("v") === "a")))
+    assert(e4.getMessage.contains("cannot be updated"), e4.getMessage)
     // BY DEFAULT: a merge insert of an explicit id passes AND ratchets
     // the watermark (O(updates)) so later generation cannot collide
     val bp = freshDir("id_merge_bydefault")
@@ -353,5 +364,100 @@ class IdentityColumnsSpec extends AnyFunSuite with SparkFixture {
     val e2 = intercept[Exception](spark.sql(
       "CALL graft.system.sync_identity('dbids.ti', column => 'k')").collect())
     assert(e2.getMessage.contains("identityColumns"), e2.getMessage)
+  }
+
+  /** Run `ours` with `rival` landing at its first version claim. */
+  private def underRival[T](rival: => Unit)(ours: => T): T = {
+    var pending = true
+    var fired = false
+    val p = new LockProvider {
+      def tryAcquire(fs: FileSystem, dir: HPath) = {
+        if (pending) { pending = false; rival; fired = true }
+        LocalExclusiveLock.tryAcquire(fs, dir)
+      }
+      def release(fs: FileSystem, dir: HPath) = LocalExclusiveLock.release(fs, dir)
+      def isHeld(fs: FileSystem, dir: HPath) = LocalExclusiveLock.isHeld(fs, dir)
+      def heldSinceMs(fs: FileSystem, dir: HPath) = LocalExclusiveLock.heldSinceMs(fs, dir)
+    }
+    try Versioned.withLockProvider(p)(ours)
+    finally assert(fired, "the rival never ran under our commit")
+  }
+
+  test("graft-native: an explicit BY-DEFAULT append rebasing over a generating rival keeps its watermark") {
+    import spark.implicits._
+    Seq[(String, (org.apache.spark.sql.DataFrame, String) => Long)](
+      "appendCommit" -> ((df, p) => Versioned.appendCommit(df, p)),
+      "appendCommitOnce" -> ((df, p) => Versioned.appendCommitOnce(df, p, "ours"))
+    ).foreach { case (verb, append) =>
+      val path = freshDir(s"id_graft_bd_rival_$verb")
+      Versioned.commit(Seq.empty[(Long, String)].toDF("id", "v"), path)
+      Versioned.declareIdentity(spark, path, "id", start = 10L, step = 10L,
+        allowExplicitInsert = true)
+      Versioned.appendCommit(Seq("seed").toDF("v"), path) // 10
+      // our explicit 15 ratchets the watermark to 20 on the base we
+      // read; the rival generates 20, 30, 40 before our claim
+      underRival(Versioned.appendCommit(Seq("r1", "r2", "r3").toDF("v"), path))(
+        append(Seq((15L, "ours")).toDF("id", "v"), path))
+      assert(Versioned.identityColumns(path)("id")._4.contains(40L),
+        s"$verb: the watermark must not move back behind the rival's")
+      Versioned.appendCommit(Seq("next").toDF("v"), path)
+      val ids = Versioned.read(spark, path).select("id").as[Long].collect().sorted.toSeq
+      assert(ids == Seq(10L, 15L, 20L, 30L, 40L, 50L), s"$verb: $ids")
+    }
+  }
+
+  test("Delta: an append rebasing over a generating rival keeps the rival's watermarks") {
+    import spark.implicits._
+    HookFs.register(spark.sparkContext.hadoopConfiguration)
+    val path = HookFs.freshDir("id_delta_bd_rival")
+    DeltaLake.write(Seq.empty[(Long, Long, String)].toDF("id", "seq", "v"), path)
+    DeltaLake.declareIdentity(spark, path, "id",
+      DeltaLake.IdentitySpec(start = 10L, step = 10L, allowExplicitInsert = true))
+    DeltaLake.declareIdentity(spark, path, "seq")
+    DeltaLake.write(Seq("seed").toDF("v"), path, mode = SaveMode.Append) // id 10, seq 1
+    // ours carries id 15 and generates seq; the rival generates both
+    // (id 20, 30, 40) before our commit file lands, so our rebase
+    // re-stamps seq and must keep id's watermark at the rival's 40
+    var fired = false
+    HookFs.beforeCommit {
+      DeltaLake.write(Seq("r1", "r2", "r3").toDF("v"), path, mode = SaveMode.Append)
+      fired = true
+    }
+    try DeltaLake.write(Seq((15L, "ours")).toDF("id", "v"), path, mode = SaveMode.Append)
+    finally HookFs.disarm()
+    assert(fired, "the rival never ran under our commit")
+    val hwms = DeltaLake.identityColumns(spark, path).map { case (c, (_, h)) => c -> h }
+    assert(hwms == Map("id" -> Some(40L), "seq" -> Some(5L)), s"watermarks after the rebase: $hwms")
+    DeltaLake.write(Seq("next").toDF("v"), path, mode = SaveMode.Append)
+    val rows = DeltaLake.read(spark, path).select("id", "seq").as[(Long, Long)].collect()
+    assert(rows.map(_._1).sorted.toSeq == Seq(10L, 15L, 20L, 30L, 40L, 50L), rows.toSeq)
+    assert(rows.map(_._2).sorted.toSeq == (1L to 6L), rows.toSeq)
+  }
+
+  test("an identity-free append runs no identity job") {
+    import spark.implicits._
+    val gp = freshDir("id_free_graft")
+    Versioned.commit(Seq((1L, "a")).toDF("k", "v"), gp)
+    val (_, graftJobs) = JobCount(spark)(Versioned.appendCommit(Seq((2L, "b")).toDF("k", "v"), gp))
+    val dp = freshDir("id_free_delta")
+    DeltaLake.write(Seq((1L, "a")).toDF("k", "v"), dp)
+    val (_, deltaJobs) = JobCount(spark)(
+      DeltaLake.write(Seq((2L, "b")).toDF("k", "v"), dp, mode = SaveMode.Append))
+    // each append's one job is its data write: the identity rules read
+    // the schema and start nothing on a table that declares no column
+    assert(graftJobs == 1 && deltaJobs == 1, s"Versioned $graftJobs jobs, Delta $deltaJobs")
+  }
+
+  test("only the identity core holds the identity keys and generates ids") {
+    val root = Paths.get("src/main/scala")
+    val markers = Seq("""identity\.(start|step|allowExplicitInsert|highWaterMark)""",
+      """IdentityGen\.(ratchet|assign)""")
+    val hits: Seq[(String, String)] = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.flatMap { p =>
+        val text = new String(Files.readAllBytes(p), "UTF-8")
+        markers.filter(_.r.findFirstIn(text).nonEmpty).map(_ -> root.relativize(p).toString)
+      }
+    assert(hits.map(_._2).toSet == Set("graft/interop/Identity.scala"),
+      s"identity keys or id generation outside the identity core: $hits")
   }
 }
